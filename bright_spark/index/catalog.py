@@ -58,21 +58,36 @@ driver (crc32 — same polynomial as Spark's ``F.crc32``) and reads ONLY
 those buckets' live version dirs — directory-level pruning that never
 even lists the other buckets; parquet row-group min/max on ``term``
 prunes within a bucket (rows are written term-sorted).
+
+Driver-side reads: the same pruning runs from the parquet footers
+alone (:class:`FooterRead`). A read whose selected row groups hold
+fewer than :data:`LOCAL_READ_MAX_BYTES` (footer-reported uncompressed
+bytes of the columns read) runs with pyarrow on the driver and starts
+no Spark job; a larger one goes through the Spark readers below.
 """
 
 from __future__ import annotations
 
+import bisect
+import functools
+import glob
 import json
 import os
 import shutil
 import threading
 import time
 import zlib
+from collections.abc import Callable
 from dataclasses import asdict
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bright_spark.models import IndexConfig
 
@@ -97,6 +112,141 @@ POSTINGS_SCHEMA = POSTINGS_KERNEL_SCHEMA + ", ver BIGINT"
 
 TERM_STATS_SCHEMA = ("field STRING, term STRING, df BIGINT, cf BIGINT, "
                      "bucket INT")
+
+_LIST_I64 = pa.list_(pa.int64())
+_LIST_I32 = pa.list_(pa.int32())
+_LIST_BIN = pa.list_(pa.binary())
+
+# arrow shape of the on-disk posting / term_stats rows. The Spark
+# readers use the DDL schemas above, so logical-type equality is the
+# only contract the files honor (Spark writes ``ver`` as int32, the
+# driver-side writers as int64): driver-side reads cast to these.
+POSTINGS_ARROW = pa.schema([
+    ("bucket", pa.int32()), ("field", pa.string()), ("term", pa.string()),
+    ("range_id", pa.int64()), ("df_chunk", pa.int32()),
+    ("cf_chunk", pa.int64()), ("first_doc", _LIST_I64),
+    ("max_doc", _LIST_I64), ("n", _LIST_I32), ("max_tf", _LIST_I32),
+    ("min_dl", _LIST_I32), ("docs", _LIST_BIN), ("tfs", _LIST_BIN),
+    ("dls", _LIST_BIN), ("pos", _LIST_BIN), ("ver", pa.int64()),
+])
+
+TERM_STATS_ARROW = pa.schema([
+    ("field", pa.string()), ("term", pa.string()), ("df", pa.int64()),
+    ("cf", pa.int64()), ("bucket", pa.int32()),
+])
+_TERM_DF_ARROW = pa.schema([TERM_STATS_ARROW.field(c)
+                            for c in ("field", "term", "df")])
+
+# build-time columns a docs read never returns
+_BUILD_COLS = ("_term_arr", "_tf_arr", "_pid")
+
+# docs DDL types a driver-side read maps to arrow; a docs read touching
+# any other type (decimal, timestamp, binary, nested, ...) goes through
+# Spark, whose Row values those types would not match
+_ARROW_OF_DDL = {
+    "string": pa.string(), "bigint": pa.int64(), "int": pa.int32(),
+    "smallint": pa.int16(), "tinyint": pa.int8(), "double": pa.float64(),
+    "float": pa.float32(), "boolean": pa.bool_(),
+}
+
+# Driver-side read budget: a read whose selected parquet row groups hold
+# fewer uncompressed bytes (as their footers report, over the columns
+# read) runs with pyarrow on the driver; anything larger runs as Spark
+# jobs. The one size gate of the read path (postings, term dictionary,
+# expansions, docs).
+#
+# Set below the smallest measured crossover of search() wall time, driver
+# path vs Spark path (4-vCPU VM, local[4], 50,000-file make_repos_spark
+# corpus, median of 5): positional phrases cross at 30-42 MiB (hot
+# phrase at 29.7 MiB: 2.04 s driver vs 2.51 s relational; 42.2 MiB:
+# 2.37 vs 2.30; 55.8 MiB: 2.83 vs 2.30); hot-term ORs at 84-96 MiB
+# (60.6 MiB: 1.09 vs 1.56 s wand; 84.4: 1.63 vs 1.84; 95.5: 2.19 vs
+# 1.96); wildcards of 1,861-4,096 terms reading the whole 98 MiB postings
+# table still run 2-3x faster on the driver. Driver peak RSS grows by
+# about 2.6x the footer bytes read (136 MiB at 29.7 MiB).
+LOCAL_READ_MAX_BYTES = 32 << 20
+
+
+def fits_local(nbytes: int) -> bool:
+    return nbytes < LOCAL_READ_MAX_BYTES
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_fields(ddl: str) -> tuple[tuple[str, str], ...]:
+    """(name, Spark simple type name) of each column of a DDL string,
+    parsed by Spark's own DDL parser (a JVM call, no job)."""
+    return tuple((f.name, f.dataType.simpleString())
+                 for f in StructType.fromDDL(ddl).fields)
+
+
+def _covers_any(keys: list) -> Callable[[Any, Any], bool]:
+    """Row-group test: some of the (sorted) ``keys`` lies in [lo, hi]."""
+    return lambda lo, hi: (bisect.bisect_left(keys, lo)
+                           < bisect.bisect_right(keys, hi))
+
+
+def _covers_prefix(prefix: str) -> Callable[[Any, Any], bool]:
+    """Row-group test: [lo, hi] may hold a string starting with
+    ``prefix`` (every string above ``prefix`` that lacks it sorts above
+    all strings that have it)."""
+    return lambda lo, hi: hi >= prefix and (lo <= prefix
+                                            or lo.startswith(prefix))
+
+
+def _conform(tab: pa.Table, schema: pa.Schema) -> pa.Table:
+    """``tab`` in ``schema``'s column order and types; a column the
+    file lacks (older layouts) reads as nulls, as Spark fills it."""
+    return pa.Table.from_arrays(
+        [tab[f.name].cast(f.type) if f.name in tab.column_names
+         else pa.nulls(tab.num_rows, f.type) for f in schema],
+        schema=schema)
+
+
+class FooterRead:
+    """Row groups of one table picked from parquet footers alone, and
+    the uncompressed bytes they hold over the columns to read — the
+    size :func:`fits_local` gates. :meth:`read` loads them with
+    pyarrow, cast to ``schema`` and filtered by ``where``."""
+
+    def __init__(self, parts: list[tuple[str, Any, list[int]]], nbytes: int,
+                 schema: pa.Schema,
+                 where: Callable[[pa.Table], Any] | None = None):
+        self.parts = parts
+        self.nbytes = nbytes
+        self.schema = schema
+        self.where = where
+
+    @property
+    def fits(self) -> bool:
+        return fits_local(self.nbytes)
+
+    def read(self) -> pa.Table:
+        cols = self.schema.names
+        tabs = [_conform(pq.ParquetFile(path, metadata=md)
+                         .read_row_groups(rgs, columns=cols), self.schema)
+                for path, md, rgs in self.parts]
+        tab = pa.concat_tables(tabs) if tabs else self.schema.empty_table()
+        if self.where is not None and tab.num_rows:
+            tab = tab.filter(self.where(tab))
+        return tab
+
+
+def _pair_mask(pairs: list[tuple[str, str]]) -> Callable[[pa.Table], Any]:
+    """(field, term) pairs -> arrow row mask (the driver-side form of
+    :meth:`IndexCatalog._pair_filter`)."""
+    by_field: dict[str, set[str]] = {}
+    for f, t in pairs:
+        by_field.setdefault(f, set()).add(t)
+
+    def where(tab: pa.Table):
+        mask = None
+        for f in sorted(by_field):
+            m = pc.and_(pc.equal(tab["field"], f),
+                        pc.is_in(tab["term"], value_set=pa.array(
+                            sorted(by_field[f]), pa.string())))
+            mask = m if mask is None else pc.or_(mask, m)
+        return mask
+    return where
 
 LAYOUT_VERSION = 4
 
@@ -258,9 +408,6 @@ class PendingSnapshot:
         dead. The whole table is rewritten per commit (driver-side
         pyarrow, no Spark job): it only ever holds the ids changed
         since the last compaction, so it stays tiny."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         path = self.table_path("tombstones")
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path, exist_ok=True)
@@ -389,6 +536,11 @@ class IndexCatalog:
         # setup + manifest/schema file reads (~0.2 s of driver time per
         # search on this host)
         self._docs_frames: dict[tuple, "DataFrame"] = {}
+        # committed version dirs are immutable: their file lists and
+        # parquet footers are cached for the driver-side reads
+        self._dir_files: dict[str, list[str]] = {}
+        self._footers: dict[str, Any] = {}
+        self._rg_stats: dict[tuple[str, str], list] = {}
 
     # ------------------------------------------------------- snapshots
 
@@ -685,7 +837,7 @@ class IndexCatalog:
         reader = spark.read.schema(ddl) if ddl else spark.read
         df = reader.parquet(*dirs)
         if not include_build_cols:
-            df = df.drop("_term_arr", "_tf_arr", "_pid")
+            df = df.drop(*_BUILD_COLS)
         if key is not None:
             self._docs_frames[key] = df
         return df
@@ -764,18 +916,11 @@ class IndexCatalog:
             return None
         if getattr(self, "_tomb_cache", None) and self._tomb_cache[0] == rel:
             return self._tomb_cache[1]
-        import glob as _glob
-
-        import numpy as np
-        import pyarrow.parquet as pq
-        files = sorted(_glob.glob(os.path.join(self.index_dir, rel,
-                                               "*.parquet")))
+        files = sorted(glob.glob(os.path.join(self.index_dir, rel,
+                                              "*.parquet")))
         if not files:
             return None
-        tab = pq.read_table(files[0]) if len(files) == 1 else None
-        if tab is None:
-            import pyarrow as pa
-            tab = pa.concat_tables([pq.read_table(f) for f in files])
+        tab = pa.concat_tables([pq.read_table(f) for f in files])
         ids = tab["doc_id"].to_numpy().astype(np.int64)
         vers = tab["ver"].to_numpy().astype(np.int64)
         order = np.argsort(ids)
@@ -826,3 +971,175 @@ class IndexCatalog:
         buckets = sorted({term_bucket(t, cfg.n_term_buckets) for _, t in pairs})
         df = self.term_stats(spark, buckets=buckets)
         return df.filter(F.col("bucket").isin(buckets) & self._pair_filter(pairs))
+
+    # ------------------------------------------------ driver-side reads
+
+    def _files(self, dirs: list[str]) -> list[str]:
+        out: list[str] = []
+        for d in dirs:
+            fs = self._dir_files.get(d)
+            if fs is None:
+                fs = sorted(glob.glob(os.path.join(d, "*.parquet")))
+                self._dir_files[d] = fs
+            out.extend(fs)
+        return out
+
+    def _row_group_stats(self, path: str, key: str) -> list:
+        """Per row group of one file: (min, max) of ``key`` (None when
+        the footer has no statistics) and uncompressed bytes per
+        top-level column."""
+        got = self._rg_stats.get((path, key))
+        if got is not None:
+            return got
+        md = self._footers.get(path)
+        if md is None:
+            md = self._footers[path] = pq.read_metadata(path)
+        got = []
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            bounds, sizes = None, {}
+            for j in range(rg.num_columns):
+                cc = rg.column(j)
+                top = cc.path_in_schema.split(".", 1)[0]
+                sizes[top] = sizes.get(top, 0) + cc.total_uncompressed_size
+                st = cc.statistics
+                if top == key and st is not None and st.has_min_max:
+                    bounds = (st.min, st.max)
+            got.append((bounds, sizes))
+        self._rg_stats[(path, key)] = got
+        return got
+
+    def _footer_read(self, dirs: list[str], key: str,
+                     covers: Callable[[Any, Any], bool] | None,
+                     schema: pa.Schema,
+                     where: Callable[[pa.Table], Any] | None = None
+                     ) -> FooterRead:
+        """Row groups of ``dirs`` whose ``key`` min/max ``covers`` (all
+        when None, or when a footer lacks statistics)."""
+        parts, nbytes = [], 0
+        for path in self._files(dirs):
+            rgs = []
+            for i, (bounds, sizes) in enumerate(self._row_group_stats(path, key)):
+                if covers is None or bounds is None or covers(*bounds):
+                    rgs.append(i)
+                    nbytes += sum(sizes.get(c, 0) for c in schema.names)
+            if rgs:
+                parts.append((path, self._footers[path], rgs))
+        return FooterRead(parts, nbytes, schema, where)
+
+    def postings_read(self, pairs: list[tuple[str, str]],
+                      columns: list[str]) -> FooterRead:
+        """:meth:`postings_for_terms` from the footers: the bucket dirs
+        of every delta chain, the row groups whose term range covers a
+        query term."""
+        cfg = self.load_config()
+        terms = sorted({t for _, t in pairs})
+        dirs = self.postings_dirs({term_bucket(t, cfg.n_term_buckets)
+                                   for t in terms})
+        schema = pa.schema([POSTINGS_ARROW.field(c) for c in columns])
+        return self._footer_read(dirs, "term", _covers_any(terms), schema,
+                                 _pair_mask(pairs))
+
+    @staticmethod
+    def _net_stats(tab: pa.Table, dirty: bool) -> pa.Table:
+        """:meth:`term_stats` semantics: with delta chains a term's df
+        is the sum of its base and signed delta rows, and net-zero
+        terms vanish."""
+        if not dirty:
+            return tab
+        agg = tab.group_by(["field", "term"]).aggregate([("df", "sum")])
+        agg = agg.filter(pc.greater(agg["df_sum"], 0))
+        return pa.table({"field": agg["field"], "term": agg["term"],
+                         "df": agg["df_sum"]})
+
+    def term_dfs(self, spark: SparkSession,
+                 pairs: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
+        """df of each present (field, term) pair — on the driver when
+        the bucket-pruned term_stats footers fit, else through
+        :meth:`term_stats_for_terms`."""
+        cfg = self.load_config()
+        buckets = {term_bucket(t, cfg.n_term_buckets) for _, t in pairs}
+        terms = sorted({t for _, t in pairs})
+        rd = self._footer_read(
+            self.term_stats_dirs(buckets), "term", _covers_any(terms),
+            _TERM_DF_ARROW, _pair_mask(pairs))
+        if rd.fits:
+            tab = self._net_stats(rd.read(), self._stats_dirty(buckets))
+            return {(f, t): int(d) for f, t, d in zip(
+                tab["field"].to_pylist(), tab["term"].to_pylist(),
+                tab["df"].to_pylist())}
+        rows = self.term_stats_for_terms(spark, pairs).collect()
+        return {(r["field"], r["term"]): int(r["df"]) for r in rows}
+
+    def field_terms(self, field: str, prefix: str = "") -> pa.Array | None:
+        """Every live term of one field starting with ``prefix``, read on
+        the driver from the term_stats row groups whose range can hold
+        one; None when those row groups do not fit (the caller then
+        expands with Spark)."""
+        def where(tab: pa.Table):
+            m = pc.equal(tab["field"], field)
+            return pc.and_(m, pc.starts_with(tab["term"], prefix)) \
+                if prefix else m
+        rd = self._footer_read(
+            self.term_stats_dirs(), "term",
+            _covers_prefix(prefix) if prefix else None, _TERM_DF_ARROW, where)
+        if not rd.fits:
+            return None
+        tab = self._net_stats(rd.read(), self._stats_dirty())
+        return tab["term"].combine_chunks()
+
+    def docs_columns(self, spark: SparkSession) -> dict[str, str]:
+        """docs table column -> Spark simple type name, from the
+        manifest's docs DDL (no Spark plan) when it is recorded."""
+        ddl = self.docs_schema()
+        if ddl is None:
+            return {f.name: f.dataType.simpleString()
+                    for f in self.docs(spark).schema.fields}
+        return {n: t for n, t in _ddl_fields(ddl) if n not in _BUILD_COLS}
+
+    def docs_read(self, ids: list[int] | None = None,
+                  columns: list[str] | None = None) -> FooterRead | None:
+        """Driver-side docs read of ``doc_id`` plus ``columns`` (all when
+        None), in docs-DDL column order, restricted to ``ids`` (group-
+        dir and doc_id row-group pruned) when given. None when the DDL is
+        not recorded or a column has a type :data:`_ARROW_OF_DDL` does
+        not map."""
+        ddl = self.docs_schema()
+        if ddl is None:
+            return None
+        want = None if columns is None else {"doc_id", *columns}
+        fields = [(n, t) for n, t in _ddl_fields(ddl)
+                  if n not in _BUILD_COLS and (want is None or n in want)]
+        if any(t not in _ARROW_OF_DDL for _, t in fields):
+            return None
+        schema = pa.schema([(n, _ARROW_OF_DDL[t]) for n, t in fields])
+        if ids is None:
+            return self._footer_read(self.docs_dirs(), "doc_id", None, schema)
+        ids = sorted({int(i) for i in ids})
+        bits = self.load_meta().get("docs_range_bits")
+        dirs = (self.docs_dirs({i >> int(bits) for i in ids})
+                if bits is not None else self.docs_dirs())
+        id_set = pa.array(ids, pa.int64())
+        return self._footer_read(
+            dirs, "doc_id", _covers_any(ids), schema,
+            lambda tab: pc.is_in(tab["doc_id"], value_set=id_set))
+
+    def doc_records(self, spark: SparkSession, ids: list[int],
+                    columns: list[str] | None = None) -> dict[int, dict]:
+        """{doc_id: record} of the stored docs among ``ids``: each record
+        equals Spark's ``Row.asDict()`` of :meth:`docs_for_ids`, projected
+        to ``doc_id`` + ``columns`` (existing columns, in that order) when
+        given. Read on the driver when the pruned docs footers fit."""
+        order = (None if columns is None else
+                 ["doc_id", *dict.fromkeys(c for c in columns
+                                           if c != "doc_id")])
+        rd = self.docs_read(ids, order)
+        if rd is not None and rd.fits:
+            tab = rd.read()
+            rows = tab.select(order or tab.column_names).to_pylist()
+        else:
+            df = self.docs_for_ids(spark, ids)
+            if order is not None:
+                df = df.select(*order)
+            rows = [r.asDict() for r in df.collect()]
+        return {int(r["doc_id"]): r for r in rows}

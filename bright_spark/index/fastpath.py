@@ -37,28 +37,15 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from bright_spark.analysis.tokenizer import count_terms_batch
-from bright_spark.index.catalog import term_bucket
+from bright_spark.index.catalog import (
+    POSTINGS_ARROW,
+    TERM_STATS_ARROW,
+    term_bucket,
+)
 
 _LIST_I64 = pa.list_(pa.int64())
 _LIST_I32 = pa.list_(pa.int32())
 _LIST_BIN = pa.list_(pa.binary())
-
-# arrow shape of the on-disk posting row (catalog.POSTINGS_SCHEMA) —
-# readers use an explicit Spark schema, so logical-type equality is
-# the only contract the files must honor
-_POSTINGS_PA = pa.schema([
-    ("bucket", pa.int32()), ("field", pa.string()), ("term", pa.string()),
-    ("range_id", pa.int64()), ("df_chunk", pa.int32()),
-    ("cf_chunk", pa.int64()), ("first_doc", _LIST_I64),
-    ("max_doc", _LIST_I64), ("n", _LIST_I32), ("max_tf", _LIST_I32),
-    ("min_dl", _LIST_I32), ("docs", _LIST_BIN), ("tfs", _LIST_BIN),
-    ("dls", _LIST_BIN), ("pos", _LIST_BIN), ("ver", pa.int64()),
-])
-
-_TERM_STATS_PA = pa.schema([
-    ("field", pa.string()), ("term", pa.string()), ("df", pa.int64()),
-    ("cf", pa.int64()), ("bucket", pa.int32()),
-])
 
 
 def _write_part(dst_dir: str, table: pa.Table) -> None:
@@ -161,7 +148,7 @@ def _postings_table(rows: pd.DataFrame, snapshot_id: int) -> pa.Table:
         pa.array(bin_cells("dls"), type=_LIST_BIN),
         pa.array(bin_cells("pos"), type=_LIST_BIN),
         pa.array(np.full(n, snapshot_id, np.int64), type=pa.int64()),
-    ], schema=_POSTINGS_PA)
+    ], schema=POSTINGS_ARROW)
 
 
 def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
@@ -341,7 +328,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
                     pa.array(sub["cf"].to_numpy(np.int64)),
                     pa.array(sub["bucket"].to_numpy(np.int64),
                              type=pa.int32()),
-                ], schema=_TERM_STATS_PA)
+                ], schema=TERM_STATS_ARROW)
 
     # ---- writes (all artifacts validated; from here the commit
     # protocol is identical to the distributed path's)

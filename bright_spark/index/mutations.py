@@ -428,11 +428,11 @@ class IndexMutator:
 
     def patch(self, doc_id: int, fields: dict) -> None:
         """U4: fetch stored doc, merge fields, re-index whole doc.
-        The fetch is group-dir-pruned (docs_for_ids)."""
-        row = self.catalog.docs_for_ids(self.spark, [int(doc_id)]).collect()
-        if not row:
+        The fetch is group-dir-pruned (doc_records)."""
+        rec = self.catalog.doc_records(self.spark, [int(doc_id)]).get(
+            int(doc_id))
+        if rec is None:
             raise KeyError(f"doc_id {doc_id} not found")
-        rec = row[0].asDict()
         rec.pop("doc_len", None)
         rec.pop("content_sha256", None)
         rec.pop("_pid", None)

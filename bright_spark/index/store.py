@@ -324,9 +324,9 @@ class IndexStore:
             mut.patch(int(doc_id), fields)  # raises KeyError when absent
             with self._reg_lock:
                 self._engines.pop(idx_id, None)
-            row = (IndexCatalog(self._index_dir(idx_id))
-                   .docs_for_ids(self.spark, [int(doc_id)]).collect())
-            return row[0].asDict() if row else {}
+            recs = IndexCatalog(self._index_dir(idx_id)).doc_records(
+                self.spark, [int(doc_id)])
+            return recs.get(int(doc_id), {})
 
     def engine(self, idx_id: str):
         """SearchEngine for a built index, cached per store BUT

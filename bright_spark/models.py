@@ -175,6 +175,10 @@ class SearchResponse:
     # (only under the engine's on_overflow='truncate' mode; the default
     # mode raises TooManyClausesError instead of answering partially)
     truncated_expansions: list[str] = field(default_factory=list)
+    # execution that answered the query — "local" (driver-side reads,
+    # zero Spark jobs), "wand" or "relational" (SearchEngine.search);
+    # diagnostic only, never on the wire
+    path: str = field(default="", compare=False)
 
     @property
     def total_pages(self) -> int:

@@ -5,43 +5,68 @@ TopNCollector -> hit post-processing (`handlers/search.go:16-177`).
 Spark lifecycle here:
 
   SearchRequest -> parser (pure Python AST) -> Planner (maps clauses to
-  postings/term_stats/docs structures) -> one of two physical plans:
+  postings/term_stats/docs structures) -> one of three executions,
+  chosen before anything runs and named in ``SearchResponse.path``:
 
-  * ``wand``       (default for scored term/bool queries): partition-
-    pruned postings scan for the query terms -> groupBy(range_id)
-    applyInPandas block-max kernel (per-range exact top-k + exact match
-    count, zero shuffle beyond the tiny per-term row fetch) -> global
-    TakeOrdered merge -> broadcast-join docs for fields.
-  * ``relational`` (filters, phrases, custom sorts, and the permanent
-    differential-testing path): decode postings to an exploded
+  * ``local``      (scored term/bool, wildcard, fuzzy, positional
+    phrase and ``=``-filtered queries whose reads are small): pyarrow
+    reads the bucket-pruned posting row groups on the driver, the same
+    per-range kernels (:func:`scorer.score_range_topk`,
+    :func:`scorer.score_range_phrase`) run once per ``range_id``, and
+    one merge yields the total and the top-k. ``=`` filters intersect
+    the kernels' full match sets with a doc-id allowlist read from the
+    docs columns. Term dictionary, expansions, tombstones and hit
+    assembly are driver-side reads as well: zero Spark jobs.
+  * ``wand``       (the same term/bool shapes when the reads are too
+    large for the driver): partition-pruned postings scan ->
+    groupBy(range_id) applyInPandas of the same block-max kernel (per-
+    range exact top-k + exact match count) -> one collect of those <= k
+    rows per range -> the same driver-side merge.
+  * ``relational`` (range/like filters, non-positional phrases, NOT-
+    phrases, match-all, custom sorts, large phrase/filter queries, and
+    the differential-testing path): decode postings to an exploded
     (term, doc_id, tf, dl) view -> broadcast-join per-term weights ->
     groupBy(doc_id) score sum + must-group counting -> docs-predicate
-    semi-joins -> orderBy/limit. Catalyst handles pushdown/pruning;
-    every step is built-in DataFrame ops except the vectorized varint
-    decode.
+    semi-joins -> orderBy/limit.
 
-At 10^12-doc scale the wand path touches only the posting rows of the
-query's terms (bucket-pruned directories, term-sorted row groups), and
-its single shuffle is the applyInPandas grouping of ~terms x ranges
-rows — there is no docs-table scan unless fields are requested.
+Selection rule: ``local`` whenever the query's shape allows it and the
+parquet row groups it reads — those whose ``term`` min/max covers a
+query term in the pruned bucket files of every delta-chain dir, plus
+the filtered docs columns — hold fewer footer-reported bytes than
+``catalog.LOCAL_READ_MAX_BYTES``; otherwise ``wand`` when the shape
+allows it, else ``relational``. ``search_df``/``match_df`` always
+return lazy Spark DataFrames (wand or relational).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import sys
+from collections.abc import Iterable, Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bright_spark.index.catalog import IndexCatalog
+from bright_spark.index.catalog import IndexCatalog, fits_local
 from bright_spark.models import SearchRequest, SearchRequestError, SearchResponse
 from bright_spark.query import scorer
 from bright_spark.query.parser import parse_query
 from bright_spark.query.planner import AnalyzedQuery, AttrPred, Planner
 
 _KERNEL_SCHEMA = "doc_id BIGINT, score DOUBLE, range_id BIGINT, range_matched BIGINT"
+
+# posting columns the kernels read (``pos`` only for phrases)
+_KERNEL_COLUMNS = ["field", "term", "range_id", "df_chunk", "first_doc",
+                   "max_doc", "n", "max_tf", "min_dl", "docs", "tfs", "dls",
+                   "ver"]
+
+# docs column types whose cast-to-string equality pyarrow computes
+# exactly as Spark does (Spark renders 1.0 as "1.0", arrow as "1")
+_LOCAL_EQ_TYPES = {"string", "bigint", "int", "smallint", "tinyint", "boolean"}
 
 # (field, term) -> one flat kernel key. \x1f (ASCII unit separator) is
 # never produced by either tokenizer mode's emissions in practice; the
@@ -51,6 +76,64 @@ FIELD_SEP = "\x1f"
 
 def fkey(field: str, term: str) -> str:
     return f"{field}{FIELD_SEP}{term}"
+
+
+@dataclass
+class KernelArgs:
+    """One query's per-range kernel inputs, derived once: flat term keys
+    per role, BM25 weights and per-term avgdl, corpus constants, and the
+    (field, term) posting rows to fetch."""
+    weights: dict[str, float]
+    avgdls: dict[str, float]
+    must_groups: list[list[str]]
+    should: list[str]
+    must_not: list[str]
+    phrases: list[list[str]]
+    needed: list[tuple[str, str]]
+    avgdl: float
+    k1: float
+    b: float
+    range_bits: int
+
+    def score(self, range_id: int, pdf: pd.DataFrame, k: int | None,
+              prune: bool = True, need_total: bool = True,
+              need_scores: bool = True, tomb: tuple | None = None):
+        """(docs, scores, n_matched) of one range. Phrase queries return
+        the range's full match set; otherwise the exact top-k, or the
+        full match set when ``k`` is None."""
+        if self.phrases:
+            return scorer.score_range_phrase(
+                pdf, self.weights, self.must_groups, self.should,
+                self.must_not, self.phrases,
+                base=range_id << self.range_bits, avgdl=self.avgdl,
+                k1=self.k1, b=self.b, avgdl_by_term=self.avgdls,
+                need_scores=need_scores, tomb=tomb)
+        if k is None:
+            k, prune = sys.maxsize, False
+        return scorer.score_range_topk(
+            pdf, self.weights, self.must_groups, self.should, self.must_not,
+            k=k, avgdl=self.avgdl, k1=self.k1, b=self.b, prune=prune,
+            need_total=need_total, avgdl_by_term=self.avgdls, tomb=tomb)
+
+
+def _top(docs: np.ndarray, scores: np.ndarray, k: int):
+    order = np.lexsort((docs, -scores))[:k]
+    return docs[order], scores[order]
+
+
+def merge_ranges(parts: Iterable[tuple[np.ndarray, np.ndarray, int]],
+                 k: int) -> tuple[int, list[tuple[int, float]]]:
+    """Per-range kernel outputs (docs, scores, n_matched) -> (total,
+    top-k hits by score desc, doc_id asc): the one merge both the local
+    and the wand executor end in."""
+    parts = list(parts)
+    if not parts:
+        return 0, []
+    docs, scores = _top(
+        np.concatenate([p[0] for p in parts]).astype(np.int64),
+        np.concatenate([p[1] for p in parts]).astype(np.float64), k)
+    return (sum(int(p[2]) for p in parts),
+            list(zip(docs.tolist(), scores.tolist())))
 
 
 class SearchEngine:
@@ -71,11 +154,19 @@ class SearchEngine:
         self.meta = self.planner.meta
         self.extra = self.planner.extra
         self._df_cache: dict[tuple[str, str], int] = {}
-        # append-mode tombstones of the pinned snapshot, broadcast once
-        # per engine: every decode kernel masks dead entries with it
-        tomb = self.catalog.tombstones()
-        self._tomb_bc = (spark.sparkContext.broadcast(tomb)
-                         if tomb is not None else None)
+        # append-mode tombstones of the pinned snapshot: every decode
+        # kernel masks dead entries with them (driver-side array read)
+        self._tomb = self.catalog.tombstones()
+        self._tomb_broadcast = None
+
+    @property
+    def _tomb_bc(self):
+        """The tombstones as a Spark broadcast (None when there are
+        none), created the first time a Spark kernel needs it."""
+        if self._tomb is not None and self._tomb_broadcast is None:
+            self._tomb_broadcast = self.spark.sparkContext.broadcast(
+                self._tomb)
+        return self._tomb_broadcast
 
     # ----------------------------------------------------------- utils
 
@@ -87,11 +178,10 @@ class SearchEngine:
         """df per (field, term), via a driver-side dictionary cache (the
         hot term-dictionary an engine keeps resident; absent terms cache
         as 0 so repeated misses don't re-scan). The fetch itself is the
-        bucket-pruned term_stats lookup."""
+        bucket-pruned term_stats lookup (:meth:`IndexCatalog.term_dfs`)."""
         missing = [p for p in pairs if p not in self._df_cache]
         if missing:
-            rows = self.catalog.term_stats_for_terms(self.spark, missing).collect()
-            got = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+            got = self.catalog.term_dfs(self.spark, missing)
             for p in missing:
                 self._df_cache[p] = got.get(p, 0)
         return {p: self._df_cache[p] for p in pairs}
@@ -139,56 +229,150 @@ class SearchEngine:
             cond = c if cond is None else (cond & c)
         return cond
 
-    # ------------------------------------------------------- wand path
+    # ----------------------------------------------- per-range kernels
+
+    def _kernel_args(self, aq: AnalyzedQuery) -> KernelArgs | None:
+        """The per-range kernel inputs of ``aq`` (terms, phrases and
+        must-nots; attribute predicates are applied by the callers), or
+        None when it cannot match: no scoring term has postings, a must
+        group has no term with postings, or a phrase token has none
+        (Q6)."""
+        weights, avgdls = self._term_weights(aq)
+
+        def keys(specs) -> list[str]:
+            return [k for k in (fkey(s.field, s.term) for s in specs)
+                    if k in weights]
+
+        must_groups = [keys(g) for g in aq.must_groups]
+        phrases = [[fkey(ph.field, t) for t in ph.tokens]
+                   for ph in aq.phrases]
+        if (not weights or not all(must_groups)
+                or any(k not in weights for ph in phrases for k in ph)):
+            return None
+        must_not_pairs = sorted(set(aq.must_not_terms))
+        return KernelArgs(
+            weights=weights, avgdls=avgdls, must_groups=must_groups,
+            should=keys(aq.should_terms),
+            must_not=[fkey(f, t) for f, t in must_not_pairs],
+            phrases=phrases,
+            needed=sorted({s.key for s in aq.scoring_terms
+                           if fkey(*s.key) in weights} | set(must_not_pairs)),
+            avgdl=float(self.meta["avgdl"]), k1=float(self.meta["k1"]),
+            b=float(self.meta["b"]),
+            range_bits=int(self.meta.get("range_bits") or 0))
+
+    def _kernel_df(self, a: KernelArgs, k: int | None = None,
+                   prune: bool = True, need_total: bool = True,
+                   need_scores: bool = True) -> DataFrame:
+        """Spark executor: partition-pruned postings of ``a.needed`` ->
+        groupBy(range_id) applyInPandas of :meth:`KernelArgs.score` ->
+        (doc_id, score, range_id, range_matched), at most ``k`` rows per
+        range (all matches when ``k`` is None)."""
+        rows = (self.catalog.postings_for_terms(self.spark, a.needed)
+                .withColumn("term",
+                            F.concat_ws(FIELD_SEP, "field", "term"))
+                .drop("field"))
+        if not a.phrases:
+            rows = rows.drop("pos")
+        tomb_bc = self._tomb_bc
+
+        def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            docs, scores, n = a.score(
+                int(key[0]), pdf, k, prune=prune, need_total=need_total,
+                need_scores=need_scores,
+                tomb=tomb_bc.value if tomb_bc is not None else None)
+            return pd.DataFrame({
+                "doc_id": docs, "score": scores,
+                "range_id": np.full(docs.size, int(key[0]), dtype=np.int64),
+                "range_matched": np.full(docs.size, n, dtype=np.int64),
+            })
+
+        return rows.groupBy("range_id").applyInPandas(kernel, _KERNEL_SCHEMA)
 
     def _wand_hits(self, aq: AnalyzedQuery, k: int, prune: bool = True,
                    need_total: bool = True) -> DataFrame:
         """Per-range kernel -> (doc_id, score, range_id, range_matched).
         ``need_total=False`` lets the pruned kernel skip the exact
         match count (range_matched = -1) — top-k only callers."""
-        weights, avgdls = self._term_weights(aq)
-        must_groups = [[fkey(s.field, s.term) for s in g
-                        if fkey(s.field, s.term) in weights]
-                       if any(fkey(s.field, s.term) in weights for s in g)
-                       else []
-                       for g in aq.must_groups]
-        should = [fkey(s.field, s.term) for s in aq.should_terms
-                  if fkey(s.field, s.term) in weights]
-        must_not_pairs = sorted(set(aq.must_not_terms))
-        must_not = [fkey(f, t) for f, t in must_not_pairs]
-        scoring_pairs = sorted({s.key for s in aq.scoring_terms
-                                if fkey(*s.key) in weights})
-        needed = sorted(set(scoring_pairs) | set(must_not_pairs))
-        avgdl = float(self.meta["avgdl"])
-        k1 = float(self.meta["k1"])
-        b = float(self.meta["b"])
+        a = self._kernel_args(aq)
+        if a is None:
+            return self.spark.createDataFrame([], _KERNEL_SCHEMA)
+        return self._kernel_df(a, k, prune=prune, need_total=need_total)
 
-        empty = self.spark.createDataFrame([], _KERNEL_SCHEMA)
-        if not weights or any(not g for g in must_groups):
-            # no scoring terms, or an unsatisfiable must group
-            # (every member has df=0) -> no hits (Q6)
-            return empty
+    def _wand_topk(self, a: KernelArgs | None,
+                   k: int) -> tuple[int, list[tuple[int, float]]]:
+        """The wand path of :meth:`search`: one job collects each range's
+        <= k kernel rows, merged on the driver."""
+        if a is None:
+            return 0, []
+        rows = self._kernel_df(a, k).collect()
+        matched = {r["range_id"]: r["range_matched"] for r in rows}
+        return merge_ranges([(np.array([r["doc_id"] for r in rows], np.int64),
+                              np.array([r["score"] for r in rows], np.float64),
+                              sum(matched.values()))], k)
 
-        rows = (self.catalog.postings_for_terms(self.spark, needed)
-                .drop("pos")
-                .withColumn("term",
-                            F.concat_ws(FIELD_SEP, "field", "term"))
-                .drop("field"))
-        tomb_bc = self._tomb_bc
+    # -------------------------------------------------------- local path
 
-        def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            docs, scores, n_matched = scorer.score_range_topk(
-                pdf, weights, must_groups, should, must_not,
-                k=k, avgdl=avgdl, k1=k1, b=b, prune=prune,
-                need_total=need_total, avgdl_by_term=avgdls,
-                tomb=tomb_bc.value if tomb_bc is not None else None)
-            return pd.DataFrame({
-                "doc_id": docs, "score": scores,
-                "range_id": np.full(docs.size, int(key[0]), dtype=np.int64),
-                "range_matched": np.full(docs.size, n_matched, dtype=np.int64),
-            })
+    def _local_reads(self, aq: AnalyzedQuery, a: KernelArgs | None):
+        """The driver-side reads of a local execution — the postings of
+        ``a.needed`` and, for ``=`` filters, the filtered docs columns —
+        or None when they do not fit the read budget, a filter column
+        type rules the driver out or the docs DDL is not recorded."""
+        post = allow = None
+        nbytes = 0
+        if a is not None:
+            post = self.catalog.postings_read(
+                a.needed, _KERNEL_COLUMNS + (["pos"] if a.phrases else []))
+            nbytes += post.nbytes
+            if aq.attr_preds:
+                cols = self.planner.doc_columns()
+                if any(p.op != "=" or cols.get(p.column) not in _LOCAL_EQ_TYPES
+                       for p in aq.attr_preds):
+                    return None
+                allow = self.catalog.docs_read(
+                    columns=sorted({p.column for p in aq.attr_preds}))
+                if allow is None:  # no recorded docs DDL
+                    return None
+                nbytes += allow.nbytes
+        return (post, allow) if fits_local(nbytes) else None
 
-        return rows.groupBy("range_id").applyInPandas(kernel, _KERNEL_SCHEMA)
+    @staticmethod
+    def _allowlist(tab: pa.Table, preds: list[AttrPred]) -> np.ndarray:
+        """doc_ids passing every ``=`` predicate: :meth:`_attr_filter`'s
+        cast-to-string equality, negation and SQL null semantics (a null
+        comparison keeps no row, negated or not)."""
+        mask = None
+        for p in preds:
+            c = pc.equal(pc.cast(tab[p.column], pa.string()), p.value)
+            if p.negated:
+                c = pc.invert(c)
+            mask = c if mask is None else pc.and_kleene(mask, c)
+        return np.unique(tab.filter(mask)["doc_id"].to_numpy())
+
+    def _local_topk(self, aq: AnalyzedQuery, a: KernelArgs | None, reads,
+                    k: int) -> tuple[int, list[tuple[int, float]]]:
+        """The local path of :meth:`search`: the kernels run once per
+        range_id over the driver-read posting rows; with ``=`` filters
+        each range's full match set is intersected with the allowlist."""
+        if a is None:
+            return 0, []
+        post, allow = reads
+        tab = post.read()
+        tab = tab.set_column(
+            tab.schema.get_field_index("term"), "term",
+            pc.binary_join_element_wise(tab["field"], tab["term"], FIELD_SEP))
+        pdf = tab.drop_columns(["field"]).to_pandas()
+        ok = (self._allowlist(allow.read(), aq.attr_preds)
+              if allow is not None else None)
+        parts = []
+        for rid, g in pdf.groupby("range_id", sort=False):
+            docs, scores, n = a.score(int(rid), g, None if ok is not None else k,
+                                      tomb=self._tomb)
+            if ok is not None:
+                keep = np.isin(docs, ok)
+                docs, scores, n = docs[keep], scores[keep], int(keep.sum())
+            parts.append((docs, scores, n))
+        return merge_ranges(parts, k)
 
     # ------------------------------------------------- relational path
 
@@ -292,7 +476,7 @@ class SearchEngine:
         # the old plan ran three decode subtrees (score, candidate
         # re-scan, positions) over the same term-pruned postings
         if aq.phrases and self.meta.get("store_positions"):
-            cand = self._phrase_hits_onepass(aq, weights, avgdls)
+            cand = self._phrase_hits_onepass(aq)
             for ph in aq.must_not_phrases:
                 cand = cand.join(self._phrase_matches(ph, docs_df),
                                  "doc_id", "left_anti")
@@ -368,46 +552,16 @@ class SearchEngine:
             cand = cand.join(keep, "doc_id", "left_semi")
         return cand
 
-    def _phrase_hits_onepass(self, aq: AnalyzedQuery,
-                             weights: dict[str, float],
-                             avgdls: dict[str, float]) -> DataFrame:
+    def _phrase_hits_onepass(self, aq: AnalyzedQuery) -> DataFrame:
         """Q4 one-pass execution: postings (incl. positions) of the
         query's terms, partition-pruned, grouped by range —
         :func:`scorer.score_range_phrase` does candidates + adjacency +
         scoring per range from a single decode. Emits the FULL match
         set (doc_id, score) like the relational path."""
-        must_groups = [[fkey(s.field, s.term) for s in g
-                        if fkey(s.field, s.term) in weights]
-                       for g in aq.must_groups]
-        should = [fkey(s.field, s.term) for s in aq.should_terms
-                  if fkey(s.field, s.term) in weights]
-        phrase_keys = [[fkey(ph.field, t) for t in ph.tokens]
-                       for ph in aq.phrases]
-        must_not_pairs = sorted(set(aq.must_not_terms))
-        must_not = [fkey(f, t) for f, t in must_not_pairs]
-        needed = sorted({s.key for s in aq.scoring_terms
-                         if fkey(*s.key) in weights} | set(must_not_pairs))
-        avgdl = float(self.meta["avgdl"])
-        k1 = float(self.meta["k1"])
-        b = float(self.meta["b"])
-        range_bits = int(self.meta["range_bits"])
-
-        rows = (self.catalog.postings_for_terms(self.spark, needed)
-                .withColumn("term",
-                            F.concat_ws(FIELD_SEP, "field", "term"))
-                .drop("field"))
-        tomb_bc = self._tomb_bc
-
-        def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            docs, scores, _ = scorer.score_range_phrase(
-                pdf, weights, must_groups, should, must_not, phrase_keys,
-                base=int(key[0]) << range_bits, avgdl=avgdl, k1=k1, b=b,
-                avgdl_by_term=avgdls,
-                tomb=tomb_bc.value if tomb_bc is not None else None)
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        return rows.groupBy("range_id").applyInPandas(
-            kernel, "doc_id BIGINT, score DOUBLE")
+        a = self._kernel_args(aq)
+        if a is None:
+            return self.spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
+        return self._kernel_df(a).select("doc_id", "score")
 
     def _exploded_positions(self, pairs: list[tuple[str, str]]) -> DataFrame:
         """(field, term, doc_id, pos ARRAY<BIGINT>) decoded from
@@ -610,31 +764,13 @@ class SearchEngine:
         kernel as positive phrases with scoring skipped (one postings
         scan, membership only); otherwise AND-candidates from the
         postings + content re-tokenization verify."""
+        if self.meta.get("store_positions"):
+            a = self._kernel_args(AnalyzedQuery(phrases=[ph]))
+            if a is None:
+                return self.spark.createDataFrame([], "doc_id BIGINT")
+            return self._kernel_df(a, need_scores=False).select("doc_id")
         toks = sorted(set(ph.tokens))
         pairs = [(ph.field, t) for t in toks]
-        if self.meta.get("store_positions"):
-            dfs = self._term_dfs(pairs)
-            if any(dfs.get(p, 0) == 0 for p in pairs):
-                return self.spark.createDataFrame([], "doc_id BIGINT")
-            phrase_keys = [[fkey(ph.field, t) for t in ph.tokens]]
-            range_bits = int(self.meta["range_bits"])
-            weights = {fkey(f, t): 1.0 for f, t in pairs}
-            rows = (self.catalog.postings_for_terms(self.spark, pairs)
-                    .withColumn("term",
-                                F.concat_ws(FIELD_SEP, "field", "term"))
-                    .drop("field"))
-            tomb_bc = self._tomb_bc
-
-            def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                docs, _, _ = scorer.score_range_phrase(
-                    pdf, weights, [], [], [], phrase_keys,
-                    base=int(key[0]) << range_bits, avgdl=1.0,
-                    k1=1.2, b=0.75, need_scores=False,
-                    tomb=tomb_bc.value if tomb_bc is not None else None)
-                return pd.DataFrame({"doc_id": docs})
-
-            return rows.groupBy("range_id").applyInPandas(
-                kernel, "doc_id BIGINT")
         ex = self._exploded_postings(pairs)
         cand = (ex.groupBy("doc_id")
                 .agg(F.count_distinct("term").alias("n_t"))
@@ -667,6 +803,21 @@ class SearchEngine:
         aq = self.planner.analyze(parse_query(q))
         return self._relational_hits(aq)
 
+    def _choose_path(self, aq: AnalyzedQuery, custom_sort: list[str],
+                     mode: str):
+        """(path, kernel args, local reads), decided before anything
+        executes (see the module docstring's selection rule)."""
+        if (mode == "relational" or not aq.has_positive
+                or aq.must_not_phrases or custom_sort
+                or (aq.phrases and not self.meta.get("store_positions"))):
+            return "relational", None, None
+        a = self._kernel_args(aq)
+        reads = self._local_reads(aq, a)
+        if reads is not None:
+            return "local", a, reads
+        wand = not aq.attr_preds and not aq.phrases
+        return ("wand" if wand else "relational"), a, None
+
     def search(self, request: SearchRequest | str, mode: str = "auto") -> SearchResponse:
         """Full request semantics R1-R6 (handlers/search.go:20-177)."""
         req = SearchRequest(q=request) if isinstance(request, str) else request
@@ -675,23 +826,11 @@ class SearchEngine:
 
         aq = self.planner.analyze(parse_query(req.q))
         custom_sort = [s for s in (req.sort or []) if s.lstrip("-") != "_score"]
-        use_wand = (mode != "relational" and aq.has_positive
-                    and not aq.attr_preds and not aq.phrases
-                    and not aq.must_not_phrases and not custom_sort)
-
-        if use_wand:
-            per_range = self._wand_hits(aq, k_eff)
-            per_range.persist()
-            try:
-                total = (per_range.groupBy("range_id")
-                         .agg(F.first("range_matched").alias("m"))
-                         .agg(F.sum("m")).collect()[0][0]) or 0
-                ranked = (per_range.orderBy(F.desc("score"), F.asc("doc_id"))
-                          .limit(k_eff))
-                hit_rows = ranked.collect()
-            finally:
-                per_range.unpersist()
-            hits = [(r["doc_id"], r["score"]) for r in hit_rows]
+        path, a, reads = self._choose_path(aq, custom_sort, mode)
+        if path == "local":
+            total, hits = self._local_topk(aq, a, reads, k_eff)
+        elif path == "wand":
+            total, hits = self._wand_topk(a, k_eff)
         else:
             cand = self._relational_hits(aq)
             cand.persist()
@@ -707,6 +846,7 @@ class SearchEngine:
         hits = hits[req.effective_offset:]
         resp = self._assemble(req, hits, int(total))
         resp.truncated_expansions = list(aq.truncated_expansions)
+        resp.path = path
         return resp
 
     def _order_cols(self, req: SearchRequest):
@@ -736,12 +876,11 @@ class SearchEngine:
         scores = {int(d): float(s) for d, s in hits}
         # group-dir-pruned fetch: a top-k assembly reads at most k doc
         # group dirs, never the whole docs table
-        docs_df = self.catalog.docs_for_ids(self.spark, ids)
+        cols = None
         if req.attributes_to_retrieve:
-            cols = [c for c in req.attributes_to_retrieve if c in docs_df.columns]
-            docs_df = docs_df.select("doc_id", *[c for c in cols if c != "doc_id"])
-        rows = docs_df.collect()
-        by_id = {int(r["doc_id"]): r.asDict() for r in rows}
+            have = self.planner.doc_columns()
+            cols = [c for c in req.attributes_to_retrieve if c in have]
+        by_id = self.catalog.doc_records(self.spark, ids, cols)
         out = []
         for d in ids:
             rec = dict(by_id.get(d, {"doc_id": d}))

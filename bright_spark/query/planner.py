@@ -13,7 +13,9 @@ Maps the parsed clause tree onto the index's physical structures:
 - wildcard (Q9) / fuzzy (Q10) clauses -> term-dictionary expansion
   against ``term_stats`` WITHIN the clause's field namespace
   (parquet min/max on term-sorted files prunes prefix patterns;
-  expansion capped deterministically)
+  expansion capped deterministically). The expansion reads term_stats
+  on the driver with pyarrow when the footers' row groups fit the
+  catalog's read budget, and with Spark otherwise
 - attribute clauses (``lang:python``, ``doc_len:>200``, Q11/Q12) ->
   pushed-down predicates on the ``docs`` table; ranges stay attribute
   predicates on any stored column
@@ -28,6 +30,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -136,6 +140,48 @@ def _wildcard_to_like(pattern: str) -> str:
     return "".join(out).lower()
 
 
+def _like_prefix(like: str) -> str:
+    """The literal prefix every match of a LIKE pattern starts with."""
+    out, esc = [], False
+    for ch in like:
+        if esc:
+            out.append(ch)
+            esc = False
+        elif ch == "\\":
+            esc = True
+        elif ch in "%_":
+            break
+        else:
+            out.append(ch)
+    return "".join(out)
+
+
+def _within_edits(terms: list[str], q: str, k: int) -> list[str]:
+    """``terms`` within Levenshtein distance ``k`` of ``q``, over code
+    points as Spark's ``levenshtein``: one vectorized DP row sweep per
+    candidate length, where row i is
+    ``D[i][j] = min_l<=j (a[l] + j - l)`` with
+    ``a[j] = min(D[i-1][j] + 1, D[i-1][j-1] + cost)``."""
+    by_len: dict[int, list[str]] = {}
+    for t in terms:
+        by_len.setdefault(len(t), []).append(t)
+    qa = np.frombuffer(q.encode("utf-32-le"), dtype=np.uint32)
+    out = []
+    for n, ts in by_len.items():
+        chars = np.frombuffer("".join(ts).encode("utf-32-le"),
+                              dtype=np.uint32).reshape(len(ts), n)
+        j = np.arange(n + 1)
+        row = np.broadcast_to(j, (len(ts), n + 1))
+        for i, c in enumerate(qa, 1):
+            a = np.empty_like(row)
+            a[:, 0] = i
+            a[:, 1:] = np.minimum(row[:, 1:] + 1,
+                                  row[:, :-1] + (chars != c))
+            row = np.minimum.accumulate(a - j, axis=1) + j
+        out += [t for t, d in zip(ts, row[:, n]) if d <= k]
+    return out
+
+
 class Planner:
     def __init__(self, spark: SparkSession, catalog: IndexCatalog,
                  max_expansions: int | None = None,
@@ -160,8 +206,7 @@ class Planner:
     def doc_columns(self) -> dict[str, str]:
         """docs table column -> simple type name."""
         if self._doc_columns is None:
-            df = self.catalog.docs(self.spark)
-            self._doc_columns = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+            self._doc_columns = self.catalog.docs_columns(self.spark)
         return self._doc_columns
 
     # --------------------------------------------------- field routing
@@ -187,44 +232,59 @@ class Planner:
 
     # ------------------------------------------------------ expansion
 
-    def _expanded(self, df, what: str,
-                  aq: AnalyzedQuery | None = None) -> list[str]:
-        """Collect up to the cap + 1 terms; past the cap either error
-        (Bleve's TooManyClauses — never silently answer over a partial
-        expansion) or truncate-and-flag per ``on_overflow``."""
+    def _capped(self, terms: list[str], what: str,
+                aq: AnalyzedQuery | None) -> list[str]:
+        """Past the cap either error (Bleve's TooManyClauses — never
+        silently answer over a partial expansion) or keep the first cap
+        terms and flag the pattern, per ``on_overflow``. ``terms`` is
+        sorted in code-point order (Spark's binary string order)."""
         cap = self.max_expansions
-        rows = (df.select("term").orderBy("term")
-                  .limit(cap + 1).collect())
-        if len(rows) > cap:
+        if len(terms) > cap:
             if self.on_overflow == "error":
                 raise TooManyClausesError(
                     f"{what} expands to more than {cap} terms; "
                     f"narrow the pattern")
             if aq is not None:
                 aq.truncated_expansions.append(what)
-            rows = rows[:cap]
+            terms = terms[:cap]
+        return terms
+
+    def _spark_terms(self, cond) -> list[str]:
+        """Up to cap + 1 terms of the term_stats rows matching ``cond``,
+        in term order (the Spark executor of an expansion)."""
+        ts = self.catalog.term_stats(self.spark)
+        rows = (ts.filter(cond).select("term").orderBy("term")
+                .limit(self.max_expansions + 1).collect())
         return [r["term"] for r in rows]
 
     def expand_wildcard(self, pattern: str, text_field: str,
                         aq: AnalyzedQuery | None = None) -> list[str]:
         like = _wildcard_to_like(pattern)
-        ts = self.catalog.term_stats(self.spark)
-        return self._expanded(
-            ts.filter((F.col("field") == text_field)
-                      & F.col("term").like(like)),
-            f"wildcard {pattern!r}", aq)
+        local = self.catalog.field_terms(text_field, _like_prefix(like))
+        if local is not None:
+            terms = sorted(local.filter(pc.match_like(local, like)).to_pylist())
+        else:
+            terms = self._spark_terms((F.col("field") == text_field)
+                                      & F.col("term").like(like))
+        return self._capped(terms, f"wildcard {pattern!r}", aq)
 
     def expand_fuzzy(self, term: str, fuzziness: int, text_field: str,
                      aq: AnalyzedQuery | None = None) -> list[str]:
         t = term.lower()
-        ts = self.catalog.term_stats(self.spark)
-        return self._expanded(
-            ts.filter(
+        local = self.catalog.field_terms(text_field)
+        if local is not None:
+            n = pc.utf8_length(local)
+            near = local.filter(pc.and_(
+                pc.greater_equal(n, len(t) - fuzziness),
+                pc.less_equal(n, len(t) + fuzziness)))
+            terms = sorted(_within_edits(near.to_pylist(), t, fuzziness))
+        else:
+            terms = self._spark_terms(
                 (F.col("field") == text_field)
                 & (F.length("term") >= len(t) - fuzziness)
                 & (F.length("term") <= len(t) + fuzziness)
-                & (F.levenshtein(F.col("term"), F.lit(t)) <= fuzziness)),
-            f"fuzzy {term!r}~{fuzziness}", aq)
+                & (F.levenshtein(F.col("term"), F.lit(t)) <= fuzziness))
+        return self._capped(terms, f"fuzzy {term!r}~{fuzziness}", aq)
 
     # -------------------------------------------------------- analyze
 

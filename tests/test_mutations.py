@@ -364,3 +364,65 @@ def test_delete_everything_commits_empty_index(spark, tmp_path):
     assert eng.meta["n_docs"] == 0 and eng.meta["avgdl"] == 0.0
     assert eng.search("").total_hits == 0
     assert eng.search_df("alpha", k=5).count() == 0
+
+
+def test_mutated_index_driver_spark_oracle_parity(spark, tmp_path,
+                                                  monkeypatch):
+    """Upserts and deletes without compaction leave delta chains (Spark-
+    and driver-written) and tombstones; on that index the driver path,
+    the Spark path (zero read budget) and an oracle over the surviving
+    rows agree on hits, scores and totals."""
+    import pandas as pd
+
+    from bright_spark.index import catalog as catalog_mod
+    from bright_spark.index.catalog import IndexCatalog
+    from bright_spark.models import SearchRequest
+    from tests.oracle import OracleIndex
+
+    pdf = make_repos(60, 23)
+    pdf["rid"] = range(len(pdf))
+    idx = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pdf), idx,
+                IndexConfig(id="mp"), id_col="rid", n_build_partitions=4)
+    rows = {int(r["rid"]): r for r in pdf.to_dict("records")}
+
+    def upsert(batch, fast):
+        IndexMutator(spark, idx, mode="append", compact_threshold=0,
+                     fast=fast).upsert(spark.createDataFrame(
+                         pd.DataFrame(batch)))
+        rows.update({r["rid"]: r for r in batch})
+
+    replaced = []
+    for rid in (3, 17, 40):
+        r = dict(rows[rid])
+        r["content"] = "def parse_user_session(config): return user session"
+        replaced.append(r)
+    upsert(replaced, "never")
+    upsert([{**rows[0], "rid": 1000 + i, "path": f"src/new{i}.py",
+             "content": f"user session parser config token{i}"}
+            for i in range(4)], "auto")
+    for ids in ([5, 1001], [17, 33]):
+        IndexMutator(spark, idx, mode="append",
+                     compact_threshold=0).delete_ids(ids)
+        for i in ids:
+            rows.pop(i)
+
+    cat = IndexCatalog(idx)
+    assert cat.delta_depth("postings") > 1
+    assert cat.tombstones() is not None
+    oracle = OracleIndex(list(rows.values()), id_col="rid")
+    default_budget = catalog_mod.LOCAL_READ_MAX_BYTES
+    for q in ["user", "parser AND config", "config NOT test", "pars*",
+              '"user session"']:
+        exp, etotal = oracle.search(q, 10)
+        got = {}
+        for budget in (default_budget, 0):
+            monkeypatch.setattr(catalog_mod, "LOCAL_READ_MAX_BYTES", budget)
+            resp = SearchEngine(spark, idx).search(SearchRequest(q=q, limit=10))
+            hits = [(h["doc_id"], h["_score"]) for h in resp.hits]
+            assert [d for d, _ in hits] == [d for d, _ in exp], (q, resp.path)
+            for (_, gs), (_, es) in zip(hits, exp):
+                assert gs == pytest.approx(es, abs=1e-9), (q, resp.path)
+            assert resp.total_hits == etotal, (q, resp.path)
+            got[resp.path] = hits
+        assert "local" in got and len(got) == 2, q

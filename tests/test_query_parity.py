@@ -1,8 +1,10 @@
 """Engine vs pure-Python oracle: rank-identical top-k, scores equal,
-exact totals; WAND pruned == exhaustive (SURVEY.md §7 step-3 exit)."""
+exact totals; WAND pruned == exhaustive (SURVEY.md §7 step-3 exit);
+driver-side (local) search == Spark search == oracle."""
 
 import pytest
 
+from bright_spark.index import catalog
 from bright_spark.models import SearchRequest
 
 K = 10
@@ -40,6 +42,11 @@ PHRASE_QUERIES = [
     '"user session"',
     '"parse config"',
 ]
+
+# shapes search() never runs on the driver: range / match-all filters
+# and pure negation (no positive clause)
+RELATIONAL_ONLY = {"lang:python", "doc_len:>2000", "doc_len:>2000 user",
+                   "-user"}
 
 
 def _assert_parity(engine, oracle, q, k=K, mode="auto"):
@@ -156,12 +163,169 @@ def test_wildcard_expansion_cap_errors(spark, tmp_path):
         eng.search_df("zzq00000~5", k=5)  # ~5 covers every zzqNNNNN term
     # under the cap the expansion still answers
     assert eng.search_df("zzq0000*", k=5).count() == 1
-    # truncate mode (bench comparability): answers over the first cap
-    # terms and flags the pattern in the response envelope
-    trunc = SearchEngine(spark, idx, on_overflow="truncate")
-    resp = trunc.search("zzq*")
-    assert resp.hits and resp.truncated_expansions == ["wildcard 'zzq*'"]
-    assert "truncatedExpansions" in resp.to_dict()
-    clean = trunc.search("zzq0000*")
-    assert not clean.truncated_expansions
-    assert "truncatedExpansions" not in clean.to_dict()
+    # the same through search(), expanding on the driver and (zero read
+    # budget) with Spark; truncate mode (bench comparability) answers
+    # over the first cap terms and flags the pattern in the envelope
+    truncated = {}
+    for budget, path in ((catalog.LOCAL_READ_MAX_BYTES, "local"),
+                         (0, "wand")):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(catalog, "LOCAL_READ_MAX_BYTES", budget)
+            eng = SearchEngine(spark, idx)
+            with pytest.raises(TooManyClausesError):
+                eng.search("zzq*")
+            with pytest.raises(TooManyClausesError):
+                eng.search("zzq00000~5")
+            trunc = SearchEngine(spark, idx, on_overflow="truncate")
+            resp = trunc.search("zzq*")
+            assert resp.path == path
+            assert resp.hits and resp.truncated_expansions == ["wildcard 'zzq*'"]
+            assert "truncatedExpansions" in resp.to_dict()
+            truncated[path] = resp.to_dict()
+            fuzzy = trunc.search("zzq00000~5")
+            assert fuzzy.truncated_expansions == ["fuzzy 'zzq00000'~5"]
+            clean = trunc.search("zzq0000*")
+            assert not clean.truncated_expansions
+            assert "truncatedExpansions" not in clean.to_dict()
+    assert truncated["local"] == truncated["wand"]
+
+
+def _hits(resp):
+    return [(h["doc_id"], h["_score"]) for h in resp.hits]
+
+
+def _assert_oracle(resp, oracle, q, k=K):
+    expected, etotal = oracle.search(q, k)
+    got = _hits(resp)
+    assert [d for d, _ in got] == [d for d, _ in expected], (
+        f"rank mismatch for {q!r} ({resp.path}): {got} vs {expected}")
+    for (gd, gs), (_, es) in zip(got, expected):
+        assert gs == pytest.approx(es, abs=1e-9), f"score {q!r} doc {gd}"
+    assert resp.total_hits == etotal, q
+
+
+@pytest.mark.parametrize("q", QUERIES + PHRASE_QUERIES)
+def test_search_local_path_matches_oracle(engine, oracle, q):
+    resp = engine.search(SearchRequest(q=q, limit=K))
+    _assert_oracle(resp, oracle, q)
+    assert resp.path == ("relational" if q in RELATIONAL_ONLY else "local")
+
+
+@pytest.mark.parametrize("q", QUERIES + PHRASE_QUERIES)
+def test_search_spark_path_when_reads_exceed_budget(
+        spark, built_index, engine, oracle, monkeypatch, q):
+    """With a zero read budget every read goes through Spark (wand for
+    term/bool shapes, relational for phrases and filters): same hits,
+    scores and totals as the driver path, and the same assembled
+    records (the Spark ``Row.asDict()`` values under the docs schema)."""
+    from bright_spark.query.engine import SearchEngine
+    local = engine.search(SearchRequest(q=q, limit=K))
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", 0)
+    resp = SearchEngine(spark, built_index.index_dir).search(
+        SearchRequest(q=q, limit=K))
+    assert resp.path != "local"
+    if resp.path == "wand":
+        assert _hits(resp) == _hits(local)
+    _assert_oracle(resp, oracle, q)
+    assert resp.total_hits == local.total_hits
+    strip = [{c: v for c, v in h.items() if c != "_score"} for h in resp.hits]
+    assert strip == [{c: v for c, v in h.items() if c != "_score"}
+                     for h in local.hits]
+
+
+def test_search_path_follows_footer_bytes(spark, built_index, monkeypatch):
+    """The gate compares the footer bytes of the row groups a query
+    reads with the budget: just above them runs locally, at them the
+    query falls back to Spark."""
+    from bright_spark.query.engine import _KERNEL_COLUMNS, SearchEngine
+    from bright_spark.query.parser import parse_query
+    eng = SearchEngine(spark, built_index.index_dir)
+    a = eng._kernel_args(eng.planner.analyze(parse_query("parse config")))
+    nbytes = eng.catalog.postings_read(a.needed, _KERNEL_COLUMNS).nbytes
+    assert nbytes > 0
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes + 1)
+    assert eng.search("parse config").path == "local"
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes)
+    assert eng.search("parse config").path == "wand"
+
+
+@pytest.mark.parametrize("q", ["user", "read AND write", "confg~1",
+                               "pars*", "lang:go user", '"user session"'])
+def test_local_search_starts_no_spark_job(spark, built_index, q):
+    """Engine open + a local-path search (term dictionary, expansion,
+    postings, filter allowlist, assembly) run no Spark job."""
+    from bright_spark.query.engine import SearchEngine
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    eng = SearchEngine(spark, built_index.index_dir)
+    resp = eng.search(SearchRequest(q=q, limit=K))
+    assert resp.path == "local" and resp.hits
+    assert max(tracker.getJobIdsForGroup(None), default=-1) == before
+
+
+@pytest.mark.parametrize("kind,args", [
+    ("wildcard", ("pars*",)), ("wildcard", ("*config*",)),
+    ("wildcard", ("us?r*",)), ("wildcard", ("get*id",)),
+    ("wildcard", ("a%b*",)), ("wildcard", ("get_*",)),
+    ("fuzzy", ("confg", 1)), ("fuzzy", ("usr", 2)), ("fuzzy", ("x", 1)),
+])
+def test_expansion_driver_equals_spark(spark, built_index, monkeypatch,
+                                       kind, args):
+    """Driver-side expansion (pyarrow LIKE / vectorized Levenshtein over
+    the term_stats footers' row groups) == Spark's like / levenshtein,
+    in the same term order and with the same truncation at the cap."""
+    from bright_spark.query.engine import SearchEngine
+
+    def expand():
+        planner = SearchEngine(spark, built_index.index_dir,
+                               on_overflow="truncate").planner
+        fn = (planner.expand_wildcard if kind == "wildcard"
+              else planner.expand_fuzzy)
+        return fn(*args, text_field="content")
+
+    local = expand()
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", 0)
+    assert local == expand()
+
+
+def test_within_edits_matches_loop_levenshtein():
+    import random
+
+    from bright_spark.query.planner import _within_edits
+    from tests.oracle import _levenshtein
+    rng = random.Random(7)
+    alphabet = "abcé漢"
+    for _ in range(200):
+        q = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 6)))
+        terms = sorted({"".join(rng.choice(alphabet)
+                                for _ in range(rng.randint(0, 8)))
+                        for _ in range(40)})
+        k = rng.randint(0, 3)
+        assert sorted(_within_edits(terms, q, k)) == [
+            t for t in terms if _levenshtein(t, q) <= k], (q, k)
+
+
+@pytest.mark.parametrize("q", ["lang:go user", "repo:org1/proj2 config",
+                               "-lang:python user"])
+def test_filtered_search_without_recorded_docs_schema(
+        spark, built_index, oracle, tmp_path, q):
+    """An index whose manifest records no docs DDL (older layouts) has
+    no driver-side docs read: ``=``-filtered queries run on Spark and
+    still match the oracle."""
+    import json
+    import shutil
+
+    from bright_spark.index.catalog import IndexCatalog
+    from bright_spark.query.engine import SearchEngine
+    idx = str(tmp_path / "idx")
+    shutil.copytree(built_index.index_dir, idx)
+    cat = IndexCatalog(idx)
+    path = cat._manifest_file(cat.current_snapshot_id())
+    with open(path) as f:
+        manifest = json.load(f)
+    del manifest["meta"]["docs_schema"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    resp = SearchEngine(spark, idx).search(SearchRequest(q=q, limit=K))
+    assert resp.path == "relational"
+    _assert_oracle(resp, oracle, q)
