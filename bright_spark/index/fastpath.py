@@ -28,7 +28,6 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
-import shutil
 
 import numpy as np
 import pandas as pd
@@ -41,20 +40,12 @@ from bright_spark.index.catalog import (
     POSTINGS_ARROW,
     TERM_STATS_ARROW,
     term_bucket,
+    write_part,
 )
 
 _LIST_I64 = pa.list_(pa.int64())
 _LIST_I32 = pa.list_(pa.int32())
 _LIST_BIN = pa.list_(pa.binary())
-
-
-def _write_part(dst_dir: str, table: pa.Table) -> None:
-    """One version-dir write, mirroring _staged_part_write's adopt
-    semantics (clobber a crashed prior attempt, single sorted file)."""
-    shutil.rmtree(dst_dir, ignore_errors=True)
-    os.makedirs(dst_dir, exist_ok=True)
-    pq.write_table(table, os.path.join(dst_dir, "part-0.parquet"),
-                   compression="zstd")
 
 
 def merge_tombstones(pending, present_ids: np.ndarray, old_tomb) -> None:
@@ -120,15 +111,10 @@ def _signed_stats_pdf(partials: pd.DataFrame | None,
 def _postings_table(rows: pd.DataFrame, snapshot_id: int) -> pa.Table:
     """Merge-kernel output rows -> one arrow table in on-disk shape."""
 
-    def i64_cells(col):
-        return [np.asarray(v, dtype=np.int64) for v in rows[col]]
-
-    def i32_cells(col):
-        return [np.asarray(v, dtype=np.int64).astype(np.int32)
-                for v in rows[col]]
-
-    def bin_cells(col):
-        return [list(v) for v in rows[col]]
+    def lists(col, typ):
+        # the kernel's cells are python lists: arrow converts them in one
+        # pass, without a numpy array per cell
+        return pa.array(rows[col].tolist(), type=typ)
 
     n = len(rows)
     return pa.Table.from_arrays([
@@ -138,15 +124,11 @@ def _postings_table(rows: pd.DataFrame, snapshot_id: int) -> pa.Table:
         pa.array(rows["range_id"].to_numpy(np.int64), type=pa.int64()),
         pa.array(rows["df_chunk"].to_numpy(np.int64), type=pa.int32()),
         pa.array(rows["cf_chunk"].to_numpy(np.int64), type=pa.int64()),
-        pa.array(i64_cells("first_doc"), type=_LIST_I64),
-        pa.array(i64_cells("max_doc"), type=_LIST_I64),
-        pa.array(i32_cells("n"), type=_LIST_I32),
-        pa.array(i32_cells("max_tf"), type=_LIST_I32),
-        pa.array(i32_cells("min_dl"), type=_LIST_I32),
-        pa.array(bin_cells("docs"), type=_LIST_BIN),
-        pa.array(bin_cells("tfs"), type=_LIST_BIN),
-        pa.array(bin_cells("dls"), type=_LIST_BIN),
-        pa.array(bin_cells("pos"), type=_LIST_BIN),
+        lists("first_doc", _LIST_I64), lists("max_doc", _LIST_I64),
+        lists("n", _LIST_I32), lists("max_tf", _LIST_I32),
+        lists("min_dl", _LIST_I32), lists("docs", _LIST_BIN),
+        lists("tfs", _LIST_BIN), lists("dls", _LIST_BIN),
+        lists("pos", _LIST_BIN),
         pa.array(np.full(n, snapshot_id, np.int64), type=pa.int64()),
     ], schema=POSTINGS_ARROW)
 
@@ -334,13 +316,13 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     # protocol is identical to the distributed path's)
     old_tomb = cat.tombstones()
     for g, tab in out_docs.items():
-        _write_part(pending.adopt_part("docs", g), tab)
+        write_part(pending.adopt_part("docs", g), tab)
     for g in set(groups) - set(out_docs):
         pending.drop_part("docs", g)
     for bkt, tab in post_by_bucket.items():
-        _write_part(pending.adopt_part_delta("postings", bkt), tab)
+        write_part(pending.adopt_part_delta("postings", bkt), tab)
     for bkt, tab in stats_by_bucket.items():
-        _write_part(pending.adopt_part_delta("term_stats", bkt), tab)
+        write_part(pending.adopt_part_delta("term_stats", bkt), tab)
     merge_tombstones(pending, present_raw, old_tomb)
 
     n_changed = int(ch_ids.size if pdf is not None else del_ids.size)

@@ -33,13 +33,25 @@ the snapshot catalog, so a mutation commit is **O(batch)**:
                 deltas — bit-identical to recomputation
 
   consolidation (``compact()``, auto-triggered when a pointer chain
-  exceeds ``compact_threshold``): re-merges chained buckets (and, when
-  tombstones exist, the tombstoned doc-ranges of every bucket) into
-  single version dirs with dead entries physically dropped, collapses
-  stats chains via the summed view, clears the tombstone table. This
-  is scorch's background merger as an explicit, amortized operator —
-  between compactions every file in a bucket chain remains term-sorted
-  and bounded (files_per_bucket per dir), so reads stay pruned.
+  exceeds ``compact_threshold``): scorch's background merger as an
+  explicit, amortized operator. Targets: the chained buckets, or every
+  bucket when tombstones exist. Selection: every row of a chained
+  bucket, plus, when tombstones exist, the target rows whose
+  ``range_id`` holds a tombstoned id. Selected rows decode (one bulk
+  varint pass per column, dead entries dropped), re-merge and get the
+  compaction's version; the other rows are copied unchanged, ``ver``
+  included. Each target bucket becomes one version dir, stats chains
+  collapse to their summed rows, the tombstone table clears. Between
+  compactions every file in a bucket chain stays term-sorted and
+  bounded (files_per_bucket per dir), so reads stay pruned.
+  Two executions, one rule: when the footer-reported bytes of the
+  target postings dirs and chained term_stats dirs fit
+  ``catalog.fits_local`` (the read path's gate), the driver reads them
+  with pyarrow, runs the same decode/merge kernels and writes one
+  sorted file per bucket with zero Spark jobs; otherwise the same
+  selection runs as Spark stages (a range-id plan literal up to 1024
+  ranges, every row of the targets above that). The commit's metrics
+  say which (``mode``: ``driver`` or ``spark``).
 
   rewrite mode (forced via ``mode="rewrite"``, and the automatic path
   for beyond-broadcast change sets): the pre-append behavior — affected
@@ -64,6 +76,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,82 +93,130 @@ from bright_spark.index.builder import (
     stage_postings_write,
 )
 from bright_spark.index.catalog import (
+    POSTINGS_ARROW,
     POSTINGS_KERNEL_SCHEMA,
+    TERM_STATS_ARROW,
     IndexCatalog,
+    fits_local,
     term_bucket_col,
+    write_part,
 )
 
 # columns the decode kernels need from a posting row
 _DECODE_COLS = ["field", "term", "range_id",
-                "first_doc", "docs", "tfs", "dls", "pos", "ver"]
+                "first_doc", "n", "docs", "tfs", "dls", "pos", "ver"]
+
+_EMPTY = np.empty(0, dtype=np.int64)
+_NEVER_LIVE = np.iinfo(np.int64).max
 
 
-def _tomb_drop(d: np.ndarray, row_ver: np.int64, tomb) -> np.ndarray | None:
-    """Boolean drop mask for one row's decoded doc ids under the
-    (sorted ids, vers) tombstone pair — dead iff tombstoned at a LATER
-    version than the row. None = nothing to drop."""
-    if tomb is None or d.size == 0:
+def _kill_set(tomb=None, drop_ids=None):
+    """One sorted (doc_ids, versions) kill set: a posting entry is dead
+    iff its doc id is in the set at a version LATER than the entry's
+    row. Tombstones keep their versions (newer re-adds stay live); the
+    ids of a mutation's change set die at every version. None = nothing
+    to kill."""
+    parts = [] if tomb is None else [tomb]
+    if drop_ids is not None and len(drop_ids):
+        ids = np.asarray(drop_ids, dtype=np.int64)
+        parts.append((ids, np.full(ids.size, _NEVER_LIVE, np.int64)))
+    if not parts or not sum(p[0].size for p in parts):
         return None
-    tids, tvers = tomb
-    idx = np.searchsorted(tids, d)
-    idxc = np.minimum(idx, tids.size - 1)
-    drop = (tids[idxc] == d) & (row_ver < tvers[idxc])
-    return drop if drop.any() else None
+    ids = np.concatenate([p[0] for p in parts])
+    vers = np.concatenate([p[1] for p in parts])
+    order = np.lexsort((vers, ids))
+    ids, vers = ids[order], vers[order]
+    last = np.concatenate([ids[1:] != ids[:-1], [True]])
+    return ids[last], vers[last]
 
 
-def _row_ver(row) -> np.int64:
-    v = getattr(row, "ver", None)
-    return np.int64(v) if v is not None and pd.notna(v) else np.int64(0)
+def _flat(col: pd.Series) -> list:
+    return [v for cell in col for v in cell]
 
 
-def _decode_to_partials(range_bits: int, store_positions: bool = False,
-                        drop_bc=None, tomb_bc=None):
-    """Posting rows -> partial-run rows, dropping (a) every doc id in
-    the ``drop_bc`` broadcast (the mutation's change set — a sorted
-    int64 numpy array, broadcast rather than a plan literal so
+def _decode_rows(pdf: pd.DataFrame, store_positions: bool, kill=None):
+    """Every entry of a batch of posting rows, decoded in ONE bulk varint
+    pass per column, minus the entries ``kill`` (:func:`_kill_set`)
+    marks dead — one vectorized ``searchsorted`` for the whole batch.
+
+    Returns (row, doc_ids, tfs, dls, pos): per surviving entry the index
+    of its row in ``pdf``, in row then doc order; ``pos`` holds the
+    surviving entries' positions back to back (entry i owns ``tfs[i]``
+    values), empty unless ``store_positions``."""
+    nb = (pdf["first_doc"].str.len().to_numpy(np.int64) if len(pdf)
+          else _EMPTY)
+    if not nb.sum():
+        return _EMPTY, _EMPTY, _EMPTY, _EMPTY, _EMPTY
+    ns = np.concatenate(pdf["n"].to_numpy()).astype(np.int64)
+    first = np.concatenate(pdf["first_doc"].to_numpy()).astype(np.int64)
+    d = codec.decode_doc_blocks_bulk(first, ns, _flat(pdf["docs"]))
+    t = codec.decode_concat(_flat(pdf["tfs"])).astype(np.int64)
+    l = codec.decode_concat(_flat(pdf["dls"])).astype(np.int64)
+    pos = (codec.decode_concat(_flat(pdf["pos"])).astype(np.int64)
+           if store_positions else _EMPTY)
+    row = np.repeat(np.repeat(np.arange(len(pdf)), nb), ns)
+    if kill is not None:
+        kids, kvers = kill
+        idx = np.minimum(np.searchsorted(kids, d), kids.size - 1)
+        hit = kids[idx] == d
+        if hit.any():
+            # files from layouts before the ver column read it as null:
+            # version 0, the oldest
+            ver = pdf["ver"].to_numpy(np.int64, na_value=0)
+            drop = hit & (ver[row] < kvers[idx])
+            if drop.any():
+                keep = ~drop
+                if pos.size:
+                    pos = pos[np.repeat(keep, t)]
+                row, d, t, l = row[keep], d[keep], t[keep], l[keep]
+    return row, d, t, l, pos
+
+
+def _decode_partials(pdf: pd.DataFrame, store_positions: bool,
+                    kill=None) -> pd.DataFrame | None:
+    """Posting rows -> partial-run rows (PARTIALS_SCHEMA) of their live
+    entries; a row with no live entry emits nothing."""
+    row, d, t, l, pos = _decode_rows(pdf, store_positions, kill)
+    if not d.size:
+        return None
+    starts = np.concatenate(([0], np.flatnonzero(np.diff(row)) + 1))
+    src = row[starts]
+    bounds = np.append(starts, d.size)
+    pos_bounds = np.append(0, np.cumsum(t))[bounds]
+    return pd.DataFrame({
+        "field": pdf["field"].to_numpy()[src],
+        "term": pdf["term"].to_numpy()[src],
+        "range_id": pdf["range_id"].to_numpy(np.int64)[src],
+        "doc_ids": _runs(d, bounds), "tfs": _runs(t, bounds),
+        "dls": _runs(l, bounds),
+        "pos": (_runs(pos, pos_bounds) if store_positions
+                else [_EMPTY] * src.size)})
+
+
+def _runs(a: np.ndarray, bounds: np.ndarray) -> list[np.ndarray]:
+    """``a`` cut at ``bounds`` (first 0, last ``a.size``): one view per
+    run."""
+    b = bounds.tolist()
+    return [a[s:e] for s, e in zip(b[:-1], b[1:])]
+
+
+def _decode_to_partials(store_positions: bool = False, drop_bc=None,
+                        tomb_bc=None):
+    """mapInPandas form of :func:`_decode_partials`, dropping (a) every
+    doc id in the ``drop_bc`` broadcast (the mutation's change set — a
+    sorted int64 numpy array, broadcast rather than a plan literal so
     million-row change sets don't explode the query plan), and (b)
     tombstoned entries, VERSION-AWARE: an entry survives if its row was
     written at or after its doc's tombstone version — re-encoding at
     the new snapshot version must never resurrect dead entries."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = np.empty(0, dtype=np.int64)
-        drop_ids = (np.asarray(drop_bc.value, dtype=np.int64)
-                    if drop_bc is not None else empty)
-        tomb = tomb_bc.value if tomb_bc is not None else None
+        kill = _kill_set(tomb_bc.value if tomb_bc is not None else None,
+                         drop_bc.value if drop_bc is not None else None)
         for pdf in batches:
-            fields, terms, ranges, ds, ts, ls, ps = [], [], [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                d, t, l = codec.decode_all_blocks({
-                    "first_doc": row.first_doc, "docs": row.docs,
-                    "tfs": row.tfs, "dls": row.dls})
-                pos = (codec.decode_concat(list(row.pos)).astype(np.int64)
-                       if store_positions else empty)
-                drop = None
-                if drop_ids.size:
-                    drop = np.isin(d, drop_ids)
-                tdrop = _tomb_drop(d, _row_ver(row), tomb)
-                if tdrop is not None:
-                    drop = tdrop if drop is None else (drop | tdrop)
-                if drop is not None and drop.any():
-                    keep = ~drop
-                    if store_positions and pos.size:
-                        pos = pos[np.repeat(keep, t)]
-                    d, t, l = d[keep], t[keep], l[keep]
-                if d.size == 0:
-                    continue
-                fields.append(row.field)
-                terms.append(row.term)
-                ranges.append(int(row.range_id))
-                ds.append(d)
-                ts.append(t)
-                ls.append(l)
-                ps.append(pos)
-            if terms:
-                yield pd.DataFrame({"field": fields, "term": terms,
-                                    "range_id": ranges,
-                                    "doc_ids": ds, "tfs": ts, "dls": ls,
-                                    "pos": ps})
+            out = _decode_partials(pdf, store_positions, kill)
+            if out is not None:
+                yield out
 
     return fn
 
@@ -170,37 +232,18 @@ def _decode_to_entries(store_positions: bool = False, tomb_bc=None):
     dropped here, version-aware."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = np.empty(0, dtype=np.int64)
-        tomb = tomb_bc.value if tomb_bc is not None else None
+        kill = _kill_set(tomb_bc.value if tomb_bc is not None else None)
         for pdf in batches:
-            parts = []
-            for row in pdf.itertuples(index=False):
-                d, t, l = codec.decode_all_blocks({
-                    "first_doc": row.first_doc, "docs": row.docs,
-                    "tfs": row.tfs, "dls": row.dls})
-                pos_flat = (codec.decode_concat(
-                    list(row.pos)).astype(np.int64)
-                    if store_positions else None)
-                drop = _tomb_drop(d, _row_ver(row), tomb)
-                if drop is not None:
-                    keep = ~drop
-                    if pos_flat is not None and pos_flat.size:
-                        pos_flat = pos_flat[np.repeat(keep, t)]
-                    d, t, l = d[keep], t[keep], l[keep]
-                if d.size == 0:
-                    continue
-                if store_positions:
-                    bounds = np.concatenate(([0], np.cumsum(t)))
-                    segs = [pos_flat[bounds[i]:bounds[i + 1]]
-                            for i in range(d.size)]
-                else:
-                    segs = [empty] * d.size
-                parts.append(pd.DataFrame({
-                    "field": row.field, "term": row.term,
-                    "range_id": int(row.range_id),
-                    "doc_id": d, "tf": t, "dl": l, "pos": segs}))
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+            row, d, t, l, pos = _decode_rows(pdf, store_positions, kill)
+            if not d.size:
+                continue
+            yield pd.DataFrame({
+                "field": pdf["field"].to_numpy()[row],
+                "term": pdf["term"].to_numpy()[row],
+                "range_id": pdf["range_id"].to_numpy(np.int64)[row],
+                "doc_id": d, "tf": t, "dl": l,
+                "pos": (_runs(pos, np.append(0, np.cumsum(t)))
+                        if store_positions else [_EMPTY] * d.size)})
 
     return fn
 
@@ -715,7 +758,7 @@ class IndexMutator:
         touched_sel = touched.select(*_DECODE_COLS)
         if drop_bc is not None:
             surviving_partials = touched_sel.mapInPandas(
-                _decode_to_partials(cfg.range_bits, cfg.store_positions,
+                _decode_to_partials(cfg.store_positions,
                                     drop_bc=drop_bc, tomb_bc=tomb_bc),
                 schema=PARTIALS_SCHEMA)
         else:
@@ -761,11 +804,16 @@ class IndexMutator:
         ``compact_threshold``): every bucket with a delta chain fully
         re-merges into one version dir; when tombstones exist, every
         bucket's rows in the TOMBSTONED doc ranges are additionally
-        cleaned (other rows pass through JVM-side); stats chains
-        collapse via the summed view; the tombstone table clears.
-        Corpus totals are untouched — compaction changes layout, not
-        content (the mutate==rebuild invariant holds across it)."""
-        spark = self.spark
+        cleaned (other rows are copied as they are, ``ver`` included);
+        stats chains collapse via the summed view; the tombstone table
+        clears. Corpus totals are untouched — compaction changes layout,
+        not content (the mutate==rebuild invariant holds across it).
+
+        When the footer-reported bytes of every target postings dir and
+        chained term_stats dir fit :func:`catalog.fits_local`, the whole
+        operator runs on the driver with zero Spark jobs; otherwise as
+        Spark jobs. The commit's metrics name the path (``mode``) and
+        the footer bytes."""
         cfg = self.config
         cat = self.catalog
         pending = cat.begin()
@@ -782,18 +830,90 @@ class IndexMutator:
                     if isinstance(smap, dict) else [])
         if tomb is None and not chained and not schained:
             return  # already consolidated
-        par = spark.sparkContext.defaultParallelism
+        targets = (sorted(int(k) for k in pmap) if tomb is not None
+                   else chained)
         range_bits = int(old_meta.get("range_bits") or cfg.range_bits or 0)
+        tranges = (np.unique(tomb[0] >> np.int64(range_bits))
+                   if tomb is not None else _EMPTY)
+        posts = {b: cat._footer_read(cat.postings_dirs([b]), "term", None,
+                                     POSTINGS_ARROW) for b in targets}
+        stats = {b: cat._footer_read(cat.term_stats_dirs([b]), "term", None,
+                                     TERM_STATS_ARROW) for b in schained}
+        nbytes = sum(rd.nbytes for rd in [*posts.values(), *stats.values()])
+        if fits_local(nbytes):
+            mode = "driver"
+            self._compact_driver(pending, posts, stats, tomb, chained,
+                                 tranges)
+        else:
+            mode = "spark"
+            self._compact_spark(pending, tomb, targets, chained, schained,
+                                tranges)
+        pending.drop_table("tombstones")
+        meta = dict(old_meta)  # content unchanged, layout only
+        IndexBuilder._write_index_meta(pending, meta)
+        pending.commit(meta, "compact", metrics={
+            "mode": mode, "footer_bytes": nbytes,
+            "buckets_compacted": len(targets),
+            "stats_buckets_compacted": len(schained),
+            "tombstones_cleared": int(tomb[0].size) if tomb else 0})
+
+    def _compact_driver(self, pending, posts: dict, stats: dict, tomb,
+                        chained: list[int], tranges: np.ndarray) -> None:
+        """:meth:`compact` with pyarrow reads and writes, one bucket at a
+        time (driver memory is bounded by the largest bucket): the
+        selected rows go through the same decode and merge kernels as
+        the Spark stages, and each bucket lands as one sorted file."""
+        from bright_spark.index.fastpath import _postings_table
+        cfg = self.config
+        kill = _kill_set(tomb)
+        merge = _make_merge_fn(cfg.block_size, cfg.n_term_buckets,
+                               cfg.store_positions)
+        # no plan literal here, so no cap on the range list
+        ranges = pa.array(tranges, pa.int64())
+        for b, rd in posts.items():
+            tab = rd.read()
+            if b in chained:
+                touched, parts = tab, []
+            else:
+                sel = pc.is_in(tab["range_id"], value_set=ranges)
+                touched, parts = tab.filter(sel), [tab.filter(pc.invert(sel))]
+            partials = _decode_partials(
+                touched.select(_DECODE_COLS).to_pandas(),
+                cfg.store_positions, kill)
+            if partials is not None:
+                parts += [_postings_table(m, pending.snapshot_id)
+                          for m in merge(iter([partials])) if len(m)]
+            out = pa.concat_tables(parts) if parts else None
+            if out is not None and out.num_rows:
+                write_part(pending.adopt_part("postings", b), out.sort_by(
+                    [("term", "ascending"), ("field", "ascending"),
+                     ("range_id", "ascending")]))
+            else:
+                pending.drop_postings_bucket(b)
+        for b, rd in stats.items():
+            net = IndexCatalog._net_stats(rd.read(), dirty=True)
+            if net.num_rows:
+                write_part(pending.adopt_part("term_stats", b), net.sort_by(
+                    [("term", "ascending"), ("field", "ascending")]))
+            else:
+                pending.drop_part("term_stats", b)
+
+    def _compact_spark(self, pending, tomb, targets: list[int],
+                       chained: list[int], schained: list[int],
+                       tranges: np.ndarray) -> None:
+        """:meth:`compact` as Spark jobs: rows outside the selection pass
+        through JVM-side; the selected ones decode and re-merge in
+        mapInPandas stages."""
+        spark = self.spark
+        cfg = self.config
+        cat = self.catalog
+        par = spark.sparkContext.defaultParallelism
         tomb_bc = (spark.sparkContext.broadcast(tomb)
                    if tomb is not None else None)
         try:
-            targets = (sorted(int(k) for k in pmap) if tomb is not None
-                       else chained)
-            written: set[int] = set()
             if targets:
                 rows = cat.postings(spark, buckets=targets)
                 if tomb is not None:
-                    tranges = np.unique(tomb[0] >> np.int64(range_bits))
                     cond = F.col("bucket").isin(chained) if chained \
                         else F.lit(False)
                     if tranges.size <= 1024:
@@ -806,8 +926,8 @@ class IndexMutator:
                 touched = rows.filter(cond)
                 untouched = rows.filter(~cond)
                 surviving = touched.select(*_DECODE_COLS).mapInPandas(
-                    _decode_to_partials(cfg.range_bits, cfg.store_positions,
-                                        drop_bc=None, tomb_bc=tomb_bc),
+                    _decode_to_partials(cfg.store_positions,
+                                        tomb_bc=tomb_bc),
                     schema=PARTIALS_SCHEMA)
                 n_merge = min(par, max(4, len(targets)
                                        * (cfg.files_per_bucket or 1)))
@@ -834,13 +954,7 @@ class IndexMutator:
                     ts, pending, max(1, len(schained)), min(par, 8))
                 for b in set(schained) - written_s:
                     pending.drop_part("term_stats", b)
-            pending.drop_table("tombstones")
-            meta = dict(old_meta)  # content unchanged, layout only
-            IndexBuilder._write_index_meta(pending, meta)
-            pending.commit(meta, "compact", metrics={
-                "buckets_compacted": len(targets),
-                "stats_buckets_compacted": len(schained),
-                "tombstones_cleared": int(tomb[0].size) if tomb else 0})
         finally:
             if tomb_bc is not None:
                 tomb_bc.unpersist()
+

@@ -8,11 +8,14 @@ scale), UTC timezone pinned so DuckDB-oracle comparisons are stable.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger(__name__)
 
 # app ids already warmed this process — prewarm is once per session, not
 # once per get_spark() call
@@ -50,12 +53,15 @@ def _prewarm(spark: SparkSession) -> None:
         finally:
             shutil.rmtree(d, ignore_errors=True)
     except Exception:
-        pass
+        # the warm-up only moves start-up cost; a session that cannot run
+        # it still serves, but the failure must be visible
+        logger.warning("session prewarm failed", exc_info=True)
     finally:
         try:
             spark.sparkContext.setJobDescription(None)
         except Exception:
-            pass
+            logger.warning("session prewarm: job description not reset",
+                           exc_info=True)
 
 
 def get_spark(

@@ -12,7 +12,9 @@ stale staging dirs, printing what it deleted. ``compact`` consolidates
 append-mode delta chains + tombstones into single version dirs (the
 scorch background merger as an explicit op; mutations auto-trigger it
 past their chain threshold, so manual runs are optional). snapshots
-and vacuum are driver-only; compact opens a Spark session.
+and vacuum are driver-only. compact opens a Spark session, but a small
+index (footer bytes under ``catalog.LOCAL_READ_MAX_BYTES``) compacts on
+the driver without a Spark job; the commit's metrics name the path.
 """
 
 from __future__ import annotations

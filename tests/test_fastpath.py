@@ -147,7 +147,7 @@ def test_fast_crash_is_atomic(spark, tmp_path_factory, monkeypatch,
         raise RuntimeError("injected")
 
     targets = {
-        "part_write": (fastpath_mod, "_write_part"),
+        "part_write": (fastpath_mod, "write_part"),
         "meta": (builder_mod.IndexBuilder, "_write_index_meta"),
         "commit": (catalog_mod.PendingSnapshot, "commit"),
     }

@@ -17,6 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from bright_spark.index import catalog
 from bright_spark.index.builder import build_index
 from bright_spark.index.catalog import IndexCatalog
 from bright_spark.index.mutations import IndexMutator
@@ -427,10 +428,15 @@ def test_mutation_is_o_change_not_o_corpus(spark, tmp_path_factory):
     assert eng.search_df("ochange_marker", k=5).count() == 1
 
 
-@pytest.mark.parametrize("fast,expect_mode",
-                         [("never", "append"), ("auto", "append-fast")])
-def test_append_mutation_is_o_batch(spark, tmp_path_factory, fast,
-                                    expect_mode):
+@pytest.mark.parametrize("fast,expect_mode,compact_mode", [
+    pytest.param("never", "append", "driver", id="never-append"),
+    pytest.param("auto", "append-fast", "driver", id="auto-append-fast"),
+    pytest.param("never", "append", "spark", id="never-append-spark"),
+    pytest.param("auto", "append-fast", "spark",
+                 id="auto-append-fast-spark"),
+])
+def test_append_mutation_is_o_batch(spark, tmp_path_factory, monkeypatch,
+                                    fast, expect_mode, compact_mode):
     """The append-mode (default) scale contract — scorch's segment
     model (store/store.go:392-426): an upsert touches NO existing
     postings at all. Every base bucket dir stays pointer-identical;
@@ -439,7 +445,8 @@ def test_append_mutation_is_o_batch(spark, tmp_path_factory, fast,
     compact() consolidates chains, physically drops dead entries and
     clears the tombstones — with identical query results throughout.
     Both the distributed stages and the driver-side fast path must
-    honor the same contract."""
+    honor the same contract, and so must compaction on the driver
+    (the default read budget) and on Spark (a zero budget)."""
     idx = str(tmp_path_factory.mktemp(f"appendmut{fast}") / "idx")
     build_index(spark, spark.createDataFrame(_rows(120)), idx,
                 IndexConfig(id="ap", tokenizer="simple", n_term_buckets=8,
@@ -482,9 +489,12 @@ def test_append_mutation_is_o_batch(spark, tmp_path_factory, fast,
     assert 5 not in baseline
 
     # compaction: chains collapse, tombstones clear, results identical
+    if compact_mode == "spark":
+        monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", 0)
     mut.compact()
     m3 = IndexCatalog(idx).manifest()
     assert m3["operation"] == "compact"
+    assert m3["metrics"]["mode"] == compact_mode
     assert "tombstones" not in m3["tables"]
     assert all(isinstance(v, str) for v in m3["tables"]["postings"].values())
     assert all(isinstance(v, str) for v in m3["tables"]["term_stats"].values())
@@ -499,7 +509,19 @@ def test_auto_compact_bounds_chain_depth(spark, tmp_path_factory):
     """File/dir growth is BOUNDED: with compact_threshold=T, chains
     never exceed T+... — the (T+1)th append triggers consolidation in
     the same mutator call, so no compaction operator has to be
-    remembered by the operator."""
+    remembered by the operator. Small index: compaction on the driver."""
+    _auto_compact_bounds_chain_depth(spark, tmp_path_factory, "driver")
+
+
+def test_auto_compact_bounds_chain_depth_on_spark(spark, tmp_path_factory,
+                                                  monkeypatch):
+    """The same bound when a zero read budget sends compaction to
+    Spark."""
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", 0)
+    _auto_compact_bounds_chain_depth(spark, tmp_path_factory, "spark")
+
+
+def _auto_compact_bounds_chain_depth(spark, tmp_path_factory, compact_mode):
     idx = str(tmp_path_factory.mktemp("autocompact") / "idx")
     build_index(spark, spark.createDataFrame(_rows(40)), idx,
                 IndexConfig(id="ac", tokenizer="simple", n_term_buckets=4,
@@ -512,8 +534,10 @@ def test_auto_compact_bounds_chain_depth(spark, tmp_path_factory):
             [{"rid": i, "text": f"auto_{i} common", "kind": "k0"}]))
         assert max(IndexCatalog(idx).delta_depth("postings"),
                    IndexCatalog(idx).delta_depth("term_stats")) <= 4
-    ops = [m["operation"] for m in IndexCatalog(idx).snapshots()]
-    assert "compact" in ops
+    compacts = [m for m in IndexCatalog(idx).snapshots()
+                if m["operation"] == "compact"]
+    assert compacts
+    assert {m["metrics"]["mode"] for m in compacts} == {compact_mode}
     eng = SearchEngine(spark, idx)
     assert eng.meta["n_docs"] == 40
     for i in range(6):
