@@ -108,16 +108,15 @@ def _engine(spark: SparkSession, sf_dir: str):
     if eng is not None:
         return eng
     idx_dir = os.path.join(_GATE_DIR, key.strip("/").replace("/", "_") + "_docs_idx")
-    from bright_spark.index.catalog import IndexCatalog
+    from bright_spark.index.catalog import IndexCatalog, LayoutVersionError
     built = False
     try:
-        # invalidate gate caches from older index layouts (v4
-        # partitioned docs/term_stats CoW; v3 snapshot manifests)
+        # invalidate gate caches written by an older index layout
         built = IndexCatalog(idx_dir).load_meta().get("version") == 4
-    except (FileNotFoundError, KeyError):
+    except (FileNotFoundError, KeyError, LayoutVersionError):
         built = False
     if built:
-        # layout v3 caches from before the derived date attr lack it
+        # caches from before the derived date attr lack it
         built = "created_at" in (
             IndexCatalog(idx_dir).load_extra().get("attr_cols") or [])
     if not built:

@@ -26,10 +26,9 @@ Iceberg-style snapshot protocol (layout v4):
       checkpoints/       per-shard build lineage rows (resumability)
       segments/          resumable-build staging (not snapshot-tracked)
 
-(Layout v3 — a single version dir for docs and term_stats — is still
-READABLE: a manifest entry that is a plain string resolves as one dir.
-The first mutation on a v3 index migrates those tables to the
-per-group/per-bucket form.)
+A manifest of any other layout version is refused (see
+:class:`LayoutVersionError`): an index written by an older layout must
+be rebuilt.
 
 Write protocol (single writer, any number of readers):
   1. ``begin()`` a :class:`PendingSnapshot` — writers put every table
@@ -296,6 +295,12 @@ def _entry_dirs(v) -> list[str]:
     return [v] if isinstance(v, str) else list(v)
 
 
+class LayoutVersionError(RuntimeError):
+    """The snapshot manifest was written with a layout other than
+    :data:`LAYOUT_VERSION`; this code reads and writes that one layout
+    only, so the index must be rebuilt."""
+
+
 class CommitConflictError(RuntimeError):
     """Another writer committed since this pending snapshot began —
     the optimistic-concurrency check Iceberg performs on its metadata
@@ -328,12 +333,8 @@ class PendingSnapshot:
         self.parent = parent
         self.snapshot_id = (parent["snapshot_id"] + 1) if parent else 1
         ptabs = (parent or {}).get("tables", {})
-        self.tables: dict[str, Any] = {}
-        for t in PART_TABLES:
-            v = ptabs.get(t, {})
-            # a legacy (v3) string entry is inherited as-is; the writer
-            # that touches the table migrates it to the dict form
-            self.tables[t] = dict(v) if isinstance(v, dict) else v
+        self.tables: dict[str, Any] = {t: dict(ptabs.get(t, {}))
+                                       for t in PART_TABLES}
         for t in ("index_meta", "tombstones"):
             if parent and t in ptabs:
                 self.tables[t] = ptabs[t]
@@ -359,8 +360,6 @@ class PendingSnapshot:
         moves/writes data there). REPLACES the partition's pointer —
         any delta chain collapses to the one new dir (the consolidation
         form; :meth:`adopt_part_delta` is the append form)."""
-        if not isinstance(self.tables.get(table), dict):
-            self.tables[table] = {}  # legacy str entry: migrated now
         rel = self.part_rel(table, key)
         self.tables[table][str(key)] = rel
         return os.path.join(self.catalog.index_dir, rel)
@@ -370,11 +369,8 @@ class PendingSnapshot:
         pointer chain instead of replacing it — the O(batch) mutation
         form (scorch's segment append): readers union the chain's
         dirs; a later consolidation (adopt_part) collapses it."""
-        if not isinstance(self.tables.get(table), dict):
-            self.tables[table] = {}
         cur = self.tables[table].get(str(key))
-        chain = ([] if cur is None
-                 else [cur] if isinstance(cur, str) else list(cur))
+        chain = [] if cur is None else _entry_dirs(cur)
         rel = self.part_rel(table, key)
         if rel not in chain:
             chain.append(rel)
@@ -382,8 +378,7 @@ class PendingSnapshot:
         return os.path.join(self.catalog.index_dir, rel)
 
     def drop_part(self, table: str, key: int) -> None:
-        if isinstance(self.tables.get(table), dict):
-            self.tables[table].pop(str(key), None)
+        self.tables[table].pop(str(key), None)
 
     def reset_parts(self, table: str) -> None:
         """Forget inherited pointers — a full rewrite of the table."""
@@ -413,13 +408,6 @@ class PendingSnapshot:
                 found.add(key)
         return found
 
-    # legacy-named wrappers (the postings write path predates v4)
-    def adopt_postings_bucket(self, bucket: int) -> str:
-        return self.adopt_part("postings", bucket)
-
-    def drop_postings_bucket(self, bucket: int) -> None:
-        self.drop_part("postings", bucket)
-
     def drop_table(self, table: str) -> None:
         self.tables.pop(table, None)
 
@@ -439,11 +427,8 @@ class PendingSnapshot:
     def part_dirs(self, table: str, keys=None) -> list[str]:
         """Resolve (possibly not-yet-committed) partition dirs — stats
         passes inside a build/mutation read through the pending state.
-        A legacy string entry resolves as one dir (keys ignored); a
-        delta chain resolves to all its dirs in append order."""
+        A delta chain resolves to all its dirs in append order."""
         pmap = self.tables[table]
-        if isinstance(pmap, str):
-            return [os.path.join(self.catalog.index_dir, pmap)]
         ks = (sorted(pmap, key=int) if keys is None
               else [str(k) for k in sorted({int(k) for k in keys})
                     if str(k) in pmap])
@@ -573,9 +558,18 @@ class IndexCatalog:
             return None
 
     def read_manifest(self, snapshot_id: int) -> dict:
-        with open(os.path.join(self.snapshots_dir,
-                               _snap_name(snapshot_id) + ".json")) as f:
-            return json.load(f)
+        """One snapshot manifest — the read of every reader
+        (:meth:`manifest`) and writer (:meth:`begin`), so the layout
+        check here covers both."""
+        with open(self._manifest_file(snapshot_id)) as f:
+            m = json.load(f)
+        got = m.get("layout_version")
+        if got != LAYOUT_VERSION:
+            raise LayoutVersionError(
+                f"snapshot {snapshot_id} of {self.index_dir} has layout "
+                f"version {got}; only layout {LAYOUT_VERSION} is "
+                f"supported: rebuild the index into a new directory")
+        return m
 
     def _manifest_file(self, snapshot_id: int) -> str:
         return os.path.join(self.snapshots_dir,
@@ -735,11 +729,10 @@ class IndexCatalog:
 
         def reclaim_partitioned(table: str) -> None:
             """data/<table>/: partition subdirs holding v* dirs, plus
-            legacy flat v* dirs and crashed writers' .staging-v* dirs."""
+            crashed writers' .staging-v* dirs."""
             tdir = os.path.join(data, table)
             if not os.path.isdir(tdir):
                 return
-            reclaim(tdir, os.path.join("data", table))  # legacy flat v*
             for name in os.listdir(tdir):
                 if name.startswith(".staging-v"):
                     # a crashed writer's staging dir: stale once a
@@ -753,8 +746,6 @@ class IndexCatalog:
                         shutil.rmtree(full, ignore_errors=True)
                         deleted.append(full)
                     continue
-                if name.startswith("v"):
-                    continue  # legacy flat, handled above
                 sub = os.path.join(tdir, name)
                 if os.path.isdir(sub):
                     reclaim(sub, os.path.join("data", table, name))
@@ -804,12 +795,8 @@ class IndexCatalog:
 
     def part_dirs(self, table: str, keys=None) -> list[str]:
         """Live version dir per partition (optionally restricted) — the
-        unit of directory pruning AND of mutation copy-on-write. A
-        legacy (v3) string entry resolves as one dir (keys ignored —
-        callers fall back to column filters)."""
+        unit of directory pruning AND of mutation copy-on-write."""
         pmap = self.manifest()["tables"][table]
-        if isinstance(pmap, str):
-            return [os.path.join(self.index_dir, pmap)]
         ks = (sorted(pmap, key=int) if keys is None
               else [str(k) for k in sorted({int(k) for k in keys})
                     if str(k) in pmap])
@@ -864,11 +851,9 @@ class IndexCatalog:
         the requested ids are listed/read (the hit-assembly path of
         every search — at 10^12 docs a top-10 fetch reads ≤10 group
         dirs, with doc_id row-group min/max pruning inside each)."""
-        bits = self.load_meta().get("docs_range_bits")
+        bits = int(self.load_meta()["docs_range_bits"])
         ids = [int(i) for i in ids]
-        if bits is None:  # legacy layout: single dir, predicate only
-            return self.docs(spark).filter(F.col("doc_id").isin(ids))
-        groups = {i >> int(bits) for i in ids}
+        groups = {i >> bits for i in ids}
         return (self.docs(spark, groups=groups)
                 .filter(F.col("doc_id").isin(ids)))
 
@@ -877,13 +862,9 @@ class IndexCatalog:
         (groups are doc_id ranges, so the max lives in the max group) —
         the O(1-group) input to mutation id assignment."""
         pmap = self.manifest()["tables"]["docs"]
-        if isinstance(pmap, dict):
-            if not pmap:
-                return None
-            top = max(int(k) for k in pmap)
-            df = self.docs(spark, groups=[top])
-        else:
-            df = self.docs(spark)
+        if not pmap:
+            return None
+        df = self.docs(spark, groups=[max(int(k) for k in pmap)])
         row = df.agg(F.max("doc_id")).collect()[0][0]
         return None if row is None else int(row)
 
@@ -947,17 +928,11 @@ class IndexCatalog:
 
     def delta_depth(self, table: str = "postings") -> int:
         """Longest partition pointer chain — the compaction trigger."""
-        pmap = self.manifest()["tables"].get(table)
-        if not pmap:
-            return 0
-        if isinstance(pmap, str):
-            return 1
+        pmap = self.manifest()["tables"][table]
         return max((len(_entry_dirs(v)) for v in pmap.values()), default=0)
 
     def _stats_dirty(self, buckets=None) -> bool:
-        pmap = self.manifest()["tables"].get("term_stats")
-        if not isinstance(pmap, dict):
-            return False
+        pmap = self.manifest()["tables"]["term_stats"]
         items = (pmap.values() if buckets is None else
                  [pmap[str(b)] for b in buckets if str(b) in pmap])
         return any(isinstance(v, list) for v in items)
@@ -981,13 +956,12 @@ class IndexCatalog:
 
     def term_stats_for_terms(self, spark: SparkSession,
                              pairs: list[tuple[str, str]]) -> DataFrame:
-        """Bucket-pruned stats lookup: v4 prunes at the DIRECTORY level
-        (non-matching buckets are never listed); the bucket predicate
-        stays for legacy single-dir layouts."""
+        """Bucket-pruned stats lookup: pruned at the DIRECTORY level
+        (non-matching buckets are never listed)."""
         cfg = self.load_config()
-        buckets = sorted({term_bucket(t, cfg.n_term_buckets) for _, t in pairs})
+        buckets = {term_bucket(t, cfg.n_term_buckets) for _, t in pairs}
         df = self.term_stats(spark, buckets=buckets)
-        return df.filter(F.col("bucket").isin(buckets) & self._pair_filter(pairs))
+        return df.filter(self._pair_filter(pairs))
 
     # ------------------------------------------------ driver-side reads
 
@@ -1135,9 +1109,8 @@ class IndexCatalog:
         if ids is None:
             return self._footer_read(self.docs_dirs(), "doc_id", None, schema)
         ids = sorted({int(i) for i in ids})
-        bits = self.load_meta().get("docs_range_bits")
-        dirs = (self.docs_dirs({i >> int(bits) for i in ids})
-                if bits is not None else self.docs_dirs())
+        bits = int(self.load_meta()["docs_range_bits"])
+        dirs = self.docs_dirs({i >> bits for i in ids})
         id_set = pa.array(ids, pa.int64())
         return self._footer_read(
             dirs, "doc_id", _covers_any(ids), schema,

@@ -1,6 +1,6 @@
 """Driver-side (zero-Spark-job) mutation fast path.
 
-A small mutation against a v4 snapshot index is a HEAD-NODE operation:
+A small mutation against a snapshot index is a HEAD-NODE operation:
 the change set is already driver-resident, every artifact it produces
 is bounded by the batch (postings/stats deltas, tombstones) or by the
 touched doc-range groups (docs-group rewrite), and the kernels that
@@ -145,16 +145,11 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
         old_meta = cat.load_meta()
     except FileNotFoundError:
         return False
-    if (int(old_meta.get("version") or 0) < 4
-            or old_meta.get("docs_range_bits") is None
-            or not cfg.store_content):
+    if not cfg.store_content:
         return False
     if changed_pdf is not None and not mut.extra.get("id_col"):
         return False  # natural-key id assignment needs the key lookup
     pending = cat.begin()
-    if (not isinstance(pending.tables.get("docs"), dict)
-            or not isinstance(pending.tables.get("term_stats"), dict)):
-        return False
     bits = int(old_meta["docs_range_bits"])
     b = mut._builder()
 
@@ -203,11 +198,8 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     if group_files:
         schema = pq.read_schema(next(iter(group_files.values()))[0])
     else:
-        dmap = pending.tables["docs"]
-        for k in sorted(dmap, key=int):
-            d = os.path.join(cat.index_dir, dmap[k]) \
-                if isinstance(dmap[k], str) else None
-            fs = sorted(glob.glob(os.path.join(d, "*.parquet"))) if d else []
+        for d in pending.part_dirs("docs"):
+            fs = sorted(glob.glob(os.path.join(d, "*.parquet")))
             if fs:
                 schema = pq.read_schema(fs[0])
                 break

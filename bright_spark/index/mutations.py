@@ -555,26 +555,8 @@ class IndexMutator:
             raise ValueError("mutations re-tokenize replaced docs from "
                              "stored content; store_content=False is not "
                              "supported")
-        # layout v3 (single docs/term_stats version dir, no group bits
-        # in meta): this mutation migrates those tables to the v4
-        # partitioned form with ONE full rewrite, then every later
-        # mutation is O(change)
-        legacy = (not isinstance(pending.tables.get("docs"), dict)
-                  or not isinstance(pending.tables.get("term_stats"), dict)
-                  or old_meta.get("docs_range_bits") is None)
-        if legacy and cfg.docs_range_bits is None:
-            import dataclasses
-            n_old = int(old_meta.get("n_docs") or 0)
-            p = int(self.extra.get("n_build_partitions")
-                    or spark.sparkContext.defaultParallelism)
-            dspan = max(1024, n_old // max(1, p))
-            cfg = dataclasses.replace(
-                cfg, docs_range_bits=min(22, max(10, dspan.bit_length() - 1)))
-            self.config = cfg
-        bits = int(old_meta.get("docs_range_bits")
-                   if not legacy else cfg.docs_range_bits)
-        use_append = (self.mode != "rewrite" and not legacy
-                      and drop_bc is not None)
+        bits = int(old_meta["docs_range_bits"])
+        use_append = self.mode != "rewrite" and drop_bc is not None
 
         # ---- affected doc-range groups: the docs-table CoW unit.
         # ids_df carries every changed id (replacements, deletes AND
@@ -594,11 +576,8 @@ class IndexMutator:
                 int(r["g"]) for r in ids_df.select(
                     F.shiftright("doc_id", bits).alias("g"))
                 .distinct().collect())
-        if legacy:
-            docs_scan = self.catalog.docs(spark, include_build_cols=True)
-        else:
-            docs_scan = self.catalog.docs(spark, include_build_cols=True,
-                                          groups=affected_groups)
+        docs_scan = self.catalog.docs(spark, include_build_cols=True,
+                                      groups=affected_groups)
         # the docs table stores no token arrays (build module doc) —
         # re-tokenize the replaced set from stored field text, across
         # EVERY analyzed field (their old entries must leave the index:
@@ -631,13 +610,9 @@ class IndexMutator:
         if changed is not None:
             new_docs = survivors.unionByName(changed.select(*survivors.columns))
         par = spark.sparkContext.defaultParallelism
-        if legacy:
-            pending.reset_parts("docs")
-            docs_width = par
-        else:
-            # width ~ the affected group count: a small mutation should
-            # not schedule a full-width shuffle of 50 rows
-            docs_width = min(par, max(2, 2 * len(affected_groups)))
+        # width ~ the affected group count: a small mutation should
+        # not schedule a full-width shuffle of 50 rows
+        docs_width = min(par, max(2, 2 * len(affected_groups)))
         written_groups = stage_docs_write(new_docs, pending, bits, docs_width)
         for g in set(affected_groups or ()) - written_groups:
             pending.drop_part("docs", g)  # group emptied by a delete
@@ -654,22 +629,16 @@ class IndexMutator:
                     tomb_bc = spark.sparkContext.broadcast(old_tomb)
                 metrics = self._apply_rewrite(
                     pending, cfg, ids_df, drop_bc, tomb_bc, new_partials,
-                    replaced_partials, changed_ranges, legacy, par)
+                    replaced_partials, changed_ranges, par)
 
             # ---- term_stats + meta: O(batch) signed-delta maintenance
-            # in BOTH modes (mutate_stats) — or, on a legacy index, the
-            # one-time full recompute that migrates stats to the
-            # per-bucket layout — then ONE atomic commit for docs +
-            # postings + tombstones + stats together
+            # in BOTH modes (mutate_stats), then ONE atomic commit for
+            # docs + postings + tombstones + stats together
             n_docs_new = (int(old_meta.get("n_docs") or 0) - n_present
                           + (n_changed if changed is not None else 0))
-            b = self._builder()
-            if legacy:
-                b._n_docs = n_docs_new
-                meta = b.build_stats(pending)
-            else:
-                delta = self._stats_delta(replaced_partials, new_partials)
-                meta = b.mutate_stats(pending, old_meta, delta, n_docs_new)
+            delta = self._stats_delta(replaced_partials, new_partials)
+            meta = self._builder().mutate_stats(pending, old_meta, delta,
+                                                n_docs_new)
             pending.commit(
                 meta, "upsert" if changed is not None else "delete",
                 metrics={"n_changed": n_changed,
@@ -719,7 +688,7 @@ class IndexMutator:
 
     def _apply_rewrite(self, pending, cfg, ids_df, drop_bc, tomb_bc,
                        new_partials, replaced_partials,
-                       changed_ranges, legacy: bool, par: int) -> dict:
+                       changed_ranges, par: int) -> dict:
         """Rewrite-mode postings: consolidate the affected buckets in
         place — ONLY their live dirs are read and re-versioned; every
         other bucket keeps its parent pointer untouched (never even
@@ -792,7 +761,7 @@ class IndexMutator:
                                        cfg.files_per_bucket or 1)
         for b in affected_buckets:
             if b not in written:
-                pending.drop_postings_bucket(b)  # bucket emptied
+                pending.drop_part("postings", b)  # bucket emptied
         return {"mode": "rewrite",
                 "buckets_rewritten": len(affected_buckets)}
 
@@ -819,15 +788,12 @@ class IndexMutator:
         pending = cat.begin()
         old_meta = cat.load_meta()
         tomb = cat.tombstones()
-        pmap = cat.manifest()["tables"].get("postings") or {}
-        if isinstance(pmap, str):
-            return  # legacy layout: nothing append-shaped to compact
+        tables = cat.manifest()["tables"]
+        pmap = tables["postings"]
         chained = sorted(int(k) for k, v in pmap.items()
                          if isinstance(v, list))
-        smap = cat.manifest()["tables"].get("term_stats") or {}
-        schained = (sorted(int(k) for k, v in smap.items()
-                           if isinstance(v, list))
-                    if isinstance(smap, dict) else [])
+        schained = sorted(int(k) for k, v in tables["term_stats"].items()
+                          if isinstance(v, list))
         if tomb is None and not chained and not schained:
             return  # already consolidated
         targets = (sorted(int(k) for k in pmap) if tomb is not None
@@ -889,7 +855,7 @@ class IndexMutator:
                     [("term", "ascending"), ("field", "ascending"),
                      ("range_id", "ascending")]))
             else:
-                pending.drop_postings_bucket(b)
+                pending.drop_part("postings", b)
         for b, rd in stats.items():
             net = IndexCatalog._net_stats(rd.read(), dirty=True)
             if net.num_rows:
@@ -946,7 +912,7 @@ class IndexMutator:
                                                cfg.files_per_bucket or 1)
                 for b in targets:
                     if b not in written:
-                        pending.drop_postings_bucket(b)
+                        pending.drop_part("postings", b)
             if schained:
                 ts = cat.term_stats(spark, buckets=schained)  # summed view
                 from bright_spark.index.builder import stage_term_stats_write

@@ -27,7 +27,14 @@ Spark lifecycle here:
     the differential-testing path): decode postings to an exploded
     (term, doc_id, tf, dl) view -> broadcast-join per-term weights ->
     groupBy(doc_id) score sum + must-group counting -> docs-predicate
-    semi-joins -> orderBy/limit.
+    semi-joins -> orderBy/limit. Positional phrases run the per-range
+    phrase kernel as a Spark stage instead of the exploded view.
+
+Phrases: positional indexes match them in
+:func:`scorer.score_range_phrase` on every path, NOT-phrases included
+(:meth:`SearchEngine._phrase_matches`); non-positional indexes re-
+tokenize the AND-candidates' stored text
+(:meth:`SearchEngine._verify_phrases`).
 
 Selection rule: ``local`` whenever the query's shape allows it and the
 parquet row groups it reads — those whose ``term`` min/max covers a
@@ -470,13 +477,16 @@ class SearchEngine:
         if aq.has_positive and (not pos_specs or unsatisfiable):
             return self.spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
 
-        # single-scan phrase plan (positional indexes): ONE partition-
-        # pruned postings read feeds candidate intersection, positional
-        # adjacency AND exact scoring inside one per-range kernel —
-        # the old plan ran three decode subtrees (score, candidate
-        # re-scan, positions) over the same term-pruned postings
+        # positional phrases: ONE partition-pruned postings read feeds
+        # candidate intersection, positional adjacency AND exact scoring
+        # inside the per-range kernel (scorer.score_range_phrase),
+        # which emits the full match set
         if aq.phrases and self.meta.get("store_positions"):
-            cand = self._phrase_hits_onepass(aq)
+            a = self._kernel_args(aq)
+            if a is None:
+                return self.spark.createDataFrame(
+                    [], "doc_id BIGINT, score DOUBLE")
+            cand = self._kernel_df(a).select("doc_id", "score")
             for ph in aq.must_not_phrases:
                 cand = cand.join(self._phrase_matches(ph, docs_df),
                                  "doc_id", "left_anti")
@@ -552,134 +562,14 @@ class SearchEngine:
             cand = cand.join(keep, "doc_id", "left_semi")
         return cand
 
-    def _phrase_hits_onepass(self, aq: AnalyzedQuery) -> DataFrame:
-        """Q4 one-pass execution: postings (incl. positions) of the
-        query's terms, partition-pruned, grouped by range —
-        :func:`scorer.score_range_phrase` does candidates + adjacency +
-        scoring per range from a single decode. Emits the FULL match
-        set (doc_id, score) like the relational path."""
-        a = self._kernel_args(aq)
-        if a is None:
-            return self.spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
-        return self._kernel_df(a).select("doc_id", "score")
-
-    def _exploded_positions(self, pairs: list[tuple[str, str]]) -> DataFrame:
-        """(field, term, doc_id, pos ARRAY<BIGINT>) decoded from
-        positional postings (store_positions indexes only)."""
-        rows = self.catalog.postings_for_terms(self.spark, pairs)
-        sel = rows.select("field", "term", "first_doc", "n",
-                          "docs", "tfs", "pos", "ver")
-        tomb_bc = self._tomb_bc
-
-        def decode_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bright_spark.index import codec
-            tomb = tomb_bc.value if tomb_bc is not None else None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out_f, out_t, out_d, out_p = [], [], [], []
-                for row in pdf.itertuples(index=False):
-                    ns = np.asarray(row.n, dtype=np.int64)
-                    d = codec.decode_doc_blocks_bulk(
-                        np.asarray(row.first_doc, dtype=np.int64), ns,
-                        list(row.docs))
-                    tf = codec.decode_concat(list(row.tfs)).astype(np.int64)
-                    pos = codec.decode_concat(list(row.pos)).astype(np.int64)
-                    if tomb is not None and d.size:
-                        tids, tvers = tomb
-                        rv = (np.int64(row.ver) if pd.notna(row.ver)
-                              else np.int64(0))
-                        idx = np.searchsorted(tids, d)
-                        idxc = np.minimum(idx, tids.size - 1)
-                        drop = (tids[idxc] == d) & (rv < tvers[idxc])
-                        if drop.any():
-                            keep = ~drop
-                            pos = pos[np.repeat(keep, tf)]
-                            d, tf = d[keep], tf[keep]
-                    bounds = np.concatenate(([0], np.cumsum(tf)))
-                    out_f.extend([row.field] * d.size)
-                    out_t.extend([row.term] * d.size)
-                    out_d.extend(d.tolist())
-                    out_p.extend(pos[bounds[i]:bounds[i + 1]]
-                                 for i in range(d.size))
-                if out_t:
-                    yield pd.DataFrame({"field": out_f, "term": out_t,
-                                        "doc_id": out_d, "pos": out_p})
-
-        return sel.mapInPandas(
-            decode_fn,
-            "field STRING, term STRING, doc_id BIGINT, pos ARRAY<BIGINT>")
-
-    def _verify_phrases_positional(self, cand: DataFrame,
-                                   phrases: list) -> DataFrame:
-        """Q4 adjacency from the positional index alone (no content
-        scan), fully vectorized: per doc-range group, each token's
-        (doc, position) pairs become one sorted int64 array of
-        ``doc_id << 32 | pos`` keys; a phrase survives via a chain of
-        ``isin(prev + 1, next_token_keys)`` filters (adjacency in key
-        space), and a doc matches iff every phrase leaves it a
-        surviving start. No per-document Python — the same flat-array
-        style as the WAND kernel."""
-        token_keys = [[fkey(ph.field, t) for t in ph.tokens]
-                      for ph in phrases]
-        pairs = sorted({(ph.field, t) for ph in phrases for t in ph.tokens})
-        range_bits = int(self.meta["range_bits"])
-        pos_df = (self._exploded_positions(pairs)
-                  .join(F.broadcast(cand.select("doc_id")), "doc_id", "left_semi")
-                  .withColumn("k", F.concat_ws(FIELD_SEP, "field", "term"))
-                  .withColumn("range_id",
-                              F.shiftright("doc_id", range_bits))
-                  .select("range_id", "k", "doc_id", "pos"))
-
-        def verify(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = np.empty(0, dtype=np.int64)
-            # range-LOCAL doc offsets (< 2**range_bits) keep the packed
-            # doc|pos key inside int64 even at 10^12-scale doc ids
-            base = np.int64(int(key[0])) << np.int64(range_bits)
-            flat: dict[str, np.ndarray] = {}
-            for k, grp in pdf.groupby("k"):
-                docs = grp["doc_id"].to_numpy(dtype=np.int64) - base
-                lens = grp["pos"].str.len().to_numpy(dtype=np.int64)
-                if lens.sum() == 0:
-                    flat[k] = empty
-                    continue
-                pos = np.concatenate(grp["pos"].to_numpy()).astype(np.int64)
-                keys64 = (np.repeat(docs, lens) << np.int64(32)) | pos
-                keys64.sort()
-                flat[k] = keys64
-            ok: np.ndarray | None = None
-            for ks in token_keys:
-                cur = flat.get(ks[0], empty)
-                for i, t in enumerate(ks[1:], 1):
-                    if cur.size == 0:
-                        break
-                    nxt = flat.get(t, empty)
-                    # local<<32|p survives iff local<<32|(p+i) has token
-                    # i (positions fit 32 bits, so +i never crosses docs)
-                    cur = cur[np.isin(cur + np.int64(i), nxt,
-                                      assume_unique=False)]
-                docs_ph = np.unique(cur >> np.int64(32))
-                ok = docs_ph if ok is None else np.intersect1d(
-                    ok, docs_ph, assume_unique=True)
-                if ok.size == 0:
-                    break
-            out = (ok + base) if ok is not None and ok.size else empty
-            return pd.DataFrame({"doc_id": out})
-
-        ok = pos_df.groupBy("range_id").applyInPandas(verify, "doc_id BIGINT")
-        return cand.join(ok, "doc_id", "left_semi")
-
     def _verify_phrases(self, cand: DataFrame, phrases: list,
                         docs_df: DataFrame) -> DataFrame:
-        """Q4 positional adjacency: keep only ``cand`` docs matching ALL
-        ``phrases``. Positional indexes verify from the postings alone
-        (:meth:`_verify_phrases_positional`); otherwise re-run the
-        BATCH analyzer over only the AND-candidate docs' own field text
-        and chain packed ``doc<<32 | pos`` keys — the same flat-array
-        adjacency algebra as the positional kernel, with zero per-row
-        Python (the tokenizer's regex scan is the only per-doc work)."""
-        if self.meta.get("store_positions"):
-            return self._verify_phrases_positional(cand, phrases)
+        """Q4 adjacency on a non-positional index: keep only ``cand``
+        docs matching ALL ``phrases``. Re-runs the BATCH analyzer over
+        only the AND-candidate docs' own field text and chains packed
+        ``doc<<32 | pos`` keys — the same flat-array adjacency algebra
+        as the positional kernel, with zero per-row Python (the
+        tokenizer's regex scan is the only per-doc work)."""
         lang_col = self.extra.get("lang_col")
         mode = self.meta.get("tokenizer", "code")
         stops = bool(self.meta.get("filter_stopwords"))
@@ -803,12 +693,10 @@ class SearchEngine:
         aq = self.planner.analyze(parse_query(q))
         return self._relational_hits(aq)
 
-    def _choose_path(self, aq: AnalyzedQuery, custom_sort: list[str],
-                     mode: str):
+    def _choose_path(self, aq: AnalyzedQuery, custom_sort: list[str]):
         """(path, kernel args, local reads), decided before anything
         executes (see the module docstring's selection rule)."""
-        if (mode == "relational" or not aq.has_positive
-                or aq.must_not_phrases or custom_sort
+        if (not aq.has_positive or aq.must_not_phrases or custom_sort
                 or (aq.phrases and not self.meta.get("store_positions"))):
             return "relational", None, None
         a = self._kernel_args(aq)
@@ -818,7 +706,7 @@ class SearchEngine:
         wand = not aq.attr_preds and not aq.phrases
         return ("wand" if wand else "relational"), a, None
 
-    def search(self, request: SearchRequest | str, mode: str = "auto") -> SearchResponse:
+    def search(self, request: SearchRequest | str) -> SearchResponse:
         """Full request semantics R1-R6 (handlers/search.go:20-177)."""
         req = SearchRequest(q=request) if isinstance(request, str) else request
         req.validate()
@@ -826,7 +714,7 @@ class SearchEngine:
 
         aq = self.planner.analyze(parse_query(req.q))
         custom_sort = [s for s in (req.sort or []) if s.lstrip("-") != "_score"]
-        path, a, reads = self._choose_path(aq, custom_sort, mode)
+        path, a, reads = self._choose_path(aq, custom_sort)
         if path == "local":
             total, hits = self._local_topk(aq, a, reads, k_eff)
         elif path == "wand":

@@ -279,8 +279,7 @@ def lm_perplexity_bigram(df: DataFrame, id_col: str = "doc_id",
         F.exp("cross_entropy").alias("perplexity"))
 
 
-def vocabulary(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text", min_count: int = 1,
+def vocabulary(df: DataFrame, text_col: str = "text", min_count: int = 1,
                _materialize: bool = True) -> DataFrame:
     """Corpus vocabulary artifact — (term, cf, df, rank): collection
     frequency, document frequency, and frequency rank (cf desc, term
@@ -304,10 +303,11 @@ def vocabulary(df: DataFrame, id_col: str = "doc_id",
     identical to the global row_number; the only driver collect is
     one row PER PARTITION (bounded by cluster width, not data).
 
-    df counts input ROWS containing the term — identical to
-    count(distinct doc_id) under the documents contract (doc_id is
-    the table's key; parity with the definitional aggregate is pinned
-    in tests)."""
+    df counts input ROWS containing the term; no id column is read.
+    Callers must pass one row per unique ``doc_id`` (the documents
+    contract): then df equals count(distinct doc_id), and parity with
+    the definitional aggregate is pinned in tests. A duplicated doc_id
+    row counts once per row."""
     toks = fan_out(df).select(tokens_col(text_col).alias("toks"))
 
     def cf_df_kernel(batches):

@@ -394,22 +394,14 @@ def ivf_topk(spark, index_dir: str, query_vec: list[float],
     L=2^14, dim ~1k that is a single 16M-FLOP BLAS call), and the
     ``nprobe`` nearest lists become a partition-pruning
     ``list_id IN (...)`` predicate — only those dirs are read."""
-    import json
     import os
 
     import numpy as np
     import pyarrow.parquet as pq
-    with open(os.path.join(index_dir, "_ivf_meta.json")) as f:
-        meta = json.load(f)
-    ldir = os.path.join(index_dir, "_leaders")
-    if os.path.isdir(ldir):
-        t = pq.read_table(ldir)
-        lids = np.asarray(t.column("lid"), dtype=np.int64)
-        lmat = np.array([np.asarray(v, dtype=np.float64)
-                         for v in t.column("lv").to_pylist()])
-    else:  # pre-sidecar index dirs embedded leaders in the meta JSON
-        lids = np.array([lid for lid, _ in meta["leaders"]], dtype=np.int64)
-        lmat = np.array([v for _, v in meta["leaders"]], dtype=np.float64)
+    t = pq.read_table(os.path.join(index_dir, "_leaders"))
+    lids = np.asarray(t.column("lid"), dtype=np.int64)
+    lmat = np.array([np.asarray(v, dtype=np.float64)
+                     for v in t.column("lv").to_pylist()])
     q = np.asarray(query_vec, dtype=np.float64)
     qn = float(np.linalg.norm(q)) or 1.0
     ln = np.linalg.norm(lmat, axis=1)

@@ -1,5 +1,6 @@
-"""Snapshot-manifest protocol (catalog.py layout v3): atomic commits,
-reader pinning, copy-on-write bucket sharing, time travel, vacuum.
+"""Snapshot-manifest protocol (catalog.py layout v4): atomic commits,
+reader pinning, copy-on-write bucket sharing, time travel, vacuum,
+and the refusal of manifests written by any other layout.
 
 The scale claim under test: at 10^12 docs a mutation rewrites a
 handful of bucket dirs out of hundreds; the commit must be one pointer
@@ -12,14 +13,16 @@ store/store.go:392-426 — but only per segment file, not across its
 docs/stats side state).
 """
 
+import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from bright_spark.index import catalog
 from bright_spark.index.builder import build_index
-from bright_spark.index.catalog import IndexCatalog
+from bright_spark.index.catalog import IndexCatalog, LayoutVersionError
 from bright_spark.index.mutations import IndexMutator
 from bright_spark.models import IndexConfig
 from bright_spark.query.engine import SearchEngine
@@ -564,3 +567,44 @@ def test_docs_for_ids_prunes_group_dirs(spark, tmp_path_factory):
     assert got == want and set(got) == {3, 77}
     # max_doc_id reads the top group only
     assert cat.max_doc_id(spark) == 99
+
+
+def _tree(root):
+    """Every file under ``root`` with its bytes."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(d, name)
+            with open(path, "rb") as f:
+                out[os.path.relpath(path, root)] = f.read()
+    return out
+
+
+def test_older_layout_is_refused_with_rebuild_error(spark, snap_idx,
+                                                    tmp_path):
+    """A manifest of another layout (here v3: a single string ``docs``
+    pointer) is refused where it is read, by readers and writers alike,
+    before anything is written; the index it was copied from is not
+    touched."""
+    original = _tree(snap_idx)
+    old = str(tmp_path / "v3idx")
+    shutil.copytree(snap_idx, old)
+    cat = IndexCatalog(old)
+    sid = cat.current_snapshot_id()
+    mf = os.path.join(cat.snapshots_dir, f"s{sid:08d}.json")
+    with open(mf) as f:
+        m = json.load(f)
+    m["layout_version"] = 3
+    m["tables"]["docs"] = os.path.relpath(cat.docs_dirs()[0], old)
+    with open(mf, "w") as f:
+        json.dump(m, f)
+    before = _tree(old)
+
+    with pytest.raises(LayoutVersionError, match="rebuild"):
+        SearchEngine(spark, old)
+    with pytest.raises(LayoutVersionError, match="rebuild"):
+        IndexMutator(spark, old).upsert(spark.createDataFrame(
+            [{"rid": 0, "text": "refused", "kind": "k0"}]))
+    assert _tree(old) == before
+    assert _tree(snap_idx) == original
+    assert SearchEngine(spark, snap_idx).search("common").total_hits > 0

@@ -206,13 +206,10 @@ def test_ivf_leader_sidecar_at_scale(spark, tmp_path_factory):
     per-leader Python loop over a meta-JSON blob. At L=1024: (a) the
     matmul ranking picks the EXACT probe set the reference per-leader
     loop picks (round-6 cosine, leader-id tiebreak), visible in the
-    pruned input files; (b) the meta JSON carries no leader vectors;
-    (c) a legacy dir with JSON-embedded leaders still answers
-    identically."""
+    pruned input files; (b) the meta JSON carries no leader vectors."""
     import json
     import math
     import os
-    import shutil
 
     from bright_spark.vectors.similarity import build_ivf_index, ivf_topk
     rng = np.random.default_rng(7)
@@ -228,7 +225,6 @@ def test_ivf_leader_sidecar_at_scale(spark, tmp_path_factory):
 
     q = [float(x) for x in vecs[5]]
     top = ivf_topk(spark, idx, q, k=10, nprobe=8)
-    got = [(r["vec_id"], round(r["cosine"], 6)) for r in top.collect()]
 
     # reference probe set: the old driver-side per-leader loop
     import pyarrow.parquet as pq
@@ -245,16 +241,6 @@ def test_ivf_leader_sidecar_at_scale(spark, tmp_path_factory):
     in_list = plan.split("PartitionFilters")[1].split(" IN (")[1].split(")")[0]
     scanned = sorted(int(x) for x in in_list.split(","))
     assert scanned == expect_probes
-
-    # legacy layout: leaders embedded in the meta JSON, no sidecar
-    legacy = str(tmp_path_factory.mktemp("ivflegacy") / "idx")
-    shutil.copytree(idx, legacy)
-    shutil.rmtree(os.path.join(legacy, "_leaders"))
-    with open(os.path.join(legacy, "_ivf_meta.json"), "w") as f:
-        json.dump({**meta, "leaders": [[lid, list(v)] for lid, v in leaders]}, f)
-    got_legacy = [(r["vec_id"], round(r["cosine"], 6)) for r in
-                  ivf_topk(spark, legacy, q, k=10, nprobe=8).collect()]
-    assert got_legacy == got
 
 
 def test_semantic_dup_clusters(spark):
