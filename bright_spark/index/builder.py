@@ -19,6 +19,25 @@ are explicit Spark dataflow with exactly two data shuffles:
   stage 3  term_stats (B4: global df/cf per term) + index_meta
            (N, avgdl, total_tokens)
 
+Driver execution: a build whose source is small runs the same three
+stages on the driver instead, the way the reference hands a batch to
+Bleve in-process. The size figure is the optimizer's ``sizeInBytes`` of
+the selected source columns when every leaf of the source plan is a
+file scan (the files' on-disk bytes), or the arrow bytes of
+driver-resident rows (the REST first batch). Any other source (a local
+relation, a generated ``range``) builds on Spark: the optimizer sizes
+it from row counts and default column widths, not bytes. Below
+:func:`catalog.fits_local_build` the source is collected once with
+``toArrow()`` (the build's one Spark job, none for rows), doc_ids are
+assigned as stage 1 assigns them, the unchanged tokenize and merge
+kernels run once per doc range, and pyarrow writes one file per docs
+group, postings bucket and term_stats bucket in the Spark stages' sort
+orders. A column type the driver does not map, a natural-key type the
+Python murmur3 does not reproduce, a null key or a repeated id keeps
+the build on Spark; the choice is made before anything is written and
+recorded as the build commit's ``metrics.mode`` (``driver`` /
+``spark``).
+
 Scale/skew notes (B5): grouping by ``(term, range_id)`` — not bare
 ``term`` — structurally bounds every merge group to <= 2**range_bits
 entries, so a term appearing in 60% of 10^12 docs still merges as
@@ -40,6 +59,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,12 +68,31 @@ from bright_spark.analysis.tokenizer import (count_terms_batch,
                                              count_terms_flat)
 from bright_spark.index import codec
 from bright_spark.index.catalog import (
+    _ARROW_OF_DDL,
     POSTINGS_KERNEL_SCHEMA,
     POSTINGS_SCHEMA,
+    TERM_STATS_ARROW,
+    TERM_STATS_SCHEMA,
     IndexCatalog,
     PendingSnapshot,
+    _conform,
+    fits_local_build,
+    write_part,
 )
+from bright_spark.index.fastpath import (
+    _partials_pdf,
+    _postings_table,
+    _sha256_series,
+)
+from bright_spark.index.hashing import partition_id
 from bright_spark.models import IndexConfig
+
+# source column types whose key values the driver execution hashes
+# exactly as Spark's ``F.hash`` does (hashing.spark_hash), and id-column
+# types it casts to BIGINT as Spark does
+_HASHED_KEY_DDL = ("string", "bigint")
+_ID_DDL = ("tinyint", "smallint", "int", "bigint")
+_DDL_OF_ARROW = {t: n for n, t in _ARROW_OF_DDL.items()}
 
 # shuffle wire format of the tokenize->merge exchange. doc_ids must be
 # BIGINT (dense ids are unbounded at 10^12-doc scale); tfs/dls/pos are
@@ -400,6 +440,37 @@ def _make_merge_fn(block_size: int, n_buckets: int,
     return fn
 
 
+def _slices_by(tab: pa.Table, keys: np.ndarray
+               ) -> Iterator[tuple[int, pa.Table]]:
+    """(key, rows) per run of equal ``keys`` (one sorted key per row of
+    ``tab``) — one driver-side file per partition."""
+    if not keys.size:
+        return
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    ends = np.r_[starts[1:], keys.size]
+    for s, e in zip(starts.tolist(), ends.tolist()):
+        yield int(keys[s]), tab.slice(s, e - s)
+
+
+def _file_scan_bytes(df: DataFrame) -> int | None:
+    """The optimizer's ``sizeInBytes`` of ``df`` when every leaf of its
+    plan is a file scan, else None. Only a file scan's figure is a byte
+    size (the files' on-disk bytes, scaled to the selected columns):
+    other leaves are sized as row count times default column widths
+    (a local relation counts 20 B per string whatever its length, a
+    ``range`` 8 B per row, whatever a ``mapInPandas`` over it yields).
+    Reads the plan only, starts no Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if (leaf.getClass().getSimpleName() != "LogicalRelation"
+                or leaf.relation().getClass().getSimpleName()
+                != "HadoopFsRelation"):
+            return None
+    return int(plan.stats().sizeInBytes())
+
+
 def _staged_part_write(prepared: DataFrame, pending: PendingSnapshot,
                        table: str, part_col: str,
                        delta: bool = False) -> set[int]:
@@ -543,6 +614,15 @@ class IndexBuilder:
         """All analyzed fields; the first is the default search field."""
         return [self.content_col, *self.text_cols]
 
+    def _source_cols(self) -> list[str]:
+        """The source columns a build reads, in docs-table order."""
+        return list(dict.fromkeys(
+            ([self.id_col] if self.id_col else list(self.key_cols))
+            + ([self.lang_col] if self.lang_col else [])
+            + list(self.attr_cols) + list(self.text_cols)
+            + [self.content_col]
+        ))
+
     # -------------------------------------------------------- stage 1
 
     def _keyed(self, source: DataFrame,
@@ -597,13 +677,7 @@ class IndexBuilder:
         path keeps the Arrow tokenize kernel (per-lang sets)."""
         from bright_spark.analysis.tokenizer import doc_len_sql
         cfg = self.config
-        cols = list(dict.fromkeys(
-            ([self.id_col] if self.id_col else list(self.key_cols))
-            + ([self.lang_col] if self.lang_col else [])
-            + list(self.attr_cols) + list(self.text_cols)
-            + [self.content_col]
-        ))
-        keyed, id_offsets = self._keyed(source, cols)
+        keyed, id_offsets = self._keyed(source, self._source_cols())
         keyed = keyed.withColumn("content_sha256", F.sha2(F.col(self.content_col), 256))
         if not self.filter_stopwords:
             if self.id_col:
@@ -759,33 +833,22 @@ class IndexBuilder:
             "version": 4,  # v4: partitioned docs/term_stats CoW
         }
 
-    # below this many bytes of term_stats files, sum the per-field cf
-    # totals driver-side with pyarrow instead of scheduling a Spark
-    # job — the job itself costs more than reading a few MB; bigger
-    # selections (a web-scale vocabulary) stay distributed
-    _DRIVER_CF_BYTES = 64 * 1024 * 1024
-
     def _field_cf_totals(self, dirs: list[str]) -> dict[str, int]:
         """Per-field Σ cf over a set of term_stats dirs — a column-
-        pruned scan of the tiny aggregate. Explicit schema: an EMPTY
-        selection (delete-everything, emptied buckets) has zero part
-        files and inference would fail on the bare _SUCCESS marker."""
-        import glob
-        from bright_spark.index.catalog import TERM_STATS_SCHEMA
+        pruned scan of the tiny aggregate, on the driver when the
+        footer bytes of the two columns fit :func:`catalog.fits_local`.
+        Explicit schema: an EMPTY selection (delete-everything, emptied
+        buckets) has zero part files and inference would fail on the
+        bare _SUCCESS marker."""
         if not dirs:
             return {}
-        files = [f for d in dirs
-                 for f in glob.glob(os.path.join(d, "*.parquet"))]
-        if (files and sum(os.path.getsize(f) for f in files)
-                <= self._DRIVER_CF_BYTES):
-            import pyarrow.parquet as pq
-            totals: dict[str, int] = {}
-            for f in files:
-                t = pq.read_table(f, columns=["field", "cf"])
-                for fld, cf in zip(t.column("field").to_pylist(),
-                                   t.column("cf").to_pylist()):
-                    totals[fld] = totals.get(fld, 0) + int(cf or 0)
-            return totals
+        rd = self.catalog._footer_read(
+            dirs, "term", None,
+            pa.schema([TERM_STATS_ARROW.field(c) for c in ("field", "cf")]))
+        if rd.fits:
+            agg = rd.read().group_by("field").aggregate([("cf", "sum")])
+            return {f: int(t or 0) for f, t in zip(
+                agg["field"].to_pylist(), agg["cf_sum"].to_pylist())}
         frows = (self.spark.read.schema(TERM_STATS_SCHEMA).parquet(*dirs)
                  .groupBy("field").agg(F.sum("cf").alias("t")).collect())
         return {r["field"]: int(r["t"] or 0) for r in frows}
@@ -919,7 +982,141 @@ class IndexBuilder:
         if repl:
             self.config = dataclasses.replace(self.config, **repl)
 
+    # ------------------------------------------------- driver execution
+
+    def _driver_source(self, source: DataFrame, rows: list[dict] | None
+                       ) -> tuple[pa.Table | None, int | None]:
+        """(the selected source columns as one arrow table, or None when
+        the build must run on Spark; the size figure gated). Starts at
+        most one Spark job (the collect) and writes nothing. A repeated
+        id value also keeps the build on Spark: the driver derives each
+        doc's length from its id."""
+        sel = source.select(*self._source_cols())
+        ddl = [(f.name, f.dataType.simpleString()) for f in sel.schema.fields]
+        keys = [self.id_col] if self.id_col else list(self.key_cols)
+        key_types = _ID_DDL if self.id_col else _HASHED_KEY_DDL
+        if (any(t not in _ARROW_OF_DDL for _, t in ddl)
+                or any(t not in key_types for n, t in ddl if n in keys)):
+            return None, None
+        schema = pa.schema([(n, _ARROW_OF_DDL[t]) for n, t in ddl])
+        tab = None
+        if rows is None:
+            nbytes = _file_scan_bytes(sel)
+            if nbytes is None:
+                return None, None
+        else:
+            try:
+                tab = pa.Table.from_pylist(rows, schema=schema)
+            except (pa.ArrowInvalid, pa.ArrowTypeError):
+                return None, None
+            nbytes = tab.nbytes
+        if not fits_local_build(nbytes):
+            return None, nbytes
+        if tab is None:
+            tab = _conform(sel.toArrow(), schema)
+        if any(tab[k].null_count for k in keys) or (
+                self.id_col and pc.count_distinct(tab[self.id_col]).as_py()
+                != tab.num_rows):
+            return None, nbytes
+        return tab, nbytes
+
+    def _build_driver(self, src: pa.Table, pending: PendingSnapshot) -> dict:
+        """Stages 1-3 over the collected source, on the driver: the
+        Spark stages' doc_ids, kernels, file sort orders and docs DDL,
+        one file per docs group, postings bucket and term_stats bucket.
+        Returns the corpus-stats dict, as :meth:`build_stats` does."""
+        cfg = self.config
+        n = src.num_rows
+        if self.id_col:
+            src = src.set_column(src.schema.get_field_index(self.id_col),
+                                 "doc_id", src[self.id_col].cast(pa.int64())
+                                 ).sort_by("doc_id")
+            ids = src["doc_id"]
+        else:
+            # stage 1's order: hash partition, then natural key within it
+            p = self.n_build_partitions
+            pids = [partition_id(k, p) for k in zip(
+                *(src[c].to_pylist() for c in self.key_cols))]
+            src = (src.append_column("_pid", pa.array(pids, pa.int32()))
+                      .sort_by([("_pid", "ascending")]
+                               + [(c, "ascending") for c in self.key_cols])
+                      .drop_columns(["_pid"]))
+            ids = pa.chunked_array([np.arange(n, dtype=np.int64)])
+        ids_np = ids.to_numpy()
+
+        # postings: the tokenize and merge kernels run once per doc range
+        # (every (term, range_id) merge group lies within one), so the
+        # driver holds one range's partials at a time. The content
+        # field's partials carry each doc's length, the doc_len column.
+        kin = pa.table({"doc_id": ids, **{c: src[c] for c in dict.fromkeys(
+            [*self.field_cols, *([self.lang_col] if self.lang_col else [])])}})
+        merge = _make_merge_fn(cfg.block_size, cfg.n_term_buckets,
+                               cfg.store_positions)
+        doc_len = np.zeros(n, np.int32)
+        posts = []
+        for _, part in _slices_by(kin, ids_np >> np.int64(cfg.range_bits)):
+            partials = _partials_pdf(self, cfg, part.to_pandas())
+            if partials is None:
+                continue
+            own = partials[partials["field"] == self.content_col]
+            if len(own):
+                doc_len[np.searchsorted(ids_np, np.concatenate(
+                    own["doc_ids"].to_numpy()))] = np.concatenate(
+                    own["dls"].to_numpy())
+            posts += [_postings_table(m, pending.snapshot_id)
+                      for m in merge(iter([partials]))]
+
+        docs = src.append_column("content_sha256", pa.array(
+            _sha256_series(src[self.content_col].to_pandas()), pa.string()))
+        if not self.id_col:
+            docs = docs.append_column("doc_id", ids)
+        docs = docs.append_column("doc_len", pa.array(doc_len))
+        if not cfg.store_content:
+            docs = docs.drop_columns([self.content_col])
+        self._docs_schema = ", ".join(f"{f.name} {_DDL_OF_ARROW[f.type]}"
+                                      for f in docs.schema)
+        pending.reset_parts("docs")
+        for g, part in _slices_by(
+                docs, ids_np >> np.int64(cfg.docs_range_bits)):
+            write_part(pending.adopt_part("docs", g), part)
+
+        pending.tables["postings"] = {}
+        pending.reset_parts("term_stats")
+        field_tokens: dict[str, int] = {}
+        if posts:
+            post = pa.concat_tables(posts).sort_by(
+                [("bucket", "ascending"), ("term", "ascending"),
+                 ("field", "ascending"), ("range_id", "ascending")])
+            for b, part in _slices_by(post, post["bucket"].to_numpy()):
+                write_part(pending.adopt_part("postings", b), part)
+            agg = post.group_by(["bucket", "field", "term"]).aggregate(
+                [("df_chunk", "sum"), ("cf_chunk", "sum")])
+            stats = pa.Table.from_arrays(
+                [agg["field"], agg["term"], agg["df_chunk_sum"],
+                 agg["cf_chunk_sum"], agg["bucket"]],
+                schema=TERM_STATS_ARROW).sort_by(
+                [("bucket", "ascending"), ("term", "ascending"),
+                 ("field", "ascending")])
+            for b, part in _slices_by(stats, stats["bucket"].to_numpy()):
+                write_part(pending.adopt_part("term_stats", b), part)
+            tot = stats.group_by("field").aggregate([("cf", "sum")])
+            field_tokens = dict(zip(tot["field"].to_pylist(),
+                                    tot["cf_sum"].to_pylist()))
+        meta = self._make_meta(n, field_tokens, self._docs_schema)
+        self._write_index_meta(pending, meta)
+        return meta
+
     def build(self, source: DataFrame) -> IndexCatalog:
+        return self._build(source, None)
+
+    def _build(self, source: DataFrame,
+               rows: list[dict] | None) -> IndexCatalog:
+        """``rows``: the driver-resident records ``source`` was just
+        created from (the REST first batch), or None. The driver
+        execution reads them instead of collecting ``source``."""
+        local, nbytes = self._driver_source(source, rows)
+        if local is not None:
+            self._n_docs = local.num_rows
         self.resolve_range_bits(source)
         self.catalog.save_config(self.config, extra={
             "content_col": self.content_col,
@@ -934,10 +1131,15 @@ class IndexBuilder:
         import time
         t0 = time.time()
         pending = self.catalog.begin()
-        self.build_docs(source, pending)
-        self.build_postings(source, pending)
-        meta = self.build_stats(pending)
+        if local is not None:
+            meta = self._build_driver(local, pending)
+        else:
+            self.build_docs(source, pending)
+            self.build_postings(source, pending)
+            meta = self.build_stats(pending)
         pending.commit(meta, "build", metrics={
+            "mode": "spark" if local is None else "driver",
+            "source_bytes": nbytes,
             "n_docs": meta["n_docs"],
             "buckets_written": len(pending.tables["postings"]),
             "wall_ms": int((time.time() - t0) * 1000)})

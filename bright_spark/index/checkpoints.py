@@ -219,6 +219,7 @@ class ResumableIndexBuilder:
                              self.config.files_per_bucket or 1)
         meta = self.builder.build_stats(pending)
         sid = pending.commit(meta, "build", metrics={
+            "mode": "spark",
             "n_docs": meta["n_docs"], "n_shards": self.n_shards,
             "buckets_written": len(pending.tables["postings"])})
         self.store.put("merge", {

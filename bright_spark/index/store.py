@@ -25,11 +25,13 @@ bearing here):
   tests/test_store_concurrency.py).
 
 Differences from the reference forced by the engines' natures:
-- Bleve creates an empty index at CreateIndex time; a Spark index
-  materializes on the first document batch. ``create_index`` therefore
-  only registers the config (and adopts an existing valid index dir,
-  like store.go:96-101); ``add_documents`` builds on first use and
-  upserts afterwards (documents.go:181-198 semantics).
+- Bleve creates an empty index at CreateIndex time; here the index
+  materializes on the first document batch, whose build runs on the
+  driver when the batch is small (and through Spark otherwise).
+  ``create_index`` therefore only registers the config (and adopts an
+  existing valid index dir, like store.go:96-101); ``add_documents``
+  builds on first use and upserts afterwards (documents.go:181-198
+  semantics).
 - Searching a registered-but-never-written index returns zero hits
   (what an empty Bleve index does) instead of erroring.
 """
@@ -80,8 +82,8 @@ class IndexStore:
             shutil.rmtree(stale, ignore_errors=True)
 
     def _index_lock(self, idx_id: str) -> threading.RLock:
-        # RLock: add_document_rows delegates to add_documents for the
-        # first batch while already holding the index lock
+        # RLock: a write holding its index's lock may take it again
+        # without deadlocking (no write method nests another today)
         with self._reg_lock:
             lk = self._index_locks.get(idx_id)
             if lk is None:
@@ -234,7 +236,6 @@ class IndexStore:
             with self._reg_lock:
                 if idx_id not in self.configs:
                     raise KeyError(f"index {idx_id} not found")
-                cfg = self.configs[idx_id]
                 # cached engines are pinned to the pre-mutation snapshot
                 # — drop so the next search opens the new commit
                 self._engines.pop(idx_id, None)
@@ -242,43 +243,52 @@ class IndexStore:
                 from bright_spark.index.mutations import IndexMutator
                 IndexMutator(self.spark, self._index_dir(idx_id)).upsert(docs)
                 return
-            from bright_spark.index.builder import (
-                IndexBuilder,
-                detect_primary_key,
-            )
-            if "id_col" not in build_kwargs and "key_cols" not in build_kwargs:
-                pk = cfg.primary_key or detect_primary_key(docs)
-                if dict(docs.dtypes).get(pk) in ("tinyint", "smallint", "int",
-                                                 "bigint"):
-                    build_kwargs["id_col"] = pk
-                else:
-                    build_kwargs["id_col"] = None
-                    build_kwargs["key_cols"] = (pk,)
-            build_kwargs.setdefault("lang_col", None)
-            IndexBuilder(self.spark, cfg, self._index_dir(idx_id),
-                         **build_kwargs).build(docs)
-            with self._reg_lock:
-                self._engines.pop(idx_id, None)
+            self._build_first(idx_id, docs, None, build_kwargs)
 
     def add_document_rows(self, idx_id: str, rows: list[dict],
                           **build_kwargs) -> None:
         """Driver-resident form of :meth:`add_documents` — the wire
         path. Against a built index the batch goes straight to the
-        mutator's fast regime (zero Spark jobs for small batches); the
-        first batch still builds through Spark."""
+        mutator's fast regime (zero Spark jobs for small batches); a
+        small first batch builds on the driver from the rows themselves
+        (zero Spark jobs: their DataFrame only infers the column types,
+        and feeds the Spark build of a large batch)."""
         with self._locked_index(idx_id):
             with self._reg_lock:
                 if idx_id not in self.configs:
                     raise KeyError(f"index {idx_id} not found")
+                self._engines.pop(idx_id, None)
             if self.is_built(idx_id):
-                with self._reg_lock:
-                    self._engines.pop(idx_id, None)
                 from bright_spark.index.mutations import IndexMutator
                 IndexMutator(self.spark,
                              self._index_dir(idx_id)).upsert_rows(rows)
                 return
-            self.add_documents(idx_id, self.spark.createDataFrame(rows),
-                               **build_kwargs)
+            self._build_first(idx_id, self.spark.createDataFrame(rows), rows,
+                              build_kwargs)
+
+    def _build_first(self, idx_id: str, docs: DataFrame,
+                     rows: list[dict] | None, build_kwargs: dict) -> None:
+        """Build the index from its first batch, under the index lock.
+        ``rows``: the records ``docs`` was just created from, or None."""
+        from bright_spark.index.builder import (
+            IndexBuilder,
+            detect_primary_key,
+        )
+        with self._reg_lock:
+            cfg = self.configs[idx_id]
+        if "id_col" not in build_kwargs and "key_cols" not in build_kwargs:
+            pk = cfg.primary_key or detect_primary_key(docs)
+            if dict(docs.dtypes).get(pk) in ("tinyint", "smallint", "int",
+                                             "bigint"):
+                build_kwargs["id_col"] = pk
+            else:
+                build_kwargs["id_col"] = None
+                build_kwargs["key_cols"] = (pk,)
+        build_kwargs.setdefault("lang_col", None)
+        IndexBuilder(self.spark, cfg, self._index_dir(idx_id),
+                     **build_kwargs)._build(docs, rows)
+        with self._reg_lock:
+            self._engines.pop(idx_id, None)
 
     def delete_documents(self, idx_id: str, ids: list[int] | None = None,
                          filter_query: str | None = None) -> None:

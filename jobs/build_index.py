@@ -6,7 +6,9 @@ source table (north rule: the pipeline runs via spark-submit
         --source /data/repos --index-dir /data/idx --partitions 2048
 
 Prints one JSON line with build timing/throughput (the scaling bench
-consumes it).
+consumes it) and the execution the build took: ``mode`` is ``driver``
+for a source below ``catalog.LOCAL_BUILD_MAX_BYTES``, else ``spark``
+(``--resumable`` always builds on Spark).
 """
 
 from __future__ import annotations
@@ -124,10 +126,13 @@ def main() -> None:
             shutil.rmtree(idx_dir, ignore_errors=True)
 
     from bright_spark.index.catalog import IndexCatalog
-    n_docs = IndexCatalog(args.index_dir).load_meta()["n_docs"]
+    manifest = IndexCatalog(args.index_dir).manifest()
+    n_docs = manifest["meta"]["n_docs"]
 
     print(json.dumps({
         "n_docs": n_docs,
+        # "driver" or "spark" (see bright_spark.index.builder)
+        "mode": manifest["metrics"].get("mode", "spark"),
         "build_sec": round(best, 3),
         "docs_per_sec": round(n_docs / best, 2),
         "master": spark.sparkContext.master,

@@ -18,6 +18,7 @@ import shutil
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
@@ -40,6 +41,10 @@ def main() -> None:
     emb = pq.read_table(os.path.join(SRC, "embeddings.parquet"))
     n_docs = docs.num_rows
     n_vec = emb.num_rows
+    # copy k shifts every id by k * (max id + 1): ids that are sparse or
+    # do not start at 0 still land above all of copy k-1's ids
+    doc_stride = pc.max(docs.column("doc_id")).as_py() + 1
+    vec_stride = pc.max(emb.column("vec_id")).as_py() + 1
     dim = len(emb.column("embedding")[0])
 
     doc_chunks, emb_chunks = [], []
@@ -49,7 +54,7 @@ def main() -> None:
             emb_chunks.append(emb)
             continue
         d = docs.to_pydict()
-        d["doc_id"] = [i + k * n_docs for i in d["doc_id"]]
+        d["doc_id"] = [i + k * doc_stride for i in d["doc_id"]]
         rng = np.random.default_rng(31 * k)
         d["text"] = [permute_words(t, rng) for t in d["text"]]
         d["n_chars"] = [len(t) for t in d["text"]]
@@ -58,7 +63,7 @@ def main() -> None:
         rng = np.random.default_rng(1000 + k)
         vecs = rng.standard_normal((n_vec, dim)).astype(np.float32)
         e = {
-            "vec_id": pa.array([i + k * n_vec for i in
+            "vec_id": pa.array([i + k * vec_stride for i in
                                 emb.column("vec_id").to_pylist()],
                                type=pa.int64()),
             "embedding": pa.array([v for v in vecs.tolist()],

@@ -11,6 +11,12 @@ from bright_spark.index import codec
 from bright_spark.index.catalog import term_bucket
 
 
+def test_fixture_index_is_driver_built(built_index):
+    """The shared fixture corpus builds on the driver;
+    test_index_build_spark.py runs these checks on a Spark build."""
+    assert built_index.manifest()["metrics"]["mode"] == "driver"
+
+
 def test_doc_count_and_sha_identity(spark, built_index, repos_pdf):
     docs = built_index.docs(spark)
     assert docs.count() == len(repos_pdf)

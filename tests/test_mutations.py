@@ -141,7 +141,8 @@ def test_patch_single_doc(spark, mut_env):
 
 
 def test_every_write_keeps_bounded_files_per_bucket(spark, repos_parquet,
-                                                    tmp_path_factory):
+                                                    tmp_path_factory,
+                                                    monkeypatch):
     """The reference needs a background segment merger (Bleve scorch);
     here every build/mutation write repartitions on (bucket, range
     slice) before the partitionBy write, so bucket dirs never fragment:
@@ -149,18 +150,23 @@ def test_every_write_keeps_bounded_files_per_bucket(spark, repos_parquet,
     count does not grow with mutation count, so no compaction operator
     is required. files_per_bucket > 1 is the 10^12-doc write path (the
     final write parallelizes at ~build width instead of capping at the
-    bucket count, and no single parquet file holds a whole bucket)."""
+    bucket count, and no single parquet file holds a whole bucket).
+    A zero read budget keeps every write on Spark: the driver build of
+    this small corpus writes one file per bucket."""
     import os
+    from bright_spark.index import catalog as catalog_mod
     from bright_spark.index.builder import build_index
     from bright_spark.index.catalog import IndexCatalog
     from bright_spark.index.mutations import IndexMutator
     from bright_spark.models import IndexConfig
 
+    monkeypatch.setattr(catalog_mod, "LOCAL_READ_MAX_BYTES", 0)
     idx = str(tmp_path_factory.mktemp("nofrag") / "idx")
     src = spark.read.parquet(repos_parquet)
     # 8 partitions / 4 buckets -> auto files_per_bucket = 2
     build_index(spark, src, idx, IndexConfig(id="c", n_term_buckets=4),
                 n_build_partitions=8)
+    assert IndexCatalog(idx).manifest()["metrics"]["mode"] == "spark"
     s = IndexCatalog(idx).load_config().files_per_bucket
     assert s == 2
 

@@ -13,6 +13,7 @@ salting, salt = doc-range). Assertions:
 import pytest
 from pyspark.sql import functions as F
 
+from bright_spark.index import catalog
 from bright_spark.index.builder import build_index
 from bright_spark.models import IndexConfig
 from bright_spark.query.engine import SearchEngine
@@ -20,14 +21,21 @@ from bright_spark.query.engine import SearchEngine
 
 @pytest.fixture(scope="module")
 def two_indexes(spark, repos_parquet, tmp_path_factory):
+    """Both indexes built by the Spark stages (the (term, range_id)
+    shuffle-merge this file checks): the read budget is 0, so the
+    small fixture corpus does not take the driver execution."""
     base = tmp_path_factory.mktemp("skew")
     src = spark.read.parquet(repos_parquet)
-    coarse = build_index(spark, src, str(base / "coarse"),
-                         IndexConfig(id="coarse", range_bits=16),
-                         n_build_partitions=8)
-    fine = build_index(spark, src, str(base / "fine"),
-                       IndexConfig(id="fine", range_bits=4),
-                       n_build_partitions=8)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(catalog, "LOCAL_READ_MAX_BYTES", 0)
+        coarse = build_index(spark, src, str(base / "coarse"),
+                             IndexConfig(id="coarse", range_bits=16),
+                             n_build_partitions=8)
+        fine = build_index(spark, src, str(base / "fine"),
+                           IndexConfig(id="fine", range_bits=4),
+                           n_build_partitions=8)
+    assert {c.manifest()["metrics"]["mode"] for c in (coarse, fine)} \
+        == {"spark"}
     return coarse, fine
 
 
