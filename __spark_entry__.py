@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()`` exercises the real engine (index build -> bucket-pruned
-posting lookup -> block-max WAND / relational scoring) over the
+posting lookup -> per-range block-max BM25 kernels) over the
 driver's ``documents``/``embeddings`` parquet tables; ``oracle_sql()``
 re-derives every result from first principles in DuckDB SQL.
 
@@ -243,10 +243,13 @@ def _q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_posting_list(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from bright_spark.index.mutations import (ENTRIES_SCHEMA,
+                                              _decode_to_entries)
     eng = _engine(spark, sf_dir)
-    return (eng._exploded_postings([("text", "spark")])
-            .select("doc_id", F.col("tf").cast("bigint").alias("tf"),
-                    F.col("dl").cast("bigint").alias("dl")))
+    return (eng.catalog.postings_for_terms(spark, [("text", "spark")])
+            .mapInPandas(_decode_to_entries(tomb_bc=eng._tomb_bc),
+                         ENTRIES_SCHEMA)
+            .select("doc_id", "tf", "dl"))
 
 
 def _q_doc_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:

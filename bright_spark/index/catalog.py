@@ -158,10 +158,11 @@ _ARROW_OF_DDL = {
 # Set below the smallest measured crossover of search() wall time, driver
 # path vs Spark path (4-vCPU VM, local[4], 50,000-file make_repos_spark
 # corpus, median of 5): positional phrases cross at 30-42 MiB (hot
-# phrase at 29.7 MiB: 2.04 s driver vs 2.51 s relational; 42.2 MiB:
-# 2.37 vs 2.30; 55.8 MiB: 2.83 vs 2.30); hot-term ORs at 84-96 MiB
-# (60.6 MiB: 1.09 vs 1.56 s wand; 84.4: 1.63 vs 1.84; 95.5: 2.19 vs
-# 1.96); wildcards of 1,861-4,096 terms reading the whole 98 MiB postings
+# phrase at 29.7 MiB: 2.04 s driver vs 2.51 s for the Spark phrase-
+# kernel stage; 42.2 MiB: 2.37 vs 2.30; 55.8 MiB: 2.83 vs 2.30);
+# hot-term ORs at 84-96 MiB (60.6 MiB: 1.09 vs 1.56 s for the Spark
+# top-k kernel stage; 84.4: 1.63 vs 1.84; 95.5: 2.19 vs 1.96);
+# wildcards of 1,861-4,096 terms reading the whole 98 MiB postings
 # table still run 2-3x faster on the driver. Driver peak RSS grows by
 # about 2.6x the footer bytes read (136 MiB at 29.7 MiB).
 #

@@ -5,51 +5,46 @@ TopNCollector -> hit post-processing (`handlers/search.go:16-177`).
 Spark lifecycle here:
 
   SearchRequest -> parser (pure Python AST) -> Planner (maps clauses to
-  postings/term_stats/docs structures) -> one of three executions,
+  postings/term_stats/docs structures) -> one BM25 scorer, the per-range
+  block-max kernels (:func:`scorer.score_range_topk`,
+  :func:`scorer.score_range_phrase`), run by one of two executors,
   chosen before anything runs and named in ``SearchResponse.path``:
 
-  * ``local``      (scored term/bool, wildcard, fuzzy, positional
-    phrase and ``=``-filtered queries whose reads are small): pyarrow
-    reads the bucket-pruned posting row groups on the driver, the same
-    per-range kernels (:func:`scorer.score_range_topk`,
-    :func:`scorer.score_range_phrase`) run once per ``range_id``, and
-    one merge yields the total and the top-k. ``=`` filters intersect
-    the kernels' full match sets with a doc-id allowlist read from the
-    docs columns. Term dictionary, expansions, tombstones and hit
-    assembly are driver-side reads as well: zero Spark jobs.
-  * ``wand``       (the same term/bool shapes when the reads are too
-    large for the driver): partition-pruned postings scan ->
-    groupBy(range_id) applyInPandas of the same block-max kernel (per-
-    range exact top-k + exact match count) -> one collect of those <= k
-    rows per range -> the same driver-side merge.
-  * ``relational`` (range/like filters, non-positional phrases, NOT-
-    phrases, match-all, custom sorts, large phrase/filter queries, and
-    the differential-testing path): decode postings to an exploded
-    (term, doc_id, tf, dl) view -> broadcast-join per-term weights ->
-    groupBy(doc_id) score sum + must-group counting -> docs-predicate
-    semi-joins -> orderBy/limit. Positional phrases run the per-range
-    phrase kernel as a Spark stage instead of the exploded view.
+  * ``local``  (scored term/bool, wildcard, fuzzy, positional phrase
+    and ``=``-filtered queries whose reads are small): pyarrow reads
+    the bucket-pruned posting row groups on the driver, the kernels run
+    once per ``range_id``, and one merge yields the total and the
+    top-k. ``=`` filters intersect the kernels' full match sets with a
+    doc-id allowlist read from the docs columns. Term dictionary,
+    expansions, tombstones and hit assembly are driver-side reads as
+    well: zero Spark jobs.
+  * ``spark``  (everything else): partition-pruned postings scan ->
+    groupBy(range_id) applyInPandas of the same kernels. Plain
+    term/bool shapes ask each range for its exact top-k + match count
+    and collect those <= k rows per range into the same driver-side
+    merge. Every other shape takes the full match set (``k=None``)
+    followed by plain joins (:meth:`SearchEngine._spark_matches`):
+    non-positional phrases run their tokens as must groups and re-
+    tokenize the candidates' stored text (:meth:`_verify_phrases`);
+    NOT-phrases anti-join a sub-query's match set; match-all is every
+    docs ``doc_id`` at score 1.0 less the docs holding a NOT-term;
+    attribute predicates semi-join the filtered docs table; custom
+    sorts join their sort columns.
 
-Phrases: positional indexes match them in
-:func:`scorer.score_range_phrase` on every path, NOT-phrases included
-(:meth:`SearchEngine._phrase_matches`); non-positional indexes re-
-tokenize the AND-candidates' stored text
-(:meth:`SearchEngine._verify_phrases`).
-
-Selection rule: ``local`` whenever the query's shape allows it and the
-parquet row groups it reads — those whose ``term`` min/max covers a
+Selection rule: ``local`` whenever the query has a positive clause, no
+NOT-phrase, no custom sort and no phrase on a non-positional index, and
+the parquet row groups it reads — those whose ``term`` min/max covers a
 query term in the pruned bucket files of every delta-chain dir, plus
-the filtered docs columns — hold fewer footer-reported bytes than
-``catalog.LOCAL_READ_MAX_BYTES``; otherwise ``wand`` when the shape
-allows it, else ``relational``. ``search_df``/``match_df`` always
-return lazy Spark DataFrames (wand or relational).
+the ``=``-filtered docs columns — hold fewer footer-reported bytes than
+``catalog.LOCAL_READ_MAX_BYTES``; otherwise ``spark``.
+``search_df``/``match_df`` always return lazy Spark DataFrames.
 """
 
 from __future__ import annotations
 
 import sys
 from collections.abc import Iterable, Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -59,6 +54,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bright_spark.index.catalog import IndexCatalog, fits_local
+from bright_spark.index.mutations import (_DECODE_COLS, ENTRIES_SCHEMA,
+                                          _decode_to_entries)
 from bright_spark.models import SearchRequest, SearchRequestError, SearchResponse
 from bright_spark.query import scorer
 from bright_spark.query.parser import parse_query
@@ -71,6 +68,9 @@ _KERNEL_COLUMNS = ["field", "term", "range_id", "df_chunk", "first_doc",
                    "max_doc", "n", "max_tf", "min_dl", "docs", "tfs", "dls",
                    "ver"]
 
+# posting columns the entry decode of a NOT-term reads
+_ENTRY_COLUMNS = [c for c in _DECODE_COLS if c != "pos"]
+
 # docs column types whose cast-to-string equality pyarrow computes
 # exactly as Spark does (Spark renders 1.0 as "1.0", arrow as "1")
 _LOCAL_EQ_TYPES = {"string", "bigint", "int", "smallint", "tinyint", "boolean"}
@@ -79,6 +79,9 @@ _LOCAL_EQ_TYPES = {"string", "bigint", "int", "smallint", "tinyint", "boolean"}
 # never produced by either tokenizer mode's emissions in practice; the
 # key only has to be unambiguous per query, not globally escaped.
 FIELD_SEP = "\x1f"
+
+# term-dictionary cache size past which the next lookup clears it
+_DF_CACHE_MAX = 1 << 16
 
 
 def fkey(field: str, term: str) -> str:
@@ -123,6 +126,13 @@ class KernelArgs:
             need_total=need_total, avgdl_by_term=self.avgdls, tomb=tomb)
 
 
+def _topk_shape(aq: AnalyzedQuery) -> bool:
+    """Plain term/bool shapes, whose kernel stage can return each range's
+    exact top-k; every other shape needs the full match set."""
+    return aq.has_positive and not (aq.attr_preds or aq.phrases
+                                    or aq.must_not_phrases)
+
+
 def _top(docs: np.ndarray, scores: np.ndarray, k: int):
     order = np.lexsort((docs, -scores))[:k]
     return docs[order], scores[order]
@@ -132,7 +142,7 @@ def merge_ranges(parts: Iterable[tuple[np.ndarray, np.ndarray, int]],
                  k: int) -> tuple[int, list[tuple[int, float]]]:
     """Per-range kernel outputs (docs, scores, n_matched) -> (total,
     top-k hits by score desc, doc_id asc): the one merge both the local
-    and the wand executor end in."""
+    and the spark top-k execution end in."""
     parts = list(parts)
     if not parts:
         return 0, []
@@ -184,8 +194,12 @@ class SearchEngine:
     def _term_dfs(self, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
         """df per (field, term), via a driver-side dictionary cache (the
         hot term-dictionary an engine keeps resident; absent terms cache
-        as 0 so repeated misses don't re-scan). The fetch itself is the
+        as 0 so repeated misses don't re-scan). The engine lives as long
+        as its snapshot, so the cache is cleared once it passes
+        ``_DF_CACHE_MAX`` entries. The fetch itself is the
         bucket-pruned term_stats lookup (:meth:`IndexCatalog.term_dfs`)."""
+        if len(self._df_cache) > _DF_CACHE_MAX:
+            self._df_cache.clear()
         missing = [p for p in pairs if p not in self._df_cache]
         if missing:
             got = self.catalog.term_dfs(self.spark, missing)
@@ -308,7 +322,7 @@ class SearchEngine:
 
     def _wand_topk(self, a: KernelArgs | None,
                    k: int) -> tuple[int, list[tuple[int, float]]]:
-        """The wand path of :meth:`search`: one job collects each range's
+        """The spark top-k of :meth:`search`: one job collects each range's
         <= k kernel rows, merged on the driver."""
         if a is None:
             return 0, []
@@ -381,186 +395,48 @@ class SearchEngine:
             parts.append((docs, scores, n))
         return merge_ranges(parts, k)
 
-    # ------------------------------------------------- relational path
+    # ------------------------------------------------------ spark path
 
-    def _exploded_postings(self, pairs: list[tuple[str, str]]) -> DataFrame:
-        """Decoded (field, term, doc_id, tf, dl) view — vectorized
-        varint decode in mapInPandas; everything downstream is built-in
-        ops."""
-        rows = self.catalog.postings_for_terms(self.spark, pairs)
-        sel = rows.select("field", "term", "first_doc", "n",
-                          "docs", "tfs", "dls", "ver")
-        tomb_bc = self._tomb_bc
-
-        def decode_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bright_spark.index import codec
-            tomb = tomb_bc.value if tomb_bc is not None else None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                nb = pdf["first_doc"].str.len().to_numpy(dtype=np.int64)
-                first = np.concatenate(pdf["first_doc"].to_numpy()).astype(np.int64)
-                ns = np.concatenate(pdf["n"].to_numpy()).astype(np.int64)
-                bufs_d = [buf for row in pdf["docs"] for buf in row]
-                bufs_t = [buf for row in pdf["tfs"] for buf in row]
-                bufs_l = [buf for row in pdf["dls"] for buf in row]
-                if not bufs_d:
-                    continue
-                d = codec.decode_doc_blocks_bulk(first, ns, bufs_d)
-                t = codec.decode_concat(bufs_t).astype(np.int64)
-                l = codec.decode_concat(bufs_l).astype(np.int64)
-                block_terms = np.repeat(pdf["term"].to_numpy(), nb)
-                block_fields = np.repeat(pdf["field"].to_numpy(), nb)
-                fields_e = np.repeat(block_fields, ns)
-                terms_e = np.repeat(block_terms, ns)
-                if tomb is not None and d.size:
-                    # append-mode mask: entry dead iff its doc is
-                    # tombstoned at a LATER version than its row
-                    tids, tvers = tomb
-                    ever = np.repeat(np.repeat(
-                        pdf["ver"].fillna(0).to_numpy(np.int64), nb), ns)
-                    idx = np.searchsorted(tids, d)
-                    idxc = np.minimum(idx, tids.size - 1)
-                    drop = (tids[idxc] == d) & (ever < tvers[idxc])
-                    if drop.any():
-                        keep = ~drop
-                        d, t, l = d[keep], t[keep], l[keep]
-                        fields_e, terms_e = fields_e[keep], terms_e[keep]
-                yield pd.DataFrame({
-                    "field": fields_e,
-                    "term": terms_e,
-                    "doc_id": d,
-                    "tf": t,
-                    "dl": l,
-                })
-
-        return sel.mapInPandas(
-            decode_fn,
-            "field STRING, term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT")
-
-    def _relational_hits(self, aq: AnalyzedQuery) -> DataFrame:
-        """Exhaustively scored match set: (doc_id, score). The pure-
-        DataFrame execution (SURVEY.md §7 step 1) used for filters,
-        phrases, custom sorts, and differential testing."""
-        weights, avgdls = self._term_weights(aq)
-        k1 = float(self.meta["k1"])
-        b = float(self.meta["b"])
+    def _spark_matches(self, aq: AnalyzedQuery) -> DataFrame:
+        """Full match set (doc_id, score) on Spark: the kernel stage with
+        ``k=None``, then plain joins for what the kernels do not see
+        (non-positional phrase adjacency, NOT-phrases, match-all,
+        attribute predicates)."""
         docs_df = self.catalog.docs(self.spark)
-
-        def known(s) -> bool:
-            return fkey(s.field, s.term) in weights
-
-        pos_specs: list[tuple[tuple[str, str], float, int]] = []  # key, w, group
-        for gi, g in enumerate(aq.must_groups):
-            for s in g:
-                if known(s):
-                    pos_specs.append((s.key, weights[fkey(*s.key)], gi))
-        for s in aq.should_terms:
-            if known(s):
-                pos_specs.append((s.key, weights[fkey(*s.key)], -1))
-        # each phrase token is its own conjunctive group: adjacency
-        # implies conjunction, so verification only scans the (small)
-        # AND-candidate set instead of the union of hot terms
-        gi = len(aq.must_groups)
-        for ph in aq.phrases:
-            for t in ph.tokens:
-                if fkey(ph.field, t) in weights:
-                    pos_specs.append(((ph.field, t),
-                                      weights[fkey(ph.field, t)], gi))
-                    gi += 1
-        n_groups = gi
-        unsatisfiable = any(
-            all(not known(s) for s in g) for g in aq.must_groups
-        ) or (aq.phrases and any(fkey(ph.field, t) not in weights
-                                 for ph in aq.phrases for t in ph.tokens))
-
-        if aq.has_positive and (not pos_specs or unsatisfiable):
-            return self.spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
-
-        # positional phrases: ONE partition-pruned postings read feeds
-        # candidate intersection, positional adjacency AND exact scoring
-        # inside the per-range kernel (scorer.score_range_phrase),
-        # which emits the full match set
-        if aq.phrases and self.meta.get("store_positions"):
+        if aq.has_positive:
             a = self._kernel_args(aq)
             if a is None:
                 return self.spark.createDataFrame(
                     [], "doc_id BIGINT, score DOUBLE")
-            cand = self._kernel_df(a).select("doc_id", "score")
-            for ph in aq.must_not_phrases:
-                cand = cand.join(self._phrase_matches(ph, docs_df),
-                                 "doc_id", "left_anti")
-            if aq.attr_preds:
-                keep = docs_df.filter(
-                    self._attr_filter(aq.attr_preds)).select("doc_id")
-                cand = cand.join(keep, "doc_id", "left_semi")
-            return cand
-
-        if not aq.has_positive:
-            # match-all / filter-only / pure-negation: constant score 1
-            # (Q1: every doc, score 1 — handlers/search.go:91-92)
+            verify = bool(a.phrases) and not self.meta.get("store_positions")
+            if verify:
+                # adjacency implies conjunction: each phrase token is its
+                # own must group, so only the AND-candidates' stored text
+                # is re-tokenized
+                a = replace(a, phrases=[], must_groups=a.must_groups + [
+                    [t] for ph in a.phrases for t in ph])
+            out = self._kernel_df(a).select("doc_id", "score")
+            if verify:
+                out = self._verify_phrases(out, aq.phrases, docs_df)
+        else:
+            # match-all / filter-only / pure negation: every doc, score 1
+            # (Q1 — handlers/search.go:91-92), less the NOT-term holders
             out = docs_df.select("doc_id").withColumn("score", F.lit(1.0))
             if aq.must_not_terms:
-                neg = (self._exploded_postings(sorted(set(aq.must_not_terms)))
+                neg = (self.catalog.postings_for_terms(
+                           self.spark, sorted(set(aq.must_not_terms)))
+                       .select(*_ENTRY_COLUMNS)
+                       .mapInPandas(_decode_to_entries(tomb_bc=self._tomb_bc),
+                                    ENTRIES_SCHEMA)
                        .select("doc_id").distinct())
                 out = out.join(neg, "doc_id", "left_anti")
-            for ph in aq.must_not_phrases:
-                out = out.join(self._phrase_matches(ph, docs_df),
-                               "doc_id", "left_anti")
-            cond = self._attr_filter(aq.attr_preds) if aq.attr_preds else None
-            if cond is not None:
-                keep = docs_df.filter(cond).select("doc_id")
-                out = out.join(keep, "doc_id", "left_semi")
-            return out
-
-        # (field, term) -> (weight, field avgdl, must-group ids it can
-        # satisfy)
-        agg: dict[tuple[str, str], tuple[float, set[int]]] = {}
-        for key, w, g in pos_specs:
-            prev = agg.get(key, (w, set()))
-            groups = prev[1] | ({g} if g >= 0 else set())
-            agg[key] = (max(prev[0], w), groups)
-        wdf = self.spark.createDataFrame(
-            [(f, t, w, sorted(gs), avgdls[fkey(f, t)])
-             for (f, t), (w, gs) in sorted(agg.items())],
-            "field STRING, term STRING, w DOUBLE, groups ARRAY<INT>, adl DOUBLE",
-        )
-        exploded = self._exploded_postings(sorted(agg))
-        tfn = (F.col("tf") * (k1 + 1.0)) / (
-            F.col("tf") + k1 * (1.0 - b
-                                + b * F.col("dl") / F.greatest(F.col("adl"),
-                                                               F.lit(1e-9))))
-        contrib = (exploded.join(F.broadcast(wdf), ["field", "term"])
-                   .withColumn("contrib", F.col("w") * tfn))
-        per_doc = (contrib.groupBy("doc_id")
-                   .agg(F.sum("contrib").alias("score"),
-                        F.size(F.array_distinct(
-                            F.flatten(F.collect_list("groups")))).alias("n_g")))
-        cand = per_doc.filter(F.col("n_g") >= n_groups) if n_groups else per_doc
-        cand = cand.select("doc_id", "score")
-
-        if aq.must_not_terms:
-            neg = (self._exploded_postings(sorted(set(aq.must_not_terms)))
-                   .select("doc_id").distinct())
-            cand = cand.join(neg, "doc_id", "left_anti")
-
-        if aq.phrases:
-            # (non-positional fallback) the candidate frame is consumed
-            # twice — once broadcast into the content re-verify, once in
-            # the final semi-join; a lazy localCheckpoint materializes
-            # the decode+score subtree exactly once
-            cand = cand.localCheckpoint(eager=False)
-            cand = self._verify_phrases(cand, aq.phrases, docs_df)
-
         for ph in aq.must_not_phrases:
-            cand = cand.join(self._phrase_matches(ph, docs_df),
-                             "doc_id", "left_anti")
-
+            neg = self._spark_matches(AnalyzedQuery(phrases=[ph]))
+            out = out.join(neg.select("doc_id"), "doc_id", "left_anti")
         if aq.attr_preds:
-            cond = self._attr_filter(aq.attr_preds)
-            keep = docs_df.filter(cond).select("doc_id")
-            cand = cand.join(keep, "doc_id", "left_semi")
-        return cand
+            keep = docs_df.filter(self._attr_filter(aq.attr_preds))
+            out = out.join(keep.select("doc_id"), "doc_id", "left_semi")
+        return out
 
     def _verify_phrases(self, cand: DataFrame, phrases: list,
                         docs_df: DataFrame) -> DataFrame:
@@ -648,63 +524,36 @@ class SearchEngine:
         ok = joined.mapInPandas(verify, "doc_id BIGINT")
         return cand.join(ok, "doc_id", "left_semi")
 
-    def _phrase_matches(self, ph, docs_df: DataFrame) -> DataFrame:
-        """All doc_ids matching one phrase (used for NOT-phrase
-        exclusion, Q8). Positional indexes run the same one-pass
-        kernel as positive phrases with scoring skipped (one postings
-        scan, membership only); otherwise AND-candidates from the
-        postings + content re-tokenization verify."""
-        if self.meta.get("store_positions"):
-            a = self._kernel_args(AnalyzedQuery(phrases=[ph]))
-            if a is None:
-                return self.spark.createDataFrame([], "doc_id BIGINT")
-            return self._kernel_df(a, need_scores=False).select("doc_id")
-        toks = sorted(set(ph.tokens))
-        pairs = [(ph.field, t) for t in toks]
-        ex = self._exploded_postings(pairs)
-        cand = (ex.groupBy("doc_id")
-                .agg(F.count_distinct("term").alias("n_t"))
-                .filter(F.col("n_t") >= len(toks))
-                .select("doc_id"))
-        return self._verify_phrases(cand, [ph], docs_df).select("doc_id")
-
     # ------------------------------------------------------ public API
 
-    def search_df(self, q: str, k: int = 10, mode: str = "auto",
+    def search_df(self, q: str, k: int = 10,
                   prune: bool = True) -> DataFrame:
         """Top-k hits as a DataFrame (doc_id, score), default sort
-        (-_score, doc_id). ``mode``: auto | wand | relational."""
+        (-_score, doc_id), always on Spark. ``prune=False`` turns off the
+        kernels' block-max skipping (the WAND-exactness reference)."""
         aq = self.planner.analyze(parse_query(q))
-        use_wand = (mode == "wand" or (
-            mode == "auto" and aq.has_positive and not aq.attr_preds
-            and not aq.phrases and not aq.is_match_all)
-        ) and not aq.must_not_phrases
-        if use_wand:
+        if _topk_shape(aq):
             hits = (self._wand_hits(aq, k, prune=prune, need_total=False)
                     .select("doc_id", "score"))
         else:
-            hits = self._relational_hits(aq)
+            hits = self._spark_matches(aq)
         return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def match_df(self, q: str) -> DataFrame:
-        """Full exhaustively-scored match set (doc_id, score) — the
-        relational path, for callers that need the complete result
-        (delete-by-filter U3, custom sorts, differential tests)."""
-        aq = self.planner.analyze(parse_query(q))
-        return self._relational_hits(aq)
+        """Full exactly-scored match set (doc_id, score) on Spark, for
+        callers that need the complete result (delete-by-filter U3,
+        differential tests)."""
+        return self._spark_matches(self.planner.analyze(parse_query(q)))
 
     def _choose_path(self, aq: AnalyzedQuery, custom_sort: list[str]):
         """(path, kernel args, local reads), decided before anything
         executes (see the module docstring's selection rule)."""
         if (not aq.has_positive or aq.must_not_phrases or custom_sort
                 or (aq.phrases and not self.meta.get("store_positions"))):
-            return "relational", None, None
+            return "spark", None, None
         a = self._kernel_args(aq)
         reads = self._local_reads(aq, a)
-        if reads is not None:
-            return "local", a, reads
-        wand = not aq.attr_preds and not aq.phrases
-        return ("wand" if wand else "relational"), a, None
+        return ("local" if reads is not None else "spark"), a, reads
 
     def search(self, request: SearchRequest | str) -> SearchResponse:
         """Full request semantics R1-R6 (handlers/search.go:20-177)."""
@@ -717,10 +566,10 @@ class SearchEngine:
         path, a, reads = self._choose_path(aq, custom_sort)
         if path == "local":
             total, hits = self._local_topk(aq, a, reads, k_eff)
-        elif path == "wand":
+        elif _topk_shape(aq) and not custom_sort:
             total, hits = self._wand_topk(a, k_eff)
         else:
-            cand = self._relational_hits(aq)
+            cand = self._spark_matches(aq)
             cand.persist()
             try:
                 total = cand.count()

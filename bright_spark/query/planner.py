@@ -19,10 +19,10 @@ Maps the parsed clause tree onto the index's physical structures:
 - attribute clauses (``lang:python``, ``doc_len:>200``, Q11/Q12) ->
   pushed-down predicates on the ``docs`` table; ranges stay attribute
   predicates on any stored column
-- phrases (Q4) -> must-group of tokens + positional post-verification
-  (from the positional index when stored, else re-tokenizing only the
-  candidate docs' own field text); NOT-phrases (Q8) verify the same
-  way and anti-join
+- phrases (Q4) -> must-group of tokens + adjacency check (in the
+  per-range phrase kernel when positions are stored, else by re-
+  tokenizing only the candidate docs' own field text); NOT-phrases (Q8)
+  run the same way as a sub-query whose match set is anti-joined
 - unknown fields match nothing (Bleve missing-field behavior)
 """
 

@@ -30,7 +30,6 @@ def main() -> None:
     ap.add_argument("--index-dir", required=True)
     ap.add_argument("--q", default=None)
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--mode", default="auto")
     ap.add_argument("--bench", default=None, help="queries.jsonl path")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--master", default=None)
@@ -77,7 +76,7 @@ def main() -> None:
         }))
     else:
         t0 = time.time()
-        rows = eng.search_df(args.q or "", k=args.k, mode=args.mode).collect()
+        rows = eng.search_df(args.q or "", k=args.k).collect()
         dt = time.time() - t0
         for r in rows:
             print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))

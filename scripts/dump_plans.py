@@ -71,7 +71,7 @@ def main() -> None:
         plan(eng.search_df("source:src3 spark", k=10), "simple")))
 
     sections.append((
-        "Attribute-filtered relational path (predicate pushdown on docs)",
+        "Attribute-filtered kernel stage: full match set -> docs semi-join (predicate pushdown on docs)",
         "eng.search_df('lang:en spark', k=10)",
         plan(eng.search_df("lang:en spark", k=10), "simple")))
 

@@ -48,12 +48,12 @@ def field_oracle(repos_pdf):
     return OracleIndex(repos_pdf.to_dict("records"), text_cols=("path",))
 
 
-def _assert_parity(engine, oracle, q, mode="auto"):
+def _assert_parity(engine, oracle, q):
     expected, _ = oracle.search(q, K)
-    rows = engine.search_df(q, k=K, mode=mode).collect()
+    rows = engine.search_df(q, k=K).collect()
     got = [(r["doc_id"], r["score"]) for r in rows]
     assert [d for d, _ in got] == [d for d, _ in expected], (
-        f"rank mismatch for {q!r} ({mode}): {got} vs {expected}")
+        f"rank mismatch for {q!r}: {got} vs {expected}")
     for (gd, gs), (_, es) in zip(got, expected):
         assert gs == pytest.approx(es, rel=1e-9, abs=1e-9), (
             f"score mismatch {q!r} doc {gd}")
@@ -61,12 +61,22 @@ def _assert_parity(engine, oracle, q, mode="auto"):
 
 @pytest.mark.parametrize("q", FIELD_QUERIES)
 def test_field_scoped_parity_wand(field_engine, field_oracle, q):
-    _assert_parity(field_engine, field_oracle, q, mode="auto")
+    _assert_parity(field_engine, field_oracle, q)
 
 
 @pytest.mark.parametrize("q", FIELD_QUERIES)
 def test_field_scoped_parity_relational(field_engine, field_oracle, q):
-    _assert_parity(field_engine, field_oracle, q, mode="relational")
+    """The full match set (match_df) ranked by (-score, doc_id) has the
+    oracle's top-k, scores and total."""
+    expected, etotal = field_oracle.search(q, K)
+    got = sorted(((r["doc_id"], r["score"])
+                  for r in field_engine.match_df(q).collect()),
+                 key=lambda h: (-h[1], h[0]))
+    assert len(got) == etotal, q
+    assert [d for d, _ in got[:K]] == [d for d, _ in expected], (
+        f"{q!r}: {got[:K]} vs {expected}")
+    for (gd, gs), (_, es) in zip(got, expected):
+        assert gs == pytest.approx(es, abs=1e-9), f"score {q!r} doc {gd}"
 
 
 def test_field_stats_in_meta(field_index, field_oracle):
@@ -100,8 +110,7 @@ def test_same_term_distinct_namespaces(spark, field_index, field_oracle):
 def test_field_phrase_fallback(field_engine, field_oracle):
     """Phrase on a non-default field, verified by re-tokenizing that
     field's text (no positions stored in this index)."""
-    _assert_parity(field_engine, field_oracle, 'path:"src user"',
-                   mode="relational")
+    _assert_parity(field_engine, field_oracle, 'path:"src user"')
 
 
 def test_field_phrase_positional(spark, repos_parquet, repos_pdf,

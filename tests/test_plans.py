@@ -81,13 +81,15 @@ def test_wand_fetch_drops_positions(spark, engine):
     assert "pos" not in read_schema.replace("positions", "")
 
 
-def test_exploded_postings_prunes_dls_free_columns(spark, engine):
-    """The relational decode reads exactly the posting columns it
-    needs (no max_tf/min_dl skip metadata)."""
-    df = engine._exploded_postings([("content", "user")])
-    plan = _plan(df)
-    read_schema = plan.split("ReadSchema")[1][:500]
-    assert "max_tf" not in read_schema
+def test_full_match_kernel_stage_drops_positions(spark, engine):
+    """The full-match kernel stage of a filtered term query (match_df:
+    the kernels with k=None, then a docs semi-join) ships the posting
+    payloads but no position column."""
+    plan = _plan(engine.match_df("lang:go user"))
+    schemas = [s.split("\n")[0] for s in plan.split("ReadSchema")[1:]]
+    postings = [s for s in schemas if "first_doc" in s]
+    assert postings and all("docs" in s for s in postings)
+    assert not any("pos:" in s for s in postings), postings
 
 
 def test_probe_containment_broadcasts_probe_side(spark):

@@ -45,35 +45,37 @@ PHRASE_QUERIES = [
 
 # shapes search() never runs on the driver: range / match-all filters
 # and pure negation (no positive clause)
-RELATIONAL_ONLY = {"lang:python", "doc_len:>2000", "doc_len:>2000 user",
-                   "-user"}
+SPARK_ONLY = {"lang:python", "doc_len:>2000", "doc_len:>2000 user", "-user"}
 
 
-def _assert_parity(engine, oracle, q, k=K, mode="auto"):
+def _assert_parity(engine, oracle, q, k=K):
     expected, etotal = oracle.search(q, k)
-    rows = engine.search_df(q, k=k, mode=mode).collect()
+    rows = engine.search_df(q, k=k).collect()
     got = [(r["doc_id"], r["score"]) for r in rows]
     assert [d for d, _ in got] == [d for d, _ in expected], (
-        f"rank mismatch for {q!r} ({mode}): {got} vs {expected}")
+        f"rank mismatch for {q!r}: {got} vs {expected}")
     for (gd, gs), (ed, es) in zip(got, expected):
         assert gs == pytest.approx(es, abs=1e-9), f"score mismatch {q!r} doc {gd}"
 
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_rank_identical_wand(engine, oracle, q):
-    _assert_parity(engine, oracle, q, mode="auto")
+    _assert_parity(engine, oracle, q)
 
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_rank_identical_relational(engine, oracle, q):
-    expected, _ = oracle.search(q, K)
-    rows = engine.search_df(q, k=K, mode="relational").collect()
-    got = [(r["doc_id"], r["score"]) for r in rows]
-    # relational path sums in nondeterministic shuffle order: compare
-    # ranks with a tolerance-aware sort
-    assert [d for d, _ in got] == [d for d, _ in expected], f"{q!r}: {got} vs {expected}"
-    for (gd, gs), (ed, es) in zip(got, expected):
-        assert gs == pytest.approx(es, rel=1e-9, abs=1e-9)
+    """The full match set (match_df) ranked by (-score, doc_id) has the
+    oracle's top-k, scores and total."""
+    expected, etotal = oracle.search(q, K)
+    rows = engine.match_df(q).collect()
+    got = sorted(((r["doc_id"], r["score"]) for r in rows),
+                 key=lambda h: (-h[1], h[0]))
+    assert len(got) == etotal, q
+    assert [d for d, _ in got[:K]] == [d for d, _ in expected], (
+        f"{q!r}: {got[:K]} vs {expected}")
+    for (gd, gs), (_, es) in zip(got, expected):
+        assert gs == pytest.approx(es, abs=1e-9), f"score {q!r} doc {gd}"
 
 
 @pytest.mark.parametrize("q", PHRASE_QUERIES)
@@ -88,8 +90,8 @@ def test_phrases(engine, oracle, q):
                                "error OR exception", "parser^2 config"])
 def test_wand_pruning_exact(engine, oracle, q):
     """Block-max pruned result must equal the unpruned kernel result."""
-    pruned = engine.search_df(q, k=K, mode="wand", prune=True).collect()
-    full = engine.search_df(q, k=K, mode="wand", prune=False).collect()
+    pruned = engine.search_df(q, k=K, prune=True).collect()
+    full = engine.search_df(q, k=K, prune=False).collect()
     assert [(r["doc_id"], r["score"]) for r in pruned] == \
            [(r["doc_id"], r["score"]) for r in full]
 
@@ -168,7 +170,7 @@ def test_wildcard_expansion_cap_errors(spark, tmp_path):
     # over the first cap terms and flags the pattern in the envelope
     truncated = {}
     for budget, path in ((catalog.LOCAL_READ_MAX_BYTES, "local"),
-                         (0, "wand")):
+                         (0, "spark")):
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(catalog, "LOCAL_READ_MAX_BYTES", budget)
             eng = SearchEngine(spark, idx)
@@ -187,7 +189,7 @@ def test_wildcard_expansion_cap_errors(spark, tmp_path):
             clean = trunc.search("zzq0000*")
             assert not clean.truncated_expansions
             assert "truncatedExpansions" not in clean.to_dict()
-    assert truncated["local"] == truncated["wand"]
+    assert truncated["local"] == truncated["spark"]
 
 
 def _hits(resp):
@@ -208,24 +210,24 @@ def _assert_oracle(resp, oracle, q, k=K):
 def test_search_local_path_matches_oracle(engine, oracle, q):
     resp = engine.search(SearchRequest(q=q, limit=K))
     _assert_oracle(resp, oracle, q)
-    assert resp.path == ("relational" if q in RELATIONAL_ONLY else "local")
+    assert resp.path == ("spark" if q in SPARK_ONLY else "local")
 
 
 @pytest.mark.parametrize("q", QUERIES + PHRASE_QUERIES)
 def test_search_spark_path_when_reads_exceed_budget(
         spark, built_index, engine, oracle, monkeypatch, q):
-    """With a zero read budget every read goes through Spark (wand for
-    term/bool shapes, relational for phrases and filters): same hits,
-    scores and totals as the driver path, and the same assembled
-    records (the Spark ``Row.asDict()`` values under the docs schema)."""
+    """With a zero read budget every read goes through Spark (the kernel
+    stage's per-range top-k for term/bool shapes, its full match set for
+    phrases and filters): the same hits, scores and totals as the driver
+    path, bit for bit, and the same assembled records (the Spark
+    ``Row.asDict()`` values under the docs schema)."""
     from bright_spark.query.engine import SearchEngine
     local = engine.search(SearchRequest(q=q, limit=K))
     monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", 0)
     resp = SearchEngine(spark, built_index.index_dir).search(
         SearchRequest(q=q, limit=K))
-    assert resp.path != "local"
-    if resp.path == "wand":
-        assert _hits(resp) == _hits(local)
+    assert resp.path == "spark"
+    assert _hits(resp) == _hits(local)
     _assert_oracle(resp, oracle, q)
     assert resp.total_hits == local.total_hits
     strip = [{c: v for c, v in h.items() if c != "_score"} for h in resp.hits]
@@ -246,7 +248,7 @@ def test_search_path_follows_footer_bytes(spark, built_index, monkeypatch):
     monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes + 1)
     assert eng.search("parse config").path == "local"
     monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes)
-    assert eng.search("parse config").path == "wand"
+    assert eng.search("parse config").path == "spark"
 
 
 @pytest.mark.parametrize("q", ["user", "read AND write", "confg~1",
@@ -327,5 +329,20 @@ def test_filtered_search_without_recorded_docs_schema(
     with open(path, "w") as f:
         json.dump(manifest, f)
     resp = SearchEngine(spark, idx).search(SearchRequest(q=q, limit=K))
-    assert resp.path == "relational"
+    assert resp.path == "spark"
     _assert_oracle(resp, oracle, q)
+
+
+def test_df_cache_stays_bounded(spark, built_index, engine, monkeypatch):
+    """The engine's term-dictionary cache is cleared once it passes
+    ``_DF_CACHE_MAX``: many distinct query strings keep it bounded (by
+    the constant plus one query's terms) and the hits do not change."""
+    from bright_spark.query import engine as engine_mod
+    qs = ["user", "parse config", "user session token", "error OR exception",
+          "config NOT test", "zzz_one zzz_two zzz_three", "parser AND config"]
+    expected = [_hits(engine.search(SearchRequest(q=q, limit=K))) for q in qs]
+    monkeypatch.setattr(engine_mod, "_DF_CACHE_MAX", 4)
+    eng = engine_mod.SearchEngine(spark, built_index.index_dir)
+    for q, want in zip(qs * 2, expected * 2):
+        assert _hits(eng.search(SearchRequest(q=q, limit=K))) == want, q
+        assert len(eng._df_cache) <= 4 + 3, q

@@ -128,7 +128,7 @@ def test_jsonl_index_build_end_to_end(spark, tmp_path):
     hits = eng.search("laptop")
     assert hits.total_hits > 0
     assert all("laptop" in h["description"] for h in hits.hits)
-    priced = eng.search_df("price:>100 laptop", mode="relational")
+    priced = eng.search_df("price:>100 laptop")
     ids = [r["doc_id"] for r in priced.collect()]
     docs = {r["doc_id"]: r for r in eng.catalog.docs(spark).collect()}
     assert ids and all(docs[i]["price"] > 100 for i in ids)
