@@ -63,6 +63,20 @@ alone (:class:`FooterRead`). A read whose selected row groups hold
 fewer than :data:`LOCAL_READ_MAX_BYTES` (footer-reported uncompressed
 bytes of the columns read) runs with pyarrow on the driver and starts
 no Spark job; a larger one goes through the Spark readers below.
+
+Row-group cache: a pinned catalog (:meth:`IndexCatalog.pin`, what every
+:class:`SearchEngine` and its planner share) keeps the row groups its
+driver-side reads load in a :class:`RowGroupCache`, so a repeated
+search reads no parquet. Reusing them is sound because a pinned reader
+only resolves committed version dirs, and their files are never
+rewritten; an expired snapshot still raises
+:class:`SnapshotExpiredError`, since every read resolves its dirs
+through :meth:`IndexCatalog.manifest` first. The cache holds at most
+:data:`LOCAL_READ_MAX_BYTES` of arrow bytes (least recently used row
+groups go first) and takes a lock, since REST searches share one
+engine without an index lock. Unpinned catalogs (mutations, builds,
+compaction, store helpers) cache no row group, so compaction's memory
+stays bounded by one bucket.
 """
 
 from __future__ import annotations
@@ -76,6 +90,7 @@ import shutil
 import threading
 import time
 import zlib
+from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import asdict
 from typing import Any
@@ -153,7 +168,8 @@ _ARROW_OF_DDL = {
 # read) runs with pyarrow on the driver; anything larger runs as Spark
 # jobs. The one size gate of the read path (postings, term dictionary,
 # expansions, docs) and of compaction (every target postings dir plus
-# every chained term_stats dir).
+# every chained term_stats dir), and the arrow bytes a pinned catalog's
+# RowGroupCache keeps at most.
 #
 # Set below the smallest measured crossover of search() wall time, driver
 # path vs Spark path (4-vCPU VM, local[4], 50,000-file make_repos_spark
@@ -228,29 +244,84 @@ def _conform(tab: pa.Table, schema: pa.Schema) -> pa.Table:
         schema=schema)
 
 
+class RowGroupCache:
+    """Byte-bounded LRU of conformed row-group tables, keyed by (file
+    path, row-group index, column names). At most
+    :data:`LOCAL_READ_MAX_BYTES` of arrow ``nbytes`` stay resident: a
+    larger table is not stored, and each store evicts the least
+    recently used tables until the total fits. Thread-safe."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._tabs: OrderedDict[tuple, tuple[pa.Table, int]] = OrderedDict()
+        self.nbytes = 0
+
+    def get(self, key: tuple) -> pa.Table | None:
+        with self._lock:
+            got = self._tabs.get(key)
+            if got is None:
+                return None
+            self._tabs.move_to_end(key)
+            return got[0]
+
+    def put(self, key: tuple, tab: pa.Table) -> None:
+        cap, size = LOCAL_READ_MAX_BYTES, tab.nbytes
+        with self._lock:
+            if size > cap or key in self._tabs:
+                return
+            self._tabs[key] = (tab, size)
+            self.nbytes += size
+            while self.nbytes > cap:
+                self.nbytes -= self._tabs.popitem(last=False)[1][1]
+
+
 class FooterRead:
     """Row groups of one table picked from parquet footers alone, and
     the uncompressed bytes they hold over the columns to read — the
     size :func:`fits_local` gates. :meth:`read` loads them with
-    pyarrow, cast to ``schema`` and filtered by ``where``."""
+    pyarrow (serving those in ``cache`` from memory), cast to
+    ``schema`` and filtered by ``where``."""
 
     def __init__(self, parts: list[tuple[str, Any, list[int]]], nbytes: int,
                  schema: pa.Schema,
-                 where: Callable[[pa.Table], Any] | None = None):
+                 where: Callable[[pa.Table], Any] | None = None,
+                 cache: RowGroupCache | None = None):
         self.parts = parts
         self.nbytes = nbytes
         self.schema = schema
         self.where = where
+        self.cache = cache
 
     @property
     def fits(self) -> bool:
         return fits_local(self.nbytes)
 
     def read(self) -> pa.Table:
-        cols = self.schema.names
-        tabs = [_conform(pq.ParquetFile(path, metadata=md)
-                         .read_row_groups(rgs, columns=cols), self.schema)
-                for path, md, rgs in self.parts]
+        cols = tuple(self.schema.names)
+        cache = self.cache
+        tabs = []
+        for path, md, rgs in self.parts:
+            got = {}
+            if cache is not None:
+                for i in rgs:
+                    tab = cache.get((path, i, cols))
+                    if tab is not None:
+                        got[i] = tab
+            missing = [i for i in rgs if i not in got]
+            if missing:
+                tab = _conform(pq.ParquetFile(path, metadata=md)
+                               .read_row_groups(missing, columns=list(cols)),
+                               self.schema)
+                if cache is None:
+                    tabs.append(tab)
+                    continue
+                off = 0
+                for i in missing:
+                    n = md.row_group(i).num_rows
+                    got[i] = tab.slice(off, n)
+                    cache.put((path, i, cols), got[i])
+                    off += n
+            tabs.extend(got[i] for i in rgs)
         tab = pa.concat_tables(tabs) if tabs else self.schema.empty_table()
         if self.where is not None and tab.num_rows:
             tab = tab.filter(self.where(tab))
@@ -565,10 +636,14 @@ class IndexCatalog:
         # search on this host)
         self._docs_frames: dict[tuple, "DataFrame"] = {}
         # committed version dirs are immutable: their file lists and
-        # parquet footers are cached for the driver-side reads
+        # parquet footers are cached for the driver-side reads, and a
+        # pinned catalog also keeps the row groups those reads load
+        # (bounded LRU, see the module docstring); an unpinned one
+        # resolves a new snapshot per call and keeps none
         self._dir_files: dict[str, list[str]] = {}
         self._footers: dict[str, Any] = {}
         self._rg_stats: dict[tuple[str, str], list] = {}
+        self._rg_cache: RowGroupCache | None = None
 
     # ------------------------------------------------------- snapshots
 
@@ -627,8 +702,10 @@ class IndexCatalog:
 
     def pin(self, snapshot_id: int | None = None) -> int:
         """Freeze reads on a snapshot (default: the already-pinned one
-        if any, else the live one). Pinning an expired/unknown id
-        raises :class:`SnapshotExpiredError` up front."""
+        if any, else the live one) and give this catalog its row-group
+        cache (a new one when the snapshot changes). Pinning an
+        expired/unknown id raises :class:`SnapshotExpiredError` up
+        front."""
         if snapshot_id is None:
             snapshot_id = (self._pinned if self._pinned is not None
                            else self.current_snapshot_id())
@@ -639,6 +716,8 @@ class IndexCatalog:
             raise SnapshotExpiredError(
                 f"cannot pin snapshot {snapshot_id} of {self.index_dir}: "
                 f"not retained (expired by vacuum, or never committed)")
+        if self._rg_cache is None or snapshot_id != self._pinned:
+            self._rg_cache = RowGroupCache()
         self._pinned = snapshot_id
         return self._pinned
 
@@ -1042,7 +1121,7 @@ class IndexCatalog:
                     nbytes += sum(sizes.get(c, 0) for c in schema.names)
             if rgs:
                 parts.append((path, self._footers[path], rgs))
-        return FooterRead(parts, nbytes, schema, where)
+        return FooterRead(parts, nbytes, schema, where, self._rg_cache)
 
     def postings_read(self, pairs: list[tuple[str, str]],
                       columns: list[str]) -> FooterRead:

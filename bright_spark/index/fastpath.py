@@ -98,13 +98,16 @@ def _signed_stats_pdf(partials: pd.DataFrame | None,
                       sign: int) -> pd.DataFrame | None:
     if partials is None or not len(partials):
         return None
+    # cf: one segmented sum over the concatenated per-row tfs (an empty
+    # row sums to 0)
+    tfs = partials["tfs"].tolist()
+    ends = np.cumsum([len(a) for a in tfs], dtype=np.int64)
+    cum = np.concatenate(([0], np.cumsum(np.concatenate(tfs), dtype=np.int64)))
     return pd.DataFrame({
         "field": partials["field"].to_numpy(),
         "term": partials["term"].to_numpy(),
         "df": sign * partials["doc_ids"].str.len().to_numpy(np.int64),
-        "cf": sign * np.fromiter(
-            (int(np.sum(a)) for a in partials["tfs"]),
-            dtype=np.int64, count=len(partials)),
+        "cf": sign * (cum[ends] - cum[np.concatenate(([0], ends[:-1]))]),
     })
 
 

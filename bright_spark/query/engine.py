@@ -17,7 +17,10 @@ Spark lifecycle here:
     top-k. ``=`` filters intersect the kernels' full match sets with a
     doc-id allowlist read from the docs columns. Term dictionary,
     expansions, tombstones and hit assembly are driver-side reads as
-    well: zero Spark jobs.
+    well: zero Spark jobs. The engine's pinned catalog keeps the row
+    groups these reads load (``catalog.RowGroupCache``, bounded by
+    ``catalog.LOCAL_READ_MAX_BYTES``), so a repeated search reads no
+    parquet; a new engine starts cold.
   * ``spark``  (everything else): partition-pruned postings scan ->
     groupBy(range_id) applyInPandas of the same kernels. Plain
     term/bool shapes ask each range for its exact top-k + match count
@@ -25,7 +28,8 @@ Spark lifecycle here:
     merge. Every other shape takes the full match set (``k=None``)
     followed by plain joins (:meth:`SearchEngine._spark_matches`):
     non-positional phrases run their tokens as must groups and re-
-    tokenize the candidates' stored text (:meth:`_verify_phrases`);
+    tokenize the candidates' stored text, carrying their scores through
+    (:meth:`_verify_phrases`);
     NOT-phrases anti-join a sub-query's match set; match-all is every
     docs ``doc_id`` at score 1.0 less the docs holding a NOT-term;
     attribute predicates semi-join the filtered docs table; custom
@@ -196,16 +200,21 @@ class SearchEngine:
         hot term-dictionary an engine keeps resident; absent terms cache
         as 0 so repeated misses don't re-scan). The engine lives as long
         as its snapshot, so the cache is cleared once it passes
-        ``_DF_CACHE_MAX`` entries. The fetch itself is the
-        bucket-pruned term_stats lookup (:meth:`IndexCatalog.term_dfs`)."""
-        if len(self._df_cache) > _DF_CACHE_MAX:
-            self._df_cache.clear()
-        missing = [p for p in pairs if p not in self._df_cache]
+        ``_DF_CACHE_MAX`` entries; concurrent searches share it. The
+        fetch itself is the bucket-pruned term_stats lookup
+        (:meth:`IndexCatalog.term_dfs`)."""
+        cache = self._df_cache
+        if len(cache) > _DF_CACHE_MAX:
+            cache.clear()
+        # the answer is built from what this call found or fetched: a
+        # concurrent search may clear the shared cache at any point
+        found = {p: cache.get(p) for p in pairs}
+        missing = [p for p, df in found.items() if df is None]
         if missing:
             got = self.catalog.term_dfs(self.spark, missing)
             for p in missing:
-                self._df_cache[p] = got.get(p, 0)
-        return {p: self._df_cache[p] for p in pairs}
+                found[p] = cache[p] = got.get(p, 0)
+        return found
 
     def _term_weights(self, aq: AnalyzedQuery) -> tuple[dict[str, float],
                                                         dict[str, float]]:
@@ -440,12 +449,12 @@ class SearchEngine:
 
     def _verify_phrases(self, cand: DataFrame, phrases: list,
                         docs_df: DataFrame) -> DataFrame:
-        """Q4 adjacency on a non-positional index: keep only ``cand``
-        docs matching ALL ``phrases``. Re-runs the BATCH analyzer over
-        only the AND-candidate docs' own field text and chains packed
-        ``doc<<32 | pos`` keys — the same flat-array adjacency algebra
-        as the positional kernel, with zero per-row Python (the
-        tokenizer's regex scan is the only per-doc work)."""
+        """Q4 adjacency on a non-positional index: the (doc_id, score)
+        rows of ``cand`` whose docs match ALL ``phrases``. Re-runs the
+        BATCH analyzer over only the AND-candidate docs' own field text
+        and chains packed ``doc<<32 | pos`` keys — the same flat-array
+        adjacency algebra as the positional kernel, with zero per-row
+        Python (the tokenizer's regex scan is the only per-doc work)."""
         lang_col = self.extra.get("lang_col")
         mode = self.meta.get("tokenizer", "code")
         stops = bool(self.meta.get("filter_stopwords"))
@@ -453,8 +462,10 @@ class SearchEngine:
         by_field = [(f, [list(ph.tokens) for ph in phrases if ph.field == f])
                     for f in fields]
         cols = ["doc_id"] + fields + ([lang_col] if lang_col else [])
+        # the candidates' scores ride through the verify, so the kernel
+        # stage behind ``cand`` is consumed (and run) once
         joined = docs_df.select(*cols).join(
-            F.broadcast(cand.select("doc_id")), "doc_id", "left_semi")
+            F.broadcast(cand.select("doc_id", "score")), "doc_id")
 
         def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from bright_spark.analysis.tokenizer import count_terms_batch
@@ -519,10 +530,10 @@ class SearchEngine:
                         hit[docs_ph] = True
                         ok &= hit
                 yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[ok]})
+                    "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[ok],
+                    "score": pdf["score"].to_numpy(dtype=np.float64)[ok]})
 
-        ok = joined.mapInPandas(verify, "doc_id BIGINT")
-        return cand.join(ok, "doc_id", "left_semi")
+        return joined.mapInPandas(verify, "doc_id BIGINT, score DOUBLE")
 
     # ------------------------------------------------------ public API
 
@@ -559,6 +570,9 @@ class SearchEngine:
         """Full request semantics R1-R6 (handlers/search.go:20-177)."""
         req = SearchRequest(q=request) if isinstance(request, str) else request
         req.validate()
+        # an expired snapshot raises here, before the term-dictionary or
+        # row-group caches could answer for it
+        self.catalog.manifest()
         k_eff = req.effective_offset + req.limit
 
         aq = self.planner.analyze(parse_query(req.q))

@@ -45,6 +45,17 @@ def main() -> None:
                 attr_cols=("source", "n_chars"), text_cols=("source",),
                 n_build_partitions=8)
     eng = SearchEngine(spark, idx)
+    # the same corpus without positions: phrases then take the kernel
+    # stage plus the re-tokenizing verify (bench.py's q_phrase shape)
+    idx_np = "/tmp/plans_idx_nopos"
+    shutil.rmtree(idx_np, ignore_errors=True)
+    build_index(spark, docs, idx_np,
+                IndexConfig(id="plans_np", tokenizer="simple",
+                            n_term_buckets=8, store_positions=False),
+                content_col="text", id_col="doc_id", lang_col="lang",
+                attr_cols=("source", "n_chars"), text_cols=("source",),
+                n_build_partitions=8)
+    eng_np = SearchEngine(spark, idx_np)
     ann_dir = "/tmp/plans_ann"
     shutil.rmtree(ann_dir, ignore_errors=True)
     build_ann_index(emb, ann_dir, dim=64, n_planes=6)
@@ -79,6 +90,12 @@ def main() -> None:
         "Positional phrase (Q4): vectorized per-range adjacency kernel",
         "eng.search_df('\"the fast\"', k=10)",
         plan(eng.search_df('"the fast"', k=10), "simple")))
+
+    sections.append((
+        "Non-positional phrase (Q4): one kernel stage -> broadcast into the "
+        "re-tokenizing verify, scores carried through",
+        "eng_np.search_df('\"the fast\"', k=10)  # store_positions=False",
+        plan(eng_np.search_df('"the fast"', k=10), "simple")))
 
     sections.append((
         "Indexed LSH ANN: probe sigs prune partition directories",

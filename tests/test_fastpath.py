@@ -190,3 +190,24 @@ def test_fast_upsert_then_compact_and_vacuum(spark, tmp_path_factory):
     got = {r["doc_id"] for r in eng.search_df("delta2", k=5).collect()}
     assert got == {500002}
     assert eng.search_df('"parse config"', k=5).count() > 0
+
+
+def test_signed_stats_cf_is_per_row_tf_sum():
+    """The segmented cf sum equals a per-row sum of ``tfs``, an empty
+    row included, with the sign applied to df and cf."""
+    import pandas as pd
+
+    from bright_spark.index.fastpath import _signed_stats_pdf
+    tfs = [np.array([3, 1], np.int32), np.array([], np.int32),
+           np.array([2**31 - 1, 2**31 - 1], np.int32), np.array([7], np.int32)]
+    partials = pd.DataFrame({
+        "field": ["content"] * 4, "term": ["a", "b", "c", "d"],
+        "doc_ids": [np.arange(len(t), dtype=np.int64) for t in tfs],
+        "tfs": tfs})
+    for sign in (1, -1):
+        got = _signed_stats_pdf(partials, sign)
+        assert got["cf"].tolist() == [sign * int(np.sum(t, dtype=np.int64))
+                                      for t in tfs]
+        assert got["df"].tolist() == [sign * len(t) for t in tfs]
+        assert got["term"].tolist() == ["a", "b", "c", "d"]
+    assert _signed_stats_pdf(None, 1) is None

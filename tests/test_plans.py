@@ -92,6 +92,27 @@ def test_full_match_kernel_stage_drops_positions(spark, engine):
     assert not any("pos:" in s for s in postings), postings
 
 
+def test_nonpositional_phrase_runs_kernel_stage_once(spark, repos_parquet,
+                                                    tmp_path_factory):
+    """A phrase on a non-positional index verifies adjacency on the
+    kernel stage's candidates and carries their scores through, so the
+    executed plan holds ONE kernel stage (a final semi-join back onto
+    the candidates used to run it twice)."""
+    from bright_spark.index.builder import build_index
+    from bright_spark.models import IndexConfig
+    idx = str(tmp_path_factory.mktemp("nopos_plan") / "idx")
+    build_index(spark, spark.read.parquet(repos_parquet), idx,
+                IndexConfig(id="nopos", store_positions=False),
+                n_build_partitions=4)
+    df = SearchEngine(spark, idx).match_df('"user session"')
+    assert df.collect()
+    # the adaptive plan after execution: its final section only
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    final = final.split("Initial Plan")[0]
+    assert final.count("FlatMapGroupsInPandas") == 1, final
+
+
 def test_probe_containment_broadcasts_probe_side(spark):
     """Fuzzy decontamination must broadcast the (tiny) probe grams and
     totals and never shuffle corpus text: a regression to a sort-merge

@@ -318,6 +318,12 @@ def test_vacuum_pinned_reader_contract(spark, tmp_path_factory):
     pinned_old = SearchEngine(spark, idx, snapshot_id=1)   # will expire
     pinned_live = SearchEngine(spark, idx, snapshot_id=2)  # retained
     assert pinned_old.search_df("common", k=5).collect()
+    # a driver-side search leaves the old snapshot's row groups (and its
+    # term dictionary) resident in the engine
+    resp = pinned_old.search("common")
+    assert resp.path == "local" and resp.hits
+    assert pinned_old.catalog._rg_cache.nbytes > 0
+    assert pinned_old.search("zzz_absent").total_hits == 0
 
     IndexCatalog(idx).vacuum(keep_last=2)  # retains snapshots 2, 3
 
@@ -329,6 +335,12 @@ def test_vacuum_pinned_reader_contract(spark, tmp_path_factory):
         pinned_old.catalog.manifest()
     with pytest.raises(SnapshotExpiredError):
         pinned_old.catalog.postings_dirs()
+    # memory never answers for an expired snapshot: the same search,
+    # and one whose only term is a cached dictionary miss, both raise
+    with pytest.raises(SnapshotExpiredError):
+        pinned_old.search("common")
+    with pytest.raises(SnapshotExpiredError):
+        pinned_old.search("zzz_absent")
     # pin() refuses an expired id up front, with the named error
     with pytest.raises(SnapshotExpiredError):
         IndexCatalog(idx).pin(1)
