@@ -247,8 +247,8 @@ def _q_posting_list(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               _decode_to_entries)
     eng = _engine(spark, sf_dir)
     return (eng.catalog.postings_for_terms(spark, [("text", "spark")])
-            .mapInPandas(_decode_to_entries(tomb_bc=eng._tomb_bc),
-                         ENTRIES_SCHEMA)
+            .mapInArrow(_decode_to_entries(tomb_bc=eng._tomb_bc),
+                        ENTRIES_SCHEMA)
             .select("doc_id", "tf", "dl"))
 
 

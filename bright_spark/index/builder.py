@@ -38,6 +38,16 @@ the build on Spark; the choice is made before anything is written and
 recorded as the build commit's ``metrics.mode`` (``driver`` /
 ``spark``).
 
+Kernels: the tokenize+combine and merge kernels take and return arrow
+record batches. Spark runs them through ``mapInArrow``; the driver
+execution and the mutation fast path call the same functions on the
+batches of pyarrow tables. Partial posting rows are
+:data:`PARTIALS_ARROW` batches whose list columns wrap the kernel's
+sorted flat arrays at the run offsets, and the merge kernel emits
+posting rows whose block columns come straight out of
+:func:`codec.encode_blocks_bulk` — no per-block Python object exists
+on either side.
+
 Scale/skew notes (B5): grouping by ``(term, range_id)`` — not bare
 ``term`` — structurally bounds every merge group to <= 2**range_bits
 entries, so a term appearing in 60% of 10^12 docs still merges as
@@ -69,6 +79,8 @@ from bright_spark.analysis.tokenizer import (count_terms_batch,
 from bright_spark.index import codec
 from bright_spark.index.catalog import (
     _ARROW_OF_DDL,
+    POSTINGS_ARROW,
+    POSTINGS_KERNEL_ARROW,
     POSTINGS_KERNEL_SCHEMA,
     POSTINGS_SCHEMA,
     TERM_STATS_ARROW,
@@ -79,11 +91,7 @@ from bright_spark.index.catalog import (
     fits_local_build,
     write_part,
 )
-from bright_spark.index.fastpath import (
-    _partials_pdf,
-    _postings_table,
-    _sha256_series,
-)
+from bright_spark.index.fastpath import _sha256_series
 from bright_spark.index.hashing import partition_id
 from bright_spark.models import IndexConfig
 
@@ -103,6 +111,15 @@ _DDL_OF_ARROW = {t: n for n, t in _ARROW_OF_DDL.items()}
 PARTIALS_SCHEMA = ("field STRING, term STRING, range_id BIGINT, "
                    "doc_ids ARRAY<BIGINT>, tfs ARRAY<INT>, "
                    "dls ARRAY<INT>, pos ARRAY<INT>")
+PARTIALS_ARROW = pa.schema([
+    ("field", pa.string()), ("term", pa.string()), ("range_id", pa.int64()),
+    ("doc_ids", pa.list_(pa.int64())), ("tfs", pa.list_(pa.int32())),
+    ("dls", pa.list_(pa.int32())), ("pos", pa.list_(pa.int32())),
+])
+
+# entries plus positions per merge-kernel output batch: at most 10
+# varint bytes a value keeps every binary column's buffer under 2 GiB
+_MERGE_BATCH_VALUES = 1 << 26
 
 
 # ------------------------------------------------------------ kernels
@@ -146,85 +163,63 @@ def _make_tokenize_fn(content_col: str, lang_col: str | None, mode: str,
     return fn
 
 
-def _emit_partials_flat(doc_ids_flat: np.ndarray, codes: np.ndarray,
-                        uniq_terms: np.ndarray, tfs: np.ndarray,
-                        dls: np.ndarray, range_bits: int,
+def _lists(offsets: np.ndarray, values, typ) -> pa.ListArray:
+    """``values`` as a ``list<typ>`` array, list i holding
+    ``values[offsets[i]:offsets[i + 1]]``."""
+    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)),
+                                    pa.array(values, typ))
+
+
+def _emit_partials_flat(field: str, doc_ids_flat: np.ndarray,
+                        codes: np.ndarray, uniq_terms: np.ndarray,
+                        tfs: np.ndarray, dls: np.ndarray, range_bits: int,
                         pos_flat: np.ndarray | None = None
-                        ) -> pd.DataFrame | None:
-    """FLAT (doc, term) pair arrays -> combined partial posting rows:
-    one lexsort + boundary slice, no per-doc or per-entry Python. The
-    build hot path feeds this straight from
-    :func:`tokenizer.count_terms_flat` (per-batch pair arrays, batch
-    dictionaries unified by the caller) — per-doc token arrays never
-    exist. ``pos_flat``: per-pair position segments concatenated in
-    pair order (segment i holds ``tfs[i]`` values), or None."""
+                        ) -> pa.RecordBatch | None:
+    """FLAT (doc, term) pair arrays of ``field`` -> combined partial
+    posting rows (:data:`PARTIALS_ARROW`): one lexsort + boundary scan,
+    no per-doc or per-entry Python — each list column is the sorted pair
+    array wrapped at the run offsets. The build hot path feeds this
+    straight from :func:`tokenizer.count_terms_flat` (per-batch pair
+    arrays, batch dictionaries unified by the caller) — per-doc token
+    arrays never exist. ``pos_flat``: per-pair position segments
+    concatenated in pair order (segment i holds ``tfs[i]`` values), or
+    None."""
     if codes.size == 0:
         return None
     ranges = doc_ids_flat >> np.int64(range_bits)
     # range_id is monotone in doc_id: (code, doc) order == the full
     # (code, range, doc) order, one lexsort key fewer
     order = np.lexsort((doc_ids_flat, codes))
-    codes_o, ranges_o = codes[order], ranges[order]
-    tfs_o, dls_o = tfs[order], dls[order]
-    doc_ids_o = doc_ids_flat[order]
+    codes_o, ranges_o, tfs_o = codes[order], ranges[order], tfs[order]
     boundary = np.flatnonzero(
         np.diff(codes_o).astype(bool) | np.diff(ranges_o).astype(bool)
     ) + 1
     starts = np.concatenate(([0], boundary))
-    ends = np.concatenate((boundary, [len(codes_o)]))
-    tfs32, dls32 = tfs_o.astype(np.int32), dls_o.astype(np.int32)
-    out = {
-        "term": np.asarray(uniq_terms, dtype=object)[codes_o[starts]],
-        "range_id": ranges_o[starts],
-        "doc_ids": [doc_ids_o[s:e] for s, e in zip(starts, ends)],
-        "tfs": [tfs32[s:e] for s, e in zip(starts, ends)],
-        "dls": [dls32[s:e] for s, e in zip(starts, ends)],
-    }
-    empty = np.empty(0, dtype=np.int32)
+    bounds = np.append(starts, codes_o.size)
     if pos_flat is None:
-        out["pos"] = [empty] * starts.size
+        pos = _lists(np.zeros(bounds.size, np.int64), [], pa.int32())
     else:
         # ragged gather of per-pair position segments into sorted order
         tf_cum = np.concatenate(([0], np.cumsum(tfs)))
-        pair_start = tf_cum[:-1]  # value offset of each pair (input order)
-        L = tfs_o
-        total = int(L.sum())
-        offs = np.concatenate(([0], np.cumsum(L)[:-1]))
-        ar = (np.arange(total, dtype=np.int64) - np.repeat(offs, L)
-              + np.repeat(pair_start[order], L))
-        pos_sorted = pos_flat[ar].astype(np.int32)
-        v = np.concatenate(([0], np.cumsum(L)))
-        out["pos"] = [pos_sorted[v[s]:v[e]] for s, e in zip(starts, ends)]
-    return pd.DataFrame(out)
+        v = np.concatenate(([0], np.cumsum(tfs_o)))
+        ar = (np.arange(int(v[-1]), dtype=np.int64)
+              - np.repeat(v[:-1], tfs_o)
+              + np.repeat(tf_cum[:-1][order], tfs_o))
+        pos = _lists(v[bounds], pos_flat[ar], pa.int32())
+    return pa.RecordBatch.from_arrays([
+        pa.repeat(pa.scalar(field, pa.string()), starts.size),
+        pa.array(uniq_terms, pa.string()).take(codes_o[starts]),
+        pa.array(ranges_o[starts]),
+        _lists(bounds, doc_ids_flat[order], pa.int64()),
+        _lists(bounds, tfs_o, pa.int32()),
+        _lists(bounds, dls[order], pa.int32()),
+        pos,
+    ], schema=PARTIALS_ARROW)
 
 
-def _emit_partials(doc_ids: np.ndarray, term_arrs: list, tf_arrs: list,
-                   range_bits: int,
-                   pos_arrs: list | None = None) -> pd.DataFrame | None:
-    """(per-doc ids + token arrays) -> combined partial posting rows.
-    Compatibility wrapper over :func:`_emit_partials_flat` for callers
-    holding per-doc slices; the build kernel bypasses this and feeds
-    flat pair arrays directly. doc_len is derived as Σ tf per doc."""
-    lens = np.fromiter((len(t) for t in term_arrs), np.int64, len(term_arrs))
-    if lens.sum() == 0:
-        return None
-    tfs = (np.concatenate([np.asarray(t, dtype=np.int64) for t in tf_arrs])
-           if len(tf_arrs) else np.empty(0, dtype=np.int64))
-    ends_per_doc = np.cumsum(lens)
-    starts_per_doc = ends_per_doc - lens
-    tf_cum = np.concatenate(([0], np.cumsum(tfs)))
-    dl_per_doc = tf_cum[ends_per_doc] - tf_cum[starts_per_doc]
-    doc_ids_flat = np.repeat(np.asarray(doc_ids, dtype=np.int64), lens)
-    dls = np.repeat(dl_per_doc, lens)
-    terms = np.concatenate([np.asarray(t, dtype=object) for t in term_arrs])
-    codes, uniq_terms = pd.factorize(terms, sort=False)
-    pos_flat = None
-    if pos_arrs is not None:
-        pos_flat = (np.concatenate(
-            [np.asarray(p, dtype=np.int64) for p in pos_arrs])
-            if len(pos_arrs) else np.empty(0, dtype=np.int64))
-    return _emit_partials_flat(doc_ids_flat, codes, uniq_terms, tfs,
-                               dls, range_bits, pos_flat)
+def _strings(batch: pa.RecordBatch, col: str) -> list:
+    """A string column of ``batch`` as Python values (None for null)."""
+    return batch.column(col).to_numpy(zero_copy_only=False).tolist()
 
 
 def _make_tokenize_partials_fn(field_cols: list[str], lang_col: str | None,
@@ -233,10 +228,11 @@ def _make_tokenize_partials_fn(field_cols: list[str], lang_col: str | None,
                                id_offsets: dict[int, int] | None = None,
                                flush_docs: int = 32768,
                                store_positions: bool = False):
-    """FUSED mapInPandas kernel: source rows -> partial posting rows in
-    one pass (B1). Token arrays are produced AND combined inside the
-    same Python worker — they never cross the Arrow boundary or touch
-    parquet, which removes the build's largest data movement.
+    """FUSED mapInArrow kernel: source record batches -> partial posting
+    rows (:data:`PARTIALS_ARROW` record batches) in one pass (B1). Token
+    arrays are produced AND combined inside the same Python worker —
+    they never cross the Arrow boundary or touch parquet, which removes
+    the build's largest data movement.
 
     Every column in ``field_cols`` is analyzed into its OWN postings
     namespace (Q5 per-field term indexing — Bleve's default mapping
@@ -249,7 +245,7 @@ def _make_tokenize_partials_fn(field_cols: list[str], lang_col: str | None,
     doc_ids as the docs stage (same partitioning + sort => same ids);
     without it, input rows carry ``doc_id``."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         next_id = None
         if id_offsets is not None:
             from pyspark import TaskContext
@@ -260,7 +256,7 @@ def _make_tokenize_partials_fn(field_cols: list[str], lang_col: str | None,
         acc: dict[str, list[tuple]] = {f: [] for f in field_cols}
         n_acc = 0
 
-        def flush() -> Iterator[pd.DataFrame]:
+        def flush() -> Iterator[pa.RecordBatch]:
             for f in field_cols:
                 parts = [p for p in acc[f] if p[1].size]
                 acc[f] = []
@@ -291,31 +287,30 @@ def _make_tokenize_partials_fn(field_cols: list[str], lang_col: str | None,
                     doc_flat, dls = bids[pair_doc], dl_arr[pair_doc]
                     if not store_positions:
                         pos_flat = None
-                out = _emit_partials_flat(doc_flat, codes, uniq, tfs,
+                out = _emit_partials_flat(f, doc_flat, codes, uniq, tfs,
                                           dls, range_bits, pos_flat)
                 if out is not None:
-                    out.insert(0, "field", f)
                     yield out
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            langs = (pdf[lang_col].tolist() if lang_col
-                     else [None] * len(pdf))
+            langs = _strings(batch, lang_col) if lang_col else [None] * n
             if next_id is not None:
-                bids = np.arange(next_id, next_id + len(pdf),
-                                 dtype=np.int64)
-                next_id += len(pdf)
+                bids = np.arange(next_id, next_id + n, dtype=np.int64)
+                next_id += n
             else:
-                bids = pdf["doc_id"].to_numpy(dtype=np.int64)
+                bids = batch.column("doc_id").to_numpy().astype(
+                    np.int64, copy=False)
             for f in field_cols:
                 pair_doc, pair_tid, tdict, pair_tf, dl_arr, pos_flat = \
-                    count_terms_flat(pdf[f].tolist(), mode, langs,
+                    count_terms_flat(_strings(batch, f), mode, langs,
                                      filter_stopwords,
                                      positions=store_positions)
                 acc[f].append((bids, pair_doc, pair_tid, tdict,
                                pair_tf, dl_arr, pos_flat))
-            n_acc += len(pdf)
+            n_acc += n
             if n_acc >= flush_docs:
                 yield from flush()
                 n_acc = 0
@@ -352,90 +347,108 @@ def _make_assign_ids_fn(id_offsets: dict[int, int]):
     return fn
 
 
+def _merge_runs(rows, row: np.ndarray, doc: np.ndarray, tf: np.ndarray,
+                dl: np.ndarray, pos: np.ndarray | None, block_size: int,
+                n_buckets: int, ver: int | None = None
+                ) -> Iterator[pa.RecordBatch]:
+    """Posting entries -> posting rows: entry i (``doc[i]``, ``tf[i]``,
+    ``dl[i]``, and when ``pos`` is given its ``tf[i]`` positions, in
+    entry order) belongs to the ``field``/``term``/``range_id`` of row
+    ``row[i]`` of the arrow table or batch ``rows``. One lexsort orders
+    the entries, every (field, term, range_id) run becomes one row, and
+    :func:`codec.encode_blocks_bulk` encodes all their blocks at once.
+
+    Yields :data:`catalog.POSTINGS_KERNEL_ARROW` record batches, or
+    :data:`catalog.POSTINGS_ARROW` ones stamped with ``ver``. A batch
+    holds at most about ``_MERGE_BATCH_VALUES`` entries plus positions,
+    which keeps each of its varint buffers under 2 GiB."""
+    if not doc.size:
+        return
+
+    def codes(col):
+        # dictionary codes in first-appearance order, one per row
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        enc = pc.dictionary_encode(col)
+        return enc.indices.to_numpy()[row], enc.dictionary
+
+    fcode, fields = codes(rows["field"])
+    tcode, terms = codes(rows["term"])
+    rng = rows["range_id"].to_numpy()[row]
+    # range_id = doc_id >> bits is monotone in doc_id, so sorting
+    # (fcode, tcode, doc) already lands ranges contiguous+ascending
+    # within each (field, term) — the range key would be redundant
+    order = np.lexsort((doc, tcode, fcode))
+    if pos is not None:
+        # per-entry position segments, gathered into sorted order
+        ent_start = np.concatenate(([0], np.cumsum(tf)[:-1]))
+        L = tf[order]
+        offs = np.concatenate(([0], np.cumsum(L)[:-1]))
+        pos = pos[np.arange(int(L.sum()), dtype=np.int64)
+                  - np.repeat(offs, L) + np.repeat(ent_start[order], L)]
+    fcode, tcode, rng = fcode[order], tcode[order], rng[order]
+    doc, tf, dl = doc[order], tf[order], dl[order]
+    boundary = np.flatnonzero(
+        np.diff(tcode).astype(bool) | np.diff(rng).astype(bool)
+        | np.diff(fcode).astype(bool)
+    ) + 1
+    starts = np.concatenate(([0], boundary))
+    ends = np.concatenate((boundary, [doc.size]))
+    cf = np.add.reduceat(tf, starts)
+    # one crc32 per UNIQUE term (each term spans many (field, range)
+    # groups), fanned out by fancy indexing
+    ubucket = np.fromiter(
+        (zlib.crc32(t.encode("utf-8")) % n_buckets
+         for t in terms.to_numpy(zero_copy_only=False)),
+        np.int64, len(terms))
+    # batches of whole runs: run g goes to batch (values before it) //
+    # budget
+    weight = ends - starts + (cf if pos is not None else 0)
+    cut = np.flatnonzero(np.diff(
+        (np.cumsum(weight) - weight) // _MERGE_BATCH_VALUES)) + 1
+    pv = np.concatenate(([0], np.cumsum(tf))) if pos is not None else None
+    schema = POSTINGS_KERNEL_ARROW if ver is None else POSTINGS_ARROW
+    for g0, g1 in zip([0, *cut.tolist()], [*cut.tolist(), starts.size]):
+        s, e = starts[g0:g1], ends[g0:g1]
+        e0, e1 = int(s[0]), int(e[-1])
+        blocks = codec.encode_blocks_bulk(
+            doc[e0:e1], tf[e0:e1], dl[e0:e1], s - e0, block_size,
+            positions=None if pos is None else pos[pv[e0]:pv[e1]])
+        cols = [
+            pa.array(ubucket[tcode[s]].astype(np.int32)),
+            fields.take(fcode[s]), terms.take(tcode[s]), pa.array(rng[s]),
+            pa.array((e - s).astype(np.int32)), pa.array(cf[g0:g1]),
+            *blocks.values()]
+        if ver is not None:
+            cols.append(pa.array(np.full(s.size, ver, np.int64)))
+        yield pa.RecordBatch.from_arrays(cols, schema=schema)
+
+
 def _make_merge_fn(block_size: int, n_buckets: int,
-                   store_positions: bool = False):
-    """mapInPandas kernel that merges ALL partial posting runs in its
-    partition (the preceding ``repartition(n, term, range_id)`` shuffle
-    colocates every run of a group). Partition-level merging instead of
-    per-group ``applyInPandas`` avoids the per-group Arrow/pandas round
-    trip — thousands of tiny (term, range) groups merge as one
-    vectorized lexsort + boundary scan (B2)."""
+                   store_positions: bool = False, ver: int | None = None):
+    """mapInArrow kernel that merges ALL partial posting runs
+    (:data:`PARTIALS_ARROW` record batches) in its partition into
+    posting rows (:func:`_merge_runs`; the preceding ``repartition(n,
+    term, range_id)`` shuffle colocates every run of a group).
+    Partition-level merging instead of per-group ``applyInPandas``
+    avoids a per-group Arrow round trip — thousands of tiny (term,
+    range) groups merge as one vectorized lexsort + boundary scan (B2).
+    Driver callers pass ``ver`` to get the on-disk row shape."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        parts = [b for b in batches if b.num_rows]
+        if not parts:
             return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        lens = pdf["doc_ids"].str.len().to_numpy(dtype=np.int64)
-        codes, uniq_terms = pd.factorize(pdf["term"].to_numpy(), sort=False)
-        fcodes, uniq_fields = pd.factorize(pdf["field"].to_numpy(), sort=False)
-        flat_code = np.repeat(codes, lens)
-        flat_fcode = np.repeat(fcodes, lens)
-        flat_range = np.repeat(pdf["range_id"].to_numpy(dtype=np.int64), lens)
-        flat_doc = np.concatenate(pdf["doc_ids"].to_numpy()).astype(np.int64)
-        flat_tf = np.concatenate(pdf["tfs"].to_numpy()).astype(np.int64)
-        flat_dl = np.concatenate(pdf["dls"].to_numpy()).astype(np.int64)
-        # range_id = doc_id >> bits is monotone in doc_id, so sorting
-        # (fcode, code, doc) already lands ranges contiguous+ascending
-        # within each (field, term) — the range key would be redundant
-        order = np.lexsort((flat_doc, flat_code, flat_fcode))
-        flat_code, flat_range = flat_code[order], flat_range[order]
-        flat_fcode = flat_fcode[order]
-        positions = None
-        if store_positions:
-            # per-entry position segments, gathered into sorted order
-            P = np.concatenate(pdf["pos"].to_numpy()).astype(np.int64)
-            ent_start = np.concatenate(([0], np.cumsum(flat_tf)[:-1]))
-            L = flat_tf[order]
-            total = int(L.sum())
-            offs = np.concatenate(([0], np.cumsum(L)[:-1]))
-            ar = (np.arange(total, dtype=np.int64) - np.repeat(offs, L)
-                  + np.repeat(ent_start[order], L))
-            positions = P[ar]
-        flat_doc, flat_tf, flat_dl = flat_doc[order], flat_tf[order], flat_dl[order]
-        boundary = np.flatnonzero(
-            np.diff(flat_code).astype(bool) | np.diff(flat_range).astype(bool)
-            | np.diff(flat_fcode).astype(bool)
-        ) + 1
-        starts = np.concatenate(([0], boundary))
-        ends = np.concatenate((boundary, [flat_code.size]))
-        blocks, block_group = codec.encode_blocks_bulk(
-            flat_doc, flat_tf, flat_dl, starts, block_size,
-            positions=positions)
-        n_groups = starts.size
-        # block index range per group (block_group ascending)
-        gb = np.searchsorted(block_group, np.arange(n_groups + 1))
-        gcodes = flat_code[starts]
-        # one crc32 per UNIQUE term (each term spans many (field,
-        # range) groups), fanned out by fancy indexing — no per-group
-        # Python loop over group-count-sized lists
-        ubucket = np.fromiter(
-            (zlib.crc32(t.encode("utf-8")) % n_buckets for t in uniq_terms),
-            np.int64, len(uniq_terms))
-        pairs = list(zip(gb[:-1].tolist(), gb[1:].tolist()))
-
-        def seg(col: list) -> list:
-            return [col[s:e] for s, e in pairs]
-
-        cf = np.add.reduceat(flat_tf, starts)
-        yield pd.DataFrame({
-            "bucket": ubucket[gcodes],
-            "field": np.asarray(uniq_fields, dtype=object)[flat_fcode[starts]],
-            "term": np.asarray(uniq_terms, dtype=object)[gcodes],
-            "range_id": flat_range[starts],
-            "df_chunk": (ends - starts).astype(np.int32),
-            "cf_chunk": cf,
-            "first_doc": seg(blocks["first_doc"]),
-            "max_doc": seg(blocks["max_doc"]),
-            "n": seg(blocks["n"]),
-            "max_tf": seg(blocks["max_tf"]),
-            "min_dl": seg(blocks["min_dl"]),
-            "docs": seg(blocks["docs"]),
-            "tfs": seg(blocks["tfs"]),
-            "dls": seg(blocks["dls"]),
-            "pos": (seg(blocks["pos"]) if store_positions
-                    else [[] for _ in range(n_groups)]),
-        })
+        tab = pa.Table.from_batches(parts)
+        lens = pc.list_value_length(tab["doc_ids"]).to_numpy()
+        yield from _merge_runs(
+            tab, np.repeat(np.arange(tab.num_rows), lens),
+            codec.list_values(tab["doc_ids"]).astype(np.int64),
+            codec.list_values(tab["tfs"]).astype(np.int64),
+            codec.list_values(tab["dls"]).astype(np.int64),
+            (codec.list_values(tab["pos"]).astype(np.int64)
+             if store_positions else None),
+            block_size, n_buckets, ver)
 
     return fn
 
@@ -753,7 +766,7 @@ class IndexBuilder:
                 + ([self.lang_col] if self.lang_col else []) + fields
             ))
             scan, id_offsets = self._keyed(source, cols)
-        partials = scan.mapInPandas(
+        partials = scan.mapInArrow(
             _make_tokenize_partials_fn(
                 fields, self.lang_col, cfg.tokenizer,
                 self.filter_stopwords, cfg.range_bits, id_offsets,
@@ -763,9 +776,9 @@ class IndexBuilder:
         n_merge = self.n_build_partitions
         merged = (partials
                   .repartition(n_merge, "term", "range_id")
-                  .mapInPandas(_make_merge_fn(cfg.block_size, cfg.n_term_buckets,
-                                              cfg.store_positions),
-                               schema=POSTINGS_KERNEL_SCHEMA)
+                  .mapInArrow(_make_merge_fn(cfg.block_size, cfg.n_term_buckets,
+                                             cfg.store_positions),
+                              schema=POSTINGS_KERNEL_SCHEMA)
                   .withColumn("ver", F.lit(pending.snapshot_id)))
         # a full build replaces EVERY bucket: forget inherited pointers
         # so buckets absent from this corpus drop out of the snapshot
@@ -1020,6 +1033,19 @@ class IndexBuilder:
             return None, nbytes
         return tab, nbytes
 
+    def _partials(self, tab: pa.Table) -> pa.Table | None:
+        """The fused tokenize+combine kernel (the Spark stage's
+        mapInArrow body) over driver-resident rows carrying ``doc_id``
+        and every analyzed field: their partial posting rows, or None
+        when no field holds a term."""
+        cfg = self.config
+        fn = _make_tokenize_partials_fn(
+            self.field_cols, self.lang_col, cfg.tokenizer,
+            self.filter_stopwords, int(cfg.range_bits),
+            store_positions=bool(cfg.store_positions))
+        out = list(fn(iter(tab.to_batches())))
+        return pa.Table.from_batches(out) if out else None
+
     def _build_driver(self, src: pa.Table, pending: PendingSnapshot) -> dict:
         """Stages 1-3 over the collected source, on the driver: the
         Spark stages' doc_ids, kernels, file sort orders and docs DDL,
@@ -1051,20 +1077,18 @@ class IndexBuilder:
         kin = pa.table({"doc_id": ids, **{c: src[c] for c in dict.fromkeys(
             [*self.field_cols, *([self.lang_col] if self.lang_col else [])])}})
         merge = _make_merge_fn(cfg.block_size, cfg.n_term_buckets,
-                               cfg.store_positions)
+                               cfg.store_positions, ver=pending.snapshot_id)
         doc_len = np.zeros(n, np.int32)
         posts = []
         for _, part in _slices_by(kin, ids_np >> np.int64(cfg.range_bits)):
-            partials = _partials_pdf(self, cfg, part.to_pandas())
+            partials = self._partials(part)
             if partials is None:
                 continue
-            own = partials[partials["field"] == self.content_col]
-            if len(own):
-                doc_len[np.searchsorted(ids_np, np.concatenate(
-                    own["doc_ids"].to_numpy()))] = np.concatenate(
-                    own["dls"].to_numpy())
-            posts += [_postings_table(m, pending.snapshot_id)
-                      for m in merge(iter([partials]))]
+            own = partials.filter(
+                pc.equal(partials["field"], self.content_col))
+            doc_len[np.searchsorted(ids_np, codec.list_values(
+                own["doc_ids"]))] = codec.list_values(own["dls"])
+            posts += merge(partials.to_batches())
 
         docs = src.append_column("content_sha256", pa.array(
             _sha256_series(src[self.content_col].to_pandas()), pa.string()))
@@ -1084,7 +1108,7 @@ class IndexBuilder:
         pending.reset_parts("term_stats")
         field_tokens: dict[str, int] = {}
         if posts:
-            post = pa.concat_tables(posts).sort_by(
+            post = pa.Table.from_batches(posts).sort_by(
                 [("bucket", "ascending"), ("term", "ascending"),
                  ("field", "ascending"), ("range_id", "ascending")])
             for b, part in _slices_by(post, post["bucket"].to_numpy()):

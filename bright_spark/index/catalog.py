@@ -144,6 +144,10 @@ POSTINGS_ARROW = pa.schema([
     ("dls", _LIST_BIN), ("pos", _LIST_BIN), ("ver", pa.int64()),
 ])
 
+# what the merge kernels emit: the on-disk row without ``ver``
+POSTINGS_KERNEL_ARROW = POSTINGS_ARROW.remove(
+    POSTINGS_ARROW.get_field_index("ver"))
+
 TERM_STATS_ARROW = pa.schema([
     ("field", pa.string()), ("term", pa.string()), ("df", pa.int64()),
     ("cf", pa.int64()), ("bucket", pa.int32()),

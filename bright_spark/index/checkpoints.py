@@ -182,7 +182,7 @@ class ResumableIndexBuilder:
                 continue
             t0 = time.time()
             part = docs.filter(F.col("doc_id") % self.n_shards == shard)
-            partials = part.mapInPandas(
+            partials = part.mapInArrow(
                 _make_tokenize_partials_fn(
                     b.field_cols, b.lang_col, self.config.tokenizer,
                     b.filter_stopwords, self.config.range_bits,
@@ -209,10 +209,10 @@ class ResumableIndexBuilder:
         n_merge = (self.builder.n_build_partitions
                    or self.spark.sparkContext.defaultParallelism)
         merged = (partials.repartition(n_merge, "term", "range_id")
-                  .mapInPandas(_make_merge_fn(self.config.block_size,
-                                              self.config.n_term_buckets,
-                                              self.config.store_positions),
-                               schema=POSTINGS_KERNEL_SCHEMA)
+                  .mapInArrow(_make_merge_fn(self.config.block_size,
+                                             self.config.n_term_buckets,
+                                             self.config.store_positions),
+                              schema=POSTINGS_KERNEL_SCHEMA)
                   .withColumn("ver", F.lit(pending.snapshot_id)))
         pending.tables["postings"] = {}
         stage_postings_write(merged, pending, self.config.n_term_buckets,

@@ -22,19 +22,35 @@ chunk; rows hold parallel arrays of blocks):
 - ``dls``:       varint(doc_len per entry) — inlined so BM25 scoring
                  never joins the docs table (at 10^12 docs a
                  norms-join or broadcast is impossible)
+- ``pos``:       absolute varint positions of the block's entries
+                 (empty lists when positions are not stored)
 
 ``(max_tf, min_dl)`` give a *parameter-free* block-max bound: the BM25
 tf-norm ``tf/(tf + k1*(1-b+b*dl/avgdl))`` is increasing in tf and
 decreasing in dl, so ``tf_norm(max_tf, min_dl)`` evaluated with the
 *current* (k1, b, avgdl) always upper-bounds every entry — the bound
 survives incremental corpus-stat drift, unlike a stored max-score.
+
+In memory the payloads live as arrow binary arrays, never as per-block
+Python ``bytes``: :func:`encode_blocks_bulk` varint-encodes each column
+of many runs in one pass and wraps the resulting buffer as a
+``BinaryArray`` cut at the per-block byte offsets, nested in a
+``ListArray`` per run; :func:`list_values` / :func:`binary_values` read
+a stored ``list<...>`` column's values straight from its arrow buffers
+(slices and chunks included), so the decode is one varint pass per
+column. The parquet bytes on disk are those of the same ``list<binary>``
+columns as before (layout v4).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 DEFAULT_BLOCK_SIZE = 128
+
+# byte offsets of a binary array are int32
+_MAX_BINARY_BYTES = np.iinfo(np.int32).max
 
 
 # ---------------------------------------------------------------- varint
@@ -47,7 +63,7 @@ def varint_encode_raw(values: np.ndarray):
     if arr.size == 0:
         return np.empty(0, dtype=np.uint8), np.empty(0, dtype=np.int64)
     if arr.dtype.kind == "i" and arr.min() < 0:
-        raise ValueError("varint_encode requires non-negative values")
+        raise ValueError("varint encoding requires non-negative values")
     v = np.ascontiguousarray(arr, dtype=np.uint64)
     nbytes = np.ones(v.size, dtype=np.int64)
     tmp = v >> np.uint64(7)
@@ -76,14 +92,11 @@ def varint_encode_raw(values: np.ndarray):
     return out, nbytes
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    buf, _ = varint_encode_raw(values)
-    return buf.tobytes()
-
-
-def varint_decode(buf: bytes | bytearray | memoryview) -> np.ndarray:
+def varint_decode(buf: bytes | bytearray | memoryview | np.ndarray
+                  ) -> np.ndarray:
     """Decode LEB128 bytes back to uint64 (vectorized)."""
-    a = np.frombuffer(buf, dtype=np.uint8)
+    a = (buf if isinstance(buf, np.ndarray)
+         else np.frombuffer(buf, dtype=np.uint8))
     if a.size == 0:
         return np.empty(0, dtype=np.uint64)
     is_end = (a & 0x80) == 0
@@ -101,45 +114,24 @@ def varint_decode(buf: bytes | bytearray | memoryview) -> np.ndarray:
     return vals
 
 
+def _varint_blocks(values: np.ndarray, value_offsets: np.ndarray
+                   ) -> pa.BinaryArray:
+    """One bulk varint pass over ``values``, as a binary array whose
+    element i holds the varints of ``values[value_offsets[i]:
+    value_offsets[i + 1]]``: the encoded buffer itself, cut by offsets."""
+    buf, nbytes = varint_encode_raw(values)
+    byte_cum = np.zeros(nbytes.size + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=byte_cum[1:])
+    offs = byte_cum[value_offsets]
+    if offs[-1] > _MAX_BINARY_BYTES:
+        raise ValueError("varint payload over 2 GiB: encode fewer runs "
+                         "per call")
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), offs.size - 1,
+        [None, pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(buf)])
+
+
 # ---------------------------------------------------------------- blocks
-
-def encode_blocks(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-) -> dict[str, list]:
-    """Split a docID-sorted posting run into compressed blocks.
-
-    Returns parallel lists (one element per block) matching the
-    ``postings`` table's ``blocks`` struct fields.
-    """
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    if doc_ids.size and (np.diff(doc_ids) <= 0).any():
-        raise ValueError("doc_ids must be strictly increasing")
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    dls = np.ascontiguousarray(dls, dtype=np.int64)
-    out: dict[str, list] = {
-        "first_doc": [], "max_doc": [], "n": [],
-        "max_tf": [], "min_dl": [], "docs": [], "tfs": [], "dls": [],
-    }
-    for s in range(0, doc_ids.size, block_size):
-        d = doc_ids[s : s + block_size]
-        t = tfs[s : s + block_size]
-        l = dls[s : s + block_size]
-        deltas = np.empty(d.size, dtype=np.uint64)
-        deltas[0] = 0
-        deltas[1:] = np.diff(d).astype(np.uint64)
-        out["first_doc"].append(int(d[0]))
-        out["max_doc"].append(int(d[-1]))
-        out["n"].append(int(d.size))
-        out["max_tf"].append(int(t.max()))
-        out["min_dl"].append(int(l.min()))
-        out["docs"].append(varint_encode(deltas))
-        out["tfs"].append(varint_encode(t))
-        out["dls"].append(varint_encode(l))
-    return out
-
 
 def encode_blocks_bulk(
     doc_ids: np.ndarray,
@@ -148,22 +140,25 @@ def encode_blocks_bulk(
     group_starts: np.ndarray,
     block_size: int = DEFAULT_BLOCK_SIZE,
     positions: np.ndarray | None = None,
-):
+) -> dict[str, pa.ListArray]:
     """Encode MANY posting runs (concatenated, with ``group_starts``
-    marking run boundaries) in three bulk varint passes — identical
-    bytes to per-run :func:`encode_blocks`, but without per-run numpy
-    call overhead (the merge-kernel hot path: one partition may hold
-    hundreds of thousands of small runs).
+    marking run boundaries) into the postings rows' block columns, in
+    one bulk varint pass per payload column — no per-run or per-block
+    Python.
 
-    Returns (per-block dict of numpy/bytes lists, block_group array
-    mapping each block to its run index).
+    Returns the nine block columns (``first_doc`` ... ``pos``, in
+    postings-row order) as arrow list arrays with one list per run:
+    ``first_doc``/``max_doc`` ``list<int64>``, ``n``/``max_tf``/
+    ``min_dl`` ``list<int32>``, the payloads ``list<binary>``. Every run
+    restarts block segmentation, so each run's blocks are the same as
+    an encode of that run alone.
 
     ``positions`` (optional): flat absolute base positions, entry i
     owning the ``tfs[i]`` values at offset ``Σ tfs[:i]`` (ascending
     within an entry). Encoded as absolute varints per block under key
     ``pos`` — positions are small ordinals, so delta gains little and
     absolute keeps entry slicing trivial (the entry's value count IS
-    its tf).
+    its tf). Without them every run's ``pos`` list is empty.
     """
     n = doc_ids.size
     doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
@@ -175,17 +170,17 @@ def encode_blocks_bulk(
     # (no per-run arange — one partition can hold 10^5+ small runs):
     # block b of run g starts at group_starts[g] + within * block_size.
     nblocks = -(-(g_ends - group_starts) // block_size)
+    run_offsets = np.zeros(group_starts.size + 1, dtype=np.int64)
+    np.cumsum(nblocks, out=run_offsets[1:])
     block_group = np.repeat(
         np.arange(group_starts.size, dtype=np.int64), nblocks)
-    if block_group.size:
-        first_of_run = np.concatenate(
-            ([0], np.cumsum(nblocks)[:-1]))
-        within = (np.arange(block_group.size, dtype=np.int64)
-                  - first_of_run[block_group])
-        block_starts = group_starts[block_group] + within * block_size
-    else:
-        block_starts = np.empty(0, dtype=np.int64)
-    block_ends = np.concatenate((block_starts[1:], [n])) if n else block_starts
+    within = (np.arange(block_group.size, dtype=np.int64)
+              - run_offsets[block_group])
+    block_starts = group_starts[block_group] + within * block_size
+    # blocks tile [0, n) in order: block i covers entries
+    # [bounds[i], bounds[i + 1])
+    bounds = np.append(block_starts, n)
+    block_ends = bounds[1:]
     # deltas: global diff, zeroed at block starts (each block's first
     # entry encodes 0 relative to its stored first_doc)
     deltas = np.empty(n, dtype=np.int64)
@@ -199,68 +194,96 @@ def encode_blocks_bulk(
         dup[block_starts] = False
         if dup.any():
             raise ValueError("duplicate doc_ids within a run")
-    # three bulk varint passes + per-block byte slicing
-    out: dict[str, list] = {}
-
-    def encode_all(vals):
-        buf, nbytes = varint_encode_raw(vals)
-        byte_ends = np.cumsum(nbytes)
-        raw = buf.tobytes()
-        # byte offset of each block start / end
-        bs = np.zeros(block_starts.size, dtype=np.int64)
-        nz = block_starts > 0
-        bs[nz] = byte_ends[block_starts[nz] - 1]
-        be = byte_ends[block_ends - 1] if n else bs
-        return [raw[s:e] for s, e in zip(bs, be)]
-
-    out["docs"] = encode_all(deltas.astype(np.uint64))
-    out["tfs"] = encode_all(tfs)
-    out["dls"] = encode_all(dls)
     if positions is not None:
-        # value index space: entry i owns values [pv_start[i], pv_end[i])
-        pv_end = np.cumsum(tfs)
-        pv_start = pv_end - tfs
-        buf, nbytes = varint_encode_raw(positions)
-        vbyte_ends = np.cumsum(nbytes)
-        raw = buf.tobytes()
-        bs_val = pv_start[block_starts] if n else block_starts
-        be_val = pv_end[block_ends - 1] if n else block_starts
-        bs_byte = np.zeros(block_starts.size, dtype=np.int64)
-        nz = bs_val > 0
-        bs_byte[nz] = vbyte_ends[bs_val[nz] - 1]
-        be_byte = np.zeros(block_starts.size, dtype=np.int64)
-        nzv = be_val > 0
-        be_byte[nzv] = vbyte_ends[be_val[nzv] - 1]
-        out["pos"] = [raw[s:e] for s, e in zip(bs_byte, be_byte)]
-    out["first_doc"] = doc_ids[block_starts].tolist() if n else []
-    out["max_doc"] = doc_ids[block_ends - 1].tolist() if n else []
-    out["n"] = (block_ends - block_starts).tolist()
+        # value index space: entry i owns values [pv[i], pv[i + 1])
+        pv = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(tfs, out=pv[1:])
+        pos = _varint_blocks(positions, pv[bounds])
     if n:
-        out["max_tf"] = np.maximum.reduceat(tfs, block_starts).tolist()
-        out["min_dl"] = np.minimum.reduceat(dls, block_starts).tolist()
+        max_tf = np.maximum.reduceat(tfs, block_starts)
+        min_dl = np.minimum.reduceat(dls, block_starts)
     else:
-        out["max_tf"] = []
-        out["min_dl"] = []
-    return out, block_group
+        max_tf = min_dl = block_starts
+    values = {
+        "first_doc": pa.array(doc_ids[block_starts]),
+        "max_doc": pa.array(doc_ids[block_ends - 1]),
+        "n": pa.array((block_ends - block_starts).astype(np.int32)),
+        "max_tf": pa.array(max_tf.astype(np.int32)),
+        "min_dl": pa.array(min_dl.astype(np.int32)),
+        "docs": _varint_blocks(deltas, bounds),
+        "tfs": _varint_blocks(tfs, bounds),
+        "dls": _varint_blocks(dls, bounds),
+    }
+    offs = pa.array(run_offsets.astype(np.int32))
+    out = {k: pa.ListArray.from_arrays(offs, v) for k, v in values.items()}
+    out["pos"] = (
+        pa.ListArray.from_arrays(offs, pos) if positions is not None
+        else pa.ListArray.from_arrays(
+            pa.array(np.zeros(group_starts.size + 1, dtype=np.int32)),
+            pa.array([], pa.binary())))
+    return out
 
 
-def decode_concat(bufs: list[bytes]) -> np.ndarray:
+# ---------------------------------------------------------------- decode
+
+def _chunks(col) -> list:
+    return col.chunks if isinstance(col, pa.ChunkedArray) else [col]
+
+
+def list_values(col) -> np.ndarray:
+    """The values of a ``list<int>`` arrow column (array or chunked
+    array, any slice offset) back to back, in row order, as numpy."""
+    parts = [c.flatten().to_numpy() for c in _chunks(col)]
+    if not parts:
+        return np.empty(0, dtype=np.int64)
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def binary_values(col) -> np.ndarray:
+    """The bytes of every element of a ``list<binary>`` arrow column
+    (array or chunked array, any slice offset) back to back, in row
+    order, as one uint8 array: read from the arrow data buffers, copied
+    only to join several chunks. Varint framing is self-delimiting, so
+    one decode of the result yields every block's values in order."""
+    parts = []
+    for c in _chunks(col):
+        v = c.flatten()
+        if not len(v):
+            continue
+        _, offs_buf, data = v.buffers()
+        off_type = np.int64 if pa.types.is_large_binary(v.type) else np.int32
+        offs = np.frombuffer(offs_buf, dtype=off_type)
+        lo, hi = int(offs[v.offset]), int(offs[v.offset + len(v)])
+        if hi > lo:
+            parts.append(np.frombuffer(data, dtype=np.uint8,
+                                       count=hi - lo, offset=lo))
+    if not parts:
+        return np.empty(0, dtype=np.uint8)
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def decode_concat(bufs: list[bytes] | np.ndarray) -> np.ndarray:
     """Decode MANY varint buffers in ONE vectorized pass (uint64).
-    Varint framing is self-delimiting, so concatenation preserves the
-    value sequence; callers recover per-buffer slices from known value
-    counts (the stored per-block ``n``)."""
+    ``bufs``: a list of buffers, or their bytes already back to back
+    (:func:`binary_values`). Varint framing is self-delimiting, so
+    concatenation preserves the value sequence; callers recover
+    per-buffer slices from known value counts (the stored per-block
+    ``n``)."""
+    if isinstance(bufs, np.ndarray):
+        return varint_decode(bufs)
     if not bufs:
         return np.empty(0, dtype=np.uint64)
     return varint_decode(b"".join(bufs))
 
 
 def decode_doc_blocks_bulk(first_docs: np.ndarray, ns: np.ndarray,
-                           doc_bufs: list[bytes]) -> np.ndarray:
+                           doc_bufs: list[bytes] | np.ndarray) -> np.ndarray:
     """Bulk-decode the docID arrays of many blocks into one flat int64
     array (query-kernel hot path — one varint pass + one cumsum instead
     of a per-block Python loop). ``first_docs``/``ns`` are per-block;
-    each block's first delta is 0, so within-block prefix sums fall out
-    of one global cumsum re-based at block starts."""
+    ``doc_bufs`` as in :func:`decode_concat`. Each block's first delta
+    is 0, so within-block prefix sums fall out of one global cumsum
+    re-based at block starts."""
     deltas = decode_concat(doc_bufs).astype(np.int64)
     if deltas.size == 0:
         return np.empty(0, dtype=np.int64)
@@ -270,25 +293,3 @@ def decode_doc_blocks_bulk(first_docs: np.ndarray, ns: np.ndarray,
     rebase = np.repeat(
         np.ascontiguousarray(first_docs, dtype=np.int64) - c[starts], ns)
     return c + rebase
-
-
-def decode_block(first_doc: int, docs: bytes, tfs: bytes, dls: bytes):
-    """One block -> (doc_ids int64, tfs int64, dls int64)."""
-    d = varint_decode(docs).astype(np.int64)
-    np.cumsum(d, out=d)
-    d += np.int64(first_doc)
-    return d, varint_decode(tfs).astype(np.int64), varint_decode(dls).astype(np.int64)
-
-
-def decode_all_blocks(blocks: dict[str, list]):
-    """Decode every block of one posting row into flat arrays."""
-    parts_d, parts_t, parts_l = [], [], []
-    for fd, db, tb, lb in zip(blocks["first_doc"], blocks["docs"], blocks["tfs"], blocks["dls"]):
-        d, t, l = decode_block(fd, db, tb, lb)
-        parts_d.append(d)
-        parts_t.append(t)
-        parts_l.append(l)
-    if not parts_d:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    return np.concatenate(parts_d), np.concatenate(parts_t), np.concatenate(parts_l)

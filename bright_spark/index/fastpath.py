@@ -4,8 +4,8 @@ A small mutation against a snapshot index is a HEAD-NODE operation:
 the change set is already driver-resident, every artifact it produces
 is bounded by the batch (postings/stats deltas, tombstones) or by the
 touched doc-range groups (docs-group rewrite), and the kernels that
-produce those artifacts are the same pandas/numpy functions the
-distributed mapInPandas stages wrap. Scheduling half a dozen
+produce those artifacts are the same arrow/numpy functions the
+distributed mapInArrow stages wrap. Scheduling half a dozen
 distributed jobs for a 50-document upsert buys no parallelism and
 costs a fixed scheduling round-trip per job — on a 1000-executor
 cluster it also occupies scheduler slots for work one core finishes in
@@ -13,11 +13,14 @@ milliseconds. The reference behaves the same way: a batch insert is
 one in-process Bleve batch (store/store.go:392-426), not a cluster
 job.
 
-This module runs the whole mutation commit with pandas + pyarrow:
-same tokenize/merge kernels, same file layout and sort orders, same
-manifest bookkeeping — bit-identical query results (pinned by the
-fast==distributed pytest in test_mutations.py and the ft_mutate_*
-oracle gate). Eligibility is decided BEFORE anything is written, so
+This module runs the whole mutation commit with pyarrow: the batch is
+tokenized once (its partial rows give both the postings delta and each
+doc's ``doc_len``), the partial rows go through the same merge kernel
+as arrow record batches, and the postings, signed stats and docs
+tables are sorted and split per bucket or group as arrow tables — same
+file layout and sort orders, same manifest bookkeeping — bit-identical
+query results (pinned by the fast==distributed pytest in
+test_mutations.py and the ft_mutate_* oracle gate). Eligibility is decided BEFORE anything is written, so
 an ineligible call falls back to the distributed path with zero side
 effects; above the size/byte thresholds the distributed path takes
 over unchanged, so the 10^12-doc story is the same commit protocol at
@@ -35,17 +38,12 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from bright_spark.analysis.tokenizer import count_terms_batch
+from bright_spark.index import codec
 from bright_spark.index.catalog import (
-    POSTINGS_ARROW,
     TERM_STATS_ARROW,
     term_bucket,
     write_part,
 )
-
-_LIST_I64 = pa.list_(pa.int64())
-_LIST_I32 = pa.list_(pa.int32())
-_LIST_BIN = pa.list_(pa.binary())
 
 
 def merge_tombstones(pending, present_ids: np.ndarray, old_tomb) -> None:
@@ -77,63 +75,20 @@ def _sha256_series(texts: pd.Series) -> pd.Series:
         else hashlib.sha256(str(v).encode("utf-8")).hexdigest())
 
 
-def _partials_pdf(builder, cfg, pdf: pd.DataFrame) -> pd.DataFrame | None:
-    """Run the fused tokenize+combine kernel (the mapInPandas body) on
-    one driver-resident batch."""
-    from bright_spark.index.builder import _make_tokenize_partials_fn
-    cols = ["doc_id"] + builder.field_cols
-    if builder.lang_col:
-        cols.append(builder.lang_col)
-    fn = _make_tokenize_partials_fn(
-        builder.field_cols, builder.lang_col, cfg.tokenizer,
-        builder.filter_stopwords, int(cfg.range_bits),
-        store_positions=bool(cfg.store_positions))
-    parts = [p for p in fn(iter([pdf[cols]])) if p is not None and len(p)]
-    if not parts:
+def _signed_stats(partials: pa.Table | None,
+                  sign: int) -> pa.Table | None:
+    """Partial posting rows -> SIGNED per-row (field, term, df, cf):
+    df = ±(docs in the run), cf = ±Σtf, one segmented sum over the
+    flattened ``tfs`` (an empty row sums to 0)."""
+    if partials is None or not partials.num_rows:
         return None
-    return pd.concat(parts, ignore_index=True)
-
-
-def _signed_stats_pdf(partials: pd.DataFrame | None,
-                      sign: int) -> pd.DataFrame | None:
-    if partials is None or not len(partials):
-        return None
-    # cf: one segmented sum over the concatenated per-row tfs (an empty
-    # row sums to 0)
-    tfs = partials["tfs"].tolist()
-    ends = np.cumsum([len(a) for a in tfs], dtype=np.int64)
-    cum = np.concatenate(([0], np.cumsum(np.concatenate(tfs), dtype=np.int64)))
-    return pd.DataFrame({
-        "field": partials["field"].to_numpy(),
-        "term": partials["term"].to_numpy(),
-        "df": sign * partials["doc_ids"].str.len().to_numpy(np.int64),
-        "cf": sign * (cum[ends] - cum[np.concatenate(([0], ends[:-1]))]),
-    })
-
-
-def _postings_table(rows: pd.DataFrame, snapshot_id: int) -> pa.Table:
-    """Merge-kernel output rows -> one arrow table in on-disk shape."""
-
-    def lists(col, typ):
-        # the kernel's cells are python lists: arrow converts them in one
-        # pass, without a numpy array per cell
-        return pa.array(rows[col].tolist(), type=typ)
-
-    n = len(rows)
-    return pa.Table.from_arrays([
-        pa.array(rows["bucket"].to_numpy(np.int64), type=pa.int32()),
-        pa.array(rows["field"], type=pa.string()),
-        pa.array(rows["term"], type=pa.string()),
-        pa.array(rows["range_id"].to_numpy(np.int64), type=pa.int64()),
-        pa.array(rows["df_chunk"].to_numpy(np.int64), type=pa.int32()),
-        pa.array(rows["cf_chunk"].to_numpy(np.int64), type=pa.int64()),
-        lists("first_doc", _LIST_I64), lists("max_doc", _LIST_I64),
-        lists("n", _LIST_I32), lists("max_tf", _LIST_I32),
-        lists("min_dl", _LIST_I32), lists("docs", _LIST_BIN),
-        lists("tfs", _LIST_BIN), lists("dls", _LIST_BIN),
-        lists("pos", _LIST_BIN),
-        pa.array(np.full(n, snapshot_id, np.int64), type=pa.int64()),
-    ], schema=POSTINGS_ARROW)
+    lens = pc.list_value_length(partials["tfs"]).to_numpy().astype(np.int64)
+    ends = np.cumsum(lens)
+    cum = np.concatenate(([0], np.cumsum(
+        codec.list_values(partials["tfs"]), dtype=np.int64)))
+    return pa.table({
+        "field": partials["field"], "term": partials["term"],
+        "df": sign * lens, "cf": sign * (cum[ends] - cum[ends - lens])})
 
 
 def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
@@ -142,6 +97,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     success (committed, or a provable no-op); False when the index or
     batch is ineligible — the caller then runs the distributed path.
     Every ineligibility exit happens BEFORE the first write."""
+    from bright_spark.index.builder import _make_merge_fn, _slices_by
     cat = mut.catalog
     cfg = mut.config
     try:
@@ -157,21 +113,37 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     b = mut._builder()
 
     # ---- normalize the changed batch (what _tokenize_updates does for
-    # the id_col case: rename + cast, sha256, doc_len)
+    # the id_col case: rename + cast, sha256, doc_len) and tokenize it
+    # once: doc_len is the content field's Σtf in the batch's partials
+    # (0 for a doc without terms), as in the driver build
     pdf = None
+    partials_new = None
     if changed_pdf is not None and len(changed_pdf):
         pdf = changed_pdf.copy()
         id_col = mut.extra["id_col"]
         if id_col != "doc_id":
             pdf = pdf.rename(columns={id_col: "doc_id"})
         pdf["doc_id"] = pdf["doc_id"].astype("int64")
-        texts = pdf[b.content_col]
-        langs = (pdf[b.lang_col].tolist() if b.lang_col
-                 else [None] * len(pdf))
-        pdf["content_sha256"] = _sha256_series(texts)
-        _, _, dlens = count_terms_batch(
-            texts.tolist(), cfg.tokenizer, langs, b.filter_stopwords)
-        pdf["doc_len"] = pd.Series(dlens, index=pdf.index, dtype="int32")
+        kcols = ["doc_id", *b.field_cols] + ([b.lang_col] if b.lang_col
+                                              else [])
+        if not set(kcols) <= set(pdf.columns):
+            return False  # the stored-doc shape check below would fail
+        try:
+            partials_new = b._partials(pa.Table.from_pandas(
+                pdf[kcols], preserve_index=False))
+        except (pa.ArrowInvalid, pa.ArrowTypeError):
+            return False
+        pdf["content_sha256"] = _sha256_series(pdf[b.content_col])
+        ids = pdf["doc_id"].to_numpy()
+        doc_len = np.zeros(ids.size, np.int32)
+        if partials_new is not None:
+            own = partials_new.filter(
+                pc.equal(partials_new["field"], b.content_col))
+            order = np.argsort(ids, kind="stable")
+            doc_len[order[np.searchsorted(
+                ids, codec.list_values(own["doc_ids"]), sorter=order)]] = \
+                codec.list_values(own["dls"])
+        pdf["doc_len"] = doc_len
 
     ch_ids = (np.unique(pdf["doc_id"].to_numpy(np.int64))
               if pdf is not None else np.empty(0, np.int64))
@@ -258,54 +230,47 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
 
     # postings delta + signed stats from the SAME kernels the
     # distributed stages wrap
-    partials_new = _partials_pdf(b, cfg, pdf) if pdf is not None else None
     partials_old = None
     if replaced_tab is not None:
-        rp_cols = ["doc_id"] + b.field_cols
-        if b.lang_col:
-            rp_cols.append(b.lang_col)
-        partials_old = _partials_pdf(b, cfg, replaced_tab.select(
-            [c for c in rp_cols if c in replaced_tab.schema.names]
-        ).to_pandas())
+        partials_old = b._partials(replaced_tab)
     post_by_bucket: dict[int, pa.Table] = {}
     if partials_new is not None:
-        from bright_spark.index.builder import _make_merge_fn
         mf = _make_merge_fn(cfg.block_size, cfg.n_term_buckets,
-                            bool(cfg.store_positions))
-        merged = [m for m in mf(iter([partials_new])) if len(m)]
+                            bool(cfg.store_positions),
+                            ver=pending.snapshot_id)
+        merged = list(mf(partials_new.to_batches()))
         if merged:
-            rows = pd.concat(merged, ignore_index=True).sort_values(
-                ["term", "field", "range_id"], kind="stable",
-                ignore_index=True)
-            for bkt, sub in rows.groupby("bucket", sort=True):
-                post_by_bucket[int(bkt)] = _postings_table(
-                    sub.reset_index(drop=True), pending.snapshot_id)
+            post = pa.Table.from_batches(merged).sort_by(
+                [("bucket", "ascending"), ("term", "ascending"),
+                 ("field", "ascending"), ("range_id", "ascending")])
+            for bkt, sub in _slices_by(post, post["bucket"].to_numpy()):
+                post_by_bucket[bkt] = sub
 
-    signed = [s for s in (_signed_stats_pdf(partials_old, -1),
-                          _signed_stats_pdf(partials_new, 1))
+    signed = [s for s in (_signed_stats(partials_old, -1),
+                          _signed_stats(partials_new, 1))
               if s is not None]
     stats_by_bucket: dict[int, pa.Table] = {}
     field_delta: dict[str, int] = {}
     if signed:
-        allsigned = pd.concat(signed, ignore_index=True)
-        for f, v in allsigned.groupby("field")["cf"].sum().items():
-            field_delta[str(f)] = int(v)
-        delta = (allsigned.groupby(["field", "term"], as_index=False)
-                 [["df", "cf"]].sum())
-        delta = delta[(delta["df"] != 0) | (delta["cf"] != 0)]
-        if len(delta):
-            delta["bucket"] = [
-                term_bucket(t, cfg.n_term_buckets) for t in delta["term"]]
-            delta = delta.sort_values(["term", "field"], kind="stable")
-            for bkt, sub in delta.groupby("bucket", sort=True):
-                stats_by_bucket[int(bkt)] = pa.Table.from_arrays([
-                    pa.array(sub["field"], type=pa.string()),
-                    pa.array(sub["term"], type=pa.string()),
-                    pa.array(sub["df"].to_numpy(np.int64)),
-                    pa.array(sub["cf"].to_numpy(np.int64)),
-                    pa.array(sub["bucket"].to_numpy(np.int64),
-                             type=pa.int32()),
-                ], schema=TERM_STATS_ARROW)
+        allsigned = pa.concat_tables(signed)
+        tot = allsigned.group_by("field").aggregate([("cf", "sum")])
+        field_delta = dict(zip(tot["field"].to_pylist(),
+                               tot["cf_sum"].to_pylist()))
+        delta = allsigned.group_by(["field", "term"]).aggregate(
+            [("df", "sum"), ("cf", "sum")])
+        delta = delta.filter(pc.or_(pc.not_equal(delta["df_sum"], 0),
+                                    pc.not_equal(delta["cf_sum"], 0)))
+        if delta.num_rows:
+            bucket = pa.array([term_bucket(t, cfg.n_term_buckets)
+                               for t in delta["term"].to_pylist()],
+                              pa.int32())
+            stats = pa.Table.from_arrays(
+                [delta["field"], delta["term"], delta["df_sum"],
+                 delta["cf_sum"], bucket], schema=TERM_STATS_ARROW
+            ).sort_by([("bucket", "ascending"), ("term", "ascending"),
+                       ("field", "ascending")])
+            for bkt, sub in _slices_by(stats, stats["bucket"].to_numpy()):
+                stats_by_bucket[bkt] = sub
 
     # ---- writes (all artifacts validated; from here the commit
     # protocol is identical to the distributed path's)

@@ -38,20 +38,22 @@ the snapshot catalog, so a mutation commit is **O(batch)**:
   bucket when tombstones exist. Selection: every row of a chained
   bucket, plus, when tombstones exist, the target rows whose
   ``range_id`` holds a tombstoned id. Selected rows decode (one bulk
-  varint pass per column, dead entries dropped), re-merge and get the
-  compaction's version; the other rows are copied unchanged, ``ver``
-  included. Each target bucket becomes one version dir, stats chains
-  collapse to their summed rows, the tombstone table clears. Between
+  varint pass per column, read straight from the arrow buffers, dead
+  entries dropped), re-merge and get the compaction's version; the
+  other rows are copied unchanged, ``ver`` included. Each target
+  bucket becomes one version dir, stats chains collapse to their
+  summed rows, the tombstone table clears. Between
   compactions every file in a bucket chain stays term-sorted and
   bounded (files_per_bucket per dir), so reads stay pruned.
   Two executions, one rule: when the footer-reported bytes of the
   target postings dirs and chained term_stats dirs fit
   ``catalog.fits_local`` (the read path's gate), the driver reads them
-  with pyarrow, runs the same decode/merge kernels and writes one
-  sorted file per bucket with zero Spark jobs; otherwise the same
-  selection runs as Spark stages (a range-id plan literal up to 1024
-  ranges, every row of the targets above that). The commit's metrics
-  say which (``mode``: ``driver`` or ``spark``).
+  with pyarrow, feeds the decoded entries straight into the merge
+  kernel's sort and writes one sorted file per bucket with zero Spark
+  jobs; otherwise the same selection runs as Spark stages (a range-id
+  plan literal up to 1024 ranges, every row of the targets above that)
+  whose decode and merge kernels run through ``mapInArrow``. The
+  commit's metrics say which (``mode``: ``driver`` or ``spark``).
 
   rewrite mode (forced via ``mode="rewrite"``, and the automatic path
   for beyond-broadcast change sets): the pre-append behavior — affected
@@ -83,12 +85,15 @@ from pyspark.sql import functions as F
 
 from bright_spark.index import codec
 from bright_spark.index.builder import (
+    PARTIALS_ARROW,
     PARTIALS_SCHEMA,
     IndexBuilder,
+    _lists,
     _make_assign_ids_fn,
     _make_merge_fn,
     _make_tokenize_fn,
     _make_tokenize_partials_fn,
+    _merge_runs,
     stage_docs_write,
     stage_postings_write,
 )
@@ -130,39 +135,38 @@ def _kill_set(tomb=None, drop_ids=None):
     return ids[last], vers[last]
 
 
-def _flat(col: pd.Series) -> list:
-    return [v for cell in col for v in cell]
-
-
-def _decode_rows(pdf: pd.DataFrame, store_positions: bool, kill=None):
-    """Every entry of a batch of posting rows, decoded in ONE bulk varint
-    pass per column, minus the entries ``kill`` (:func:`_kill_set`)
-    marks dead — one vectorized ``searchsorted`` for the whole batch.
+def _decode_rows(tab, store_positions: bool, kill=None):
+    """Every entry of an arrow table or record batch of posting rows,
+    decoded in ONE bulk varint pass per payload column straight from
+    its arrow buffers (slices and chunks included), minus the entries
+    ``kill`` (:func:`_kill_set`) marks dead — one vectorized
+    ``searchsorted`` for the whole batch.
 
     Returns (row, doc_ids, tfs, dls, pos): per surviving entry the index
-    of its row in ``pdf``, in row then doc order; ``pos`` holds the
+    of its row in ``tab``, in row then doc order; ``pos`` holds the
     surviving entries' positions back to back (entry i owns ``tfs[i]``
     values), empty unless ``store_positions``."""
-    nb = (pdf["first_doc"].str.len().to_numpy(np.int64) if len(pdf)
-          else _EMPTY)
-    if not nb.sum():
+    if not tab.num_rows:
         return _EMPTY, _EMPTY, _EMPTY, _EMPTY, _EMPTY
-    ns = np.concatenate(pdf["n"].to_numpy()).astype(np.int64)
-    first = np.concatenate(pdf["first_doc"].to_numpy()).astype(np.int64)
-    d = codec.decode_doc_blocks_bulk(first, ns, _flat(pdf["docs"]))
-    t = codec.decode_concat(_flat(pdf["tfs"])).astype(np.int64)
-    l = codec.decode_concat(_flat(pdf["dls"])).astype(np.int64)
-    pos = (codec.decode_concat(_flat(pdf["pos"])).astype(np.int64)
-           if store_positions else _EMPTY)
-    row = np.repeat(np.repeat(np.arange(len(pdf)), nb), ns)
+    nb = pc.list_value_length(tab["first_doc"]).to_numpy()
+    ns = codec.list_values(tab["n"]).astype(np.int64)
+    first = codec.list_values(tab["first_doc"]).astype(np.int64)
+    d = codec.decode_doc_blocks_bulk(first, ns,
+                                     codec.binary_values(tab["docs"]))
+    if not d.size:
+        return _EMPTY, _EMPTY, _EMPTY, _EMPTY, _EMPTY
+    t = codec.decode_concat(codec.binary_values(tab["tfs"])).astype(np.int64)
+    l = codec.decode_concat(codec.binary_values(tab["dls"])).astype(np.int64)
+    pos = (codec.decode_concat(codec.binary_values(tab["pos"])).astype(
+        np.int64) if store_positions else _EMPTY)
+    row = np.repeat(np.repeat(np.arange(tab.num_rows), nb), ns)
     if kill is not None:
         kids, kvers = kill
         idx = np.minimum(np.searchsorted(kids, d), kids.size - 1)
         hit = kids[idx] == d
         if hit.any():
-            # files from layouts before the ver column read it as null:
-            # version 0, the oldest
-            ver = pdf["ver"].to_numpy(np.int64, na_value=0)
+            # a null ver reads as version 0, the oldest
+            ver = pc.fill_null(tab["ver"], 0).to_numpy().astype(np.int64)
             drop = hit & (ver[row] < kvers[idx])
             if drop.any():
                 keep = ~drop
@@ -172,37 +176,29 @@ def _decode_rows(pdf: pd.DataFrame, store_positions: bool, kill=None):
     return row, d, t, l, pos
 
 
-def _decode_partials(pdf: pd.DataFrame, store_positions: bool,
-                    kill=None) -> pd.DataFrame | None:
-    """Posting rows -> partial-run rows (PARTIALS_SCHEMA) of their live
-    entries; a row with no live entry emits nothing."""
-    row, d, t, l, pos = _decode_rows(pdf, store_positions, kill)
+def _decode_partials(batch: pa.RecordBatch, store_positions: bool,
+                     kill=None) -> pa.RecordBatch | None:
+    """Posting rows -> partial-run rows (:data:`builder.PARTIALS_ARROW`)
+    of their live entries; a row with no live entry emits nothing."""
+    row, d, t, l, pos = _decode_rows(batch, store_positions, kill)
     if not d.size:
         return None
     starts = np.concatenate(([0], np.flatnonzero(np.diff(row)) + 1))
     src = row[starts]
     bounds = np.append(starts, d.size)
-    pos_bounds = np.append(0, np.cumsum(t))[bounds]
-    return pd.DataFrame({
-        "field": pdf["field"].to_numpy()[src],
-        "term": pdf["term"].to_numpy()[src],
-        "range_id": pdf["range_id"].to_numpy(np.int64)[src],
-        "doc_ids": _runs(d, bounds), "tfs": _runs(t, bounds),
-        "dls": _runs(l, bounds),
-        "pos": (_runs(pos, pos_bounds) if store_positions
-                else [_EMPTY] * src.size)})
-
-
-def _runs(a: np.ndarray, bounds: np.ndarray) -> list[np.ndarray]:
-    """``a`` cut at ``bounds`` (first 0, last ``a.size``): one view per
-    run."""
-    b = bounds.tolist()
-    return [a[s:e] for s, e in zip(b[:-1], b[1:])]
+    pos_bounds = (np.append(0, np.cumsum(t))[bounds] if store_positions
+                  else np.zeros(bounds.size, np.int64))
+    return pa.RecordBatch.from_arrays([
+        batch.column("field").take(src), batch.column("term").take(src),
+        batch.column("range_id").take(src),
+        _lists(bounds, d, pa.int64()), _lists(bounds, t, pa.int32()),
+        _lists(bounds, l, pa.int32()), _lists(pos_bounds, pos, pa.int32()),
+    ], schema=PARTIALS_ARROW)
 
 
 def _decode_to_partials(store_positions: bool = False, drop_bc=None,
                         tomb_bc=None):
-    """mapInPandas form of :func:`_decode_partials`, dropping (a) every
+    """mapInArrow form of :func:`_decode_partials`, dropping (a) every
     doc id in the ``drop_bc`` broadcast (the mutation's change set — a
     sorted int64 numpy array, broadcast rather than a plan literal so
     million-row change sets don't explode the query plan), and (b)
@@ -210,11 +206,12 @@ def _decode_to_partials(store_positions: bool = False, drop_bc=None,
     written at or after its doc's tombstone version — re-encoding at
     the new snapshot version must never resurrect dead entries."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]
+           ) -> Iterator[pa.RecordBatch]:
         kill = _kill_set(tomb_bc.value if tomb_bc is not None else None,
                          drop_bc.value if drop_bc is not None else None)
-        for pdf in batches:
-            out = _decode_partials(pdf, store_positions, kill)
+        for batch in batches:
+            out = _decode_partials(batch, store_positions, kill)
             if out is not None:
                 yield out
 
@@ -226,24 +223,28 @@ ENTRIES_SCHEMA = ("field STRING, term STRING, range_id BIGINT, "
 
 
 def _decode_to_entries(store_positions: bool = False, tomb_bc=None):
-    """Posting rows -> one row per posting ENTRY (the exploded form the
-    huge-change-set path anti-joins against the changed-id DataFrame —
-    no driver collect, no executor broadcast). Tombstoned entries are
-    dropped here, version-aware."""
+    """mapInArrow kernel: posting rows -> one row per posting ENTRY
+    (the exploded form the huge-change-set path anti-joins against the
+    changed-id DataFrame — no driver collect, no executor broadcast).
+    Tombstoned entries are dropped here, version-aware."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]
+           ) -> Iterator[pa.RecordBatch]:
         kill = _kill_set(tomb_bc.value if tomb_bc is not None else None)
-        for pdf in batches:
-            row, d, t, l, pos = _decode_rows(pdf, store_positions, kill)
+        for batch in batches:
+            row, d, t, l, pos = _decode_rows(batch, store_positions, kill)
             if not d.size:
                 continue
-            yield pd.DataFrame({
-                "field": pdf["field"].to_numpy()[row],
-                "term": pdf["term"].to_numpy()[row],
-                "range_id": pdf["range_id"].to_numpy(np.int64)[row],
-                "doc_id": d, "tf": t, "dl": l,
-                "pos": (_runs(pos, np.append(0, np.cumsum(t)))
-                        if store_positions else [_EMPTY] * d.size)})
+            yield pa.RecordBatch.from_arrays([
+                batch.column("field").take(row),
+                batch.column("term").take(row),
+                batch.column("range_id").take(row),
+                pa.array(d), pa.array(t), pa.array(l),
+                _lists(np.append(0, np.cumsum(t)) if store_positions
+                       else np.zeros(d.size + 1, np.int64),
+                       pos, pa.int64()),
+            ], names=["field", "term", "range_id", "doc_id", "tf", "dl",
+                      "pos"])
 
     return fn
 
@@ -317,7 +318,7 @@ class IndexMutator:
         per field (Q5)."""
         b = self._builder()
         cols = ["doc_id"] + b.field_cols + ([b.lang_col] if b.lang_col else [])
-        return rows.select(*cols).mapInPandas(
+        return rows.select(*cols).mapInArrow(
             _make_tokenize_partials_fn(
                 b.field_cols, b.lang_col, self.config.tokenizer,
                 b.filter_stopwords, self.config.range_bits,
@@ -671,10 +672,10 @@ class IndexMutator:
                 width = min(par, max(8, n_changed // 50_000))
                 grouped = new_partials.repartition(width, "term", "range_id")
             rows = (grouped
-                    .mapInPandas(_make_merge_fn(cfg.block_size,
-                                                cfg.n_term_buckets,
-                                                cfg.store_positions),
-                                 schema=POSTINGS_KERNEL_SCHEMA)
+                    .mapInArrow(_make_merge_fn(cfg.block_size,
+                                               cfg.n_term_buckets,
+                                               cfg.store_positions),
+                                schema=POSTINGS_KERNEL_SCHEMA)
                     .withColumn("ver", F.lit(pending.snapshot_id)))
             appended = stage_postings_write(
                 rows, pending, cfg.n_term_buckets,
@@ -726,7 +727,7 @@ class IndexMutator:
             touched = in_buckets.join(terms_df, "term", "left_semi")
         touched_sel = touched.select(*_DECODE_COLS)
         if drop_bc is not None:
-            surviving_partials = touched_sel.mapInPandas(
+            surviving_partials = touched_sel.mapInArrow(
                 _decode_to_partials(cfg.store_positions,
                                     drop_bc=drop_bc, tomb_bc=tomb_bc),
                 schema=PARTIALS_SCHEMA)
@@ -734,7 +735,7 @@ class IndexMutator:
             # huge change set: entry-level anti-join instead of a
             # broadcast drop; survivors re-enter the merge as singleton
             # partial runs (the merge kernel regroups them anyway)
-            entries = touched_sel.mapInPandas(
+            entries = touched_sel.mapInArrow(
                 _decode_to_entries(cfg.store_positions, tomb_bc=tomb_bc),
                 schema=ENTRIES_SCHEMA)
             surviving_partials = (
@@ -750,10 +751,10 @@ class IndexMutator:
         n_merge = min(par, max(4, len(affected_buckets)
                                * (cfg.files_per_bucket or 1)))
         remerged = (partials.repartition(n_merge, "term", "range_id")
-                    .mapInPandas(_make_merge_fn(cfg.block_size,
-                                                cfg.n_term_buckets,
-                                                cfg.store_positions),
-                                 schema=POSTINGS_KERNEL_SCHEMA)
+                    .mapInArrow(_make_merge_fn(cfg.block_size,
+                                               cfg.n_term_buckets,
+                                               cfg.store_positions),
+                                schema=POSTINGS_KERNEL_SCHEMA)
                     .withColumn("ver", F.lit(pending.snapshot_id)))
         rebuilt = untouched.unionByName(remerged)
         written = stage_postings_write(rebuilt, pending,
@@ -827,13 +828,11 @@ class IndexMutator:
                         chained: list[int], tranges: np.ndarray) -> None:
         """:meth:`compact` with pyarrow reads and writes, one bucket at a
         time (driver memory is bounded by the largest bucket): the
-        selected rows go through the same decode and merge kernels as
-        the Spark stages, and each bucket lands as one sorted file."""
-        from bright_spark.index.fastpath import _postings_table
+        selected rows' live entries decode straight from the arrow
+        columns into the merge kernel's sort (no partial rows in
+        between), and each bucket lands as one sorted file."""
         cfg = self.config
         kill = _kill_set(tomb)
-        merge = _make_merge_fn(cfg.block_size, cfg.n_term_buckets,
-                               cfg.store_positions)
         # no plan literal here, so no cap on the range list
         ranges = pa.array(tranges, pa.int64())
         for b, rd in posts.items():
@@ -843,12 +842,12 @@ class IndexMutator:
             else:
                 sel = pc.is_in(tab["range_id"], value_set=ranges)
                 touched, parts = tab.filter(sel), [tab.filter(pc.invert(sel))]
-            partials = _decode_partials(
-                touched.select(_DECODE_COLS).to_pandas(),
-                cfg.store_positions, kill)
-            if partials is not None:
-                parts += [_postings_table(m, pending.snapshot_id)
-                          for m in merge(iter([partials])) if len(m)]
+            row, d, t, l, pos = _decode_rows(touched, cfg.store_positions,
+                                             kill)
+            parts += [pa.Table.from_batches([m]) for m in _merge_runs(
+                touched, row, d, t, l,
+                pos if cfg.store_positions else None, cfg.block_size,
+                cfg.n_term_buckets, ver=pending.snapshot_id)]
             out = pa.concat_tables(parts) if parts else None
             if out is not None and out.num_rows:
                 write_part(pending.adopt_part("postings", b), out.sort_by(
@@ -869,7 +868,7 @@ class IndexMutator:
                        tranges: np.ndarray) -> None:
         """:meth:`compact` as Spark jobs: rows outside the selection pass
         through JVM-side; the selected ones decode and re-merge in
-        mapInPandas stages."""
+        mapInArrow stages."""
         spark = self.spark
         cfg = self.config
         cat = self.catalog
@@ -891,7 +890,7 @@ class IndexMutator:
                     cond = F.col("bucket").isin(chained)
                 touched = rows.filter(cond)
                 untouched = rows.filter(~cond)
-                surviving = touched.select(*_DECODE_COLS).mapInPandas(
+                surviving = touched.select(*_DECODE_COLS).mapInArrow(
                     _decode_to_partials(cfg.store_positions,
                                         tomb_bc=tomb_bc),
                     schema=PARTIALS_SCHEMA)
@@ -899,7 +898,7 @@ class IndexMutator:
                                        * (cfg.files_per_bucket or 1)))
                 remerged = (surviving
                             .repartition(n_merge, "term", "range_id")
-                            .mapInPandas(
+                            .mapInArrow(
                                 _make_merge_fn(cfg.block_size,
                                                cfg.n_term_buckets,
                                                cfg.store_positions),

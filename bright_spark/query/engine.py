@@ -435,8 +435,8 @@ class SearchEngine:
                 neg = (self.catalog.postings_for_terms(
                            self.spark, sorted(set(aq.must_not_terms)))
                        .select(*_ENTRY_COLUMNS)
-                       .mapInPandas(_decode_to_entries(tomb_bc=self._tomb_bc),
-                                    ENTRIES_SCHEMA)
+                       .mapInArrow(_decode_to_entries(tomb_bc=self._tomb_bc),
+                                   ENTRIES_SCHEMA)
                        .select("doc_id").distinct())
                 out = out.join(neg, "doc_id", "left_anti")
         for ph in aq.must_not_phrases:

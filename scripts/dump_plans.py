@@ -5,17 +5,54 @@ regression-pinned in tests/test_plans.py; this file is for the human
 reader — PartitionFilters / PushedFilters / ReadSchema / top-k
 operators visible verbatim.
 
+Only the sections this script generates are rewritten, each in place
+(matched by its ``## `` title); a new one goes after the last generated
+section. Every hand-written section keeps its text and position.
+
 Usage: python scripts/dump_plans.py [sf_dir]
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+HEADER = """# BENCH/PLANS.md — physical plans of the headline flows
+
+Generated by `scripts/dump_plans.py` against an sf0.1 documents
+index (per-field postings + positions, the driver-gate shape);
+regression-pinned in `tests/test_plans.py` (pushed filters, column
+pruning, TakeOrderedAndProject, no position payloads on the
+scoring path).
+
+"""
+
+
+def splice(text: str, sections: list[tuple[str, str]]) -> str:
+    """``text`` with each generated (title, section) replacing the
+    ``## title`` section of the same title in place; generated sections
+    the text lacks go after the last one it has (at the end if none).
+    All other text is kept as it is."""
+    head, *body = re.split(r"(?m)^(?=## )", text)
+    gen = dict(sections)
+    out, seen, last = [], set(), None
+    for sec in body:
+        title = sec.split("\n", 1)[0][3:]
+        if title in gen:
+            out.append(gen[title])
+            seen.add(title)
+            last = len(out)
+        else:
+            out.append(sec)
+    at = len(out) if last is None else last
+    out[at:at] = [sec for title, sec in sections if title not in seen]
+    return head + "".join(out)
 
 
 def plan(df, mode="formatted") -> str:
@@ -98,21 +135,23 @@ def main() -> None:
         plan(eng_np.search_df('"the fast"', k=10), "simple")))
 
     sections.append((
+        "Pure negation: live docs minus the NOT-term holders, decoded by "
+        "the mapInArrow entries kernel",
+        "eng.search_df('-spark', k=10)",
+        plan(eng.search_df("-spark", k=10), "simple")))
+
+    sections.append((
         "Indexed LSH ANN: probe sigs prune partition directories",
         "ann_topk_indexed(spark, ann_dir, qvec, k=10, probe_hamming=1)",
         plan(ann_topk_indexed(spark, ann_dir, qvec, k=10, probe_hamming=1))))
 
-    out = ["# BENCH/PLANS.md — physical plans of the headline flows", "",
-           "Generated by `scripts/dump_plans.py` against an sf0.1 documents",
-           "index (per-field postings + positions, the driver-gate shape);",
-           "regression-pinned in `tests/test_plans.py` (pushed filters, column",
-           "pruning, TakeOrderedAndProject, no position payloads on the",
-           "scoring path).", ""]
-    for title, expr, p in sections:
-        out += [f"## {title}", "", f"`{expr}`", "", "```",
-                p.strip(), "```", ""]
-    with open(os.path.join(REPO, "BENCH", "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
+    path = os.path.join(REPO, "BENCH", "PLANS.md")
+    text = open(path).read() if os.path.exists(path) else HEADER
+    with open(path, "w") as f:
+        f.write(splice(text, [
+            (title, "\n".join([f"## {title}", "", f"`{expr}`", "", "```",
+                               p.strip(), "```", "", ""]))
+            for title, expr, p in sections]))
     print("wrote BENCH/PLANS.md")
     spark.stop()
 

@@ -8,6 +8,7 @@ import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
@@ -17,10 +18,11 @@ from bright_spark.fixtures import make_repos
 from bright_spark.index import catalog as catalog_mod
 from bright_spark.index import codec
 from bright_spark.index.builder import build_index
-from bright_spark.index.catalog import IndexCatalog
+from bright_spark.index.catalog import POSTINGS_ARROW, IndexCatalog
 from bright_spark.index.mutations import IndexMutator, _decode_rows, _kill_set
 from bright_spark.models import IndexConfig, SearchRequest
 from bright_spark.query.engine import SearchEngine
+from tests.codec_ref import decode_all_blocks
 from tests.oracle import OracleIndex
 
 # ------------------------------------------------------- bulk decode
@@ -33,13 +35,9 @@ def _encode_row(rng, n_entries, block_size):
     t = rng.integers(1, 4, n_entries).astype(np.int64)
     l = rng.integers(1, 60, n_entries).astype(np.int64)
     pos = rng.integers(0, 200, int(t.sum())).astype(np.int64)
-    if not n_entries:
-        blocks = {k: [] for k in ("first_doc", "n", "docs", "tfs", "dls",
-                                  "pos")}
-    else:
-        blocks, _ = codec.encode_blocks_bulk(
-            d, t, l, np.array([0]), block_size, positions=pos)
-    return blocks
+    cols = codec.encode_blocks_bulk(d, t, l, np.array([0]), block_size,
+                                    positions=pos)
+    return {k: v[0].as_py() for k, v in cols.items()}
 
 
 @settings(max_examples=60, deadline=None)
@@ -52,16 +50,23 @@ def _encode_row(rng, n_entries, block_size):
 def test_bulk_decode_equals_per_row_reference(seed, sizes, block_size,
                                               store_positions, with_tomb,
                                               with_drop):
-    """``_decode_rows`` == per-row ``codec.decode_all_blocks`` with the
+    """``_decode_rows`` == per-row ``decode_all_blocks`` with the
     version-aware tombstone rule and the change-set drop, for rows of
-    zero or more blocks, positions on and off."""
+    zero or more blocks, positions on and off, over one arrow table and
+    over the same rows as a sliced, several-chunk table."""
     rng = np.random.default_rng(seed)
     rows = []
     for i, n in enumerate(sizes):
         b = _encode_row(rng, n, block_size)
         rows.append({"field": f"f{i % 2}", "term": f"t{i}", "range_id": i,
                      **b, "ver": None if i % 3 == 0 else int(i % 4 + 1)})
-    pdf = pd.DataFrame(rows)
+    tab = pa.Table.from_pylist(rows, schema=pa.schema(
+        [POSTINGS_ARROW.field(k) for k in rows[0]]))
+    # the same rows behind a sliced head and a chunk boundary
+    pad = tab.slice(0, 1)
+    chunked = pa.concat_tables(
+        [pad, tab.slice(0, len(rows) // 2), tab.slice(len(rows) // 2)]
+    ).slice(1)
     # tombstones at versions 1..4, so rows are written before, at and
     # after their docs' tombstones; versionless rows count as version 0
     tomb = None
@@ -74,7 +79,7 @@ def test_bulk_decode_equals_per_row_reference(seed, sizes, block_size,
 
     want = {k: [] for k in ("row", "d", "t", "l", "pos")}
     for i, r in enumerate(rows):
-        d, t, l = codec.decode_all_blocks(r)
+        d, t, l = decode_all_blocks(r)
         pos = (codec.decode_concat(list(r["pos"])).astype(np.int64)
                if store_positions else np.empty(0, np.int64))
         dead = np.zeros(d.size, bool)
@@ -94,11 +99,12 @@ def test_bulk_decode_equals_per_row_reference(seed, sizes, block_size,
         if store_positions:
             want["pos"].append(pos[np.repeat(keep, t)])
 
-    got = _decode_rows(pdf, store_positions, _kill_set(tomb, drop))
-    for name, arr in zip(("row", "d", "t", "l", "pos"), got):
-        exp = (np.concatenate(want[name]) if want[name]
-               else np.empty(0, np.int64))
-        np.testing.assert_array_equal(arr, exp, err_msg=name)
+    for t in (tab, chunked):
+        got = _decode_rows(t, store_positions, _kill_set(tomb, drop))
+        for name, arr in zip(("row", "d", "t", "l", "pos"), got):
+            exp = (np.concatenate(want[name]) if want[name]
+                   else np.empty(0, np.int64))
+            np.testing.assert_array_equal(arr, exp, err_msg=name)
 
 
 # ---------------------------------------------------- driver == Spark
@@ -111,7 +117,7 @@ def _entries(idx: str) -> dict:
     for d in IndexCatalog(idx).postings_dirs():
         for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
             for r in pq.read_table(f).to_pylist():
-                dec = codec.decode_all_blocks(r)
+                dec = decode_all_blocks(r)
                 pos = codec.decode_concat(r["pos"]).astype(np.int64)
                 key = (r["field"], r["term"], r["range_id"])
                 assert key not in out, key

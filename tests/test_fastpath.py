@@ -195,19 +195,51 @@ def test_fast_upsert_then_compact_and_vacuum(spark, tmp_path_factory):
 def test_signed_stats_cf_is_per_row_tf_sum():
     """The segmented cf sum equals a per-row sum of ``tfs``, an empty
     row included, with the sign applied to df and cf."""
-    import pandas as pd
+    import pyarrow as pa
 
-    from bright_spark.index.fastpath import _signed_stats_pdf
+    from bright_spark.index.fastpath import _signed_stats
     tfs = [np.array([3, 1], np.int32), np.array([], np.int32),
            np.array([2**31 - 1, 2**31 - 1], np.int32), np.array([7], np.int32)]
-    partials = pd.DataFrame({
+    partials = pa.table({
         "field": ["content"] * 4, "term": ["a", "b", "c", "d"],
-        "doc_ids": [np.arange(len(t), dtype=np.int64) for t in tfs],
-        "tfs": tfs})
+        "doc_ids": pa.array([np.arange(len(t), dtype=np.int64) for t in tfs],
+                            pa.list_(pa.int64())),
+        "tfs": pa.array(tfs, pa.list_(pa.int32()))})
     for sign in (1, -1):
-        got = _signed_stats_pdf(partials, sign)
-        assert got["cf"].tolist() == [sign * int(np.sum(t, dtype=np.int64))
-                                      for t in tfs]
-        assert got["df"].tolist() == [sign * len(t) for t in tfs]
-        assert got["term"].tolist() == ["a", "b", "c", "d"]
-    assert _signed_stats_pdf(None, 1) is None
+        got = _signed_stats(partials, sign)
+        assert got["cf"].to_pylist() == [
+            sign * int(np.sum(t, dtype=np.int64)) for t in tfs]
+        assert got["df"].to_pylist() == [sign * len(t) for t in tfs]
+        assert got["term"].to_pylist() == ["a", "b", "c", "d"]
+    assert _signed_stats(None, 1) is None
+
+
+def test_driver_writes_run_clean_and_take_doc_len_from_partials(spark,
+                                                                tmp_path):
+    """A driver upsert and delete raise no pandas SettingWithCopyWarning
+    (turned into an error here), and the upsert's doc_len is the
+    content field's token count from the one tokenize pass, 0 for a doc
+    without terms."""
+    import warnings
+
+    import pandas as pd
+
+    from bright_spark.analysis.tokenizer import count_terms_batch
+    idx = str(tmp_path / "idx")
+    _build(spark, idx)
+    rows = [{"doc_id": 113, "lang": "en", "text": "replaced parse alpha"},
+            {"doc_id": 99991, "lang": "de", "text": "new user config user"},
+            {"doc_id": 99992, "lang": "en", "text": "  ,;  "}]
+    mut = IndexMutator(spark, idx, compact_threshold=0)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", pd.errors.SettingWithCopyWarning)
+        mut.upsert_rows(rows)
+        mut.delete_ids([226, 339])
+    assert _commit_modes(idx)[-2:] == [("upsert", "append-fast"),
+                                       ("delete", "append-fast")]
+    got = {r["doc_id"]: r["doc_len"] for r in IndexCatalog(idx).docs(spark)
+           .filter("doc_id IN (113, 99991, 99992)").collect()}
+    _, _, want = count_terms_batch([r["text"] for r in rows], "code",
+                                   [r["lang"] for r in rows], False)
+    assert got == {r["doc_id"]: int(w) for r, w in zip(rows, want)}
+    assert got[99992] == 0

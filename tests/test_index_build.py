@@ -7,8 +7,8 @@ import hashlib
 import numpy as np
 from pyspark.sql import functions as F
 
-from bright_spark.index import codec
 from bright_spark.index.catalog import term_bucket
+from tests.codec_ref import decode_all_blocks
 
 
 def test_fixture_index_is_driver_built(built_index):
@@ -76,7 +76,7 @@ def test_postings_invariants(spark, built_index, oracle):
         df_sum[r["term"]] = df_sum.get(r["term"], 0) + r["df_chunk"]
         assert r["bucket"] == term_bucket(r["term"], cfg.n_term_buckets)
         assert r["range_id"] == r["first_doc"][0] >> cfg.range_bits
-        d, t, l = codec.decode_all_blocks({
+        d, t, l = decode_all_blocks({
             "first_doc": r["first_doc"], "docs": r["docs"],
             "tfs": r["tfs"], "dls": r["dls"]})
         assert (np.diff(d) > 0).all() if d.size > 1 else True

@@ -208,3 +208,25 @@ def test_vocabulary_rank_no_single_partition_exchange(spark):
     got = {r["term"]: int(r["rank"]) for r in rows}
     assert got == {t[0]: i + 1 for i, t in enumerate(expect)}
     assert sorted(got.values()) == list(range(1, len(rows) + 1))
+
+
+def test_dump_plans_keeps_hand_written_sections():
+    """``scripts/dump_plans.py`` rewrites only the sections it generates,
+    each in place, adds a new one after the last generated section, and
+    keeps every hand-written section and its position."""
+    import importlib.util
+    import os
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans", os.path.join(os.path.dirname(__file__), os.pardir,
+                                   "scripts", "dump_plans.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    text = ("# head\n\nintro\n\n## gen A\n\nold a\n\n## notes\n\nkept\n\n"
+            "## gen B\n\nold b\n\n## tail notes\n\nkept too\n")
+    got = mod.splice(text, [("gen A", "## gen A\n\nnew a\n\n"),
+                            ("gen C", "## gen C\n\nnew c\n\n"),
+                            ("gen B", "## gen B\n\nnew b\n\n")])
+    assert got == ("# head\n\nintro\n\n## gen A\n\nnew a\n\n## notes\n\n"
+                   "kept\n\n## gen B\n\nnew b\n\n## gen C\n\nnew c\n\n"
+                   "## tail notes\n\nkept too\n")
+    assert mod.splice(text, []) == text

@@ -29,17 +29,17 @@ def test_positions_roundtrip_blocks():
     dls = rng.integers(10, 99, n).astype(np.int64)
     pos = rng.integers(0, 5000, int(tfs.sum())).astype(np.int64)
     starts = np.array([0, 400, 401, 950], dtype=np.int64)
-    blocks, block_group = codec.encode_blocks_bulk(
+    blocks = codec.encode_blocks_bulk(
         docs, tfs, dls, starts, block_size=128, positions=pos)
     # decode every block's positions and compare with the slice
-    got = codec.decode_concat(blocks["pos"]).astype(np.int64)
+    got = codec.decode_concat(
+        codec.binary_values(blocks["pos"])).astype(np.int64)
     assert (got == pos).all()
-    # per-block value counts = sum of tfs of its entries
+    # per-run value counts = sum of tfs of its entries
     ends = np.concatenate((starts[1:], [n]))
     for g, (s, e) in enumerate(zip(starts, ends)):
-        sel = [i for i, bg in enumerate(block_group) if bg == g]
         per_block = sum(
-            len(codec.varint_decode(blocks["pos"][i])) for i in sel)
+            len(codec.varint_decode(b)) for b in blocks["pos"][g].as_py())
         assert per_block == int(tfs[s:e].sum())
 
 

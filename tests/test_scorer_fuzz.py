@@ -13,6 +13,14 @@ from bright_spark.query import scorer
 K1, B, AVGDL = 1.2, 0.75, 57.0
 
 
+def _one_run(docs, tfs, dls):
+    """The block columns of one posting run, as the row lists the
+    scorer reads."""
+    cols = codec.encode_blocks_bulk(docs, tfs, dls, np.array([0]),
+                                    block_size=8)
+    return {k: v[0].as_py() for k, v in cols.items()}
+
+
 def _make_rows(rng, n_terms, n_docs_max, range_bits=6):
     """Random postings rows for ONE range group (range_id fixed)."""
     rows = []
@@ -23,8 +31,7 @@ def _make_rows(rng, n_terms, n_docs_max, range_bits=6):
         docs = np.sort(rng.choice(n_docs_max, size=df, replace=False)).astype(np.int64)
         tfs = rng.integers(1, 12, df).astype(np.int64)
         dls = rng.integers(5, 200, df).astype(np.int64)
-        blocks, _ = codec.encode_blocks_bulk(
-            docs, tfs, dls, np.array([0]), block_size=8)
+        blocks = _one_run(docs, tfs, dls)
         rows.append({
             "term": name, "range_id": 0, "df_chunk": df,
             "first_doc": blocks["first_doc"], "max_doc": blocks["max_doc"],
@@ -68,8 +75,7 @@ def test_tie_break_doc_id_ascending():
     docs = np.arange(0, 40, dtype=np.int64)
     tfs = np.full(40, 3, dtype=np.int64)
     dls = np.full(40, 50, dtype=np.int64)
-    blocks, _ = codec.encode_blocks_bulk(docs, tfs, dls, np.array([0]),
-                                         block_size=8)
+    blocks = _one_run(docs, tfs, dls)
     pdf = pd.DataFrame([{
         "term": "x", "range_id": 0, "df_chunk": 40,
         "first_doc": blocks["first_doc"], "max_doc": blocks["max_doc"],
