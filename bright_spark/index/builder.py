@@ -79,6 +79,7 @@ from bright_spark.analysis.tokenizer import (count_terms_batch,
 from bright_spark.index import codec
 from bright_spark.index.catalog import (
     _ARROW_OF_DDL,
+    LAYOUT_VERSION,
     POSTINGS_ARROW,
     POSTINGS_KERNEL_ARROW,
     POSTINGS_KERNEL_SCHEMA,
@@ -843,7 +844,7 @@ class IndexBuilder:
             "n_term_buckets": cfg.n_term_buckets,
             "docs_range_bits": cfg.docs_range_bits,
             "docs_schema": docs_schema,
-            "version": 4,  # v4: partitioned docs/term_stats CoW
+            "version": LAYOUT_VERSION,
         }
 
     def _field_cf_totals(self, dirs: list[str]) -> dict[str, int]:

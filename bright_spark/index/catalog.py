@@ -3,7 +3,7 @@
 The reference persists one Bleve scorch directory per index under
 ``<dataDir>/<indexID>`` plus a ``configs.json`` (store/store.go:91,
 226-282). Our index is a directory of columnar tables under an
-Iceberg-style snapshot protocol (layout v4):
+Iceberg-style snapshot protocol (layout v5):
 
     <index_dir>/
       config.json        index + build configuration (configs.json analog)
@@ -20,8 +20,13 @@ Iceberg-style snapshot protocol (layout v4):
         postings/b00003/v00000004/ per-BUCKET versioned posting dirs;
                                    bucket = crc32(term) % B is a data
                                    column (term-sorted files)
+        postings/delta/v00000009/  one SHARED delta dir per driver
+                                   mutation: its rows of every bucket
+                                   in one term-sorted file
         term_stats/b00003/v00000005/ per-BUCKET versioned stats dirs:
                                    term -> global df, cf
+        term_stats/delta/v00000009/ a driver mutation's signed stats
+                                   rows of every bucket, one file
         index_meta/v00000007/      single-row parquet mirror of stats
       checkpoints/       per-shard build lineage rows (resumability)
       segments/          resumable-build staging (not snapshot-tracked)
@@ -35,16 +40,36 @@ Write protocol (single writer, any number of readers):
      they produce into NEW immutable version dirs; tables they do not
      touch keep the parent manifest's pointers (a mutation that
      rewrites 3 of 64 posting buckets shares the other 61 dirs with
-     its parent — pointer copy, zero data copy). In v4 EVERY big table
-     is partitioned this way — postings by term bucket, docs by
-     doc-range group, term_stats by term bucket — so a mutation commit
-     is O(changed partitions), never O(corpus): a 50-doc upsert
-     re-versions the handful of doc groups and term buckets its ids
-     and terms land in, and nothing else is read, written, or listed.
+     its parent — pointer copy, zero data copy). EVERY big table is
+     partitioned this way — postings by term bucket, docs by doc-range
+     group, term_stats by term bucket — so a mutation commit is
+     O(changed partitions), never O(corpus): a 50-doc upsert
+     re-versions the handful of doc groups its ids land in and appends
+     one delta dir per table to the chains of the term buckets its
+     terms land in, and nothing else is read, written, or listed.
   2. ``commit()`` writes the manifest JSON, then atomically replaces
      ``CURRENT``. A crash anywhere before that leaves the previous
      snapshot fully intact (orphan version dirs are ignored and later
      reclaimed by :meth:`IndexCatalog.vacuum`).
+
+Delta chains: a bucket's pointer is one dir or a chain of dirs that
+readers union. Builds and compactions write one dir per bucket (the
+base layout); the Spark append path appends one dir per touched
+bucket; a driver mutation (fastpath.py) writes its postings delta and
+its signed term_stats delta as ONE file each, in a shared
+``delta/v<N>`` dir appended to the chain of every bucket that has rows
+in it (and of no other). So a chain dir may hold several buckets'
+rows, and readers keep one rule: resolve dirs through the manifest
+(each dir once, :meth:`IndexCatalog.part_dirs`), then select rows by
+the ``bucket`` data column (the Spark ``postings``/``term_stats``
+readers when given buckets, the driver compaction's split) or by their
+(field, term) pairs (every term-keyed read, whose terms fix their
+buckets). That rule holds because a shared dir stays in the chain of
+every bucket it has rows of until it leaves all of them: a writer that
+replaces one such chain (compaction, a rewrite-mode mutation) replaces
+every one (:meth:`IndexCatalog.shared_holders`). Otherwise a query
+reaching the dir through one bucket's chain would read another
+bucket's superseded rows.
 
 Readers resolve paths through a manifest. :meth:`pin` freezes a reader
 on the snapshot that was current at pin time, so long-running queries
@@ -56,7 +81,9 @@ Bucket pruning: the query side computes the term's bucket on the
 driver (crc32 — same polynomial as Spark's ``F.crc32``) and reads ONLY
 those buckets' live version dirs — directory-level pruning that never
 even lists the other buckets; parquet row-group min/max on ``term``
-prunes within a bucket (rows are written term-sorted).
+prunes within a file (rows are written term-sorted, and a shared
+delta file is cut into row groups of at most
+:data:`DELTA_ROW_GROUP_BYTES` at term boundaries).
 
 Driver-side reads: the same pruning runs from the parquet footers
 alone (:class:`FooterRead`). A read whose selected row groups hold
@@ -76,7 +103,7 @@ through :meth:`IndexCatalog.manifest` first. The cache holds at most
 groups go first) and takes a lock, since REST searches share one
 engine without an index lock. Unpinned catalogs (mutations, builds,
 compaction, store helpers) cache no row group, so compaction's memory
-stays bounded by one bucket.
+stays bounded by one bucket plus the shared deltas of its chains.
 """
 
 from __future__ import annotations
@@ -350,6 +377,10 @@ def _pair_mask(pairs: list[tuple[str, str]]) -> Callable[[pa.Table], Any]:
     return where
 
 
+_PARQUET_OPTS = dict(compression="zstd", compression_level=3,
+                     use_dictionary=False, store_schema=False)
+
+
 def write_part(dst_dir: str, table: pa.Table) -> None:
     """One driver-side version-dir write: clobber a crashed prior
     attempt, then write ``table`` as a single file: zstd at level 3 (the
@@ -365,11 +396,83 @@ def write_part(dst_dir: str, table: pa.Table) -> None:
     shutil.rmtree(dst_dir, ignore_errors=True)
     os.makedirs(dst_dir, exist_ok=True)
     pq.write_table(table, os.path.join(dst_dir, "part-0.parquet"),
-                   compression="zstd", compression_level=3,
-                   use_dictionary=False, store_schema=False)
+                   **_PARQUET_OPTS)
 
 
-LAYOUT_VERSION = 4
+def write_delta_part(dst_dir: str, table: pa.Table) -> None:
+    """:func:`write_part` for a shared delta (rows of several buckets,
+    sorted by term): the file is cut into row groups of about
+    :data:`DELTA_ROW_GROUP_BYTES` at term boundaries, so a term lookup
+    selects at most one row group of it."""
+    shutil.rmtree(dst_dir, ignore_errors=True)
+    os.makedirs(dst_dir, exist_ok=True)
+    with pq.ParquetWriter(os.path.join(dst_dir, "part-0.parquet"),
+                          table.schema, **_PARQUET_OPTS) as w:
+        off = 0
+        for n in _term_row_groups(table):
+            w.write_table(table.slice(off, n), row_group_size=n)
+            off += n
+
+
+# Row-group size of a shared delta file (arrow bytes of its rows; a
+# row group ends at the first term boundary at or past it). A term
+# lookup reads one row group of the file, so the cut must stay well
+# below a per-bucket share of a large delta, while a delta of a
+# REST-sized batch stays one row group: every extra row group costs its
+# write and footer (a 3,164-row delta written as 1 row group: 5.0 ms
+# and 94 KB; as 17: 16.3 ms and 175 KB).
+DELTA_ROW_GROUP_BYTES = 1 << 20
+
+
+def _row_nbytes(tab: pa.Table) -> np.ndarray:
+    """Approximate arrow bytes of each row: the value bytes of its
+    ``list<binary>`` cells plus an even share of every other column."""
+    out = np.zeros(tab.num_rows, np.int64)
+    rest = 0
+    for col in tab.columns:
+        if (pa.types.is_list(col.type)
+                and pa.types.is_binary(col.type.value_type)):
+            lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy()
+            cum = np.concatenate(([0], np.cumsum(pc.binary_length(
+                pc.list_flatten(col)).to_numpy(), dtype=np.int64)))
+            ends = np.cumsum(lens)
+            out += cum[ends] - cum[ends - lens]
+        else:
+            rest += col.nbytes
+    return out + rest // max(1, tab.num_rows)
+
+
+def _term_row_groups(tab: pa.Table) -> list[int]:
+    """Row counts of the row groups of a term-sorted ``tab``: each
+    group ends at the first term boundary where its rows reach
+    :data:`DELTA_ROW_GROUP_BYTES`."""
+    n = tab.num_rows
+    if n < 2:
+        return [n] if n else []
+    term = tab["term"]
+    starts = np.flatnonzero(np.concatenate(([True], pc.not_equal(
+        term.slice(1), term.slice(0, n - 1)).to_numpy())))
+    # bytes of the rows before each term's first row
+    before = np.concatenate(([0], np.cumsum(_row_nbytes(tab))))[starts]
+    cuts, i = [0], 0
+    while True:
+        i = int(np.searchsorted(before, before[i] + DELTA_ROW_GROUP_BYTES))
+        if i >= starts.size:
+            return np.diff(cuts + [n]).tolist()
+        cuts.append(int(starts[i]))
+
+
+LAYOUT_VERSION = 5
+
+# name of the shared delta dir under data/<table>/ (data/<table>/delta/v<N>)
+DELTA_DIR = "delta"
+
+
+def is_shared_dir(path: str) -> bool:
+    """A shared delta version dir (``.../<table>/delta/v<N>``), which
+    may hold rows of several buckets."""
+    return os.path.basename(os.path.dirname(os.path.normpath(path))) \
+        == DELTA_DIR
 
 # partitioned snapshot tables: manifest entry {part_key: version_dir};
 # prefix/width name the partition dirs (data/<table>/<prefix><key>/v<N>)
@@ -394,6 +497,29 @@ def _snap_name(snapshot_id: int) -> str:
 def _entry_dirs(v) -> list[str]:
     """A partition pointer is one dir (str) or a delta chain (list)."""
     return [v] if isinstance(v, str) else list(v)
+
+
+def _part_dirs(index_dir: str, pmap: dict, keys=None) -> list[str]:
+    """Absolute dirs of the partitions ``keys`` (all when None) of one
+    manifest table map, in key then chain order, each dir ONCE: a shared
+    delta dir sits in the chains of several buckets."""
+    ks = (sorted(pmap, key=int) if keys is None
+          else [str(k) for k in sorted({int(k) for k in keys})
+                if str(k) in pmap])
+    return [os.path.join(index_dir, d) for d in dict.fromkeys(
+        d for k in ks for d in _entry_dirs(pmap[k]))]
+
+
+def _manifest_dirs(tables: dict) -> set[str]:
+    """Every version dir (relative) a manifest's tables reference."""
+    out: set[str] = set()
+    for v in tables.values():
+        if isinstance(v, dict):
+            for vv in v.values():
+                out.update(_entry_dirs(vv))
+        else:
+            out.add(v)
+    return out
 
 
 class LayoutVersionError(RuntimeError):
@@ -470,12 +596,23 @@ class PendingSnapshot:
         pointer chain instead of replacing it — the O(batch) mutation
         form (scorch's segment append): readers union the chain's
         dirs; a later consolidation (adopt_part) collapses it."""
-        cur = self.tables[table].get(str(key))
-        chain = [] if cur is None else _entry_dirs(cur)
-        rel = self.part_rel(table, key)
-        if rel not in chain:
-            chain.append(rel)
-        self.tables[table][str(key)] = chain if len(chain) > 1 else rel
+        return self._append(table, [key], self.part_rel(table, key))
+
+    def adopt_delta(self, table: str, keys) -> str:
+        """APPEND this snapshot's one SHARED delta dir
+        (``data/<table>/delta/v<N>``, holding rows of every partition
+        in ``keys``) to each of those partitions' chains and return its
+        absolute path — a driver mutation's single file per table."""
+        return self._append(table, keys, os.path.join(
+            "data", table, DELTA_DIR, f"v{self.snapshot_id:08d}"))
+
+    def _append(self, table: str, keys, rel: str) -> str:
+        for key in keys:
+            cur = self.tables[table].get(str(key))
+            chain = [] if cur is None else _entry_dirs(cur)
+            if rel not in chain:
+                chain.append(rel)
+            self.tables[table][str(key)] = chain if len(chain) > 1 else rel
         return os.path.join(self.catalog.index_dir, rel)
 
     def drop_part(self, table: str, key: int) -> None:
@@ -489,7 +626,8 @@ class PendingSnapshot:
         """Re-adopt THIS snapshot's partition dirs already on disk —
         the resumable build's recovery path: an interrupted run's
         version dirs (written, never committed) are found by scanning
-        ``data/<table>/<prefix>*/v<this snapshot id>``."""
+        ``data/<table>/<prefix>*/v<this snapshot id>`` (the shared
+        ``delta`` dir, which only mutations write, is not a partition)."""
         prefix, _ = PART_TABLES[table]
         root = os.path.join(self.catalog.index_dir, "data", table)
         self.tables[table] = {}
@@ -498,7 +636,7 @@ class PendingSnapshot:
             return found
         vname = f"v{self.snapshot_id:08d}"
         for name in os.listdir(root):
-            if not name.startswith(prefix):
+            if not name.startswith(prefix) or name == DELTA_DIR:
                 continue
             try:
                 key = int(name[len(prefix):])
@@ -528,13 +666,9 @@ class PendingSnapshot:
     def part_dirs(self, table: str, keys=None) -> list[str]:
         """Resolve (possibly not-yet-committed) partition dirs — stats
         passes inside a build/mutation read through the pending state.
-        A delta chain resolves to all its dirs in append order."""
-        pmap = self.tables[table]
-        ks = (sorted(pmap, key=int) if keys is None
-              else [str(k) for k in sorted({int(k) for k in keys})
-                    if str(k) in pmap])
-        return [os.path.join(self.catalog.index_dir, d)
-                for k in ks for d in _entry_dirs(pmap[k])]
+        A delta chain resolves to all its dirs in append order; a shared
+        dir is listed once."""
+        return _part_dirs(self.catalog.index_dir, self.tables[table], keys)
 
     def postings_dirs(self, buckets=None) -> list[str]:
         return self.part_dirs("postings", buckets)
@@ -563,6 +697,11 @@ class PendingSnapshot:
         staging v{N} dirs — the loser must treat its version dirs as
         orphaned and replay; vacuum reclaims them.)"""
         cat = self.catalog
+        vname = f"v{self.snapshot_id:08d}"
+        metrics = {**(metrics or {}), "files_written": sum(
+            len(glob.glob(os.path.join(cat.index_dir, d, "*.parquet")))
+            for d in _manifest_dirs(self.tables)
+            if os.path.basename(d) == vname)}
         live = cat.current_snapshot_id()
         expected = self.parent["snapshot_id"] if self.parent else None
         if live != expected:
@@ -576,7 +715,7 @@ class PendingSnapshot:
             "layout_version": LAYOUT_VERSION,
             "operation": operation,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "metrics": metrics or {},
+            "metrics": metrics,
             "tables": self.tables,
             "meta": meta,
         }
@@ -741,7 +880,9 @@ class IndexCatalog:
         the unit of incremental replication: a follower holding
         ``from_id`` fetches exactly ``changed`` + ``added`` dirs (plus
         the manifest) to reach ``to_id``; at 10^12 docs a sync batch
-        diff is a handful of bucket dirs, not the index."""
+        diff is a handful of bucket dirs, not the index. Each dir is
+        listed once, however many buckets share it, and ``removed``
+        holds only dirs ``to`` references nowhere."""
         a, b = self.read_manifest(from_id), self.read_manifest(to_id)
 
         def flat(m):
@@ -770,6 +911,9 @@ class IndexCatalog:
                 out["changed"] += sorted(vb - va)
                 out["unchanged"] += sorted(vb & va)
                 out["removed"] += sorted(va - vb)
+        out = {k: list(dict.fromkeys(v)) for k, v in out.items()}
+        live = _manifest_dirs(b["tables"])
+        out["removed"] = [d for d in out["removed"] if d not in live]
         return out
 
     def begin(self) -> PendingSnapshot:
@@ -808,12 +952,7 @@ class IndexCatalog:
         referenced: set[str] = set()
         for m in manifests:
             if m["snapshot_id"] in keep:
-                for v in m["tables"].values():
-                    if isinstance(v, dict):
-                        for vv in v.values():
-                            referenced.update(_entry_dirs(vv))
-                    else:
-                        referenced.add(v)
+                referenced |= _manifest_dirs(m["tables"])
             else:
                 os.remove(os.path.join(
                     self.snapshots_dir, _snap_name(m["snapshot_id"]) + ".json"))
@@ -837,8 +976,9 @@ class IndexCatalog:
                     deleted.append(full)
 
         def reclaim_partitioned(table: str) -> None:
-            """data/<table>/: partition subdirs holding v* dirs, plus
-            crashed writers' .staging-v* dirs."""
+            """data/<table>/: partition subdirs and the shared delta
+            dir, each holding v* dirs, plus crashed writers' .staging-v*
+            dirs."""
             tdir = os.path.join(data, table)
             if not os.path.isdir(tdir):
                 return
@@ -903,14 +1043,12 @@ class IndexCatalog:
                             self.manifest()["tables"]["index_meta"])
 
     def part_dirs(self, table: str, keys=None) -> list[str]:
-        """Live version dir per partition (optionally restricted) — the
-        unit of directory pruning AND of mutation copy-on-write."""
-        pmap = self.manifest()["tables"][table]
-        ks = (sorted(pmap, key=int) if keys is None
-              else [str(k) for k in sorted({int(k) for k in keys})
-                    if str(k) in pmap])
-        return [os.path.join(self.index_dir, d)
-                for k in ks for d in _entry_dirs(pmap[k])]
+        """Live version dirs of the partitions (optionally restricted)
+        — the unit of directory pruning AND of mutation copy-on-write.
+        Each dir once; a shared delta dir also holds rows of partitions
+        outside ``keys``, so a reader selects by ``bucket`` or term."""
+        return _part_dirs(self.index_dir, self.manifest()["tables"][table],
+                          keys)
 
     def postings_dirs(self, buckets=None) -> list[str]:
         return self.part_dirs("postings", buckets)
@@ -979,11 +1117,24 @@ class IndexCatalog:
 
     def postings(self, spark: SparkSession, buckets=None) -> DataFrame:
         """Postings scan over the live (or pinned) version dirs of the
-        requested buckets — unrequested buckets are never even listed."""
-        dirs = self.postings_dirs(buckets)
+        requested buckets — unrequested buckets' own dirs are never
+        even listed; the ``bucket`` filter drops their rows from the
+        shared delta dirs."""
+        return self._bucket_scan(spark, self.postings_dirs(buckets),
+                                 POSTINGS_SCHEMA, buckets)
+
+    @staticmethod
+    def _bucket_scan(spark: SparkSession, dirs: list[str], ddl: str,
+                     buckets) -> DataFrame:
+        # explicit schema: an empty index (or an emptied bucket) has
+        # zero part files and inference would fail on bare _SUCCESS
         if not dirs:
-            return spark.createDataFrame([], POSTINGS_SCHEMA)
-        return spark.read.schema(POSTINGS_SCHEMA).parquet(*dirs)
+            return spark.createDataFrame([], ddl)
+        df = spark.read.schema(ddl).parquet(*dirs)
+        if buckets is None:
+            return df
+        return df.filter(F.col("bucket").isin(sorted({int(b)
+                                                      for b in buckets})))
 
     @staticmethod
     def _pair_filter(pairs: list[tuple[str, str]]):
@@ -1035,6 +1186,15 @@ class IndexCatalog:
         self._tomb_cache = (rel, out)
         return out
 
+    def shared_holders(self, table: str) -> set[int]:
+        """Partitions whose chain holds a shared delta dir. Readers rely
+        on a shared dir sitting in the chain of EVERY partition it has
+        rows of (its rows of a partition are live while that partition
+        references it), so a writer that replaces the chain of one
+        holder (compaction, rewrite-mode mutation) replaces them all."""
+        return {int(k) for k, v in self.manifest()["tables"][table].items()
+                if any(is_shared_dir(d) for d in _entry_dirs(v))}
+
     def delta_depth(self, table: str = "postings") -> int:
         """Longest partition pointer chain — the compaction trigger."""
         pmap = self.manifest()["tables"][table]
@@ -1044,15 +1204,12 @@ class IndexCatalog:
         pmap = self.manifest()["tables"]["term_stats"]
         items = (pmap.values() if buckets is None else
                  [pmap[str(b)] for b in buckets if str(b) in pmap])
-        return any(isinstance(v, list) for v in items)
+        # a shared dir holds signed delta rows even as a lone pointer
+        return any(isinstance(v, list) or is_shared_dir(v) for v in items)
 
     def term_stats(self, spark: SparkSession, buckets=None) -> DataFrame:
-        # explicit schema: an empty index (or an emptied bucket) has
-        # zero part files and inference would fail on bare _SUCCESS
-        dirs = self.term_stats_dirs(buckets)
-        if not dirs:
-            return spark.createDataFrame([], TERM_STATS_SCHEMA)
-        raw = spark.read.schema(TERM_STATS_SCHEMA).parquet(*dirs)
+        raw = self._bucket_scan(spark, self.term_stats_dirs(buckets),
+                                TERM_STATS_SCHEMA, buckets)
         if not self._stats_dirty(buckets):
             return raw
         # append-mode delta chains: a term's stats are the SUM of its
@@ -1129,9 +1286,10 @@ class IndexCatalog:
 
     def postings_read(self, pairs: list[tuple[str, str]],
                       columns: list[str]) -> FooterRead:
-        """:meth:`postings_for_terms` from the footers: the bucket dirs
-        of every delta chain, the row groups whose term range covers a
-        query term."""
+        """:meth:`postings_for_terms` from the footers: the dirs of the
+        query terms' bucket chains, the row groups whose term range
+        covers a query term, the rows of the query's (field, term)
+        pairs (a shared delta dir holds other buckets' rows too)."""
         cfg = self.load_config()
         terms = sorted({t for _, t in pairs})
         dirs = self.postings_dirs({term_bucket(t, cfg.n_term_buckets)

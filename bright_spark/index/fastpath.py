@@ -16,11 +16,17 @@ job.
 This module runs the whole mutation commit with pyarrow: the batch is
 tokenized once (its partial rows give both the postings delta and each
 doc's ``doc_len``), the partial rows go through the same merge kernel
-as arrow record batches, and the postings, signed stats and docs
-tables are sorted and split per bucket or group as arrow tables — same
-file layout and sort orders, same manifest bookkeeping — bit-identical
-query results (pinned by the fast==distributed pytest in
-test_mutations.py and the ft_mutate_* oracle gate). Eligibility is decided BEFORE anything is written, so
+as arrow record batches, and the docs table is split per doc-range
+group as before. The postings delta and the signed stats delta are
+each written as ONE term-sorted file in a shared ``delta/v<N>`` dir
+(catalog layout v5), appended to the chain of every bucket with rows
+in it: a 20-doc upsert against a 16-bucket index commits 5 files, not
+35, and a delete 4, not 19 (the manifest's ``files_written``). Chains
+grow exactly as they did with one delta dir per touched bucket, so
+``delta_depth`` and the auto-compaction trigger are unchanged, and so
+are the rows: bit-identical query results (pinned by the
+fast==distributed pytest in test_fastpath.py and the ft_mutate_*
+oracle gate). Eligibility is decided BEFORE anything is written, so
 an ineligible call falls back to the distributed path with zero side
 effects; above the size/byte thresholds the distributed path takes
 over unchanged, so the 10^12-doc story is the same commit protocol at
@@ -42,6 +48,7 @@ from bright_spark.index import codec
 from bright_spark.index.catalog import (
     TERM_STATS_ARROW,
     term_bucket,
+    write_delta_part,
     write_part,
 )
 
@@ -97,7 +104,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     success (committed, or a provable no-op); False when the index or
     batch is ineligible — the caller then runs the distributed path.
     Every ineligibility exit happens BEFORE the first write."""
-    from bright_spark.index.builder import _make_merge_fn, _slices_by
+    from bright_spark.index.builder import _make_merge_fn
     cat = mut.catalog
     cfg = mut.config
     try:
@@ -233,7 +240,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     partials_old = None
     if replaced_tab is not None:
         partials_old = b._partials(replaced_tab)
-    post_by_bucket: dict[int, pa.Table] = {}
+    post = None
     if partials_new is not None:
         mf = _make_merge_fn(cfg.block_size, cfg.n_term_buckets,
                             bool(cfg.store_positions),
@@ -241,15 +248,13 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
         merged = list(mf(partials_new.to_batches()))
         if merged:
             post = pa.Table.from_batches(merged).sort_by(
-                [("bucket", "ascending"), ("term", "ascending"),
-                 ("field", "ascending"), ("range_id", "ascending")])
-            for bkt, sub in _slices_by(post, post["bucket"].to_numpy()):
-                post_by_bucket[bkt] = sub
+                [("term", "ascending"), ("field", "ascending"),
+                 ("range_id", "ascending")])
 
     signed = [s for s in (_signed_stats(partials_old, -1),
                           _signed_stats(partials_new, 1))
               if s is not None]
-    stats_by_bucket: dict[int, pa.Table] = {}
+    stats = None
     field_delta: dict[str, int] = {}
     if signed:
         allsigned = pa.concat_tables(signed)
@@ -267,10 +272,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
             stats = pa.Table.from_arrays(
                 [delta["field"], delta["term"], delta["df_sum"],
                  delta["cf_sum"], bucket], schema=TERM_STATS_ARROW
-            ).sort_by([("bucket", "ascending"), ("term", "ascending"),
-                       ("field", "ascending")])
-            for bkt, sub in _slices_by(stats, stats["bucket"].to_numpy()):
-                stats_by_bucket[bkt] = sub
+            ).sort_by([("term", "ascending"), ("field", "ascending")])
 
     # ---- writes (all artifacts validated; from here the commit
     # protocol is identical to the distributed path's)
@@ -279,10 +281,16 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
         write_part(pending.adopt_part("docs", g), tab)
     for g in set(groups) - set(out_docs):
         pending.drop_part("docs", g)
-    for bkt, tab in post_by_bucket.items():
-        write_part(pending.adopt_part_delta("postings", bkt), tab)
-    for bkt, tab in stats_by_bucket.items():
-        write_part(pending.adopt_part_delta("term_stats", bkt), tab)
+    # one shared delta file per table, chained into every bucket it
+    # holds rows of
+    post_buckets = []
+    if post is not None:
+        post_buckets = np.unique(post["bucket"].to_numpy()).tolist()
+        write_delta_part(pending.adopt_delta("postings", post_buckets), post)
+    if stats is not None:
+        write_delta_part(pending.adopt_delta(
+            "term_stats", np.unique(stats["bucket"].to_numpy()).tolist()),
+            stats)
     merge_tombstones(pending, present_raw, old_tomb)
 
     n_changed = int(ch_ids.size if pdf is not None else del_ids.size)
@@ -304,7 +312,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
         metrics={"n_changed": n_changed,
                  "docs_groups_rewritten": len(out_docs),
                  "mode": "append-fast",
-                 "buckets_appended": len(post_by_bucket),
+                 "buckets_appended": len(post_buckets),
                  "tombstones_added": n_present})
     if (mut.compact_threshold
             and max(cat.delta_depth("postings"),

@@ -20,8 +20,10 @@ the snapshot catalog, so a mutation commit is **O(batch)**:
   append mode (default for broadcast-sized change sets):
     docs        only the doc-range GROUPS containing changed ids are
                 re-versioned (copy-on-write; new version dirs)
-    postings    the new batch's entries merge into small DELTA version
-                dirs APPENDED to their buckets' pointer chains — the
+    postings    the new batch's entries merge into a small DELTA
+                APPENDED to the pointer chains of the buckets it holds
+                rows of — one shared term-sorted file on the driver path
+                (fastpath.py), one dir per bucket on the Spark path; the
                 existing postings are never read, decoded or rewritten
     tombstones  replaced/deleted ids land in a tiny (doc_id, ver)
                 table; query kernels mask entries written before their
@@ -34,8 +36,10 @@ the snapshot catalog, so a mutation commit is **O(batch)**:
 
   consolidation (``compact()``, auto-triggered when a pointer chain
   exceeds ``compact_threshold``): scorch's background merger as an
-  explicit, amortized operator. Targets: the chained buckets, or every
-  bucket when tombstones exist. Selection: every row of a chained
+  explicit, amortized operator. Targets: the chained buckets plus every
+  bucket whose pointer holds a shared driver delta dir (all of a shared
+  dir's holders are consolidated together; catalog.py, delta chains),
+  or every bucket when tombstones exist. Selection: every row of a chained
   bucket, plus, when tombstones exist, the target rows whose
   ``range_id`` holds a tombstoned id. Selected rows decode (one bulk
   varint pass per column, read straight from the arrow buffers, dead
@@ -43,24 +47,30 @@ the snapshot catalog, so a mutation commit is **O(batch)**:
   other rows are copied unchanged, ``ver`` included. Each target
   bucket becomes one version dir, stats chains collapse to their
   summed rows, the tombstone table clears. Between
-  compactions every file in a bucket chain stays term-sorted and
-  bounded (files_per_bucket per dir), so reads stay pruned.
+  compactions every file in a bucket chain stays term-sorted (a shared
+  delta is cut into row groups at term boundaries) and each commit adds
+  one dir to a chain, so reads stay pruned.
   Two executions, one rule: when the footer-reported bytes of the
-  target postings dirs and chained term_stats dirs fit
-  ``catalog.fits_local`` (the read path's gate), the driver reads them
-  with pyarrow, feeds the decoded entries straight into the merge
-  kernel's sort and writes one sorted file per bucket with zero Spark
-  jobs; otherwise the same selection runs as Spark stages (a range-id
-  plan literal up to 1024 ranges, every row of the targets above that)
-  whose decode and merge kernels run through ``mapInArrow``. The
-  commit's metrics say which (``mode``: ``driver`` or ``spark``).
+  target postings dirs and chained term_stats dirs (each file once,
+  however many chains share its dir) fit ``catalog.fits_local`` (the
+  read path's gate), the driver reads each shared delta file once and
+  splits it by ``bucket``, reads each bucket's own dirs with pyarrow,
+  feeds the decoded entries straight into the merge kernel's sort and
+  writes one sorted file per bucket with zero Spark jobs; otherwise the
+  same selection runs as Spark stages over the ``bucket``-filtered
+  scan (a range-id plan literal up to 1024 ranges, every row of the
+  targets above that) whose decode and merge kernels run through
+  ``mapInArrow``. The commit's metrics say which (``mode``: ``driver``
+  or ``spark``) and how many files it wrote (``files_written``).
 
   rewrite mode (forced via ``mode="rewrite"``, and the automatic path
   for beyond-broadcast change sets): the pre-append behavior — affected
   buckets' touched rows decode (restricted to the CHANGED doc ranges;
   other rows are a JVM passthrough), changed ids drop ver-aware against
   existing tombstones (no resurrection), and those buckets consolidate
-  in place. Stats maintenance is the same signed-delta path.
+  in place — together with every other holder of a shared delta dir
+  when one of them is affected. Stats maintenance is the same
+  signed-delta path.
 
 Everything becomes visible in ONE atomic manifest commit (catalog.py
 write protocol) — a crash mid-mutation leaves the previous snapshot
@@ -74,7 +84,7 @@ both modes, including across compaction.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -94,6 +104,7 @@ from bright_spark.index.builder import (
     _make_tokenize_fn,
     _make_tokenize_partials_fn,
     _merge_runs,
+    _slices_by,
     stage_docs_write,
     stage_postings_write,
 )
@@ -103,6 +114,7 @@ from bright_spark.index.catalog import (
     TERM_STATS_ARROW,
     IndexCatalog,
     fits_local,
+    is_shared_dir,
     term_bucket_col,
     write_part,
 )
@@ -113,6 +125,14 @@ _DECODE_COLS = ["field", "term", "range_id",
 
 _EMPTY = np.empty(0, dtype=np.int64)
 _NEVER_LIVE = np.iinfo(np.int64).max
+
+
+def last_row_per_key(rows: list[dict], key_cols) -> list[dict]:
+    """``rows`` with one row per value of ``key_cols``: the LAST row of
+    each key, as a Bleve batch keeps a later update of an id over an
+    earlier one in the same batch."""
+    return list({tuple(r.get(c) for c in key_cols): r
+                 for r in rows}.values())
 
 
 def _kill_set(tomb=None, drop_ids=None):
@@ -425,7 +445,14 @@ class IndexMutator:
         same kernels (one probe job total — fastpath.py); otherwise the
         tokenized batch joins the current docs table for id assignment,
         its lineage truncated (localCheckpoint) before _apply rewrites
-        that table."""
+        that table.
+
+        Contract: ``updates`` holds at most one row per document key
+        (the id column, or the natural key columns). It is not checked
+        here, since that would cost a Spark job per batch: a batch that
+        repeats a key fails with ``ValueError`` when the rows share a
+        term. :meth:`upsert_rows` accepts repeated keys (last row
+        wins)."""
         if self._fast_enabled() and self.extra.get("id_col"):
             head = updates.limit(self.fast_threshold + 1).toPandas()
             if len(head) <= self.fast_threshold:
@@ -437,9 +464,15 @@ class IndexMutator:
 
     def upsert_rows(self, rows: list[dict]) -> None:
         """Upsert from driver-resident records (the REST/store path):
-        in the fast regime this never touches Spark at all."""
+        in the fast regime this never touches Spark at all. A batch
+        that repeats a document key keeps the LAST row of each key, as
+        a Bleve batch does (a later update of an id in the same batch
+        overrides the earlier one)."""
         if not rows:
             return
+        rows = last_row_per_key(rows, [self.extra["id_col"]]
+                                if self.extra.get("id_col")
+                                else self._key_cols())
         if (self._fast_enabled() and self.extra.get("id_col")
                 and len(rows) <= self.fast_threshold):
             from bright_spark.index.fastpath import apply_fast
@@ -713,6 +746,11 @@ class IndexMutator:
             r["b"] for r in terms_df.select(
                 term_bucket_col(F.col("term"), cfg.n_term_buckets).alias("b"))
             .distinct().collect())
+        holders = self.catalog.shared_holders("postings")
+        if holders & set(affected_buckets):
+            # replacing one holder's chain replaces them all (see
+            # IndexCatalog.shared_holders)
+            affected_buckets = sorted(set(affected_buckets) | holders)
 
         in_buckets = self.catalog.postings(spark, buckets=affected_buckets)
         if changed_ranges is not None and len(changed_ranges) <= 1024:
@@ -797,19 +835,23 @@ class IndexMutator:
                           if isinstance(v, list))
         if tomb is None and not chained and not schained:
             return  # already consolidated
+        # every holder of a shared delta dir is consolidated with the
+        # chains (see IndexCatalog.shared_holders)
         targets = (sorted(int(k) for k in pmap) if tomb is not None
-                   else chained)
+                   else sorted(set(chained) | cat.shared_holders("postings")))
+        schained = sorted(set(schained) | cat.shared_holders("term_stats"))
         range_bits = int(old_meta.get("range_bits") or cfg.range_bits or 0)
         tranges = (np.unique(tomb[0] >> np.int64(range_bits))
                    if tomb is not None else _EMPTY)
-        posts = {b: cat._footer_read(cat.postings_dirs([b]), "term", None,
-                                     POSTINGS_ARROW) for b in targets}
-        stats = {b: cat._footer_read(cat.term_stats_dirs([b]), "term", None,
-                                     TERM_STATS_ARROW) for b in schained}
-        nbytes = sum(rd.nbytes for rd in [*posts.values(), *stats.values()])
+        # the gate counts each (file, row group) of the target chains
+        # once, however many buckets share its dir
+        nbytes = (cat._footer_read(cat.postings_dirs(targets), "term", None,
+                                   POSTINGS_ARROW).nbytes
+                  + cat._footer_read(cat.term_stats_dirs(schained), "term",
+                                     None, TERM_STATS_ARROW).nbytes)
         if fits_local(nbytes):
             mode = "driver"
-            self._compact_driver(pending, posts, stats, tomb, chained,
+            self._compact_driver(pending, targets, schained, tomb, chained,
                                  tranges)
         else:
             mode = "spark"
@@ -824,19 +866,24 @@ class IndexMutator:
             "stats_buckets_compacted": len(schained),
             "tombstones_cleared": int(tomb[0].size) if tomb else 0})
 
-    def _compact_driver(self, pending, posts: dict, stats: dict, tomb,
-                        chained: list[int], tranges: np.ndarray) -> None:
+    def _compact_driver(self, pending, targets: list[int],
+                        schained: list[int], tomb, chained: list[int],
+                        tranges: np.ndarray) -> None:
         """:meth:`compact` with pyarrow reads and writes, one bucket at a
-        time (driver memory is bounded by the largest bucket): the
-        selected rows' live entries decode straight from the arrow
-        columns into the merge kernel's sort (no partial rows in
-        between), and each bucket lands as one sorted file."""
+        time: each shared delta file of the target chains is read once
+        and split by ``bucket`` up front, each bucket's own dirs when
+        its turn comes (driver memory is bounded by the largest bucket
+        plus those deltas). The selected rows' live entries decode
+        straight from the arrow columns into the merge kernel's sort
+        (no partial rows in between), and each bucket lands as one
+        sorted file."""
         cfg = self.config
         kill = _kill_set(tomb)
         # no plan literal here, so no cap on the range list
         ranges = pa.array(tranges, pa.int64())
-        for b, rd in posts.items():
-            tab = rd.read()
+        posts = self._bucket_reads("postings", targets, POSTINGS_ARROW)
+        for b in targets:
+            tab = posts(b)
             if b in chained:
                 touched, parts = tab, []
             else:
@@ -855,13 +902,35 @@ class IndexMutator:
                      ("range_id", "ascending")]))
             else:
                 pending.drop_part("postings", b)
-        for b, rd in stats.items():
-            net = IndexCatalog._net_stats(rd.read(), dirty=True)
+        stats = self._bucket_reads("term_stats", schained, TERM_STATS_ARROW)
+        for b in schained:
+            net = IndexCatalog._net_stats(stats(b), dirty=True)
             if net.num_rows:
                 write_part(pending.adopt_part("term_stats", b), net.sort_by(
                     [("term", "ascending"), ("field", "ascending")]))
             else:
                 pending.drop_part("term_stats", b)
+
+    def _bucket_reads(self, table: str, keys: list[int],
+                      schema: pa.Schema) -> Callable[[int], pa.Table]:
+        """Reader of one bucket's rows of ``table`` over its chain: the
+        shared delta dirs of all ``keys``' chains are read here, each
+        file once, and split by ``bucket``; the returned function reads
+        a bucket's own dirs and appends its share of those rows."""
+        cat = self.catalog
+        shared = [d for d in cat.part_dirs(table, keys) if is_shared_dir(d)]
+        tab = cat._footer_read(shared, "term", None, schema).read()
+        tab = tab.sort_by("bucket")  # _slices_by cuts runs of one key
+        split = dict(_slices_by(tab, tab["bucket"].to_numpy()))
+
+        def read(b: int) -> pa.Table:
+            own = [d for d in cat.part_dirs(table, [b])
+                   if not is_shared_dir(d)]
+            parts = [cat._footer_read(own, "term", None, schema).read()]
+            if b in split:
+                parts.append(split[b])
+            return pa.concat_tables(parts)
+        return read
 
     def _compact_spark(self, pending, tomb, targets: list[int],
                        chained: list[int], schained: list[int],

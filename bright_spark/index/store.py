@@ -285,6 +285,15 @@ class IndexStore:
                 build_kwargs["id_col"] = None
                 build_kwargs["key_cols"] = (pk,)
         build_kwargs.setdefault("lang_col", None)
+        key = ([build_kwargs["id_col"]] if build_kwargs.get("id_col")
+               else build_kwargs.get("key_cols"))
+        if rows is not None and key:
+            # a repeated key keeps its last row, as a later batch does
+            # (IndexMutator.upsert_rows)
+            from bright_spark.index.mutations import last_row_per_key
+            last = last_row_per_key(rows, key)
+            if len(last) < len(rows):
+                rows, docs = last, self.spark.createDataFrame(last)
         IndexBuilder(self.spark, cfg, self._index_dir(idx_id),
                      **build_kwargs)._build(docs, rows)
         with self._reg_lock:

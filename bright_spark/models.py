@@ -53,9 +53,13 @@ class IndexConfig:
     # being capped at n_term_buckets tasks, and no single parquet file
     # has to hold a whole bucket (a terabyte at 10^12 docs). Files are
     # deterministic doc-range slices (pmod(range_id, S)), each still
-    # term-sorted, so row-group min/max pruning is unchanged; file
-    # count per bucket is BOUNDED at S forever (mutations rewrite whole
-    # buckets) — the no-compaction invariant keeps holding.
+    # term-sorted, so row-group min/max pruning is unchanged. A build
+    # or compaction writes at most S files per bucket dir; between
+    # compactions each mutation commit appends one dir to a bucket's
+    # chain (S files from the Spark append path, or one shared file of
+    # the driver path holding every touched bucket's rows), so files
+    # per chain grow by one dir per commit, not per bucket, until the
+    # auto-compaction collapses the chain.
     files_per_bucket: int | None = None
     # docs-table copy-on-write group span: group = doc_id >>
     # docs_range_bits, one version dir per group (catalog layout v4).

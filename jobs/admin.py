@@ -6,7 +6,10 @@
 
 ``snapshots`` prints one JSON line per retained manifest (id, parent,
 operation, commit time, lineage metrics, corpus stats) — the ops view
-of the snapshot log. ``vacuum`` expires everything but the most recent
+of the snapshot log. Every commit's metrics carry ``files_written``,
+the parquet files of its new version dirs (a small driver upsert
+writes about 5), and a build's or compaction's ``mode`` (``driver``
+or ``spark``). ``vacuum`` expires everything but the most recent
 ``--keep-last`` snapshots and reclaims unreferenced version dirs +
 stale staging dirs, printing what it deleted. ``compact`` consolidates
 append-mode delta chains + tombstones into single version dirs (the
