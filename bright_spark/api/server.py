@@ -49,6 +49,12 @@ Metrics (main.go:210-213 registers fiberprometheus BEFORE auth): GET
 ``bright_spark_http_requests_total{method,route,status}`` with
 Fiber-style route patterns (``/indexes/:id/documents/:docid``), no
 auth required, mirroring the reference's scrape-without-auth order.
+Beside it, the store's read cache (``IndexStore.cache``):
+``bright_spark_read_cache_hits_total`` and
+``bright_spark_read_cache_misses_total`` count its lookups answered
+from memory and those that missed (read from disk, or derived from a
+resident footer), and the ``bright_spark_read_cache_bytes`` gauge is
+what it holds now.
 
 Wire safety bound: searches cap the result window at
 ``MAX_RESULT_WINDOW`` (offset+limit <= 10,000) with a 400 beyond it —
@@ -223,6 +229,17 @@ def make_handler(store: IndexStore, ingress_manager=None,
                 lines.append(
                     f'bright_spark_http_requests_total{{method="{m}"'
                     f',route="{r}",status="{s}"}} {n}')
+            cache = store.cache
+            for name, kind, what, v in (
+                    ("hits_total", "counter", "Read cache lookups "
+                     "answered from memory.", cache.hits),
+                    ("misses_total", "counter", "Read cache lookups "
+                     "that missed.", cache.misses),
+                    ("bytes", "gauge", "Bytes the read cache holds.",
+                     cache.nbytes)):
+                lines += [f"# HELP bright_spark_read_cache_{name} {what}",
+                          f"# TYPE bright_spark_read_cache_{name} {kind}",
+                          f"bright_spark_read_cache_{name} {v}"]
             body = ("\n".join(lines) + "\n").encode()
             self.send_response(200)
             self.send_header("Content-Type",

@@ -88,6 +88,7 @@ from bright_spark.index.catalog import (
     TERM_STATS_SCHEMA,
     IndexCatalog,
     PendingSnapshot,
+    RowGroupCache,
     _conform,
     fits_local_build,
     write_part,
@@ -590,10 +591,13 @@ class IndexBuilder:
         text_cols: tuple[str, ...] = (),
         n_build_partitions: int | None = None,
         filter_stopwords: bool = False,
+        cache: RowGroupCache | None = None,
     ):
+        """``cache``: the owning store's read cache, which a driver
+        build's commit publishes its files into (catalog.py)."""
         self.spark = spark
         self.config = config
-        self.catalog = IndexCatalog(index_dir)
+        self.catalog = IndexCatalog(index_dir, cache=cache)
         self.content_col = content_col
         self.key_cols = key_cols
         self.id_col = id_col
@@ -968,7 +972,7 @@ class IndexBuilder:
         - n_term_buckets: ~the build partition count (bounded [16, 256])
           so the bucket-partitioned postings write parallelizes.
         - docs_range_bits: docs-table CoW group span, ~one group per
-          build partition, spans bounded [2**12, 2**22]: small enough
+          build partition, spans bounded [2**10, 2**22]: small enough
           that a mutation's group rewrite stays proportional to its
           change set, large enough that the manifest's group map stays
           compact at 10^12 docs (~2.4e8/2**22 ≈ 60k entries).
@@ -1103,7 +1107,7 @@ class IndexBuilder:
         pending.reset_parts("docs")
         for g, part in _slices_by(
                 docs, ids_np >> np.int64(cfg.docs_range_bits)):
-            write_part(pending.adopt_part("docs", g), part)
+            write_part(pending.adopt_part("docs", g), part, pending)
 
         pending.tables["postings"] = {}
         pending.reset_parts("term_stats")
@@ -1113,7 +1117,7 @@ class IndexBuilder:
                 [("bucket", "ascending"), ("term", "ascending"),
                  ("field", "ascending"), ("range_id", "ascending")])
             for b, part in _slices_by(post, post["bucket"].to_numpy()):
-                write_part(pending.adopt_part("postings", b), part)
+                write_part(pending.adopt_part("postings", b), part, pending)
             agg = post.group_by(["bucket", "field", "term"]).aggregate(
                 [("df_chunk", "sum"), ("cf_chunk", "sum")])
             stats = pa.Table.from_arrays(
@@ -1123,7 +1127,8 @@ class IndexBuilder:
                 [("bucket", "ascending"), ("term", "ascending"),
                  ("field", "ascending")])
             for b, part in _slices_by(stats, stats["bucket"].to_numpy()):
-                write_part(pending.adopt_part("term_stats", b), part)
+                write_part(pending.adopt_part("term_stats", b), part,
+                           pending)
             tot = stats.group_by("field").aggregate([("cf", "sum")])
             field_tokens = dict(zip(tot["field"].to_pylist(),
                                     tot["cf_sum"].to_pylist()))

@@ -91,19 +91,37 @@ fewer than :data:`LOCAL_READ_MAX_BYTES` (footer-reported uncompressed
 bytes of the columns read) runs with pyarrow on the driver and starts
 no Spark job; a larger one goes through the Spark readers below.
 
-Row-group cache: a pinned catalog (:meth:`IndexCatalog.pin`, what every
-:class:`SearchEngine` and its planner share) keeps the row groups its
-driver-side reads load in a :class:`RowGroupCache`, so a repeated
-search reads no parquet. Reusing them is sound because a pinned reader
-only resolves committed version dirs, and their files are never
-rewritten; an expired snapshot still raises
+Read cache: a :class:`RowGroupCache` keeps, keyed by absolute file
+path, the row groups, footers and dir file lists driver-side reads
+load, so a repeated read touches no parquet. Reusing them is sound
+because readers only resolve committed version dirs, and their files
+are never rewritten; an expired snapshot still raises
 :class:`SnapshotExpiredError`, since every read resolves its dirs
-through :meth:`IndexCatalog.manifest` first. The cache holds at most
-:data:`LOCAL_READ_MAX_BYTES` of arrow bytes (least recently used row
-groups go first) and takes a lock, since REST searches share one
-engine without an index lock. Unpinned catalogs (mutations, builds,
-compaction, store helpers) cache no row group, so compaction's memory
-stays bounded by one bucket plus the shared deltas of its chains.
+through :meth:`IndexCatalog.manifest` first. Who owns one:
+
+- an :class:`IndexStore` owns ONE cache and hands it to the catalog of
+  every engine, mutator, build and compaction it runs. It is
+  write-through: a driver-side write (:func:`write_part`,
+  :func:`write_delta_part`, tombstones) stages its arrow table and the
+  footer the write returned in the :class:`PendingSnapshot`, and
+  :meth:`PendingSnapshot.commit` publishes them only after ``CURRENT``
+  flips, so a commit that loses a race (same-parent writers share
+  ``v<N>`` paths) or crashes publishes nothing. The store's next
+  engine, its next mutation's docs-group read and the auto-compaction
+  then read what the store wrote from memory. Removing an index dir
+  drops its entries (:meth:`RowGroupCache.drop`), since a re-created
+  index reuses its paths. Files other writers produced (Spark stages,
+  another process's mutator) are read through and kept.
+- a pinned catalog handed none (``SearchEngine(spark, dir)``) gets a
+  private one at :meth:`IndexCatalog.pin`.
+- any other catalog (a bare ``IndexMutator``, build, compaction or
+  store helper) has none and keeps no row group, so a compaction's
+  memory stays bounded by one bucket plus the shared deltas of its
+  chains.
+
+A cache holds at most :data:`LOCAL_READ_MAX_BYTES` (least recently
+used entries go first) and takes a lock, since REST searches share one
+engine without an index lock and a store's mutator writes beside them.
 """
 
 from __future__ import annotations
@@ -128,7 +146,6 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from bright_spark.models import IndexConfig
 
@@ -199,8 +216,8 @@ _ARROW_OF_DDL = {
 # read) runs with pyarrow on the driver; anything larger runs as Spark
 # jobs. The one size gate of the read path (postings, term dictionary,
 # expansions, docs) and of compaction (every target postings dir plus
-# every chained term_stats dir), and the arrow bytes a pinned catalog's
-# RowGroupCache keeps at most.
+# every chained term_stats dir), and the bytes a RowGroupCache (one per
+# store, or per pinned engine outside a store) keeps at most.
 #
 # Set below the smallest measured crossover of search() wall time, driver
 # path vs Spark path (4-vCPU VM, local[4], 50,000-file make_repos_spark
@@ -244,12 +261,58 @@ def fits_local_build(nbytes: int) -> bool:
     return fits_local(nbytes) and nbytes < LOCAL_BUILD_MAX_BYTES
 
 
+# Spark DDL spellings of the _ARROW_OF_DDL types besides their simple
+# names
+_DDL_ALIASES = {"integer": "int", "long": "bigint", "short": "smallint",
+                "byte": "tinyint"}
+
+
 @functools.lru_cache(maxsize=None)
 def _ddl_fields(ddl: str) -> tuple[tuple[str, str], ...]:
-    """(name, Spark simple type name) of each column of a DDL string,
-    parsed by Spark's own DDL parser (a JVM call, no job)."""
-    return tuple((f.name, f.dataType.simpleString())
-                 for f in StructType.fromDDL(ddl).fields)
+    """(name, Spark simple type name) of each column of a ``name type,
+    ...`` DDL string (names may be backquoted, with a doubled backquote
+    inside), parsed in Python. A type of the :data:`_ARROW_OF_DDL` set
+    comes back as Spark's simple name; any other type as written, which
+    ``docs_read`` declines. Equals ``StructType.fromDDL``'s simple
+    strings for every DDL a build records (simple strings themselves)."""
+    out = []
+    for col in _split_top(ddl):
+        col = col.strip()
+        if col.startswith("`"):
+            i, name = 1, []
+            while True:
+                j = col.index("`", i)
+                name.append(col[i:j])
+                if col[j + 1:j + 2] != "`":
+                    break
+                name.append("`")
+                i = j + 2
+            name, typ = "".join(name), col[j + 1:]
+        else:
+            name, _, typ = col.partition(" ")
+        typ = typ.strip()
+        low = _DDL_ALIASES.get(typ.lower(), typ.lower())
+        out.append((name, low if low in _ARROW_OF_DDL else typ))
+    return tuple(out)
+
+
+def _split_top(ddl: str) -> list[str]:
+    """``ddl`` cut at the commas outside brackets and backquotes."""
+    parts, depth, quoted, start = [], 0, False, 0
+    for i, ch in enumerate(ddl):
+        if ch == "`":
+            quoted = not quoted
+        elif quoted:
+            continue
+        elif ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(ddl[start:i])
+            start = i + 1
+    parts.append(ddl[start:])
+    return [p for p in parts if p.strip()]
 
 
 def _covers_any(keys: list) -> Callable[[Any, Any], bool]:
@@ -276,34 +339,138 @@ def _conform(tab: pa.Table, schema: pa.Schema) -> pa.Table:
 
 
 class RowGroupCache:
-    """Byte-bounded LRU of conformed row-group tables, keyed by (file
-    path, row-group index, column names). At most
-    :data:`LOCAL_READ_MAX_BYTES` of arrow ``nbytes`` stay resident: a
-    larger table is not stored, and each store evicts the least
-    recently used tables until the total fits. Thread-safe."""
+    """Byte-bounded LRU of what driver-side reads load from committed
+    parquet files, keyed by absolute file path: conformed row-group
+    tables (``(path, row group, column names)``), whole row groups of a
+    file a writer published (``(path, row group, None)``, every column
+    in the schema a parquet read returns), footers (``(path,
+    "footer")``), their per-row-group stats (``(path, "stats", key)``)
+    and dir file lists (``(dir, "files")``). At most
+    :data:`LOCAL_READ_MAX_BYTES` stay resident (arrow ``nbytes`` of the
+    tables, an estimate for the rest): a larger entry is not stored,
+    and each store evicts the least recently used entries until the
+    total fits. Thread-safe; ``hits``/``misses`` count lookups.
+
+    Owners: :meth:`IndexCatalog.pin` gives a pinned catalog without one
+    a private cache, and an :class:`IndexStore` hands its one cache to
+    every catalog it opens (engines, mutators, builds, compactions), so
+    a store reads back the files it wrote from memory
+    (:meth:`publish`)."""
 
     def __init__(self):
         self._lock = threading.Lock()
-        self._tabs: OrderedDict[tuple, tuple[pa.Table, int]] = OrderedDict()
+        self._items: OrderedDict[tuple, tuple[Any, int]] = OrderedDict()
+        self._by_path: dict[str, set[tuple]] = {}
         self.nbytes = 0
+        self.hits = 0
+        self.misses = 0
+        # bumped by every drop(): a value a thread loaded before a drop
+        # may be of a removed dir, so put()/keep() refuse it when the
+        # thread's last mark() saw an older epoch
+        self._epoch = 0
+        self._marks = threading.local()
 
-    def get(self, key: tuple) -> pa.Table | None:
+    def get(self, *keys: tuple) -> Any | None:
+        """The value of the first resident key (one hit), else None
+        (one miss)."""
         with self._lock:
-            got = self._tabs.get(key)
-            if got is None:
-                return None
-            self._tabs.move_to_end(key)
-            return got[0]
+            for key in keys:
+                got = self._items.get(key)
+                if got is not None:
+                    self._items.move_to_end(key)
+                    self.hits += 1
+                    return got[0]
+            self.misses += 1
+            return None
+
+    def mark(self) -> None:
+        """Note, for this thread, that a load from disk starts now."""
+        self._marks.epoch = self._epoch
 
     def put(self, key: tuple, tab: pa.Table) -> None:
-        cap, size = LOCAL_READ_MAX_BYTES, tab.nbytes
+        """Store a row-group table (see :meth:`keep`)."""
+        self.keep(key, tab, tab.nbytes)
+
+    def keep(self, key: tuple, value: Any, size: int) -> None:
+        """Store ``value`` unless it is resident already, larger than
+        the cap, or loaded before a :meth:`drop` (this thread's last
+        :meth:`mark` came before it)."""
         with self._lock:
-            if size > cap or key in self._tabs:
+            if (getattr(self._marks, "epoch", self._epoch) != self._epoch
+                    or key in self._items):
                 return
-            self._tabs[key] = (tab, size)
-            self.nbytes += size
-            while self.nbytes > cap:
-                self.nbytes -= self._tabs.popitem(last=False)[1][1]
+            self._insert(key, value, size)
+            self._evict()
+
+    def publish(self, files: dict[str, tuple[pa.Table, Any]]) -> None:
+        """Make written files resident: ``{path: (table, footer)}`` of a
+        committed snapshot, each the only file of its dir. A file enters
+        with every column, cast to the schema a parquet read returns and
+        sliced per row group by the footer's row counts; whatever was
+        resident under its path or dir goes first."""
+        for path, (tab, md) in files.items():
+            try:
+                tab = tab.cast(md.schema.to_arrow_schema())
+            except (pa.ArrowException, ValueError):
+                continue  # read back from disk, as any other file
+            d = os.path.dirname(path)
+            with self._lock:
+                self._remove(path)
+                self._remove(d)
+                self._insert((path, "footer"), md, _footer_nbytes(md))
+                self._insert((d, "files"), [path], _list_nbytes([path]))
+                off = 0
+                for i in range(md.num_row_groups):
+                    n = md.row_group(i).num_rows
+                    part = tab.slice(off, n)
+                    off += n
+                    self._insert((path, i, None), part, part.nbytes)
+                self._evict()
+
+    def drop(self, prefix: str) -> None:
+        """Forget every entry at or under the dir ``prefix`` (an index
+        dir being removed; a re-created index reuses its paths)."""
+        below = os.path.join(prefix, "")
+        with self._lock:
+            self._epoch += 1
+            for path in [p for p in self._by_path
+                         if p == prefix or p.startswith(below)]:
+                self._remove(path)
+
+    # the helpers below run under the lock
+
+    def _insert(self, key: tuple, value: Any, size: int) -> None:
+        if size > LOCAL_READ_MAX_BYTES:
+            return
+        old = self._items.pop(key, None)
+        if old is not None:
+            self.nbytes -= old[1]
+        self._items[key] = (value, size)
+        self._by_path.setdefault(key[0], set()).add(key)
+        self.nbytes += size
+
+    def _remove(self, path: str) -> None:
+        for key in self._by_path.pop(path, ()):
+            self.nbytes -= self._items.pop(key)[1]
+
+    def _evict(self) -> None:
+        while self.nbytes > LOCAL_READ_MAX_BYTES:
+            key, (_, size) = self._items.popitem(last=False)
+            self.nbytes -= size
+            keys = self._by_path[key[0]]
+            keys.discard(key)
+            if not keys:
+                del self._by_path[key[0]]
+
+
+def _footer_nbytes(md) -> int:
+    """Resident-size estimate of a parquet footer: ~200 B per column
+    chunk."""
+    return 512 + 200 * md.num_row_groups * md.num_columns
+
+
+def _list_nbytes(items: list) -> int:
+    return 64 + sum(len(str(x)) + 48 for x in items)
 
 
 class FooterRead:
@@ -334,10 +501,13 @@ class FooterRead:
         for path, md, rgs in self.parts:
             got = {}
             if cache is not None:
+                cache.mark()
                 for i in rgs:
-                    tab = cache.get((path, i, cols))
+                    # a published file's row group holds every column
+                    tab = cache.get((path, i, cols), (path, i, None))
                     if tab is not None:
-                        got[i] = tab
+                        got[i] = (tab if tab.schema.equals(self.schema)
+                                  else _conform(tab, self.schema))
             missing = [i for i in rgs if i not in got]
             if missing:
                 tab = _conform(pq.ParquetFile(path, metadata=md)
@@ -381,7 +551,8 @@ _PARQUET_OPTS = dict(compression="zstd", compression_level=3,
                      use_dictionary=False, store_schema=False)
 
 
-def write_part(dst_dir: str, table: pa.Table) -> None:
+def write_part(dst_dir: str, table: pa.Table,
+               pending: PendingSnapshot | None = None) -> None:
     """One driver-side version-dir write: clobber a crashed prior
     attempt, then write ``table`` as a single file: zstd at level 3 (the
     codec and level Spark writes with), no embedded Arrow schema, and
@@ -392,26 +563,37 @@ def write_part(dst_dir: str, table: pa.Table) -> None:
     driver-built index of 200 make_repos_spark files took 1,323,241 bytes
     with plain encoding, 1,398,599 with pyarrow's defaults, and Spark's
     build 1,388,201. Column statistics stay on, since readers prune on
-    them."""
-    shutil.rmtree(dst_dir, ignore_errors=True)
-    os.makedirs(dst_dir, exist_ok=True)
-    pq.write_table(table, os.path.join(dst_dir, "part-0.parquet"),
-                   **_PARQUET_OPTS)
+    them. The file and its footer are staged in ``pending``
+    (:meth:`PendingSnapshot.stage`) when given."""
+    _write_file(dst_dir, table, None, pending)
 
 
-def write_delta_part(dst_dir: str, table: pa.Table) -> None:
+def write_delta_part(dst_dir: str, table: pa.Table,
+                     pending: PendingSnapshot | None = None) -> None:
     """:func:`write_part` for a shared delta (rows of several buckets,
     sorted by term): the file is cut into row groups of about
     :data:`DELTA_ROW_GROUP_BYTES` at term boundaries, so a term lookup
     selects at most one row group of it."""
+    _write_file(dst_dir, table, _term_row_groups(table), pending)
+
+
+def _write_file(dst_dir: str, table: pa.Table, groups: list[int] | None,
+                pending: PendingSnapshot | None) -> None:
+    """``table`` as ``dst_dir/part-0.parquet``: one row group per entry
+    of ``groups`` (row counts), or pyarrow's default cut when None."""
     shutil.rmtree(dst_dir, ignore_errors=True)
     os.makedirs(dst_dir, exist_ok=True)
-    with pq.ParquetWriter(os.path.join(dst_dir, "part-0.parquet"),
-                          table.schema, **_PARQUET_OPTS) as w:
-        off = 0
-        for n in _term_row_groups(table):
-            w.write_table(table.slice(off, n), row_group_size=n)
-            off += n
+    path = os.path.join(dst_dir, "part-0.parquet")
+    with pq.ParquetWriter(path, table.schema, **_PARQUET_OPTS) as w:
+        if groups is None:
+            w.write_table(table)
+        else:
+            off = 0
+            for n in groups:
+                w.write_table(table.slice(off, n), row_group_size=n)
+                off += n
+    if pending is not None:
+        pending.stage(path, table, w.writer.metadata)
 
 
 # Row-group size of a shared delta file (arrow bytes of its rows; a
@@ -552,7 +734,9 @@ class PendingSnapshot:
     bucket / docs group / term_stats bucket), recording the pointer;
     ``drop_part`` removes a partition a mutation emptied;
     ``table_path("index_meta")`` covers the one whole-table write.
-    Nothing is visible to readers until :meth:`commit`.
+    Nothing is visible to readers until :meth:`commit`. Driver-side
+    writes :meth:`stage` their files for the catalog's cache, which
+    only a successful commit publishes.
     """
 
     def __init__(self, catalog: IndexCatalog, parent: dict | None):
@@ -565,6 +749,21 @@ class PendingSnapshot:
         for t in ("index_meta", "tombstones"):
             if parent and t in ptabs:
                 self.tables[t] = ptabs[t]
+        # path -> (written table, its footer), published at commit
+        self._staged: dict[str, tuple[pa.Table, Any]] = {}
+        self._staged_bytes = 0
+
+    def stage(self, path: str, table: pa.Table, md) -> None:
+        """Keep a file this snapshot wrote (``table`` and the footer the
+        write returned) for :meth:`commit` to publish into the catalog's
+        cache; a no-op without one. Staging stops at the cache's cap, so
+        a large compaction holds no more than that beyond its write."""
+        if self.catalog._rg_cache is None:
+            return
+        size = table.nbytes
+        if self._staged_bytes + size <= LOCAL_READ_MAX_BYTES:
+            self._staged[path] = (table, md)
+            self._staged_bytes += size
 
     # ---------------------------------------------------- write targets
 
@@ -659,7 +858,7 @@ class PendingSnapshot:
         order = np.argsort(np.asarray(ids, dtype=np.int64))
         write_part(self.table_path("tombstones"), pa.table({
             "doc_id": np.asarray(ids, dtype=np.int64)[order],
-            "ver": np.asarray(vers, dtype=np.int64)[order]}))
+            "ver": np.asarray(vers, dtype=np.int64)[order]}), self)
 
     # ------------------------------------------------------------ reads
 
@@ -681,7 +880,9 @@ class PendingSnapshot:
     def commit(self, meta: dict[str, Any], operation: str,
                metrics: dict[str, Any] | None = None) -> int:
         """Write the manifest, then atomically flip CURRENT. Everything
-        before the final ``os.replace`` is invisible to readers.
+        before the final ``os.replace`` is invisible to readers. Only
+        after the flip are the staged files published into the
+        catalog's cache: a commit that raises publishes nothing.
 
         Concurrency: the manifest file is CLAIMED atomically (hard link
         of a complete temp file — O_EXCL semantics), so of two writers
@@ -754,6 +955,9 @@ class PendingSnapshot:
             f.write(name)
         os.replace(tmp, cat.current_file)  # THE commit point
         cat._invalidate_cache()
+        if self._staged:
+            cat._rg_cache.publish(self._staged)
+            self._staged = {}
         return self.snapshot_id
 
 
@@ -762,9 +966,13 @@ class IndexCatalog:
 
     ``snapshot_id`` pins every read to that snapshot; otherwise reads
     resolve the live snapshot per call (:meth:`pin` freezes it at the
-    current one — what :class:`SearchEngine` does at construction)."""
+    current one — what :class:`SearchEngine` does at construction).
+    ``cache``: the :class:`RowGroupCache` its driver-side reads go
+    through and its commits publish into (an :class:`IndexStore`'s);
+    without one, an unpinned catalog keeps no row group."""
 
-    def __init__(self, index_dir: str, snapshot_id: int | None = None):
+    def __init__(self, index_dir: str, snapshot_id: int | None = None,
+                 cache: RowGroupCache | None = None):
         self.index_dir = index_dir
         self.snapshots_dir = os.path.join(index_dir, "snapshots")
         self.current_file = os.path.join(index_dir, "CURRENT")
@@ -778,15 +986,14 @@ class IndexCatalog:
         # setup + manifest/schema file reads (~0.2 s of driver time per
         # search on this host)
         self._docs_frames: dict[tuple, "DataFrame"] = {}
-        # committed version dirs are immutable: their file lists and
-        # parquet footers are cached for the driver-side reads, and a
-        # pinned catalog also keeps the row groups those reads load
-        # (bounded LRU, see the module docstring); an unpinned one
-        # resolves a new snapshot per call and keeps none
-        self._dir_files: dict[str, list[str]] = {}
-        self._footers: dict[str, Any] = {}
-        self._rg_stats: dict[tuple[str, str], list] = {}
-        self._rg_cache: RowGroupCache | None = None
+        # committed version dirs are immutable: their file lists,
+        # parquet footers and footer stats are kept for the driver-side
+        # reads, in the cache when the catalog has one (with the row
+        # groups those reads load; see the module docstring), else in
+        # this dict
+        self._meta: dict[tuple, Any] = {}
+        self._rg_cache = cache
+        self._tomb_cache: tuple[str, Any] | None = None
 
     # ------------------------------------------------------- snapshots
 
@@ -845,10 +1052,10 @@ class IndexCatalog:
 
     def pin(self, snapshot_id: int | None = None) -> int:
         """Freeze reads on a snapshot (default: the already-pinned one
-        if any, else the live one) and give this catalog its row-group
-        cache (a new one when the snapshot changes). Pinning an
-        expired/unknown id raises :class:`SnapshotExpiredError` up
-        front."""
+        if any, else the live one) and give this catalog a private
+        row-group cache unless it was handed one (a store's, shared by
+        every catalog the store opens). Pinning an expired/unknown id
+        raises :class:`SnapshotExpiredError` up front."""
         if snapshot_id is None:
             snapshot_id = (self._pinned if self._pinned is not None
                            else self.current_snapshot_id())
@@ -859,7 +1066,7 @@ class IndexCatalog:
             raise SnapshotExpiredError(
                 f"cannot pin snapshot {snapshot_id} of {self.index_dir}: "
                 f"not retained (expired by vacuum, or never committed)")
-        if self._rg_cache is None or snapshot_id != self._pinned:
+        if self._rg_cache is None:
             self._rg_cache = RowGroupCache()
         self._pinned = snapshot_id
         return self._pinned
@@ -1172,13 +1379,12 @@ class IndexCatalog:
         rel = self.manifest()["tables"].get("tombstones")
         if not rel:
             return None
-        if getattr(self, "_tomb_cache", None) and self._tomb_cache[0] == rel:
+        if self._tomb_cache and self._tomb_cache[0] == rel:
             return self._tomb_cache[1]
-        files = sorted(glob.glob(os.path.join(self.index_dir, rel,
-                                              "*.parquet")))
+        files = self._files([os.path.join(self.index_dir, rel)])
         if not files:
             return None
-        tab = pa.concat_tables([pq.read_table(f) for f in files])
+        tab = pa.concat_tables([self.read_file(f) for f in files])
         ids = tab["doc_id"].to_numpy().astype(np.int64)
         vers = tab["ver"].to_numpy().astype(np.int64)
         order = np.argsort(ids)
@@ -1231,40 +1437,85 @@ class IndexCatalog:
 
     # ------------------------------------------------ driver-side reads
 
+    def _memo(self, key: tuple, load: Callable[[], Any],
+              size: Callable[[Any], int]) -> Any:
+        """``load()`` once per ``key``: kept in the cache when the
+        catalog has one, else in this catalog."""
+        cache = self._rg_cache
+        if cache is None:
+            got = self._meta.get(key)
+            if got is None:
+                got = self._meta[key] = load()
+            return got
+        got = cache.get(key)
+        if got is None:
+            cache.mark()
+            got = load()
+            cache.keep(key, got, size(got))
+        return got
+
     def _files(self, dirs: list[str]) -> list[str]:
         out: list[str] = []
         for d in dirs:
-            fs = self._dir_files.get(d)
-            if fs is None:
-                fs = sorted(glob.glob(os.path.join(d, "*.parquet")))
-                self._dir_files[d] = fs
-            out.extend(fs)
+            out.extend(self._memo(
+                (d, "files"),
+                lambda: sorted(glob.glob(os.path.join(d, "*.parquet"))),
+                _list_nbytes))
         return out
+
+    def _footer(self, path: str):
+        return self._memo((path, "footer"), lambda: pq.read_metadata(path),
+                          _footer_nbytes)
+
+    def file_schema(self, path: str) -> pa.Schema:
+        """The arrow schema a parquet read of ``path`` returns (what
+        ``pq.read_schema`` gives), from its footer."""
+        return self._footer(path).schema.to_arrow_schema()
+
+    def read_file(self, path: str) -> pa.Table:
+        """Every row and column of one committed parquet file, as
+        ``pq.read_table`` returns them: from the cache's whole row
+        groups when all are resident (a file this store wrote), else
+        from disk, then kept there (when the catalog has a cache)."""
+        cache = self._rg_cache
+        if cache is None:
+            return pq.read_table(path)
+        md = self._footer(path)
+        rgs = range(md.num_row_groups)
+        tabs = [cache.get((path, i, None)) for i in rgs]
+        if all(t is not None for t in tabs):
+            return (pa.concat_tables(tabs) if tabs
+                    else md.schema.to_arrow_schema().empty_table())
+        cache.mark()
+        tab = pq.ParquetFile(path, metadata=md).read()
+        off = 0
+        for i in rgs:
+            n = md.row_group(i).num_rows
+            cache.put((path, i, None), tab.slice(off, n))
+            off += n
+        return tab
 
     def _row_group_stats(self, path: str, key: str) -> list:
         """Per row group of one file: (min, max) of ``key`` (None when
         the footer has no statistics) and uncompressed bytes per
         top-level column."""
-        got = self._rg_stats.get((path, key))
-        if got is not None:
+        def load() -> list:
+            md = self._footer(path)
+            got = []
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                bounds, sizes = None, {}
+                for j in range(rg.num_columns):
+                    cc = rg.column(j)
+                    top = cc.path_in_schema.split(".", 1)[0]
+                    sizes[top] = sizes.get(top, 0) + cc.total_uncompressed_size
+                    st = cc.statistics
+                    if top == key and st is not None and st.has_min_max:
+                        bounds = (st.min, st.max)
+                got.append((bounds, sizes))
             return got
-        md = self._footers.get(path)
-        if md is None:
-            md = self._footers[path] = pq.read_metadata(path)
-        got = []
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            bounds, sizes = None, {}
-            for j in range(rg.num_columns):
-                cc = rg.column(j)
-                top = cc.path_in_schema.split(".", 1)[0]
-                sizes[top] = sizes.get(top, 0) + cc.total_uncompressed_size
-                st = cc.statistics
-                if top == key and st is not None and st.has_min_max:
-                    bounds = (st.min, st.max)
-            got.append((bounds, sizes))
-        self._rg_stats[(path, key)] = got
-        return got
+        return self._memo((path, "stats", key), load,
+                          lambda got: 128 + 1024 * len(got))
 
     def _footer_read(self, dirs: list[str], key: str,
                      covers: Callable[[Any, Any], bool] | None,
@@ -1281,7 +1532,7 @@ class IndexCatalog:
                     rgs.append(i)
                     nbytes += sum(sizes.get(c, 0) for c in schema.names)
             if rgs:
-                parts.append((path, self._footers[path], rgs))
+                parts.append((path, self._footer(path), rgs))
         return FooterRead(parts, nbytes, schema, where, self._rg_cache)
 
     def postings_read(self, pairs: list[tuple[str, str]],

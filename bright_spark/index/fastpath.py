@@ -34,7 +34,6 @@ a different executor count.
 """
 from __future__ import annotations
 
-import glob
 import hashlib
 import os
 
@@ -42,7 +41,6 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 
 from bright_spark.index import codec
 from bright_spark.index.catalog import (
@@ -166,8 +164,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     group_files: dict[int, list[str]] = {}
     total_bytes = 0
     for g in groups:
-        files = [f for d in pending.part_dirs("docs", [g])
-                 for f in sorted(glob.glob(os.path.join(d, "*.parquet")))]
+        files = cat._files(pending.part_dirs("docs", [g]))
         if files:
             group_files[g] = files
             total_bytes += sum(os.path.getsize(f) for f in files)
@@ -178,12 +175,12 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     # existing part file); a doc-less index falls back
     schema = None
     if group_files:
-        schema = pq.read_schema(next(iter(group_files.values()))[0])
+        schema = cat.file_schema(next(iter(group_files.values()))[0])
     else:
         for d in pending.part_dirs("docs"):
-            fs = sorted(glob.glob(os.path.join(d, "*.parquet")))
+            fs = cat._files([d])
             if fs:
-                schema = pq.read_schema(fs[0])
+                schema = cat.file_schema(fs[0])
                 break
     if schema is None:
         return False
@@ -205,7 +202,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     replaced_parts = []
     surv_parts: dict[int, pa.Table] = {}
     for g, files in group_files.items():
-        tab = pq.read_table(files)
+        tab = pa.concat_tables([cat.read_file(f) for f in files])
         mask = pc.is_in(tab["doc_id"], value_set=ids_pa)
         hit = tab.filter(mask)
         if hit.num_rows:
@@ -278,7 +275,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     # protocol is identical to the distributed path's)
     old_tomb = cat.tombstones()
     for g, tab in out_docs.items():
-        write_part(pending.adopt_part("docs", g), tab)
+        write_part(pending.adopt_part("docs", g), tab, pending)
     for g in set(groups) - set(out_docs):
         pending.drop_part("docs", g)
     # one shared delta file per table, chained into every bucket it
@@ -286,11 +283,12 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     post_buckets = []
     if post is not None:
         post_buckets = np.unique(post["bucket"].to_numpy()).tolist()
-        write_delta_part(pending.adopt_delta("postings", post_buckets), post)
+        write_delta_part(pending.adopt_delta("postings", post_buckets), post,
+                         pending)
     if stats is not None:
         write_delta_part(pending.adopt_delta(
             "term_stats", np.unique(stats["bucket"].to_numpy()).tolist()),
-            stats)
+            stats, pending)
     merge_tombstones(pending, present_raw, old_tomb)
 
     n_changed = int(ch_ids.size if pdf is not None else del_ids.size)

@@ -113,6 +113,7 @@ from bright_spark.index.catalog import (
     POSTINGS_KERNEL_SCHEMA,
     TERM_STATS_ARROW,
     IndexCatalog,
+    RowGroupCache,
     fits_local,
     is_shared_dir,
     term_bucket_col,
@@ -287,19 +288,23 @@ class IndexMutator:
                  broadcast_threshold: int | None = None,
                  mode: str = "auto", compact_threshold: int = 8,
                  fast: str = "auto", fast_threshold: int | None = None,
-                 fast_max_group_bytes: int | None = None):
+                 fast_max_group_bytes: int | None = None,
+                 cache: RowGroupCache | None = None):
         """``mode``: 'auto' (append when the change set fits the
         broadcast regime, else rewrite), 'append', or 'rewrite'.
         ``compact_threshold``: auto-compact when any bucket's pointer
         chain grows past this many dirs (0 disables).
         ``fast``: 'auto' (small batches commit driver-side, zero Spark
-        jobs) or 'never' (always run the distributed stages)."""
+        jobs) or 'never' (always run the distributed stages).
+        ``cache``: the owning store's read cache (catalog.py), which
+        this mutator's reads go through and its commits publish into;
+        None keeps no row group."""
         if mode not in ("auto", "append", "rewrite"):
             raise ValueError(f"unknown mutation mode {mode!r}")
         if fast not in ("auto", "never"):
             raise ValueError(f"unknown fast mode {fast!r}")
         self.spark = spark
-        self.catalog = IndexCatalog(index_dir)
+        self.catalog = IndexCatalog(index_dir, cache=cache)
         self.config = self.catalog.load_config()
         self.extra = self.catalog.load_extra()
         self.broadcast_threshold = (self.BROADCAST_THRESHOLD
@@ -500,7 +505,8 @@ class IndexMutator:
         same evaluator as search (store/store.go:450-512); the match
         set flows as a DataFrame."""
         from bright_spark.query.engine import SearchEngine
-        eng = SearchEngine(self.spark, self.catalog.index_dir)
+        eng = SearchEngine(self.spark, self.catalog.index_dir,
+                           cache=self.catalog._rg_cache)
         self.delete_where(eng.match_df(q))
 
     def patch(self, doc_id: int, fields: dict) -> None:
@@ -899,7 +905,7 @@ class IndexMutator:
             if out is not None and out.num_rows:
                 write_part(pending.adopt_part("postings", b), out.sort_by(
                     [("term", "ascending"), ("field", "ascending"),
-                     ("range_id", "ascending")]))
+                     ("range_id", "ascending")]), pending)
             else:
                 pending.drop_part("postings", b)
         stats = self._bucket_reads("term_stats", schained, TERM_STATS_ARROW)
@@ -907,7 +913,8 @@ class IndexMutator:
             net = IndexCatalog._net_stats(stats(b), dirty=True)
             if net.num_rows:
                 write_part(pending.adopt_part("term_stats", b), net.sort_by(
-                    [("term", "ascending"), ("field", "ascending")]))
+                    [("term", "ascending"), ("field", "ascending")]),
+                    pending)
             else:
                 pending.drop_part("term_stats", b)
 

@@ -34,6 +34,15 @@ Differences from the reference forced by the engines' natures:
   semantics).
 - Searching a registered-but-never-written index returns zero hits
   (what an empty Bleve index does) instead of erroring.
+
+Read cache: the store owns ONE ``catalog.RowGroupCache`` (``cache``,
+at most ``catalog.LOCAL_READ_MAX_BYTES``) and hands it to the catalog
+of every engine, mutator and build it runs. Its driver-side writes are
+published into it when their commit lands, so the engine it re-pins
+after a commit, the next mutation's docs-group read and the auto-
+compaction read the store's own files from memory, as a Bleve index
+serves its open segments in-process (store.go:392-426). Removing an
+index dir drops that dir's entries.
 """
 
 from __future__ import annotations
@@ -49,7 +58,7 @@ from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bright_spark.index.catalog import IndexCatalog
+from bright_spark.index.catalog import IndexCatalog, RowGroupCache
 from bright_spark.models import IndexConfig, SearchRequest, SearchResponse
 
 
@@ -61,11 +70,14 @@ _DELETE_SEQ = itertools.count()
 class IndexStore:
     """One data dir holding ``<data_dir>/<index_id>`` index dirs plus a
     ``configs.json`` registry; the constructor is the boot-time
-    loadConfigs analog (re-registers every persisted index)."""
+    loadConfigs analog (re-registers every persisted index). ``cache``
+    is the store's one read cache, shared by every engine, mutator and
+    build it runs (module docstring); its keys are absolute paths."""
 
     def __init__(self, spark: SparkSession, data_dir: str):
         self.spark = spark
-        self.data_dir = data_dir
+        self.data_dir = os.path.abspath(data_dir)
+        self.cache = RowGroupCache()
         self.config_file = os.path.join(data_dir, "configs.json")
         os.makedirs(data_dir, exist_ok=True)
         self.configs: dict[str, IndexConfig] = {}
@@ -131,6 +143,14 @@ class IndexStore:
     def _index_dir(self, idx_id: str) -> str:
         return os.path.join(self.data_dir, idx_id)
 
+    def _catalog(self, idx_id: str) -> IndexCatalog:
+        return IndexCatalog(self._index_dir(idx_id), cache=self.cache)
+
+    def _mutator(self, idx_id: str):
+        from bright_spark.index.mutations import IndexMutator
+        return IndexMutator(self.spark, self._index_dir(idx_id),
+                            cache=self.cache)
+
     def is_built(self, idx_id: str) -> bool:
         return IndexCatalog(
             self._index_dir(idx_id)).current_snapshot_id() is not None
@@ -153,6 +173,7 @@ class IndexStore:
             if os.path.exists(path) and not os.path.exists(
                     os.path.join(path, "config.json")):
                 shutil.rmtree(path, ignore_errors=True)
+                self.cache.drop(path)
             if os.path.exists(os.path.join(path, "config.json")):
                 on_disk = IndexCatalog(path).load_config()
                 mismatches = {
@@ -179,7 +200,7 @@ class IndexStore:
         with self._reg_lock:
             if idx_id not in self.configs:
                 raise KeyError(f"index {idx_id} not found")
-            return IndexCatalog(self._index_dir(idx_id)), self.configs[idx_id]
+            return self._catalog(idx_id), self.configs[idx_id]
 
     def update_index(self, idx_id: str, config: IndexConfig) -> None:
         """Replace the registered config; the id cannot change
@@ -216,6 +237,8 @@ class IndexStore:
                               f"{os.getpid()}.{threading.get_ident()}."
                               f"{next(_DELETE_SEQ)}")
                     os.rename(path, doomed)
+                # a re-created index reuses these paths
+                self.cache.drop(path)
             if doomed is not None:
                 shutil.rmtree(doomed, ignore_errors=True)
 
@@ -240,8 +263,7 @@ class IndexStore:
                 # — drop so the next search opens the new commit
                 self._engines.pop(idx_id, None)
             if self.is_built(idx_id):
-                from bright_spark.index.mutations import IndexMutator
-                IndexMutator(self.spark, self._index_dir(idx_id)).upsert(docs)
+                self._mutator(idx_id).upsert(docs)
                 return
             self._build_first(idx_id, docs, None, build_kwargs)
 
@@ -259,9 +281,7 @@ class IndexStore:
                     raise KeyError(f"index {idx_id} not found")
                 self._engines.pop(idx_id, None)
             if self.is_built(idx_id):
-                from bright_spark.index.mutations import IndexMutator
-                IndexMutator(self.spark,
-                             self._index_dir(idx_id)).upsert_rows(rows)
+                self._mutator(idx_id).upsert_rows(rows)
                 return
             self._build_first(idx_id, self.spark.createDataFrame(rows), rows,
                               build_kwargs)
@@ -295,7 +315,7 @@ class IndexStore:
             if len(last) < len(rows):
                 rows, docs = last, self.spark.createDataFrame(last)
         IndexBuilder(self.spark, cfg, self._index_dir(idx_id),
-                     **build_kwargs)._build(docs, rows)
+                     cache=self.cache, **build_kwargs)._build(docs, rows)
         with self._reg_lock:
             self._engines.pop(idx_id, None)
 
@@ -313,8 +333,7 @@ class IndexStore:
                 if idx_id not in self.configs:
                     raise KeyError(f"index {idx_id} not found")
                 self._engines.pop(idx_id, None)
-            from bright_spark.index.mutations import IndexMutator
-            mut = IndexMutator(self.spark, self._index_dir(idx_id))
+            mut = self._mutator(idx_id)
             if ids:
                 mut.delete_ids(list(ids))
             else:
@@ -338,12 +357,11 @@ class IndexStore:
                 if idx_id not in self.configs:
                     raise KeyError(f"index {idx_id} not found")
                 self._engines.pop(idx_id, None)
-            from bright_spark.index.mutations import IndexMutator
-            mut = IndexMutator(self.spark, self._index_dir(idx_id))
+            mut = self._mutator(idx_id)
             mut.patch(int(doc_id), fields)  # raises KeyError when absent
             with self._reg_lock:
                 self._engines.pop(idx_id, None)
-            recs = IndexCatalog(self._index_dir(idx_id)).doc_records(
+            recs = self._catalog(idx_id).doc_records(
                 self.spark, [int(doc_id)])
             return recs.get(int(doc_id), {})
 
@@ -354,7 +372,9 @@ class IndexStore:
         not through this store) must become visible to the next
         search, exactly like the reference's store serving fresh
         results after a poll cycle. The staleness check is one tiny
-        CURRENT read per call."""
+        CURRENT read per call. A re-pinned engine shares the store's
+        cache, so it starts with every file the store wrote or read
+        still resident."""
         with self._reg_lock:
             if idx_id not in self.configs:
                 raise KeyError(f"index {idx_id} not found")
@@ -363,14 +383,17 @@ class IndexStore:
             return None
         live = IndexCatalog(self._index_dir(idx_id)).current_snapshot_id()
         if eng is None or eng.snapshot_id != live:
-            # engine construction runs Spark reads — outside _reg_lock.
-            # Two threads may race here; both engines are valid (each
-            # pins a committed snapshot) but only a NEWER pin may
-            # replace the cache — last-cached-wins would let a reader's
-            # view regress to an older snapshot (reads must be
-            # monotonic; test_store_concurrency pins this per reader)
+            # engine construction reads the manifest, config and
+            # tombstones (from the cache when resident) — outside
+            # _reg_lock. Two threads may race here; both engines are
+            # valid (each pins a committed snapshot) but only a NEWER
+            # pin may replace the cached engine — last-cached-wins
+            # would let a reader's view regress to an older snapshot
+            # (reads must be monotonic; test_store_concurrency pins
+            # this per reader)
             from bright_spark.query.engine import SearchEngine
-            eng = SearchEngine(self.spark, self._index_dir(idx_id))
+            eng = SearchEngine(self.spark, self._index_dir(idx_id),
+                               cache=self.cache)
             with self._reg_lock:
                 if idx_id in self.configs:
                     cached = self._engines.get(idx_id)

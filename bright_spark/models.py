@@ -64,7 +64,7 @@ class IndexConfig:
     # docs-table copy-on-write group span: group = doc_id >>
     # docs_range_bits, one version dir per group (catalog layout v4).
     # None = auto-resolved at build time to ~one group per build
-    # partition (span bounded [2**12, 2**22]) — small enough that a
+    # partition (span bounded [2**10, 2**22]) — small enough that a
     # mutation rewrites only the groups its changed ids land in,
     # large enough that the manifest's group map stays compact.
     docs_range_bits: int | None = None

@@ -20,7 +20,9 @@ Spark lifecycle here:
     well: zero Spark jobs. The engine's pinned catalog keeps the row
     groups these reads load (``catalog.RowGroupCache``, bounded by
     ``catalog.LOCAL_READ_MAX_BYTES``), so a repeated search reads no
-    parquet; a new engine starts cold.
+    parquet. A new engine starts cold unless it shares a cache: an
+    ``IndexStore`` hands its engines the one cache its writes publish
+    into, so an engine it re-pins after a commit starts warm.
   * ``spark``  (everything else): partition-pruned postings scan ->
     groupBy(range_id) applyInPandas of the same kernels. Plain
     term/bool shapes ask each range for its exact top-k + match count
@@ -57,7 +59,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bright_spark.index.catalog import IndexCatalog, fits_local
+from bright_spark.index.catalog import IndexCatalog, RowGroupCache, fits_local
 from bright_spark.index.mutations import (_DECODE_COLS, ENTRIES_SCHEMA,
                                           _decode_to_entries)
 from bright_spark.models import SearchRequest, SearchRequestError, SearchResponse
@@ -161,9 +163,14 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str,
                  snapshot_id: int | None = None,
                  max_expansions: int | None = None,
-                 on_overflow: str = "error"):
+                 on_overflow: str = "error",
+                 cache: RowGroupCache | None = None):
+        """``cache``: a read cache to share (an ``IndexStore``'s, see
+        catalog.py); by default the engine's pinned catalog gets its
+        own."""
         self.spark = spark
-        self.catalog = IndexCatalog(index_dir, snapshot_id=snapshot_id)
+        self.catalog = IndexCatalog(index_dir, snapshot_id=snapshot_id,
+                                    cache=cache)
         # pin every read of this engine to one snapshot: queries are
         # immune to concurrent mutation commits (the poll-loop ingestor
         # commits while searches run), and ``snapshot_id`` time-travels

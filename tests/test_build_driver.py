@@ -230,6 +230,40 @@ def test_rows_of_unmapped_type_fall_back(spark, tmp_path):
     assert IndexCatalog(idx).manifest()["metrics"]["mode"] == "spark"
 
 
+def test_docs_ddl_parses_as_spark_does(spark, built_index):
+    """The pure-Python docs DDL parser equals Spark's ``StructType.
+    fromDDL`` on every DDL a build records (the driver build's types,
+    a Spark build's simple strings, a built index's manifest) and on
+    backquoted names; a type outside the driver's set makes docs_read
+    decline."""
+    from pyspark.sql.types import StructType
+
+    from bright_spark.index.builder import _DDL_OF_ARROW
+    from bright_spark.index.catalog import _ddl_fields
+    typed = spark.sql(
+        "SELECT 'a' s, 1L b, 1 i, CAST(1 AS SMALLINT) si, "
+        "CAST(1 AS TINYINT) ti, 1.5D d, CAST(1 AS FLOAT) f, true bo, "
+        "CAST(1 AS DECIMAL(10,2)) de, TIMESTAMP'2024-01-01 00:00:00' ts, "
+        "DATE'2024-01-01' da, X'00' bi, array('x') ar, map('k', 1) ma, "
+        "named_struct('a', 1, 'b', 'x') st")
+    ddls = [
+        ", ".join(f"c{i} {t}" for i, t in enumerate(_DDL_OF_ARROW.values())),
+        ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                  for f in typed.schema.fields),
+        built_index.docs_schema(),
+        "`my col` string, `a``b` bigint, `x, y` int, plain double",
+    ]
+    for ddl in ddls:
+        assert _ddl_fields(ddl) == tuple(
+            (f.name, f.dataType.simpleString())
+            for f in StructType.fromDDL(ddl).fields), ddl
+    cat = IndexCatalog(str(built_index.index_dir))
+    cat.docs_schema = lambda: "doc_id bigint, price decimal(10,2)"
+    assert cat.docs_read(columns=["price"]) is None
+    assert cat.docs_read([1]) is None
+    assert cat.docs_read(columns=["doc_id"]) is not None
+
+
 @pytest.mark.parametrize("kind", ["range_map_in_pandas", "local_relation"])
 def test_source_that_is_not_a_file_scan_builds_on_spark(spark, tmp_path,
                                                         kind):
