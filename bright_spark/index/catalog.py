@@ -66,7 +66,7 @@ readers when given buckets, the driver compaction's split) or by their
 (field, term) pairs (every term-keyed read, whose terms fix their
 buckets). That rule holds because a shared dir stays in the chain of
 every bucket it has rows of until it leaves all of them: a writer that
-replaces one such chain (compaction, a rewrite-mode mutation) replaces
+replaces one such chain (compaction, a rewrite mutation) replaces
 every one (:meth:`IndexCatalog.shared_holders`). Otherwise a query
 reaching the dir through one bucket's chain would read another
 bucket's superseded rows.
@@ -108,9 +108,12 @@ through :meth:`IndexCatalog.manifest` first. Who owns one:
   flips, so a commit that loses a race (same-parent writers share
   ``v<N>`` paths) or crashes publishes nothing. The store's next
   engine, its next mutation's docs-group read and the auto-compaction
-  then read what the store wrote from memory. Removing an index dir
-  drops its entries (:meth:`RowGroupCache.drop`), since a re-created
-  index reuses its paths. Files other writers produced (Spark stages,
+  then read what the store wrote from memory. The same commit drops the
+  entries of every dir it superseded (a compacted chain, a rewritten
+  docs group, an old tombstone table), so dead files hold no cache
+  bytes. Removing an index dir drops its entries
+  (:meth:`RowGroupCache.drop`), since a re-created index reuses its
+  paths. Files other writers produced (Spark stages,
   another process's mutator) are read through and kept.
 - a pinned catalog handed none (``SearchEngine(spark, dir)``) gets a
   private one at :meth:`IndexCatalog.pin`.
@@ -429,7 +432,8 @@ class RowGroupCache:
 
     def drop(self, prefix: str) -> None:
         """Forget every entry at or under the dir ``prefix`` (an index
-        dir being removed; a re-created index reuses its paths)."""
+        dir being removed, since a re-created index reuses its paths,
+        or a version dir a commit superseded)."""
         below = os.path.join(prefix, "")
         with self._lock:
             self._epoch += 1
@@ -882,7 +886,9 @@ class PendingSnapshot:
         """Write the manifest, then atomically flip CURRENT. Everything
         before the final ``os.replace`` is invisible to readers. Only
         after the flip are the staged files published into the
-        catalog's cache: a commit that raises publishes nothing.
+        catalog's cache, and the entries under every dir the parent
+        manifest references and this one does not dropped from it: a
+        commit that raises publishes and drops nothing.
 
         Concurrency: the manifest file is CLAIMED atomically (hard link
         of a complete temp file — O_EXCL semantics), so of two writers
@@ -955,6 +961,12 @@ class PendingSnapshot:
             f.write(name)
         os.replace(tmp, cat.current_file)  # THE commit point
         cat._invalidate_cache()
+        if cat._rg_cache is not None and self.parent:
+            # the dirs this commit superseded stay on disk for pinned
+            # readers until vacuum, but no longer hold cache bytes
+            for d in (_manifest_dirs(self.parent["tables"])
+                      - _manifest_dirs(self.tables)):
+                cat._rg_cache.drop(os.path.join(cat.index_dir, d))
         if self._staged:
             cat._rg_cache.publish(self._staged)
             self._staged = {}
@@ -1397,7 +1409,7 @@ class IndexCatalog:
         on a shared dir sitting in the chain of EVERY partition it has
         rows of (its rows of a partition are live while that partition
         references it), so a writer that replaces the chain of one
-        holder (compaction, rewrite-mode mutation) replaces them all."""
+        holder (compaction, a rewrite mutation) replaces them all."""
         return {int(k) for k, v in self.manifest()["tables"][table].items()
                 if any(is_shared_dir(d) for d in _entry_dirs(v))}
 

@@ -28,9 +28,13 @@ are the rows: bit-identical query results (pinned by the
 fast==distributed pytest in test_fastpath.py and the ft_mutate_*
 oracle gate). Eligibility is decided BEFORE anything is written, so
 an ineligible call falls back to the distributed path with zero side
-effects; above the size/byte thresholds the distributed path takes
-over unchanged, so the 10^12-doc story is the same commit protocol at
-a different executor count.
+effects; above ``mutations.FAST_THRESHOLD`` ids or
+``mutations.FAST_MAX_GROUP_BYTES`` of touched docs-group files (module
+constants read at call time) the distributed path takes over
+unchanged, so the 10^12-doc story is the same commit protocol at a
+different executor count. A commit that leaves a chain longer than
+``mutations.COMPACT_THRESHOLD`` dirs compacts, as on the distributed
+path.
 """
 from __future__ import annotations
 
@@ -102,6 +106,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     success (committed, or a provable no-op); False when the index or
     batch is ineligible — the caller then runs the distributed path.
     Every ineligibility exit happens BEFORE the first write."""
+    from bright_spark.index import mutations
     from bright_spark.index.builder import _make_merge_fn
     cat = mut.catalog
     cfg = mut.config
@@ -168,7 +173,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
         if files:
             group_files[g] = files
             total_bytes += sum(os.path.getsize(f) for f in files)
-    if total_bytes > mut.fast_max_group_bytes:
+    if total_bytes > mutations.FAST_MAX_GROUP_BYTES:
         return False
 
     # docs file schema: identical to what Spark wrote (read from any
@@ -312,9 +317,5 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
                  "mode": "append-fast",
                  "buckets_appended": len(post_buckets),
                  "tombstones_added": n_present})
-    if (mut.compact_threshold
-            and max(cat.delta_depth("postings"),
-                    cat.delta_depth("term_stats"))
-            > mut.compact_threshold):
-        mut.compact()
+    mut._maybe_compact()
     return True

@@ -17,7 +17,7 @@ batches to Bleve scorch, which appends immutable segments, masks dead
 docs with a deleted-bitmap, and merges in the background) rebuilt on
 the snapshot catalog, so a mutation commit is **O(batch)**:
 
-  append mode (default for broadcast-sized change sets):
+  append (every change set of up to ``BROADCAST_THRESHOLD`` ids):
     docs        only the doc-range GROUPS containing changed ids are
                 re-versioned (copy-on-write; new version dirs)
     postings    the new batch's entries merge into a small DELTA
@@ -35,7 +35,7 @@ the snapshot catalog, so a mutation commit is **O(batch)**:
                 deltas — bit-identical to recomputation
 
   consolidation (``compact()``, auto-triggered when a pointer chain
-  exceeds ``compact_threshold``): scorch's background merger as an
+  exceeds ``COMPACT_THRESHOLD`` dirs): scorch's background merger as an
   explicit, amortized operator. Targets: the chained buckets plus every
   bucket whose pointer holds a shared driver delta dir (all of a shared
   dir's holders are consolidated together; catalog.py, delta chains),
@@ -63,14 +63,22 @@ the snapshot catalog, so a mutation commit is **O(batch)**:
   ``mapInArrow``. The commit's metrics say which (``mode``: ``driver``
   or ``spark``) and how many files it wrote (``files_written``).
 
-  rewrite mode (forced via ``mode="rewrite"``, and the automatic path
-  for beyond-broadcast change sets): the pre-append behavior — affected
-  buckets' touched rows decode (restricted to the CHANGED doc ranges;
-  other rows are a JVM passthrough), changed ids drop ver-aware against
-  existing tombstones (no resurrection), and those buckets consolidate
-  in place — together with every other holder of a shared delta dir
-  when one of them is affected. Stats maintenance is the same
-  signed-delta path.
+  rewrite (only a DataFrame change set of more than
+  ``BROADCAST_THRESHOLD`` ids, too many to collect to the driver):
+  the affected buckets' rows holding a touched term decode into one row
+  per entry (tombstoned entries dropped ver-aware, so nothing is
+  resurrected), anti-join the changed ids, re-merge with the new batch
+  and consolidate those buckets in place — together with every other
+  holder of a shared delta dir when one of them is affected. Stats
+  maintenance is the same signed-delta path.
+
+Which path a mutation takes depends only on its size: up to
+``FAST_THRESHOLD`` ids it commits on the driver (fastpath.py; a
+natural-key index's upserts excepted), up to ``BROADCAST_THRESHOLD``
+as Spark append stages, above that as rewrite (a ``delete_ids`` list,
+already on the driver, always appends). The module constants are read
+at call time; tests monkeypatch them to force a path
+(``tests/conftest.py``).
 
 Everything becomes visible in ONE atomic manifest commit (catalog.py
 write protocol) — a crash mid-mutation leaves the previous snapshot
@@ -78,8 +86,8 @@ untouched, and readers pinned to it never see a torn index. Block
 (max_tf, min_dl) skip metadata stays sound under masking: dead entries
 only lower true scores below the stored upper bounds.
 
-Invariant (tested): mutate-then-query == full-rebuild-then-query, in
-both modes, including across compaction.
+Invariant (tested): mutate-then-query == full-rebuild-then-query, on
+every path, including across compaction.
 """
 
 from __future__ import annotations
@@ -126,6 +134,21 @@ _DECODE_COLS = ["field", "term", "range_id",
 
 _EMPTY = np.empty(0, dtype=np.int64)
 _NEVER_LIVE = np.iinfo(np.int64).max
+
+# The mutation paths' size limits, read at call time (tests monkeypatch
+# them). A change set of up to FAST_THRESHOLD ids whose touched docs
+# groups hold at most FAST_MAX_GROUP_BYTES of files commits on the
+# driver with the same kernels (fastpath.py) — a head-node operation,
+# like the reference's in-process Bleve batch. Up to
+# BROADCAST_THRESHOLD ids the Spark stages append with the id set
+# collected to the driver as one numpy array; above it (a driver-OOM
+# regime at ~10^8 ids) the mutation rewrites the affected buckets with
+# an entry-level anti-join. A mutation whose commit leaves a pointer
+# chain longer than COMPACT_THRESHOLD dirs compacts (0 never does).
+FAST_THRESHOLD = 10_000
+FAST_MAX_GROUP_BYTES = 256 << 20
+BROADCAST_THRESHOLD = 2_000_000
+COMPACT_THRESHOLD = 8
 
 
 def last_row_per_key(rows: list[dict], key_cols) -> list[dict]:
@@ -217,20 +240,15 @@ def _decode_partials(batch: pa.RecordBatch, store_positions: bool,
     ], schema=PARTIALS_ARROW)
 
 
-def _decode_to_partials(store_positions: bool = False, drop_bc=None,
-                        tomb_bc=None):
-    """mapInArrow form of :func:`_decode_partials`, dropping (a) every
-    doc id in the ``drop_bc`` broadcast (the mutation's change set — a
-    sorted int64 numpy array, broadcast rather than a plan literal so
-    million-row change sets don't explode the query plan), and (b)
-    tombstoned entries, VERSION-AWARE: an entry survives if its row was
-    written at or after its doc's tombstone version — re-encoding at
-    the new snapshot version must never resurrect dead entries."""
+def _decode_to_partials(store_positions: bool = False, tomb_bc=None):
+    """mapInArrow form of :func:`_decode_partials`, dropping tombstoned
+    entries VERSION-AWARE: an entry survives if its row was written at
+    or after its doc's tombstone version — re-encoding at the new
+    snapshot version must never resurrect dead entries."""
 
     def fn(batches: Iterator[pa.RecordBatch]
            ) -> Iterator[pa.RecordBatch]:
-        kill = _kill_set(tomb_bc.value if tomb_bc is not None else None,
-                         drop_bc.value if drop_bc is not None else None)
+        kill = _kill_set(tomb_bc.value if tomb_bc is not None else None)
         for batch in batches:
             out = _decode_partials(batch, store_positions, kill)
             if out is not None:
@@ -271,56 +289,20 @@ def _decode_to_entries(store_positions: bool = False, tomb_bc=None):
 
 
 class IndexMutator:
-    # change sets up to this many ids travel as one numpy broadcast
-    # (append mode / broadcast drop); above it (a driver-OOM regime at
-    # ~10^8 ids) the mutation switches to the rewrite path with an
-    # entry-level anti-join
-    BROADCAST_THRESHOLD = 2_000_000
+    """Upserts, deletes, patches and compactions of one index. Each
+    mutation takes the path its size selects (the module constants
+    above); nothing about the path is chosen per instance.
 
-    # change sets up to this many ids run entirely on the driver with
-    # the same kernels (fastpath.py) — a head-node operation, like the
-    # reference's in-process Bleve batch; above it the distributed
-    # stages take over
-    FAST_THRESHOLD = 10_000
-    FAST_MAX_GROUP_BYTES = 256 << 20
+    ``cache``: the owning store's read cache (catalog.py), which this
+    mutator's reads go through and its commits publish into; None keeps
+    no row group."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 broadcast_threshold: int | None = None,
-                 mode: str = "auto", compact_threshold: int = 8,
-                 fast: str = "auto", fast_threshold: int | None = None,
-                 fast_max_group_bytes: int | None = None,
                  cache: RowGroupCache | None = None):
-        """``mode``: 'auto' (append when the change set fits the
-        broadcast regime, else rewrite), 'append', or 'rewrite'.
-        ``compact_threshold``: auto-compact when any bucket's pointer
-        chain grows past this many dirs (0 disables).
-        ``fast``: 'auto' (small batches commit driver-side, zero Spark
-        jobs) or 'never' (always run the distributed stages).
-        ``cache``: the owning store's read cache (catalog.py), which
-        this mutator's reads go through and its commits publish into;
-        None keeps no row group."""
-        if mode not in ("auto", "append", "rewrite"):
-            raise ValueError(f"unknown mutation mode {mode!r}")
-        if fast not in ("auto", "never"):
-            raise ValueError(f"unknown fast mode {fast!r}")
         self.spark = spark
         self.catalog = IndexCatalog(index_dir, cache=cache)
         self.config = self.catalog.load_config()
         self.extra = self.catalog.load_extra()
-        self.broadcast_threshold = (self.BROADCAST_THRESHOLD
-                                    if broadcast_threshold is None
-                                    else broadcast_threshold)
-        self.mode = mode
-        self.compact_threshold = compact_threshold
-        self.fast = fast
-        self.fast_threshold = (self.FAST_THRESHOLD if fast_threshold is None
-                               else fast_threshold)
-        self.fast_max_group_bytes = (
-            self.FAST_MAX_GROUP_BYTES if fast_max_group_bytes is None
-            else fast_max_group_bytes)
-
-    def _fast_enabled(self) -> bool:
-        return self.fast == "auto" and self.mode != "rewrite"
 
     # ------------------------------------------------------- internals
 
@@ -458,9 +440,9 @@ class IndexMutator:
         repeats a key fails with ``ValueError`` when the rows share a
         term. :meth:`upsert_rows` accepts repeated keys (last row
         wins)."""
-        if self._fast_enabled() and self.extra.get("id_col"):
-            head = updates.limit(self.fast_threshold + 1).toPandas()
-            if len(head) <= self.fast_threshold:
+        if self.extra.get("id_col"):
+            head = updates.limit(FAST_THRESHOLD + 1).toPandas()
+            if len(head) <= FAST_THRESHOLD:
                 from bright_spark.index.fastpath import apply_fast
                 if apply_fast(self, changed_pdf=head):
                     return
@@ -478,8 +460,7 @@ class IndexMutator:
         rows = last_row_per_key(rows, [self.extra["id_col"]]
                                 if self.extra.get("id_col")
                                 else self._key_cols())
-        if (self._fast_enabled() and self.extra.get("id_col")
-                and len(rows) <= self.fast_threshold):
+        if self.extra.get("id_col") and len(rows) <= FAST_THRESHOLD:
             from bright_spark.index.fastpath import apply_fast
             if apply_fast(self, changed_pdf=pd.DataFrame(rows)):
                 return
@@ -489,7 +470,7 @@ class IndexMutator:
         """U2: delete by id list — zero Spark jobs in the fast regime
         (the id set is already a driver literal)."""
         ids = [int(i) for i in doc_ids]
-        if self._fast_enabled() and len(ids) <= self.fast_threshold:
+        if len(ids) <= FAST_THRESHOLD:
             from bright_spark.index.fastpath import apply_fast
             if apply_fast(self, deleted=np.asarray(ids, dtype=np.int64)):
                 return
@@ -511,7 +492,9 @@ class IndexMutator:
 
     def patch(self, doc_id: int, fields: dict) -> None:
         """U4: fetch stored doc, merge fields, re-index whole doc.
-        The fetch is group-dir-pruned (doc_records)."""
+        The fetch is group-dir-pruned (doc_records); the merged record
+        commits through :meth:`upsert_rows`, so on the fast path no
+        Spark job runs."""
         rec = self.catalog.doc_records(self.spark, [int(doc_id)]).get(
             int(doc_id))
         if rec is None:
@@ -524,69 +507,58 @@ class IndexMutator:
             rec[self.extra["id_col"]] = rec.pop("doc_id")
         else:
             rec.pop("doc_id", None)
-        upd = self.spark.createDataFrame([rec])
-        self.upsert(upd)
+        self.upsert_rows([rec])
 
     # ------------------------------------------------------- the apply
 
     def _apply(self, changed: DataFrame | None = None,
                deleted_ids: list[int] | None = None,
                deleted_df: DataFrame | None = None) -> None:
-        """Change sets travel as DataFrames/joins — never as
-        plan-literal IN-lists — so a million-document sync batch plans
-        the same as a 10-document one. Up to ``broadcast_threshold``
-        ids the change set rides one numpy broadcast (append mode /
-        broadcast drop); above it (too large to ship to every executor,
-        yet far from rebuild territory at 10^12 docs) the mutation
-        falls back to the rewrite path with an entry-level anti-join."""
-        spark = self.spark
-        if deleted_ids is not None and changed is None and deleted_df is None:
+        """The Spark path. Change sets travel as DataFrames/joins —
+        never as plan-literal IN-lists — so a million-document sync
+        batch plans the same as a 10-document one. Up to
+        ``BROADCAST_THRESHOLD`` ids the change set is collected to the
+        driver as one numpy array (``ids``) and the mutation appends;
+        above it (too large for the driver, yet far from rebuild
+        territory at 10^12 docs) it rewrites the affected buckets with
+        an entry-level anti-join."""
+        if deleted_ids is not None:
             # driver-provided id list: zero Spark jobs to materialize
-            arr = np.unique(np.asarray([int(i) for i in deleted_ids],
-                                       dtype=np.int64))
+            ids = np.unique(np.asarray(deleted_ids, dtype=np.int64))
         else:
             ids_src = (changed if changed is not None
                        else deleted_df).select("doc_id").distinct()
             # ONE probe job collects the whole id set when it fits the
-            # broadcast regime (the overwhelmingly common case) — no
-            # separate count + collect + checkpoint jobs
-            rows = ids_src.limit(self.broadcast_threshold + 1).collect()
-            if len(rows) > self.broadcast_threshold:
+            # driver (the overwhelmingly common case) — no separate
+            # count + collect + checkpoint jobs
+            tab = ids_src.limit(BROADCAST_THRESHOLD + 1).toArrow()
+            if tab.num_rows > BROADCAST_THRESHOLD:
                 # huge change set: entry-level anti-join path. Eager
                 # localCheckpoint truncates lineage: a delete-by-query
                 # id set reads the very dirs whose pointers this apply
                 # replaces, and must never be recomputed mid-apply
                 ids_df = ids_src.localCheckpoint(eager=True)
-                n_changed = ids_df.count()
-                if n_changed == 0:
-                    return
-                self._apply_inner(changed, ids_df, drop_bc=None,
-                                  n_changed=n_changed)
+                self._apply_inner(changed, ids_df, None, ids_df.count())
                 return
-            arr = np.unique(np.array([r["doc_id"] for r in rows],
-                                     dtype=np.int64))
-        if arr.size == 0:
+            ids = np.unique(tab["doc_id"].to_numpy().astype(np.int64))
+        if ids.size == 0:
             return
-        if (changed is None and self._fast_enabled()
-                and arr.size <= self.fast_threshold):
+        if changed is None and ids.size <= FAST_THRESHOLD:
             # delete set fits the fast regime: the probe job above was
             # the mutation's ONLY Spark job
             from bright_spark.index.fastpath import apply_fast
-            if apply_fast(self, deleted=arr):
+            if apply_fast(self, deleted=ids):
                 return
         # the id set is a driver literal now — rebuilding ids_df from
         # it (Arrow path) removes the recompute hazard without a
         # checkpoint job
-        ids_df = spark.createDataFrame(pd.DataFrame({"doc_id": arr}))
-        drop_bc = spark.sparkContext.broadcast(arr)
-        try:
-            self._apply_inner(changed, ids_df, drop_bc,
-                              n_changed=int(arr.size))
-        finally:
-            drop_bc.unpersist()
+        ids_df = self.spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
+        self._apply_inner(changed, ids_df, ids, int(ids.size))
 
     def _apply_inner(self, changed: DataFrame | None, ids_df: DataFrame,
-                     drop_bc, n_changed: int = 0) -> None:
+                     ids: np.ndarray | None, n_changed: int) -> None:
+        """Commit one Spark-path mutation: append when the sorted id
+        array ``ids`` is on the driver, else rewrite."""
         cfg = self.config
         spark = self.spark
         pending = self.catalog.begin()
@@ -596,21 +568,15 @@ class IndexMutator:
                              "stored content; store_content=False is not "
                              "supported")
         bits = int(old_meta["docs_range_bits"])
-        use_append = self.mode != "rewrite" and drop_bc is not None
 
         # ---- affected doc-range groups: the docs-table CoW unit.
         # ids_df carries every changed id (replacements, deletes AND
         # newly assigned ids), so its group set is exactly the set of
         # group dirs this mutation may rewrite — nothing else is read.
-        # With the broadcast id array on the driver, groups AND the
-        # changed posting ranges come from numpy — zero Spark jobs.
-        range_bits = int(old_meta.get("range_bits") or cfg.range_bits or 0)
-        changed_ranges: list[int] | None = None
-        if drop_bc is not None:
-            arr = np.asarray(drop_bc.value, dtype=np.int64)
-            affected_groups = [int(g) for g in np.unique(arr >> bits)]
-            changed_ranges = [int(r) for r in
-                              np.unique(arr >> np.int64(range_bits))]
+        # With the id array on the driver the groups come from numpy —
+        # zero Spark jobs.
+        if ids is not None:
+            affected_groups = [int(g) for g in np.unique(ids >> bits)]
         else:
             affected_groups = sorted(
                 int(r["g"]) for r in ids_df.select(
@@ -621,21 +587,19 @@ class IndexMutator:
         # the docs table stores no token arrays (build module doc) —
         # re-tokenize the replaced set from stored field text, across
         # EVERY analyzed field (their old entries must leave the index:
-        # append mode tombstones them and subtracts their stats; rewrite
-        # mode drops them from the decoded runs). Checkpointing the
-        # (small) replaced slice means the pruned group dirs are
-        # scanned ONCE — every downstream pass reads the checkpoint.
+        # append tombstones them and subtracts their stats; rewrite
+        # drops them from the decoded runs). Checkpointing the (small)
+        # replaced slice means the pruned group dirs are scanned ONCE —
+        # every downstream pass reads the checkpoint.
         replaced = (docs_scan.join(ids_df, "doc_id", "left_semi")
                     .localCheckpoint(eager=True))
-        if use_append:
+        if ids is not None:
             # the ids actually present become tombstones (an absent id
             # needs none and must not move n_docs) — tiny collect
-            present_ids = np.array(
-                [r["doc_id"] for r in replaced.select("doc_id").collect()],
-                dtype=np.int64)
+            present_ids = (replaced.select("doc_id").toArrow()["doc_id"]
+                           .to_numpy().astype(np.int64))
             n_present = int(present_ids.size)
         else:
-            present_ids = None
             n_present = replaced.count()
         new_partials = (self._field_partials(changed)
                         if changed is not None else None)
@@ -660,7 +624,7 @@ class IndexMutator:
         tomb_bc = None
         old_tomb = self.catalog.tombstones()
         try:
-            if use_append:
+            if ids is not None:
                 metrics = self._apply_append(
                     pending, cfg, new_partials, present_ids, old_tomb, par,
                     n_changed)
@@ -668,11 +632,11 @@ class IndexMutator:
                 if old_tomb is not None:
                     tomb_bc = spark.sparkContext.broadcast(old_tomb)
                 metrics = self._apply_rewrite(
-                    pending, cfg, ids_df, drop_bc, tomb_bc, new_partials,
-                    replaced_partials, changed_ranges, par)
+                    pending, cfg, ids_df, tomb_bc, new_partials,
+                    replaced_partials, par)
 
             # ---- term_stats + meta: O(batch) signed-delta maintenance
-            # in BOTH modes (mutate_stats), then ONE atomic commit for
+            # on both paths (mutate_stats), then ONE atomic commit for
             # docs + postings + tombstones + stats together
             n_docs_new = (int(old_meta.get("n_docs") or 0) - n_present
                           + (n_changed if changed is not None else 0))
@@ -687,19 +651,24 @@ class IndexMutator:
         finally:
             if tomb_bc is not None:
                 tomb_bc.unpersist()
-        if (self.compact_threshold
+        self._maybe_compact()
+
+    def _maybe_compact(self) -> None:
+        """Compact once a commit has left a pointer chain longer than
+        ``COMPACT_THRESHOLD`` dirs (0 never compacts)."""
+        if (COMPACT_THRESHOLD
                 and max(self.catalog.delta_depth("postings"),
                         self.catalog.delta_depth("term_stats"))
-                > self.compact_threshold):
+                > COMPACT_THRESHOLD):
             self.compact()
 
     def _apply_append(self, pending, cfg, new_partials,
                       present_ids: np.ndarray, old_tomb, par: int,
                       n_changed: int = 0) -> dict:
-        """Append-mode postings + tombstones: the new batch's entries
-        merge into DELTA dirs appended to their buckets' chains (the
-        existing postings are never read); replaced/deleted ids land
-        in the tombstone table at this snapshot's version."""
+        """Append postings + tombstones: the new batch's entries merge
+        into DELTA dirs appended to their buckets' chains (the existing
+        postings are never read); replaced/deleted ids land in the
+        tombstone table at this snapshot's version."""
         appended: set[int] = set()
         if new_partials is not None:
             if n_changed <= 10_000:
@@ -726,19 +695,18 @@ class IndexMutator:
         return {"mode": "append", "buckets_appended": len(appended),
                 "tombstones_added": int(present_ids.size)}
 
-    def _apply_rewrite(self, pending, cfg, ids_df, drop_bc, tomb_bc,
-                       new_partials, replaced_partials,
-                       changed_ranges, par: int) -> dict:
-        """Rewrite-mode postings: consolidate the affected buckets in
-        place — ONLY their live dirs are read and re-versioned; every
-        other bucket keeps its parent pointer untouched (never even
-        listed). Within them, only rows in the CHANGED doc ranges can
-        hold a changed id or receive a new entry — rows of other
-        ranges bypass the Python decode/merge entirely (a JVM
-        passthrough), so the kernel work is O(changed ranges), not
-        O(touched terms' full postings). Existing tombstones apply
-        version-aware during the decode, so re-encoding at the new
-        snapshot version cannot resurrect dead entries."""
+    def _apply_rewrite(self, pending, cfg, ids_df, tomb_bc, new_partials,
+                       replaced_partials, par: int) -> dict:
+        """Rewrite postings for a change set too large for the driver:
+        consolidate the affected buckets in place — ONLY their live
+        dirs are read and re-versioned; every other bucket keeps its
+        parent pointer untouched (never even listed). Within them, rows
+        of untouched terms pass through the JVM; the touched rows decode
+        into one row per entry, existing tombstones applied
+        version-aware (re-encoding at the new snapshot version cannot
+        resurrect dead entries), and the changed ids leave by an
+        anti-join against ``ids_df`` — no driver collect, no executor
+        broadcast."""
         spark = self.spark
         terms_df = replaced_partials.select("term")
         if new_partials is not None:
@@ -759,37 +727,20 @@ class IndexMutator:
             affected_buckets = sorted(set(affected_buckets) | holders)
 
         in_buckets = self.catalog.postings(spark, buckets=affected_buckets)
-        if changed_ranges is not None and len(changed_ranges) <= 1024:
-            in_range = F.col("range_id").isin(changed_ranges)
-            untouched = (in_buckets.filter(~in_range)
-                         .unionByName(in_buckets.filter(in_range)
-                                      .join(terms_df, "term", "left_anti")))
-            touched = (in_buckets.filter(in_range)
-                       .join(terms_df, "term", "left_semi"))
-        else:
-            untouched = in_buckets.join(terms_df, "term", "left_anti")
-            touched = in_buckets.join(terms_df, "term", "left_semi")
-        touched_sel = touched.select(*_DECODE_COLS)
-        if drop_bc is not None:
-            surviving_partials = touched_sel.mapInArrow(
-                _decode_to_partials(cfg.store_positions,
-                                    drop_bc=drop_bc, tomb_bc=tomb_bc),
-                schema=PARTIALS_SCHEMA)
-        else:
-            # huge change set: entry-level anti-join instead of a
-            # broadcast drop; survivors re-enter the merge as singleton
-            # partial runs (the merge kernel regroups them anyway)
-            entries = touched_sel.mapInArrow(
-                _decode_to_entries(cfg.store_positions, tomb_bc=tomb_bc),
-                schema=ENTRIES_SCHEMA)
-            surviving_partials = (
-                entries.join(ids_df, "doc_id", "left_anti")
-                .select("field", "term", "range_id",
-                        F.array("doc_id").alias("doc_ids"),
-                        F.array("tf").alias("tfs"),
-                        F.array("dl").alias("dls"),
-                        F.col("pos")))
-        partials = surviving_partials
+        untouched = in_buckets.join(terms_df, "term", "left_anti")
+        touched = in_buckets.join(terms_df, "term", "left_semi")
+        # survivors re-enter the merge as singleton partial runs (the
+        # merge kernel regroups them anyway)
+        entries = touched.select(*_DECODE_COLS).mapInArrow(
+            _decode_to_entries(cfg.store_positions, tomb_bc=tomb_bc),
+            schema=ENTRIES_SCHEMA)
+        partials = (
+            entries.join(ids_df, "doc_id", "left_anti")
+            .select("field", "term", "range_id",
+                    F.array("doc_id").alias("doc_ids"),
+                    F.array("tf").alias("tfs"),
+                    F.array("dl").alias("dls"),
+                    F.col("pos")))
         if new_partials is not None:
             partials = partials.unionByName(new_partials)
         n_merge = min(par, max(4, len(affected_buckets)
@@ -815,7 +766,7 @@ class IndexMutator:
     def compact(self) -> None:
         """Consolidate append-mode state — scorch's background merger
         as an explicit, amortized operator (auto-triggered past
-        ``compact_threshold``): every bucket with a delta chain fully
+        ``COMPACT_THRESHOLD``): every bucket with a delta chain fully
         re-merges into one version dir; when tombstones exist, every
         bucket's rows in the TOMBSTONED doc ranges are additionally
         cleaned (other rows are copied as they are, ``ver`` included);

@@ -52,3 +52,31 @@ def oracle(repos_pdf):
 def engine(spark, built_index):
     from bright_spark.query.engine import SearchEngine
     return SearchEngine(spark, built_index.index_dir)
+
+
+# Mutation paths are chosen by change-set size alone (the module
+# constants of bright_spark.index.mutations, read at call time); these
+# fixtures force one for a whole test. A test that switches path midway
+# sets the same constants inside ``monkeypatch.context()``.
+
+@pytest.fixture()
+def distributed_mutations(monkeypatch):
+    """Every mutation runs the Spark stages (append), none the driver
+    fast path."""
+    from bright_spark.index import mutations
+    monkeypatch.setattr(mutations, "FAST_THRESHOLD", 0)
+
+
+@pytest.fixture()
+def rewrite_mutations(distributed_mutations, monkeypatch):
+    """Every DataFrame mutation takes the rewrite path (entry-level
+    anti-join); a ``delete_ids`` list still appends on Spark."""
+    from bright_spark.index import mutations
+    monkeypatch.setattr(mutations, "BROADCAST_THRESHOLD", 0)
+
+
+@pytest.fixture()
+def no_autocompact(monkeypatch):
+    """No mutation triggers a compaction, however long its chains."""
+    from bright_spark.index import mutations
+    monkeypatch.setattr(mutations, "COMPACT_THRESHOLD", 0)

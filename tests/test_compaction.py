@@ -16,7 +16,7 @@ from hypothesis import strategies as st
 
 from bright_spark.fixtures import make_repos
 from bright_spark.index import catalog as catalog_mod
-from bright_spark.index import codec
+from bright_spark.index import codec, mutations
 from bright_spark.index.builder import build_index
 from bright_spark.index.catalog import POSTINGS_ARROW, IndexCatalog
 from bright_spark.index.mutations import IndexMutator, _decode_rows, _kill_set
@@ -138,7 +138,8 @@ def _index_meta(idx: str) -> dict:
     return pq.read_table(IndexCatalog(idx).index_meta_path).to_pylist()[0]
 
 
-def test_compaction_driver_equals_spark(spark, tmp_path, monkeypatch):
+def test_compaction_driver_equals_spark(spark, tmp_path, monkeypatch,
+                                        no_autocompact):
     """An index with Spark- and driver-written delta chains, tombstones
     and positions, compacted once per side: the same decoded entries per
     (field, term, range_id), term_stats rows and index_meta, and
@@ -151,20 +152,20 @@ def test_compaction_driver_equals_spark(spark, tmp_path, monkeypatch):
                 id_col="rid", n_build_partitions=4)
     rows = {int(r["rid"]): r for r in pdf.to_dict("records")}
 
-    def mutator(fast="auto"):
-        return IndexMutator(spark, idx, compact_threshold=0, fast=fast)
-
     replaced = [{**rows[rid], "content": "def parse_user_session(config): "
                  "return user session"} for rid in (3, 17, 40)]
-    mutator("never").upsert(spark.createDataFrame(pd.DataFrame(replaced)))
+    with monkeypatch.context() as mp:  # distributed_mutations
+        mp.setattr(mutations, "FAST_THRESHOLD", 0)
+        IndexMutator(spark, idx).upsert(
+            spark.createDataFrame(pd.DataFrame(replaced)))
     added = [{**rows[0], "rid": 1000 + i, "path": f"src/new{i}.py",
               "content": f"user session parser config token{i}"}
              for i in range(4)]
-    mutator().upsert_rows(added)
+    IndexMutator(spark, idx).upsert_rows(added)
     for r in replaced + added:
         rows[r["rid"]] = r
     for ids in ([5, 1001], [17, 33]):
-        mutator().delete_ids(ids)
+        IndexMutator(spark, idx).delete_ids(ids)
         for i in ids:
             rows.pop(i)
     cat = IndexCatalog(idx)

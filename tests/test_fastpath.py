@@ -8,6 +8,7 @@ equivalence pin for the whole file-format surface."""
 import numpy as np
 import pytest
 
+from bright_spark.index import mutations
 from bright_spark.index.builder import build_index
 from bright_spark.index.catalog import IndexCatalog
 from bright_spark.index.mutations import IndexMutator
@@ -30,9 +31,9 @@ def _build(spark, idx, store_positions=True):
     return rows
 
 
-def _mutate_seq(spark, idx, fast):
+def _mutate_seq(spark, idx):
     def mut():
-        return IndexMutator(spark, idx, fast=fast)
+        return IndexMutator(spark, idx)
 
     # replace existing ids + insert brand-new ids in a brand-new group
     mut().upsert(spark.createDataFrame([
@@ -86,13 +87,16 @@ def _commit_modes(idx):
 
 
 @pytest.mark.parametrize("store_positions", [True, False])
-def test_fast_equals_distributed(spark, tmp_path_factory, store_positions):
+def test_fast_equals_distributed(spark, tmp_path_factory, monkeypatch,
+                                 store_positions):
     base = tmp_path_factory.mktemp("fastpath")
     idx_a, idx_b = str(base / "fast"), str(base / "dist")
     _build(spark, idx_a, store_positions)
     _build(spark, idx_b, store_positions)
-    _mutate_seq(spark, idx_a, fast="auto")
-    _mutate_seq(spark, idx_b, fast="never")
+    _mutate_seq(spark, idx_a)
+    with monkeypatch.context() as mp:  # distributed_mutations
+        mp.setattr(mutations, "FAST_THRESHOLD", 0)
+        _mutate_seq(spark, idx_b)
 
     # the fast copy really took the fast path for every mutation commit
     modes_a = [m for op, m in _commit_modes(idx_a) if op != "build"]
@@ -105,9 +109,32 @@ def test_fast_equals_distributed(spark, tmp_path_factory, store_positions):
         assert sa[key] == sb[key], f"state diverged at {key!r}"
 
 
+def test_distributed_append_broadcasts_nothing(spark, tmp_path, monkeypatch,
+                                              distributed_mutations):
+    """A Spark-path upsert and delete keep their id set on the driver:
+    no SparkContext.broadcast is made for either."""
+    idx = str(tmp_path / "idx")
+    _build(spark, idx)
+    sent = []
+    broadcast = type(spark.sparkContext).broadcast
+
+    def counted(self, value):
+        sent.append(value)
+        return broadcast(self, value)
+    monkeypatch.setattr(type(spark.sparkContext), "broadcast", counted)
+    mut = IndexMutator(spark, idx)
+    mut.upsert(spark.createDataFrame(
+        [{"doc_id": 113, "lang": "en", "text": "nobroadcast parse"}]))
+    mut.delete_ids([226])
+    assert _commit_modes(idx)[-2:] == [("upsert", "append"),
+                                       ("delete", "append")]
+    assert sent == []
+    assert SearchEngine(spark, idx).search_df("nobroadcast", k=5).count() == 1
+
+
 def test_keyed_index_falls_back(spark, tmp_path_factory):
     """No id_col (natural-key index): upsert silently takes the
-    distributed path even with fast='auto'."""
+    distributed path even at a fast-path size."""
     from bright_spark.fixtures import make_repos
     base = tmp_path_factory.mktemp("fastkeyed")
     idx = str(base / "idx")
@@ -116,8 +143,7 @@ def test_keyed_index_falls_back(spark, tmp_path_factory):
                 IndexConfig(id="keyed"), n_build_partitions=4)
     row = pdf.iloc[0].to_dict()
     row["content"] = "def fastpath_fallback(): return 1"
-    IndexMutator(spark, idx, fast="auto").upsert(
-        spark.createDataFrame([row]))
+    IndexMutator(spark, idx).upsert(spark.createDataFrame([row]))
     modes = [m for op, m in _commit_modes(idx) if op != "build"]
     assert modes == ["append"]
     eng = SearchEngine(spark, idx)
@@ -154,7 +180,7 @@ def test_fast_crash_is_atomic(spark, tmp_path_factory, monkeypatch,
     obj, name = targets[crash_point]
     monkeypatch.setattr(obj, name, boom)
     with pytest.raises(RuntimeError, match="injected"):
-        IndexMutator(spark, idx, fast="auto").upsert_rows(
+        IndexMutator(spark, idx).upsert_rows(
             [{"doc_id": 113, "lang": "en",
               "text": f"fastcrash_{crash_point} alpha"}])
     monkeypatch.undo()
@@ -165,7 +191,7 @@ def test_fast_crash_is_atomic(spark, tmp_path_factory, monkeypatch,
     assert got == baseline
     assert eng.search_df(f"fastcrash_{crash_point}", k=5).collect() == []
     # retry commits cleanly, through the fast path
-    IndexMutator(spark, idx, fast="auto").upsert_rows(
+    IndexMutator(spark, idx).upsert_rows(
         [{"doc_id": 113, "lang": "en",
           "text": f"fastcrash_{crash_point} alpha"}])
     assert _commit_modes(idx)[-1] == ("upsert", "append-fast")
@@ -173,14 +199,16 @@ def test_fast_crash_is_atomic(spark, tmp_path_factory, monkeypatch,
         f"fastcrash_{crash_point}", k=5).count() == 1
 
 
-def test_fast_upsert_then_compact_and_vacuum(spark, tmp_path_factory):
+def test_fast_upsert_then_compact_and_vacuum(spark, tmp_path_factory,
+                                             monkeypatch):
     """Fast-path commits obey the same chain-depth auto-compaction and
     survive compact + vacuum with correct results."""
     base = tmp_path_factory.mktemp("fastcompact")
     idx = str(base / "idx")
     _build(spark, idx)
+    monkeypatch.setattr(mutations, "COMPACT_THRESHOLD", 3)
     for i in range(4):
-        IndexMutator(spark, idx, fast="auto", compact_threshold=3).upsert_rows(
+        IndexMutator(spark, idx).upsert_rows(
             [{"doc_id": 500000 + i, "lang": "en",
               "text": f"compact probe delta{i} parse"}])
     cat = IndexCatalog(idx)
@@ -214,8 +242,8 @@ def test_signed_stats_cf_is_per_row_tf_sum():
     assert _signed_stats(None, 1) is None
 
 
-def test_driver_writes_run_clean_and_take_doc_len_from_partials(spark,
-                                                                tmp_path):
+def test_driver_writes_run_clean_and_take_doc_len_from_partials(
+        spark, tmp_path, no_autocompact):
     """A driver upsert and delete raise no pandas SettingWithCopyWarning
     (turned into an error here), and the upsert's doc_len is the
     content field's token count from the one tokenize pass, 0 for a doc
@@ -230,7 +258,7 @@ def test_driver_writes_run_clean_and_take_doc_len_from_partials(spark,
     rows = [{"doc_id": 113, "lang": "en", "text": "replaced parse alpha"},
             {"doc_id": 99991, "lang": "de", "text": "new user config user"},
             {"doc_id": 99992, "lang": "en", "text": "  ,;  "}]
-    mut = IndexMutator(spark, idx, compact_threshold=0)
+    mut = IndexMutator(spark, idx)
     with warnings.catch_warnings():
         warnings.simplefilter("error", pd.errors.SettingWithCopyWarning)
         mut.upsert_rows(rows)

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bright_spark.fixtures import make_repos
+from bright_spark.index import mutations
 from bright_spark.index.builder import build_index
 from bright_spark.index.mutations import IndexMutator
 from bright_spark.models import IndexConfig
@@ -263,10 +264,10 @@ def test_upsert_id_assignment_no_global_window(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("store_positions", [False, True])
 def test_anti_join_fallback_matches_broadcast(spark, tmp_path_factory,
-                                              store_positions):
-    """broadcast_threshold=0 forces the entry-level anti-join drop;
-    both branches must produce identical indexes (upsert + delete)."""
-    import pandas as pd
+                                              monkeypatch, store_positions):
+    """BROADCAST_THRESHOLD = 0 sends DataFrame change sets to the
+    entry-level anti-join rewrite; it must produce an index identical
+    to the default path's (upsert + delete)."""
     pdf = make_repos(40, 13)
     results = {}
     for label, thresh in (("bc", None), ("aj", 0)):
@@ -275,11 +276,17 @@ def test_anti_join_fallback_matches_broadcast(spark, tmp_path_factory,
         build_index(spark, spark.createDataFrame(pdf), idx,
                     IndexConfig(id="fb", store_positions=store_positions),
                     n_build_partitions=4)
-        mut = IndexMutator(spark, idx, broadcast_threshold=thresh)
-        row = pdf.iloc[7].to_dict()
-        row["content"] = "def fallback_marker(): return 1"
-        mut.upsert(spark.createDataFrame([row]))
-        mut.delete_by_query("lang:go")
+        with monkeypatch.context() as mp:
+            if thresh is not None:
+                mp.setattr(mutations, "BROADCAST_THRESHOLD", thresh)
+            mut = IndexMutator(spark, idx)
+            row = pdf.iloc[7].to_dict()
+            row["content"] = "def fallback_marker(): return 1"
+            mut.upsert(spark.createDataFrame([row]))
+            mut.delete_by_query("lang:go")
+        modes = [m["metrics"]["mode"] for m in mut.catalog.snapshots()[1:]]
+        assert modes == (["rewrite", "rewrite"] if label == "aj"
+                         else ["append", "append-fast"]), modes
         results[label] = idx
     _assert_equiv(spark, results["bc"], results["aj"],
                   QUERIES + ["fallback_marker", '"def fallback_marker"'
@@ -373,7 +380,8 @@ def test_delete_everything_commits_empty_index(spark, tmp_path):
 
 
 def test_mutated_index_driver_spark_oracle_parity(spark, tmp_path,
-                                                  monkeypatch):
+                                                  monkeypatch,
+                                                  no_autocompact):
     """Upserts and deletes without compaction leave delta chains (Spark-
     and driver-written) and tombstones; on that index the driver path,
     the Spark path (zero read budget) and an oracle over the surviving
@@ -393,9 +401,11 @@ def test_mutated_index_driver_spark_oracle_parity(spark, tmp_path,
     rows = {int(r["rid"]): r for r in pdf.to_dict("records")}
 
     def upsert(batch, fast):
-        IndexMutator(spark, idx, mode="append", compact_threshold=0,
-                     fast=fast).upsert(spark.createDataFrame(
-                         pd.DataFrame(batch)))
+        with monkeypatch.context() as mp:
+            if fast == "never":  # distributed_mutations
+                mp.setattr(mutations, "FAST_THRESHOLD", 0)
+            IndexMutator(spark, idx).upsert(
+                spark.createDataFrame(pd.DataFrame(batch)))
         rows.update({r["rid"]: r for r in batch})
 
     replaced = []
@@ -408,8 +418,7 @@ def test_mutated_index_driver_spark_oracle_parity(spark, tmp_path,
              "content": f"user session parser config token{i}"}
             for i in range(4)], "auto")
     for ids in ([5, 1001], [17, 33]):
-        IndexMutator(spark, idx, mode="append",
-                     compact_threshold=0).delete_ids(ids)
+        IndexMutator(spark, idx).delete_ids(ids)
         for i in ids:
             rows.pop(i)
 

@@ -23,6 +23,7 @@ import pytest
 
 from bright_spark.fixtures import make_repos
 from bright_spark.index import catalog as catalog_mod
+from bright_spark.index import mutations
 from bright_spark.index.builder import build_index
 from bright_spark.index.catalog import (
     POSTINGS_ARROW,
@@ -73,34 +74,35 @@ def mixed(spark, tmp_path_factory):
                 n_build_partitions=4)
     rows = {int(r["rid"]): r for r in pdf.to_dict("records")}
 
-    def mut(fast):
-        return IndexMutator(spark, idx, mode="append", compact_threshold=0,
-                            fast=fast)
-
     def upsert(batch, fast):
         if fast == "never":
-            mut(fast).upsert(spark.createDataFrame(pd.DataFrame(batch)))
+            with pytest.MonkeyPatch.context() as mp:  # distributed_mutations
+                mp.setattr(mutations, "FAST_THRESHOLD", 0)
+                IndexMutator(spark, idx).upsert(
+                    spark.createDataFrame(pd.DataFrame(batch)))
         else:
-            mut(fast).upsert_rows(batch)
+            IndexMutator(spark, idx).upsert_rows(batch)
         rows.update({r["rid"]: r for r in batch})
 
     def delete(ids):
-        mut("auto").delete_ids(ids)
+        IndexMutator(spark, idx).delete_ids(ids)
         for i in ids:
             rows.pop(i)
 
-    upsert([{**rows[rid], "content": "def parse_user_session(config): "
-             "return user session"} for rid in (3, 17, 40)], "never")
-    upsert([{**rows[0], "rid": 1000 + i, "path": f"src/new{i}.py",
-             "content": f"user session parser config token{i}"}
-            for i in range(4)] + [{**rows[8], "content": "parser user"}],
-           "auto")
-    delete([5, 1001])
-    upsert([{**rows[1], "rid": 2000, "path": "src/spark.py",
-             "content": "session token2 parser config"}], "never")
-    delete([17, 33])
-    upsert([{**rows[2], "rid": 1001, "path": "src/back.py",
-             "content": "user config token2 session back"}], "auto")
+    with pytest.MonkeyPatch.context() as mp:  # no_autocompact
+        mp.setattr(mutations, "COMPACT_THRESHOLD", 0)
+        upsert([{**rows[rid], "content": "def parse_user_session(config): "
+                 "return user session"} for rid in (3, 17, 40)], "never")
+        upsert([{**rows[0], "rid": 1000 + i, "path": f"src/new{i}.py",
+                 "content": f"user session parser config token{i}"}
+                for i in range(4)] + [{**rows[8], "content": "parser user"}],
+               "auto")
+        delete([5, 1001])
+        upsert([{**rows[1], "rid": 2000, "path": "src/spark.py",
+                 "content": "session token2 parser config"}], "never")
+        delete([17, 33])
+        upsert([{**rows[2], "rid": 1001, "path": "src/back.py",
+                 "content": "user config token2 session back"}], "auto")
     return idx, rows
 
 
@@ -169,7 +171,8 @@ def _no_shared_dirs(idx):
                    for d in cat.part_dirs(t))
 
 
-def test_rewrite_mode_over_mixed_chains(spark, mixed, tmp_path):
+def test_rewrite_mode_over_mixed_chains(spark, mixed, tmp_path,
+                                        rewrite_mutations, no_autocompact):
     """A rewrite-mode mutation that touches one bucket holding a shared
     delta dir rewrites every holder of one: no other bucket's chain keeps
     the dir, whose rows of the rewritten bucket are superseded."""
@@ -181,8 +184,7 @@ def test_rewrite_mode_over_mixed_chains(spark, mixed, tmp_path):
     # their chains
     batch = [{**rows[0], "rid": 5000, "path": "src/rw.py",
               "content": "user"}]
-    IndexMutator(spark, d, mode="rewrite", compact_threshold=0).upsert(
-        spark.createDataFrame(pd.DataFrame(batch)))
+    IndexMutator(spark, d).upsert(spark.createDataFrame(pd.DataFrame(batch)))
     rows.update({r["rid"]: r for r in batch})
     m = IndexCatalog(d).manifest()
     assert m["metrics"]["mode"] == "rewrite"
@@ -193,7 +195,8 @@ def test_rewrite_mode_over_mixed_chains(spark, mixed, tmp_path):
     _assert_oracle(spark, d, rows)
 
 
-def test_compaction_consolidates_every_shared_dir_holder(spark, tmp_path):
+def test_compaction_consolidates_every_shared_dir_holder(spark, tmp_path,
+                                                         no_autocompact):
     """Without tombstones compaction targets the chained buckets; a
     bucket whose only pointer is a shared delta dir (it was empty
     before the upsert) is consolidated with them, so no chain keeps a
@@ -207,7 +210,7 @@ def test_compaction_consolidates_every_shared_dir_holder(spark, tmp_path):
     words = " ".join(f"w{i}" for i in range(40))
     batch = [{"rid": 1, "text": f"alpha beta {words}"},
              {"rid": 2, "text": f"alpha w1 w3 {words}"}]
-    IndexMutator(spark, idx, compact_threshold=0).upsert_rows(batch)
+    IndexMutator(spark, idx).upsert_rows(batch)
     rows.update({r["rid"]: r for r in batch})
     cat = IndexCatalog(idx)
     tables = cat.manifest()["tables"]
@@ -331,7 +334,7 @@ def test_driver_commits_name_their_files(spark, tmp_path):
     more["rid"] = [100 + i for i in range(20)]  # 10 replaced, 10 new
     IndexMutator(spark, idx).upsert_rows(more.to_dict("records"))
     IndexMutator(spark, idx).delete_ids([1, 2, 3, 104, 110])
-    IndexMutator(spark, idx, compact_threshold=0).compact()
+    IndexMutator(spark, idx).compact()
     cat = IndexCatalog(idx)
     ms = cat.snapshots()
     assert [m["operation"] for m in ms] == ["build", "upsert", "delete",
@@ -360,7 +363,8 @@ def test_driver_commits_name_their_files(spark, tmp_path):
 # ------------------------------------------------- large-delta pruning
 
 
-def test_large_shared_delta_prunes_like_per_bucket_files(spark, tmp_path):
+def test_large_shared_delta_prunes_like_per_bucket_files(spark, tmp_path,
+                                                         no_autocompact):
     """A ~10k-doc driver upsert writes one shared delta cut into row
     groups at term boundaries: a single-term lookup selects no more of
     its footer bytes than it would of the same batch's per-bucket file
@@ -375,7 +379,7 @@ def test_large_shared_delta_prunes_like_per_bucket_files(spark, tmp_path):
     build_index(spark, spark.createDataFrame(rows[:50]), idx,
                 IndexConfig(id="pr", n_term_buckets=16), id_col="rid",
                 n_build_partitions=4)
-    IndexMutator(spark, idx, compact_threshold=0).upsert_rows(rows[50:])
+    IndexMutator(spark, idx).upsert_rows(rows[50:])
     cat = IndexCatalog(idx)
     assert cat.manifest()["metrics"]["mode"] == "append-fast"
     (delta,) = [d for d in cat.postings_dirs() if is_shared_dir(d)]
@@ -455,9 +459,12 @@ def test_repeated_ids_in_one_batch_keep_the_last_row(spark, tmp_path):
                          {"rid": 9, "content": "delta second"}])
         rows[9] = {"rid": 9, "content": "delta second"}
         for fast in ("auto", "never"):
-            IndexMutator(spark, idx, fast=fast).upsert_rows(
-                [{"rid": 300, "content": f"epsilon {fast} one"},
-                 {"rid": 300, "content": f"epsilon {fast} two"}])
+            with pytest.MonkeyPatch.context() as mp:
+                if fast == "never":  # distributed_mutations
+                    mp.setattr(mutations, "FAST_THRESHOLD", 0)
+                IndexMutator(spark, idx).upsert_rows(
+                    [{"rid": 300, "content": f"epsilon {fast} one"},
+                     {"rid": 300, "content": f"epsilon {fast} two"}])
             rows[300] = {"rid": 300, "content": f"epsilon {fast} two"}
             assert IndexCatalog(idx).manifest()["metrics"]["mode"] == (
                 "append-fast" if fast == "auto" else "append")

@@ -20,7 +20,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from bright_spark.index import catalog
+from bright_spark.index import catalog, mutations
 from bright_spark.index.builder import build_index
 from bright_spark.index.catalog import IndexCatalog, LayoutVersionError
 from bright_spark.index.mutations import IndexMutator
@@ -72,7 +72,7 @@ def test_mutation_shares_untouched_bucket_dirs(spark, snap_idx):
 
 
 def test_crash_before_commit_leaves_old_snapshot_intact(
-        spark, snap_idx, monkeypatch):
+        spark, snap_idx, monkeypatch, distributed_mutations):
     """Kill the writer after the docs + bucket version dirs are written
     but BEFORE the manifest commit: readers must see the old snapshot,
     bit-for-bit, and a subsequent mutation must succeed normally."""
@@ -89,13 +89,13 @@ def test_crash_before_commit_leaves_old_snapshot_intact(
 
     monkeypatch.setattr(builder_mod.IndexBuilder, "mutate_stats", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        # fast="never": this test injects into the DISTRIBUTED write
-        # sequence (the fast path's crash atomicity is pinned in
+        # distributed_mutations: this test injects into the DISTRIBUTED
+        # write sequence (the fast path's crash atomicity is pinned in
         # test_fastpath.py)
-        IndexMutator(spark, snap_idx, fast="never").upsert(
+        IndexMutator(spark, snap_idx).upsert(
             spark.createDataFrame(
                 [{"rid": 1, "text": "orphan_term common", "kind": "k1"}]))
-    monkeypatch.undo()
+    monkeypatch.undo()  # lifts distributed_mutations too
 
     cat2 = IndexCatalog(snap_idx)
     assert cat2.current_snapshot_id() == sid  # CURRENT never moved
@@ -220,7 +220,8 @@ def test_manifest_lineage_metrics(spark, snap_idx):
 
 @pytest.mark.parametrize("crash_point", ["postings_write", "stats", "commit"])
 def test_crash_at_every_write_stage_is_atomic(spark, tmp_path_factory,
-                                              monkeypatch, crash_point):
+                                              monkeypatch, crash_point,
+                                              distributed_mutations):
     """Inject a crash at EACH stage of the mutation write sequence:
     whatever the stage, the old snapshot must stay live and intact and
     a retry must commit cleanly (there is no partially-visible state
@@ -250,11 +251,12 @@ def test_crash_at_every_write_stage_is_atomic(spark, tmp_path_factory,
     obj, name = targets[crash_point]
     monkeypatch.setattr(obj, name, boom)
     with pytest.raises(RuntimeError, match="injected"):
-        # fast="never": the injected functions are the distributed
-        # stages; the fast path's crash points live in test_fastpath.py
-        IndexMutator(spark, idx, fast="never").upsert(spark.createDataFrame(
+        # distributed_mutations: the injected functions are the
+        # distributed stages; the fast path's crash points live in
+        # test_fastpath.py
+        IndexMutator(spark, idx).upsert(spark.createDataFrame(
             [{"rid": 0, "text": f"crash_{crash_point} common"}]))
-    monkeypatch.undo()
+    monkeypatch.undo()  # lifts distributed_mutations too
 
     assert IndexCatalog(idx).current_snapshot_id() == sid
     eng = SearchEngine(spark, idx)
@@ -393,7 +395,8 @@ def test_commit_claim_is_atomic(spark, tmp_path_factory):
     assert m["snapshot_id"] == 3 and "stale" not in m
 
 
-def test_mutation_is_o_change_not_o_corpus(spark, tmp_path_factory):
+def test_mutation_is_o_change_not_o_corpus(spark, tmp_path_factory,
+                                           rewrite_mutations):
     """The v4 rewrite-mode scale contract: a small upsert re-versions
     only the doc groups its ids land in and only the term buckets its
     terms hash to — every other docs group, postings bucket AND
@@ -410,7 +413,7 @@ def test_mutation_is_o_change_not_o_corpus(spark, tmp_path_factory):
     assert len(before["docs"]) == 8
 
     # one-doc upsert into group 2 (rid 37), one unique term
-    IndexMutator(spark, idx, mode="rewrite").upsert(spark.createDataFrame(
+    IndexMutator(spark, idx).upsert(spark.createDataFrame(
         [{"rid": 37, "text": "ochange_marker common", "kind": "k1"}]))
     after = IndexCatalog(idx).manifest()["tables"]
 
@@ -433,8 +436,11 @@ def test_mutation_is_o_change_not_o_corpus(spark, tmp_path_factory):
     assert m["metrics"]["docs_groups_rewritten"] == 1
     assert m["metrics"]["mode"] == "rewrite"
 
-    # delete every doc of group 0 -> its pointer drops entirely
-    IndexMutator(spark, idx, mode="rewrite").delete_ids(list(range(16)))
+    # delete every doc of group 0 -> its pointer drops entirely (a
+    # DataFrame id set: a delete_ids list never reaches rewrite)
+    IndexMutator(spark, idx).delete_where(spark.createDataFrame(
+        [(i,) for i in range(16)], "doc_id BIGINT"))
+    assert IndexCatalog(idx).manifest()["metrics"]["mode"] == "rewrite"
     t3 = IndexCatalog(idx).manifest()["tables"]
     assert "0" not in t3["docs"]
     assert len(t3["docs"]) == 7  # the other 7 groups intact
@@ -451,7 +457,8 @@ def test_mutation_is_o_change_not_o_corpus(spark, tmp_path_factory):
                  id="auto-append-fast-spark"),
 ])
 def test_append_mutation_is_o_batch(spark, tmp_path_factory, monkeypatch,
-                                    fast, expect_mode, compact_mode):
+                                    request, fast, expect_mode,
+                                    compact_mode):
     """The append-mode (default) scale contract — scorch's segment
     model (store/store.go:392-426): an upsert touches NO existing
     postings at all. Every base bucket dir stays pointer-identical;
@@ -470,7 +477,9 @@ def test_append_mutation_is_o_batch(spark, tmp_path_factory, monkeypatch,
                 attr_cols=("kind",), n_build_partitions=4)
     before = IndexCatalog(idx).manifest()["tables"]
 
-    mut = IndexMutator(spark, idx, fast=fast)  # auto -> append
+    if fast == "never":
+        request.getfixturevalue("distributed_mutations")
+    mut = IndexMutator(spark, idx)
     mut.upsert(spark.createDataFrame(
         [{"rid": 37, "text": "appendmark common", "kind": "k1"}]))
     m = IndexCatalog(idx).manifest()
@@ -520,12 +529,14 @@ def test_append_mutation_is_o_batch(spark, tmp_path_factory, monkeypatch,
     assert eng3.search_df("appendmark", k=5).count() == 1
 
 
-def test_auto_compact_bounds_chain_depth(spark, tmp_path_factory):
-    """File/dir growth is BOUNDED: with compact_threshold=T, chains
+def test_auto_compact_bounds_chain_depth(spark, tmp_path_factory,
+                                        monkeypatch):
+    """File/dir growth is BOUNDED: with COMPACT_THRESHOLD=T, chains
     never exceed T+... — the (T+1)th append triggers consolidation in
     the same mutator call, so no compaction operator has to be
     remembered by the operator. Small index: compaction on the driver."""
-    _auto_compact_bounds_chain_depth(spark, tmp_path_factory, "driver")
+    _auto_compact_bounds_chain_depth(spark, tmp_path_factory, monkeypatch,
+                                     "driver")
 
 
 def test_auto_compact_bounds_chain_depth_on_spark(spark, tmp_path_factory,
@@ -533,17 +544,20 @@ def test_auto_compact_bounds_chain_depth_on_spark(spark, tmp_path_factory,
     """The same bound when a zero read budget sends compaction to
     Spark."""
     monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", 0)
-    _auto_compact_bounds_chain_depth(spark, tmp_path_factory, "spark")
+    _auto_compact_bounds_chain_depth(spark, tmp_path_factory, monkeypatch,
+                                     "spark")
 
 
-def _auto_compact_bounds_chain_depth(spark, tmp_path_factory, compact_mode):
+def _auto_compact_bounds_chain_depth(spark, tmp_path_factory, monkeypatch,
+                                     compact_mode):
     idx = str(tmp_path_factory.mktemp("autocompact") / "idx")
     build_index(spark, spark.createDataFrame(_rows(40)), idx,
                 IndexConfig(id="ac", tokenizer="simple", n_term_buckets=4,
                             docs_range_bits=4),
                 content_col="text", id_col="rid", lang_col=None,
                 n_build_partitions=2)
-    mut = IndexMutator(spark, idx, compact_threshold=3)
+    monkeypatch.setattr(mutations, "COMPACT_THRESHOLD", 3)
+    mut = IndexMutator(spark, idx)
     for i in range(6):
         mut.upsert(spark.createDataFrame(
             [{"rid": i, "text": f"auto_{i} common", "kind": "k0"}]))

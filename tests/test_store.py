@@ -103,6 +103,29 @@ def test_adopt_reconciles_on_disk_config(spark, tmp_path_factory):
         s3.create_index(IndexConfig(id="docs", tokenizer="code"))
 
 
+def test_patch_commits_on_the_driver(store, spark, monkeypatch):
+    """PATCH on an id-keyed index merges the stored doc and commits it
+    through the driver fast path: no DataFrame is created for it."""
+    from pyspark.sql import SparkSession
+
+    from bright_spark.index.catalog import IndexCatalog
+    store.create_index(IndexConfig(id="p", tokenizer="simple",
+                                   primary_key="rid"))
+    store.add_document_rows("p", _rows(12).to_dict("records"),
+                            content_col="text", attr_cols=("kind",))
+
+    def no_frames(*a, **k):
+        raise AssertionError("PATCH created a DataFrame")
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_frames)
+    rec = store.update_document("p", 5, {"text": "patched zeta body"})
+    assert rec["text"] == "patched zeta body" and rec["kind"] == "k2"
+    assert store.search("p", "zeta").total_hits == 1
+    assert store.search("p", "alpha").total_hits == 11
+    m = IndexCatalog(store._index_dir("p")).manifest()
+    assert (m["operation"], m["metrics"]["mode"]) == ("upsert",
+                                                      "append-fast")
+
+
 def test_document_routes(store, spark):
     """DELETE /documents (ids / filter), DELETE /documents/:id, and
     PATCH /documents/:id through the store (handlers/documents.go

@@ -9,6 +9,7 @@ A test that counts disk reads must use a bare catalog or a fresh store:
 a store serves its own writes from memory."""
 
 import json
+import os
 import threading
 import urllib.request
 
@@ -292,3 +293,29 @@ def test_drop_forgets_one_index_dir(tmp_path):
     cache.mark()
     cache.keep((f"{a}/data/v1", "files"), ["fresh"], 10)
     assert cache.get((f"{a}/data/v1", "files")) == ["fresh"]
+
+
+def test_commits_evict_superseded_dirs(spark, tmp_path):
+    """Each commit drops the entries of the dirs it superseded (old
+    docs groups, compacted chains, replaced tombstones and meta): after
+    a store ingest that auto-compacts, every resident entry of the
+    index lies under a dir the live manifest references."""
+    store = IndexStore(spark, str(tmp_path / "data"))
+    _new_index(store)
+    idx = store._index_dir("c")
+    c = 0
+    while not any(s["operation"] == "compact"
+                  for s in IndexCatalog(idx).snapshots()):
+        store.add_document_rows("c", [_doc(i, f"mk{c}")
+                                      for i in range(c * 4, c * 4 + 4)])
+        store.delete_documents("c", ids=[c * 4])
+        assert store.search("c", f"mk{c}").total_hits == 3
+        c += 1
+        assert c < 20, "no auto-compaction"
+    live = [os.path.join(idx, d, "") for d in
+            catalog._manifest_dirs(IndexCatalog(idx).manifest()["tables"])]
+    resident = {key[0] for key in store.cache._items}
+    assert resident and all(p.startswith(idx) for p in resident)
+    stray = [p for p in resident
+             if not any(os.path.join(p, "").startswith(d) for d in live)]
+    assert stray == []
