@@ -46,6 +46,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 DEFAULT_BLOCK_SIZE = 128
 
@@ -260,6 +261,29 @@ def binary_values(col) -> np.ndarray:
     if not parts:
         return np.empty(0, dtype=np.uint8)
     return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def dead_entries(kill, doc_ids: np.ndarray, ver, row: np.ndarray
+                 ) -> np.ndarray | None:
+    """The tombstone kill rule over decoded entries. ``kill`` is
+    (sorted doc ids, versions); ``ver`` the posting rows' ``ver`` column
+    (arrow, or None when the rows carry none) and ``row`` each entry's
+    row in it. An entry is dead iff its doc id is in ``kill`` at a
+    version LATER than its row's ``ver`` (a null or absent ``ver`` is
+    version 0, the oldest), so a re-add written after the tombstone
+    stays live. Returns the boolean mask of dead entries, or None when
+    none is."""
+    if kill is None or not doc_ids.size:
+        return None
+    kids, kvers = kill
+    idx = np.minimum(np.searchsorted(kids, doc_ids), kids.size - 1)
+    hit = kids[idx] == doc_ids
+    if not hit.any():
+        return None
+    v = (pc.fill_null(pc.cast(ver, pa.int64()), 0).to_numpy()[row]
+         if ver is not None else 0)
+    drop = hit & (v < kvers[idx])
+    return drop if drop.any() else None
 
 
 def decode_concat(bufs: list[bytes] | np.ndarray) -> np.ndarray:

@@ -204,19 +204,12 @@ def _decode_rows(tab, store_positions: bool, kill=None):
     pos = (codec.decode_concat(codec.binary_values(tab["pos"])).astype(
         np.int64) if store_positions else _EMPTY)
     row = np.repeat(np.repeat(np.arange(tab.num_rows), nb), ns)
-    if kill is not None:
-        kids, kvers = kill
-        idx = np.minimum(np.searchsorted(kids, d), kids.size - 1)
-        hit = kids[idx] == d
-        if hit.any():
-            # a null ver reads as version 0, the oldest
-            ver = pc.fill_null(tab["ver"], 0).to_numpy().astype(np.int64)
-            drop = hit & (ver[row] < kvers[idx])
-            if drop.any():
-                keep = ~drop
-                if pos.size:
-                    pos = pos[np.repeat(keep, t)]
-                row, d, t, l = row[keep], d[keep], t[keep], l[keep]
+    drop = codec.dead_entries(kill, d, tab["ver"], row)
+    if drop is not None:
+        keep = ~drop
+        if pos.size:
+            pos = pos[np.repeat(keep, t)]
+        row, d, t, l = row[keep], d[keep], t[keep], l[keep]
     return row, d, t, l, pos
 
 

@@ -13,8 +13,8 @@ Spark lifecycle here:
   * ``local``  (scored term/bool, wildcard, fuzzy, positional phrase
     and ``=``-filtered queries whose reads are small): pyarrow reads
     the bucket-pruned posting row groups on the driver, the kernels run
-    once per ``range_id``, and one merge yields the total and the
-    top-k. ``=`` filters intersect the kernels' full match sets with a
+    once per ``range_id`` over arrow slices of that read, and one merge
+    yields the total and the top-k. ``=`` filters intersect the kernels' full match sets with a
     doc-id allowlist read from the docs columns. Term dictionary,
     expansions, tombstones and hit assembly are driver-side reads as
     well: zero Spark jobs. The engine's pinned catalog keeps the row
@@ -24,7 +24,7 @@ Spark lifecycle here:
     ``IndexStore`` hands its engines the one cache its writes publish
     into, so an engine it re-pins after a commit starts warm.
   * ``spark``  (everything else): partition-pruned postings scan ->
-    groupBy(range_id) applyInPandas of the same kernels. Plain
+    groupBy(range_id) applyInArrow of the same kernels. Plain
     term/bool shapes ask each range for its exact top-k + match count
     and collect those <= k rows per range into the same driver-side
     merge. Every other shape takes the full match set (``k=None``)
@@ -53,12 +53,12 @@ from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, replace
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bright_spark.index.builder import _slices_by
 from bright_spark.index.catalog import IndexCatalog, RowGroupCache, fits_local
 from bright_spark.index.mutations import (_DECODE_COLS, ENTRIES_SCHEMA,
                                           _decode_to_entries)
@@ -111,7 +111,7 @@ class KernelArgs:
     b: float
     range_bits: int
 
-    def score(self, range_id: int, pdf: pd.DataFrame, k: int | None,
+    def score(self, range_id: int, rows: pa.Table, k: int | None,
               prune: bool = True, need_total: bool = True,
               need_scores: bool = True, tomb: tuple | None = None):
         """(docs, scores, n_matched) of one range. Phrase queries return
@@ -119,7 +119,7 @@ class KernelArgs:
         full match set when ``k`` is None."""
         if self.phrases:
             return scorer.score_range_phrase(
-                pdf, self.weights, self.must_groups, self.should,
+                rows, self.weights, self.must_groups, self.should,
                 self.must_not, self.phrases,
                 base=range_id << self.range_bits, avgdl=self.avgdl,
                 k1=self.k1, b=self.b, avgdl_by_term=self.avgdls,
@@ -127,7 +127,7 @@ class KernelArgs:
         if k is None:
             k, prune = sys.maxsize, False
         return scorer.score_range_topk(
-            pdf, self.weights, self.must_groups, self.should, self.must_not,
+            rows, self.weights, self.must_groups, self.should, self.must_not,
             k=k, avgdl=self.avgdl, k1=self.k1, b=self.b, prune=prune,
             need_total=need_total, avgdl_by_term=self.avgdls, tomb=tomb)
 
@@ -139,11 +139,6 @@ def _topk_shape(aq: AnalyzedQuery) -> bool:
                                     or aq.must_not_phrases)
 
 
-def _top(docs: np.ndarray, scores: np.ndarray, k: int):
-    order = np.lexsort((docs, -scores))[:k]
-    return docs[order], scores[order]
-
-
 def merge_ranges(parts: Iterable[tuple[np.ndarray, np.ndarray, int]],
                  k: int) -> tuple[int, list[tuple[int, float]]]:
     """Per-range kernel outputs (docs, scores, n_matched) -> (total,
@@ -152,7 +147,7 @@ def merge_ranges(parts: Iterable[tuple[np.ndarray, np.ndarray, int]],
     parts = list(parts)
     if not parts:
         return 0, []
-    docs, scores = _top(
+    docs, scores = scorer._topk(
         np.concatenate([p[0] for p in parts]).astype(np.int64),
         np.concatenate([p[1] for p in parts]).astype(np.float64), k)
     return (sum(int(p[2]) for p in parts),
@@ -302,7 +297,7 @@ class SearchEngine:
                    prune: bool = True, need_total: bool = True,
                    need_scores: bool = True) -> DataFrame:
         """Spark executor: partition-pruned postings of ``a.needed`` ->
-        groupBy(range_id) applyInPandas of :meth:`KernelArgs.score` ->
+        groupBy(range_id) applyInArrow of :meth:`KernelArgs.score` ->
         (doc_id, score, range_id, range_matched), at most ``k`` rows per
         range (all matches when ``k`` is None)."""
         rows = (self.catalog.postings_for_terms(self.spark, a.needed)
@@ -313,18 +308,19 @@ class SearchEngine:
             rows = rows.drop("pos")
         tomb_bc = self._tomb_bc
 
-        def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(key, tab):
+            rid = key[0].as_py()
             docs, scores, n = a.score(
-                int(key[0]), pdf, k, prune=prune, need_total=need_total,
+                rid, tab, k, prune=prune, need_total=need_total,
                 need_scores=need_scores,
                 tomb=tomb_bc.value if tomb_bc is not None else None)
-            return pd.DataFrame({
+            return pa.table({
                 "doc_id": docs, "score": scores,
-                "range_id": np.full(docs.size, int(key[0]), dtype=np.int64),
+                "range_id": np.full(docs.size, rid, dtype=np.int64),
                 "range_matched": np.full(docs.size, n, dtype=np.int64),
             })
 
-        return rows.groupBy("range_id").applyInPandas(kernel, _KERNEL_SCHEMA)
+        return rows.groupBy("range_id").applyInArrow(kernel, _KERNEL_SCHEMA)
 
     def _wand_hits(self, aq: AnalyzedQuery, k: int, prune: bool = True,
                    need_total: bool = True) -> DataFrame:
@@ -342,11 +338,10 @@ class SearchEngine:
         <= k kernel rows, merged on the driver."""
         if a is None:
             return 0, []
-        rows = self._kernel_df(a, k).collect()
-        matched = {r["range_id"]: r["range_matched"] for r in rows}
-        return merge_ranges([(np.array([r["doc_id"] for r in rows], np.int64),
-                              np.array([r["score"] for r in rows], np.float64),
-                              sum(matched.values()))], k)
+        tab = self._kernel_df(a, k).toArrow()
+        _, first = np.unique(tab["range_id"].to_numpy(), return_index=True)
+        return merge_ranges([(tab["doc_id"].to_numpy(), tab["score"].to_numpy(),
+                              tab["range_matched"].to_numpy()[first].sum())], k)
 
     # -------------------------------------------------------- local path
 
@@ -397,13 +392,13 @@ class SearchEngine:
         tab = post.read()
         tab = tab.set_column(
             tab.schema.get_field_index("term"), "term",
-            pc.binary_join_element_wise(tab["field"], tab["term"], FIELD_SEP))
-        pdf = tab.drop_columns(["field"]).to_pandas()
+            pc.binary_join_element_wise(tab["field"], tab["term"], FIELD_SEP)
+        ).drop_columns(["field"]).sort_by("range_id")
         ok = (self._allowlist(allow.read(), aq.attr_preds)
               if allow is not None else None)
         parts = []
-        for rid, g in pdf.groupby("range_id", sort=False):
-            docs, scores, n = a.score(int(rid), g, None if ok is not None else k,
+        for rid, g in _slices_by(tab, tab["range_id"].to_numpy()):
+            docs, scores, n = a.score(rid, g, None if ok is not None else k,
                                       tomb=self._tomb)
             if ok is not None:
                 keep = np.isin(docs, ok)
@@ -474,17 +469,19 @@ class SearchEngine:
         joined = docs_df.select(*cols).join(
             F.broadcast(cand.select("doc_id", "score")), "doc_id")
 
-        def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def verify(batches: Iterator[pa.RecordBatch]
+                   ) -> Iterator[pa.RecordBatch]:
             from bright_spark.analysis.tokenizer import count_terms_batch
             empty = np.empty(0, dtype=np.int64)
-            for pdf in batches:
-                n = len(pdf)
+            for batch in batches:
+                n = batch.num_rows
                 if n == 0:
                     continue
-                langs = (pdf[lang_col].tolist() if lang_col else [None] * n)
+                langs = (batch.column(lang_col).to_pylist() if lang_col
+                         else [None] * n)
                 ok = np.ones(n, dtype=bool)
                 for f, phs in by_field:
-                    texts = pdf[f].fillna("").tolist()
+                    texts = pc.fill_null(batch.column(f), "").to_pylist()
                     term_arr, tf_arr, _, pos_arr = count_terms_batch(
                         texts, mode, langs, stops, positions=True)
                     lens = np.fromiter((len(t) for t in term_arr),
@@ -536,11 +533,9 @@ class SearchEngine:
                         hit = np.zeros(n, dtype=bool)
                         hit[docs_ph] = True
                         ok &= hit
-                yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[ok],
-                    "score": pdf["score"].to_numpy(dtype=np.float64)[ok]})
+                yield batch.select(["doc_id", "score"]).filter(pa.array(ok))
 
-        return joined.mapInPandas(verify, "doc_id BIGINT, score DOUBLE")
+        return joined.mapInArrow(verify, "doc_id BIGINT, score DOUBLE")
 
     # ------------------------------------------------------ public API
 

@@ -2,18 +2,21 @@
 
 The reference's scoring runs inside Bleve's TopNCollector over a
 searcher tree (`handlers/search.go:140`). Ours is an Arrow-batch
-kernel executed per doc-range chunk via ``applyInPandas``, operating on
-FLAT block-level numpy arrays for every query term at once — there is
-no per-term (let alone per-document) Python object churn, so a
-1,000-term wildcard expansion costs barely more than a 2-term query:
+kernel executed per doc-range chunk (on the driver, or by
+``applyInArrow``) over that range's arrow table of posting rows,
+operating on FLAT block-level numpy arrays for every query term at
+once — there is no per-term (let alone per-document) Python object
+churn, so a 1,000-term wildcard expansion costs barely more than a
+2-term query:
 
 - BM25 (k1=1.2, b=0.75 defaults; BASELINE.json pins BM25 over Bleve
   2.4's tf-idf default):
       idf(t)      = ln(1 + (N - df + 0.5) / (df + 0.5))
       tfn(tf, dl) = tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
       score(d)    = sum_t boost_t * idf_t * tfn(tf_td, dl_d)
-- Decoding is bulk: the varint buffers of every selected block are
-  concatenated and decoded in ONE vectorized pass
+- Decoding is bulk: each payload column stays one byte buffer read
+  from the arrow data (codec.binary_values); the bytes of every
+  selected block are gathered and decoded in ONE vectorized pass
   (codec.decode_doc_blocks_bulk / decode_concat).
 - Block-max pruning (disjunctions): every block stores (max_tf,
   min_dl); ``tfn`` is increasing in tf and decreasing in dl, so
@@ -45,7 +48,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from bright_spark.index import codec
 
@@ -67,25 +71,45 @@ _EMPTY_I = np.empty(0, dtype=np.int64)
 _EMPTY_F = np.empty(0, dtype=np.float64)
 
 
+def _payload(col) -> tuple[np.ndarray, np.ndarray]:
+    """(every block's bytes back to back, per-block byte offsets) of one
+    ``list<binary>`` payload column."""
+    lens = pc.binary_length(pc.list_flatten(col)).to_numpy()
+    off = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    return codec.binary_values(col), off
+
+
 class RangeBlocks:
     """Flat block-level view of ALL posting rows of one doc-range group.
 
     Parallel arrays, one element per block: owning term code, skip
-    bounds, (max_tf, min_dl) metadata, and the raw varint buffers.
+    bounds and (max_tf, min_dl) metadata; each varint payload column is
+    one uint8 buffer cut by per-block byte offsets.
     """
 
-    def __init__(self, pdf: pd.DataFrame, weights: dict[str, float],
+    def __init__(self, rows: pa.Table, weights: dict[str, float],
                  avgdl: float = 1.0,
                  avgdl_by_term: dict[str, float] | None = None,
                  tomb: tuple | None = None):
-        # append-mode deletion mask: ``tomb`` = (sorted doc_ids, vers);
-        # an entry is dead iff its doc is tombstoned at a version LATER
-        # than the entry's row version (newer re-adds stay alive). A
+        if not isinstance(rows, pa.Table):
+            # kept only for the benchmark's kernel replay
+            # (perfbench/workloads.py::_search_replay), which passes
+            # pandas groups; delete once that replay passes arrow
+            rows = pa.Table.from_pandas(rows, preserve_index=False)
+        # append-mode deletion mask: ``tomb`` = (sorted doc_ids, vers),
+        # applied by codec.dead_entries against each row's ``ver``. A
         # term's postings may span several rows (base + delta dirs) —
-        # factorize unifies them under one code, and every consumer
-        # sorts/uniques, so split lists need no special handling.
-        self.tomb_ids, self.tomb_vers = tomb if tomb else (None, None)
-        codes, uniq = pd.factorize(pdf["term"].to_numpy(), sort=False)
+        # they share one code, and every consumer sorts/uniques, so
+        # split lists need no special handling.
+        self.tomb = tomb
+        self.ver = rows["ver"] if "ver" in rows.column_names else None
+        # codes are ranks in the sorted unique terms: float accumulation
+        # always runs in (doc, code) order, so scores are bit-identical
+        # regardless of row arrival order, range granularity, or
+        # pruning path
+        uniq, codes = np.unique(rows["term"].to_numpy(zero_copy_only=False),
+                                return_inverse=True)
         self.terms = [str(t) for t in uniq]
         self.code_of = {t: c for c, t in enumerate(self.terms)}
         self.w = np.array([weights.get(t, 0.0) for t in self.terms],
@@ -94,48 +118,20 @@ class RangeBlocks:
         adl_of = avgdl_by_term or {}
         self.adl = np.array([adl_of.get(t, avgdl) for t in self.terms],
                             dtype=np.float64)
-        # lexicographic rank per code: float accumulation always runs in
-        # (doc, term-rank) order, so scores are bit-identical regardless
-        # of row arrival order, range granularity, or pruning path
-        self.rank = np.empty(len(self.terms), dtype=np.int64)
-        self.rank[np.argsort(np.asarray(self.terms, dtype=object),
-                             kind="stable")] = np.arange(len(self.terms))
         self.df_of_code = np.zeros(len(self.terms), dtype=np.int64)
         np.add.at(self.df_of_code, codes,
-                  pdf["df_chunk"].to_numpy(dtype=np.int64))
-        nb = pdf["first_doc"].str.len().to_numpy(dtype=np.int64)
-        self.b_code = np.repeat(codes, nb)
-        cat = (np.concatenate(pdf["first_doc"].to_numpy())
-               if len(pdf) else _EMPTY_I)
-        self.b_first = np.asarray(cat, dtype=np.int64)
-        self.b_max = (np.concatenate(pdf["max_doc"].to_numpy()).astype(np.int64)
-                      if len(pdf) else _EMPTY_I)
-        self.b_n = (np.concatenate(pdf["n"].to_numpy()).astype(np.int64)
-                    if len(pdf) else _EMPTY_I)
-        self.b_maxtf = (np.concatenate(pdf["max_tf"].to_numpy()).astype(np.int64)
-                        if len(pdf) else _EMPTY_I)
-        self.b_mindl = (np.concatenate(pdf["min_dl"].to_numpy()).astype(np.int64)
-                        if len(pdf) else _EMPTY_I)
-        self.b_docs: list[bytes] = [buf for row in pdf["docs"] for buf in row]
-        self.b_tfs: list[bytes] = [buf for row in pdf["tfs"] for buf in row]
-        self.b_dls: list[bytes] = [buf for row in pdf["dls"] for buf in row]
-        # per-block writer version (rows from pre-`ver` layouts read as
-        # null -> version 0, the oldest)
-        if self.tomb_ids is None:
-            self.b_ver = None
-        elif "ver" in pdf.columns:
-            vrow = pdf["ver"].fillna(0).to_numpy(dtype=np.int64)
-            self.b_ver = np.repeat(vrow, nb)
-        else:
-            self.b_ver = np.zeros(self.b_code.size, dtype=np.int64)
+                  rows["df_chunk"].to_numpy().astype(np.int64))
+        nb = pc.list_value_length(rows["first_doc"]).to_numpy()
+        self.b_row = np.repeat(np.arange(rows.num_rows), nb)
+        self.b_code = codes[self.b_row]
+        self.b_first, self.b_max, self.b_n, self.b_maxtf, self.b_mindl = (
+            codec.list_values(rows[c]).astype(np.int64)
+            for c in ("first_doc", "max_doc", "n", "max_tf", "min_dl"))
         # positional payloads ride along only when the caller kept the
         # ``pos`` column (phrase kernels on store_positions indexes)
-        self.b_pos: list[bytes] | None = (
-            [buf for row in pdf["pos"] for buf in row]
-            if "pos" in pdf.columns else None)
-
-    def n_blocks(self) -> int:
-        return self.b_code.size
+        self.payload = {c: _payload(rows[c])
+                        for c in ("docs", "tfs", "dls", "pos")
+                        if c in rows.column_names}
 
     def codes_for(self, terms: list[str]) -> np.ndarray:
         return np.array(sorted(self.code_of[t] for t in terms
@@ -154,56 +150,55 @@ class RangeBlocks:
 
     # ------------------------------------------------------ bulk decode
 
-    def entry_keep(self, d: np.ndarray, eb: np.ndarray) -> np.ndarray | None:
-        """Tombstone mask for raw-decoded entries: None = keep all,
-        else a boolean keep array. Dead iff the doc is tombstoned at a
-        version later than the entry's row version."""
-        if self.tomb_ids is None or d.size == 0:
-            return None
-        idx = np.searchsorted(self.tomb_ids, d)
-        idxc = np.minimum(idx, self.tomb_ids.size - 1)
-        hit = self.tomb_ids[idxc] == d
-        if not hit.any():
-            return None
-        drop = hit & (self.b_ver[eb] < self.tomb_vers[idxc])
-        if not drop.any():
-            return None
-        return ~drop
+    def _bytes(self, col: str, bsel: np.ndarray) -> np.ndarray:
+        """The bytes of blocks ``bsel`` (non-empty) of one payload column,
+        gathered back to back in one pass."""
+        buf, off = self.payload[col]
+        lo = off[bsel]
+        n = off[bsel + 1] - lo
+        ends = np.cumsum(n)
+        return buf[np.arange(ends[-1]) + np.repeat(lo - ends + n, n)]
 
-    def decode_docs_raw(self, bsel: np.ndarray):
-        """(flat doc_ids, per-entry block index), UNMASKED — callers
-        that decode aligned side arrays (positions) apply
-        :meth:`entry_keep` themselves."""
-        if bsel.size == 0:
-            return _EMPTY_I, _EMPTY_I
+    def _dead(self, d: np.ndarray, eb: np.ndarray) -> np.ndarray | None:
+        if self.tomb is None:
+            return None
+        return codec.dead_entries(self.tomb, d, self.ver, self.b_row[eb])
+
+    def _raw_docs(self, bsel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         d = codec.decode_doc_blocks_bulk(
-            self.b_first[bsel], self.b_n[bsel],
-            [self.b_docs[int(i)] for i in bsel])
+            self.b_first[bsel], self.b_n[bsel], self._bytes("docs", bsel))
         return d, np.repeat(bsel, self.b_n[bsel])
 
     def decode_docs(self, bsel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(flat doc_ids, per-entry block index) for selected blocks,
         tombstone-masked."""
-        d, eb = self.decode_docs_raw(bsel)
-        keep = self.entry_keep(d, eb)
-        if keep is None:
+        if bsel.size == 0:
+            return _EMPTY_I, _EMPTY_I
+        d, eb = self._raw_docs(bsel)
+        dead = self._dead(d, eb)
+        if dead is None:
             return d, eb
-        return d[keep], eb[keep]
+        return d[~dead], eb[~dead]
 
     def decode_full(self, bsel: np.ndarray):
-        """(doc_ids, tfs, dls, per-entry block idx) for selected
-        blocks, tombstone-masked."""
+        """(doc_ids, tfs, dls, per-entry block idx, positions) for
+        selected blocks, tombstone-masked. Positions line up with
+        ``repeat(doc_ids, tfs)`` and are None unless the rows carry
+        ``pos``."""
         if bsel.size == 0:
-            return _EMPTY_I, _EMPTY_I, _EMPTY_I, _EMPTY_I
-        d, eb = self.decode_docs_raw(bsel)
-        tf = codec.decode_concat(
-            [self.b_tfs[int(i)] for i in bsel]).astype(np.int64)
-        dl = codec.decode_concat(
-            [self.b_dls[int(i)] for i in bsel]).astype(np.int64)
-        keep = self.entry_keep(d, eb)
-        if keep is None:
-            return d, tf, dl, eb
-        return d[keep], tf[keep], dl[keep], eb[keep]
+            return _EMPTY_I, _EMPTY_I, _EMPTY_I, _EMPTY_I, None
+        d, eb = self._raw_docs(bsel)
+        tf, dl = (codec.decode_concat(self._bytes(c, bsel)).astype(np.int64)
+                  for c in ("tfs", "dls"))
+        pos = (codec.decode_concat(self._bytes("pos", bsel)).astype(np.int64)
+               if "pos" in self.payload else None)
+        dead = self._dead(d, eb)
+        if dead is None:
+            return d, tf, dl, eb, pos
+        keep = ~dead
+        if pos is not None:
+            pos = pos[np.repeat(keep, tf)]
+        return d[keep], tf[keep], dl[keep], eb[keep], pos
 
     def union_docs(self, codes: np.ndarray) -> np.ndarray:
         """Sorted unique docIDs matching ANY of the term codes."""
@@ -219,11 +214,11 @@ def _topk(docs: np.ndarray, scores: np.ndarray, k: int):
 def _accumulate_entries(d, tf, dl, eb, rb: "RangeBlocks",
                         k1: float, b: float):
     """Sum per-entry contributions into (unique docs, totals), in
-    deterministic (doc, term-rank) order (see RangeBlocks.rank)."""
+    deterministic (doc, term code) order (see RangeBlocks)."""
     if d.size == 0:
         return _EMPTY_I, _EMPTY_F
     contrib = rb.w[rb.b_code[eb]] * tf_norm(tf, dl, rb.adl[rb.b_code[eb]], k1, b)
-    perm = np.lexsort((rb.rank[rb.b_code[eb]], d))
+    perm = np.lexsort((rb.b_code[eb], d))
     uniq, inv = np.unique(d, return_inverse=True)
     totals = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(totals, inv[perm], contrib[perm])
@@ -231,7 +226,7 @@ def _accumulate_entries(d, tf, dl, eb, rb: "RangeBlocks",
 
 
 def score_range_topk(
-    pdf: pd.DataFrame,
+    rows: pa.Table,
     weights: dict[str, float],
     must_groups: list[list[str]],
     should: list[str],
@@ -248,8 +243,8 @@ def score_range_topk(
     """Exact top-k for one doc-range chunk of posting rows.
 
     Returns (doc_ids desc-by-(score, doc_id asc), scores, n_matched).
-    ``pdf`` holds the postings rows (every term of the query present in
-    this range). A must group is satisfied by any of its terms
+    ``rows`` holds the postings rows as an arrow table, any chunking or
+    slice offset (every term of the query present in this range). A must group is satisfied by any of its terms
     (wildcard/fuzzy expansions); must_not terms exclude; scoring terms
     are all must-group members + should terms. ``n_matched`` is -1 when
     ``need_total`` is False and the pruned path skipped the exact count.
@@ -258,7 +253,7 @@ def score_range_topk(
     (see RangeBlocks); block skip metadata stays sound because masked
     entries only LOWER true scores below the stored upper bounds.
     """
-    rb = RangeBlocks(pdf, weights, avgdl, avgdl_by_term, tomb=tomb)
+    rb = RangeBlocks(rows, weights, avgdl, avgdl_by_term, tomb=tomb)
     must_groups = [sorted(set(g)) for g in must_groups]
     scoring_terms = sorted(
         {t for g in must_groups for t in g if weights.get(t)}
@@ -299,15 +294,14 @@ def score_range_topk(
         j_lo = np.searchsorted(cand, rb.b_first[bsel])
         j_hi = np.searchsorted(cand, rb.b_max[bsel], side="right")
         bsel = bsel[j_hi > j_lo]
-        d, tf, dl, eb = rb.decode_full(bsel)
+        d, tf, dl, eb, _ = rb.decode_full(bsel)
         pos = np.searchsorted(cand, d)
         pos_c = np.clip(pos, 0, cand.size - 1)
         hit = cand[pos_c] == d
         totals = np.zeros(cand.size, dtype=np.float64)
         contrib = rb.w[rb.b_code[eb]] * tf_norm(tf, dl, rb.adl[rb.b_code[eb]], k1, b)
         dh, ch = pos_c[hit], contrib[hit]
-        rh = rb.rank[rb.b_code[eb]][hit]
-        perm = np.lexsort((rh, dh))
+        perm = np.lexsort((rb.b_code[eb][hit], dh))
         np.add.at(totals, dh[perm], ch[perm])
         n_matched = int(cand.size)
         docs, scores = _topk(cand, totals, k)
@@ -327,7 +321,7 @@ def score_range_topk(
 
     total_entries = int(rb.b_n[score_bsel].sum())
     if not prune or total_entries <= 8 * max(k, 1) or scoring.size == 1:
-        d, tf, dl, eb = rb.decode_full(score_bsel)
+        d, tf, dl, eb, _ = rb.decode_full(score_bsel)
         docs, totals = _accumulate_entries(d, tf, dl, eb, rb, k1, b)
         if excl is not None and docs.size:
             keep = ~np.isin(docs, excl, assume_unique=True)
@@ -359,7 +353,7 @@ def score_range_topk(
     np.maximum.at(per_code_ub, rb.b_code[score_bsel], ubs)
     seed_code = int(np.argmax(per_code_ub))
     seed_bsel = rb.block_sel(np.array([seed_code]))
-    sd, stf, sdl, seb = rb.decode_full(seed_bsel)
+    sd, stf, sdl, _, _ = rb.decode_full(seed_bsel)
     if excl is not None and sd.size:
         keep = ~np.isin(sd, excl)
         sd, stf, sdl = sd[keep], stf[keep], sdl[keep]
@@ -380,7 +374,7 @@ def score_range_topk(
     j = np.searchsorted(hot_starts, rb.b_max[score_bsel], side="right") - 1
     j2 = np.searchsorted(hot_ends, rb.b_first[score_bsel], side="right")
     overlap = (j >= j2) & (j >= 0)
-    d, tf, dl, eb = rb.decode_full(score_bsel[overlap])
+    d, tf, dl, eb, _ = rb.decode_full(score_bsel[overlap])
     docs, totals = _accumulate_entries(d, tf, dl, eb, rb, k1, b)
     if excl is not None and docs.size:
         keep = ~np.isin(docs, excl, assume_unique=True)
@@ -390,7 +384,7 @@ def score_range_topk(
 
 
 def score_range_phrase(
-    pdf: pd.DataFrame,
+    rows: pa.Table,
     weights: dict[str, float],
     must_groups: list[list[str]],
     should: list[str],
@@ -415,7 +409,7 @@ def score_range_phrase(
          ``(doc-base) << 32 | pos`` key chains (same key algebra as the
          old standalone verify kernel, now over cached arrays);
       3. exact BM25 over the surviving candidates, accumulated in
-         (doc, term-rank) order — bit-identical to the conjunctive
+         (doc, term code) order — bit-identical to the conjunctive
          path of :func:`score_range_topk`.
 
     Replaces the previous three-subtree plan (score scan + candidate
@@ -424,33 +418,15 @@ def score_range_phrase(
     step 3 (NOT-phrase membership checks) and returns zero scores.
     ``tomb`` masks append-mode tombstoned entries, positions included.
     """
-    rb = RangeBlocks(pdf, weights, avgdl, avgdl_by_term, tomb=tomb)
+    rb = RangeBlocks(rows, weights, avgdl, avgdl_by_term, tomb=tomb)
     base64 = np.int64(base)
     cache: dict[int, tuple] = {}
 
     def full(code: int):
-        """Memoized whole-term decode: (docs, tfs, dls, entry-block,
-        flat positions aligned to repeat(docs, tfs)) — raw-decoded,
-        then tombstone-masked consistently across ALL five arrays."""
+        """Memoized whole-term :meth:`RangeBlocks.decode_full`."""
         if code not in cache:
-            bsel = rb.block_sel(np.array([code], dtype=np.int64))
-            d, eb = rb.decode_docs_raw(bsel)
-            tf = (codec.decode_concat(
-                [rb.b_tfs[int(i)] for i in bsel]).astype(np.int64)
-                if bsel.size else _EMPTY_I)
-            dl = (codec.decode_concat(
-                [rb.b_dls[int(i)] for i in bsel]).astype(np.int64)
-                if bsel.size else _EMPTY_I)
-            pos = None
-            if rb.b_pos is not None and bsel.size:
-                pos = codec.decode_concat(
-                    [rb.b_pos[int(i)] for i in bsel]).astype(np.int64)
-            keep = rb.entry_keep(d, eb)
-            if keep is not None:
-                if pos is not None:
-                    pos = pos[np.repeat(keep, tf)]
-                d, tf, dl, eb = d[keep], tf[keep], dl[keep], eb[keep]
-            cache[code] = (d, tf, dl, eb, pos)
+            cache[code] = rb.decode_full(rb.block_sel(
+                np.array([code], dtype=np.int64)))
         return cache[code]
 
     def union_docs(codes: np.ndarray) -> np.ndarray:
@@ -533,7 +509,6 @@ def score_range_phrase(
         contrib = rb.w[rb.b_code[eb]] * tf_norm(
             tf, dl, rb.adl[rb.b_code[eb]], k1, b)
         dh, ch = j_c[hit], contrib[hit]
-        rh = rb.rank[rb.b_code[eb]][hit]
-        perm = np.lexsort((rh, dh))
+        perm = np.lexsort((rb.b_code[eb][hit], dh))
         np.add.at(totals, dh[perm], ch[perm])
     return cand, totals, int(cand.size)

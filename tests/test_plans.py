@@ -110,7 +110,7 @@ def test_nonpositional_phrase_runs_kernel_stage_once(spark, repos_parquet,
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final
     final = final.split("Initial Plan")[0]
-    assert final.count("FlatMapGroupsInPandas") == 1, final
+    assert final.count("FlatMapGroupsInArrow") == 1, final
 
 
 def test_probe_containment_broadcasts_probe_side(spark):

@@ -94,7 +94,7 @@ def test_phrase_plan_single_postings_scan(spark, pos_index):
     df = eng.search_df('"parse config"', k=10)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "simple")
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
     assert plan.count("FileScan") == 1, plan
 
 
