@@ -15,6 +15,7 @@ by the rounded score.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,8 +98,8 @@ def _cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _engine(spark: SparkSession, sf_dir: str):
-    """Build (once per sf_dir, cached on disk) the inverted index over
-    the documents table and return a SearchEngine."""
+    """Build (once per sf_dir and process) the inverted index over the
+    documents table and return a SearchEngine."""
     from bright_spark.index.builder import build_index
     from bright_spark.models import IndexConfig
     from bright_spark.query.engine import SearchEngine
@@ -108,34 +109,21 @@ def _engine(spark: SparkSession, sf_dir: str):
     if eng is not None:
         return eng
     idx_dir = os.path.join(_GATE_DIR, key.strip("/").replace("/", "_") + "_docs_idx")
-    from bright_spark.index.catalog import IndexCatalog, LayoutVersionError
-    built = False
-    try:
-        # invalidate gate caches written by an older index layout
-        built = IndexCatalog(idx_dir).load_meta().get("version") == 4
-    except (FileNotFoundError, KeyError, LayoutVersionError):
-        built = False
-    if built:
-        # caches from before the derived date attr lack it
-        built = "created_at" in (
-            IndexCatalog(idx_dir).load_extra().get("attr_cols") or [])
-    if not built:
-        import shutil
-        shutil.rmtree(idx_dir, ignore_errors=True)
-        # Q12 date attribute: deterministic per-doc date derived from
-        # doc_id (the driver tables carry no date column); the oracle
-        # re-derives the identical expression in DuckDB
-        src = _docs(spark, sf_dir).withColumn(
-            "created_at",
-            F.date_add(F.lit("2020-01-01").cast("date"),
-                       F.pmod(F.col("doc_id"), F.lit(365)).cast("int")))
-        build_index(
-            spark, src, idx_dir,
-            IndexConfig(id="documents", tokenizer="simple", n_term_buckets=8,
-                        store_positions=True),
-            content_col="text", id_col="doc_id", lang_col="lang",
-            attr_cols=("source", "n_chars", "created_at"),
-            text_cols=("source",), n_build_partitions=8)
+    shutil.rmtree(idx_dir, ignore_errors=True)
+    # Q12 date attribute: deterministic per-doc date derived from
+    # doc_id (the driver tables carry no date column); the oracle
+    # re-derives the identical expression in DuckDB
+    src = _docs(spark, sf_dir).withColumn(
+        "created_at",
+        F.date_add(F.lit("2020-01-01").cast("date"),
+                   F.pmod(F.col("doc_id"), F.lit(365)).cast("int")))
+    build_index(
+        spark, src, idx_dir,
+        IndexConfig(id="documents", tokenizer="simple", n_term_buckets=8,
+                    store_positions=True),
+        content_col="text", id_col="doc_id", lang_col="lang",
+        attr_cols=("source", "n_chars", "created_at"),
+        text_cols=("source",), n_build_partitions=8)
     eng = SearchEngine(spark, idx_dir)
     _ENGINES[key] = eng
     return eng
@@ -157,7 +145,6 @@ def _mut_engine(spark: SparkSession, sf_dir: str):
     in SQL, so BM25 scores, corpus stats, and doc lookups over the
     mutated index are fully hash-checked."""
     from bright_spark.index.builder import build_index
-    from bright_spark.index.catalog import IndexCatalog
     from bright_spark.index.mutations import IndexMutator
     from bright_spark.models import IndexConfig
     from bright_spark.query.engine import SearchEngine
@@ -169,36 +156,27 @@ def _mut_engine(spark: SparkSession, sf_dir: str):
         return eng
     idx_dir = os.path.join(_GATE_DIR,
                            key.strip("/").replace("/", "_") + "_mutdocs_idx")
-    ok = False
-    try:
-        cat = IndexCatalog(idx_dir)
-        ok = (cat.load_meta().get("version") == 4
-              and cat.manifest().get("operation") == "delete")
-    except Exception:
-        ok = False
-    if not ok:
-        import shutil
-        shutil.rmtree(idx_dir, ignore_errors=True)
-        src = _docs(spark, sf_dir).select(
-            "doc_id", "text", "lang", "source", "n_chars")
-        build_index(
-            spark, src, idx_dir,
-            IndexConfig(id="mutdocs", tokenizer="simple", n_term_buckets=8),
-            content_col="text", id_col="doc_id", lang_col="lang",
-            attr_cols=("source", "n_chars"), n_build_partitions=8)
-        mut = IndexMutator(spark, idx_dir)
-        n_chars_t = dict(src.dtypes)["n_chars"]
-        repl = src.filter(F.col("doc_id") % 37 == 0).withColumn(
-            "text", F.lit("upserted spark document alpha beta"))
-        appended = spark.range(0, 5).select(
-            (F.col("id") + 1000000).alias("doc_id"),
-            F.lit("fresh spark upsert row").alias("text"),
-            F.lit("en").alias("lang"),
-            F.lit("src_new").alias("source"),
-            F.lit(22).cast(n_chars_t).alias("n_chars"))
-        mut.upsert(repl.unionByName(appended))
-        mut.patch(11, {"text": "patched gamma spark"})
-        mut.delete_by_query("lang:de")
+    shutil.rmtree(idx_dir, ignore_errors=True)
+    src = _docs(spark, sf_dir).select(
+        "doc_id", "text", "lang", "source", "n_chars")
+    build_index(
+        spark, src, idx_dir,
+        IndexConfig(id="mutdocs", tokenizer="simple", n_term_buckets=8),
+        content_col="text", id_col="doc_id", lang_col="lang",
+        attr_cols=("source", "n_chars"), n_build_partitions=8)
+    mut = IndexMutator(spark, idx_dir)
+    n_chars_t = dict(src.dtypes)["n_chars"]
+    repl = src.filter(F.col("doc_id") % 37 == 0).withColumn(
+        "text", F.lit("upserted spark document alpha beta"))
+    appended = spark.range(0, 5).select(
+        (F.col("id") + 1000000).alias("doc_id"),
+        F.lit("fresh spark upsert row").alias("text"),
+        F.lit("en").alias("lang"),
+        F.lit("src_new").alias("source"),
+        F.lit(22).cast(n_chars_t).alias("n_chars"))
+    mut.upsert(repl.unionByName(appended))
+    mut.patch(11, {"text": "patched gamma spark"})
+    mut.delete_by_query("lang:de")
     eng = SearchEngine(spark, idx_dir)
     _ENGINES[cache_key] = eng
     return eng
@@ -284,7 +262,6 @@ def _store(spark: SparkSession, sf_dir: str):
     and server-side exclusion enforcement sit under the oracle too —
     not just the bare engine (store.go:78-124 adopt/create semantics,
     exclusion as a disabled field mapping, store.go:127-133)."""
-    from bright_spark.index.catalog import IndexCatalog
     from bright_spark.index.store import IndexStore
     from bright_spark.models import IndexConfig
 
@@ -295,26 +272,16 @@ def _store(spark: SparkSession, sf_dir: str):
         return st
     data_dir = os.path.join(_GATE_DIR,
                             key.strip("/").replace("/", "_") + "_store")
+    shutil.rmtree(data_dir, ignore_errors=True)
     store = IndexStore(spark, data_dir)
-    ok = "documents" in store.configs and store.is_built("documents")
-    if ok:
-        try:
-            ok = (IndexCatalog(store._index_dir("documents"))
-                  .load_meta().get("version") == 4)
-        except Exception:
-            ok = False
-    if not ok:
-        import shutil
-        shutil.rmtree(data_dir, ignore_errors=True)
-        store = IndexStore(spark, data_dir)
-        store.create_index(IndexConfig(
-            id="documents", primary_key="doc_id",
-            exclude_attributes=("source",),
-            tokenizer="simple", n_term_buckets=8))
-        store.add_documents(
-            "documents", _docs(spark, sf_dir), content_col="text",
-            attr_cols=("lang", "n_chars", "source"),
-            n_build_partitions=8)
+    store.create_index(IndexConfig(
+        id="documents", primary_key="doc_id",
+        exclude_attributes=("source",),
+        tokenizer="simple", n_term_buckets=8))
+    store.add_documents(
+        "documents", _docs(spark, sf_dir), content_col="text",
+        attr_cols=("lang", "n_chars", "source"),
+        n_build_partitions=8)
     _ENGINES[ck] = store
     return store
 

@@ -593,8 +593,9 @@ class IndexBuilder:
         filter_stopwords: bool = False,
         cache: RowGroupCache | None = None,
     ):
-        """``cache``: the owning store's read cache, which a driver
-        build's commit publishes its files into (catalog.py)."""
+        """``cache``: the read cache a driver build's commit publishes
+        its files into (the owning store's); without one the build's
+        catalog makes its own (catalog.py)."""
         self.spark = spark
         self.config = config
         self.catalog = IndexCatalog(index_dir, cache=cache)

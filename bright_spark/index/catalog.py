@@ -91,39 +91,34 @@ fewer than :data:`LOCAL_READ_MAX_BYTES` (footer-reported uncompressed
 bytes of the columns read) runs with pyarrow on the driver and starts
 no Spark job; a larger one goes through the Spark readers below.
 
-Read cache: a :class:`RowGroupCache` keeps, keyed by absolute file
-path, the row groups, footers and dir file lists driver-side reads
-load, so a repeated read touches no parquet. Reusing them is sound
-because readers only resolve committed version dirs, and their files
-are never rewritten; an expired snapshot still raises
+Read cache: every :class:`IndexCatalog` reads through one
+:class:`RowGroupCache`, the one it is handed (an :class:`IndexStore`
+hands its one cache to the catalog of every engine, mutator, build and
+compaction it runs), else its own. Keyed by absolute file path, it
+keeps the row groups, footers, dir file lists and tombstone arrays
+driver-side reads load, so a repeated read touches no parquet. Reusing
+them is sound because readers only resolve committed version dirs, and
+their files are never rewritten; an expired snapshot still raises
 :class:`SnapshotExpiredError`, since every read resolves its dirs
-through :meth:`IndexCatalog.manifest` first. Who owns one:
-
-- an :class:`IndexStore` owns ONE cache and hands it to the catalog of
-  every engine, mutator, build and compaction it runs. It is
-  write-through: a driver-side write (:func:`write_part`,
-  :func:`write_delta_part`, tombstones) stages its arrow table and the
-  footer the write returned in the :class:`PendingSnapshot`, and
-  :meth:`PendingSnapshot.commit` publishes them only after ``CURRENT``
-  flips, so a commit that loses a race (same-parent writers share
-  ``v<N>`` paths) or crashes publishes nothing. The store's next
-  engine, its next mutation's docs-group read and the auto-compaction
-  then read what the store wrote from memory. The same commit drops the
-  entries of every dir it superseded (a compacted chain, a rewritten
-  docs group, an old tombstone table), so dead files hold no cache
-  bytes. Removing an index dir drops its entries
-  (:meth:`RowGroupCache.drop`), since a re-created index reuses its
-  paths. Files other writers produced (Spark stages,
-  another process's mutator) are read through and kept.
-- a pinned catalog handed none (``SearchEngine(spark, dir)``) gets a
-  private one at :meth:`IndexCatalog.pin`.
-- any other catalog (a bare ``IndexMutator``, build, compaction or
-  store helper) has none and keeps no row group, so a compaction's
-  memory stays bounded by one bucket plus the shared deltas of its
-  chains.
+through :meth:`IndexCatalog.manifest` first. The cache is
+write-through: a driver-side write (:func:`write_part`,
+:func:`write_delta_part`, tombstones) stages its arrow table and the
+footer the write returned in the :class:`PendingSnapshot`, and
+:meth:`PendingSnapshot.commit` publishes them only after ``CURRENT``
+flips, so a commit that loses a race (same-parent writers share
+``v<N>`` paths) or crashes publishes nothing. The catalogs sharing the
+cache then read what was written from memory (a store's next engine,
+its next mutation's docs-group read, the auto-compaction). The same
+commit drops the entries of every dir it superseded (a compacted chain,
+a rewritten docs group, an old tombstone table), so dead files hold no
+cache bytes. Removing an index dir drops its entries
+(:meth:`RowGroupCache.drop`), since a re-created index reuses its
+paths. Files other writers produced (Spark stages, another process's
+mutator) are read through and kept.
 
 A cache holds at most :data:`LOCAL_READ_MAX_BYTES` (least recently
-used entries go first) and takes a lock, since REST searches share one
+used entries go first; a driver compaction runs only when its reads fit
+that same bound) and takes a lock, since REST searches share one
 engine without an index lock and a store's mutator writes beside them.
 """
 
@@ -219,8 +214,8 @@ _ARROW_OF_DDL = {
 # read) runs with pyarrow on the driver; anything larger runs as Spark
 # jobs. The one size gate of the read path (postings, term dictionary,
 # expansions, docs) and of compaction (every target postings dir plus
-# every chained term_stats dir), and the bytes a RowGroupCache (one per
-# store, or per pinned engine outside a store) keeps at most.
+# every chained term_stats dir), and the bytes a RowGroupCache keeps at
+# most.
 #
 # Set below the smallest measured crossover of search() wall time, driver
 # path vs Spark path (4-vCPU VM, local[4], 50,000-file make_repos_spark
@@ -354,11 +349,10 @@ class RowGroupCache:
     and each store evicts the least recently used entries until the
     total fits. Thread-safe; ``hits``/``misses`` count lookups.
 
-    Owners: :meth:`IndexCatalog.pin` gives a pinned catalog without one
-    a private cache, and an :class:`IndexStore` hands its one cache to
-    every catalog it opens (engines, mutators, builds, compactions), so
-    a store reads back the files it wrote from memory
-    (:meth:`publish`)."""
+    Every :class:`IndexCatalog` reads through one: the cache it is
+    handed (an :class:`IndexStore`'s, shared by every catalog the store
+    opens), else its own. Its commits :meth:`publish` what they wrote,
+    so the catalogs sharing it read those files back from memory."""
 
     def __init__(self):
         self._lock = threading.Lock()
@@ -480,19 +474,18 @@ def _list_nbytes(items: list) -> int:
 class FooterRead:
     """Row groups of one table picked from parquet footers alone, and
     the uncompressed bytes they hold over the columns to read — the
-    size :func:`fits_local` gates. :meth:`read` loads them with
-    pyarrow (serving those in ``cache`` from memory), cast to
-    ``schema`` and filtered by ``where``."""
+    size :func:`fits_local` gates. :meth:`read` loads them through
+    ``cache`` (with pyarrow for those not resident, which it then
+    keeps), cast to ``schema`` and filtered by ``where``."""
 
     def __init__(self, parts: list[tuple[str, Any, list[int]]], nbytes: int,
-                 schema: pa.Schema,
-                 where: Callable[[pa.Table], Any] | None = None,
-                 cache: RowGroupCache | None = None):
+                 schema: pa.Schema, cache: RowGroupCache,
+                 where: Callable[[pa.Table], Any] | None = None):
         self.parts = parts
         self.nbytes = nbytes
         self.schema = schema
-        self.where = where
         self.cache = cache
+        self.where = where
 
     @property
     def fits(self) -> bool:
@@ -504,22 +497,18 @@ class FooterRead:
         tabs = []
         for path, md, rgs in self.parts:
             got = {}
-            if cache is not None:
-                cache.mark()
-                for i in rgs:
-                    # a published file's row group holds every column
-                    tab = cache.get((path, i, cols), (path, i, None))
-                    if tab is not None:
-                        got[i] = (tab if tab.schema.equals(self.schema)
-                                  else _conform(tab, self.schema))
+            cache.mark()
+            for i in rgs:
+                # a published file's row group holds every column
+                tab = cache.get((path, i, cols), (path, i, None))
+                if tab is not None:
+                    got[i] = (tab if tab.schema.equals(self.schema)
+                              else _conform(tab, self.schema))
             missing = [i for i in rgs if i not in got]
             if missing:
                 tab = _conform(pq.ParquetFile(path, metadata=md)
                                .read_row_groups(missing, columns=list(cols)),
                                self.schema)
-                if cache is None:
-                    tabs.append(tab)
-                    continue
                 off = 0
                 for i in missing:
                     n = md.row_group(i).num_rows
@@ -760,10 +749,8 @@ class PendingSnapshot:
     def stage(self, path: str, table: pa.Table, md) -> None:
         """Keep a file this snapshot wrote (``table`` and the footer the
         write returned) for :meth:`commit` to publish into the catalog's
-        cache; a no-op without one. Staging stops at the cache's cap, so
-        a large compaction holds no more than that beyond its write."""
-        if self.catalog._rg_cache is None:
-            return
+        cache. Staging stops at the cache's cap, so a large compaction
+        holds no more than that beyond its write."""
         size = table.nbytes
         if self._staged_bytes + size <= LOCAL_READ_MAX_BYTES:
             self._staged[path] = (table, md)
@@ -961,7 +948,7 @@ class PendingSnapshot:
             f.write(name)
         os.replace(tmp, cat.current_file)  # THE commit point
         cat._invalidate_cache()
-        if cat._rg_cache is not None and self.parent:
+        if self.parent:
             # the dirs this commit superseded stay on disk for pinned
             # readers until vacuum, but no longer hold cache bytes
             for d in (_manifest_dirs(self.parent["tables"])
@@ -981,7 +968,7 @@ class IndexCatalog:
     current one — what :class:`SearchEngine` does at construction).
     ``cache``: the :class:`RowGroupCache` its driver-side reads go
     through and its commits publish into (an :class:`IndexStore`'s);
-    without one, an unpinned catalog keeps no row group."""
+    without one, the catalog makes its own."""
 
     def __init__(self, index_dir: str, snapshot_id: int | None = None,
                  cache: RowGroupCache | None = None):
@@ -998,14 +985,7 @@ class IndexCatalog:
         # setup + manifest/schema file reads (~0.2 s of driver time per
         # search on this host)
         self._docs_frames: dict[tuple, "DataFrame"] = {}
-        # committed version dirs are immutable: their file lists,
-        # parquet footers and footer stats are kept for the driver-side
-        # reads, in the cache when the catalog has one (with the row
-        # groups those reads load; see the module docstring), else in
-        # this dict
-        self._meta: dict[tuple, Any] = {}
-        self._rg_cache = cache
-        self._tomb_cache: tuple[str, Any] | None = None
+        self._rg_cache = cache or RowGroupCache()
 
     # ------------------------------------------------------- snapshots
 
@@ -1064,10 +1044,8 @@ class IndexCatalog:
 
     def pin(self, snapshot_id: int | None = None) -> int:
         """Freeze reads on a snapshot (default: the already-pinned one
-        if any, else the live one) and give this catalog a private
-        row-group cache unless it was handed one (a store's, shared by
-        every catalog the store opens). Pinning an expired/unknown id
-        raises :class:`SnapshotExpiredError` up front."""
+        if any, else the live one). Pinning an expired/unknown id raises
+        :class:`SnapshotExpiredError` up front."""
         if snapshot_id is None:
             snapshot_id = (self._pinned if self._pinned is not None
                            else self.current_snapshot_id())
@@ -1078,8 +1056,6 @@ class IndexCatalog:
             raise SnapshotExpiredError(
                 f"cannot pin snapshot {snapshot_id} of {self.index_dir}: "
                 f"not retained (expired by vacuum, or never committed)")
-        if self._rg_cache is None:
-            self._rg_cache = RowGroupCache()
         self._pinned = snapshot_id
         return self._pinned
 
@@ -1376,33 +1352,37 @@ class IndexCatalog:
         else); the term IN-list prunes row groups via parquet min/max
         (rows are term-sorted within files; field is a secondary sort
         key). This is the FST term-dictionary-seek analog (SURVEY §4)."""
-        cfg = self.load_config()
-        buckets = {term_bucket(t, cfg.n_term_buckets) for _, t in pairs}
-        df = self.postings(spark, buckets=buckets)
+        df = self.postings(spark, buckets=self._term_buckets(pairs))
         return df.filter(self._pair_filter(pairs))
 
     def tombstones(self):
         """(sorted doc_ids, aligned versions) of the live tombstone
         table, or None. An entry (d, v) kills posting entries for d
         written before snapshot v (append-mode deletes/replacements);
-        compaction clears the table. Driver-side pyarrow read, cached
-        per pointer — the table is bounded by ids changed since the
-        last compaction."""
+        compaction clears the table. Driver-side pyarrow read, kept in
+        the cache under the table's dir, so the catalogs sharing a
+        cache decode it once (the table is bounded by ids changed since
+        the last compaction; the commit that supersedes the dir drops
+        the entry). The arrays are shared: read-only."""
         rel = self.manifest()["tables"].get("tombstones")
         if not rel:
             return None
-        if self._tomb_cache and self._tomb_cache[0] == rel:
-            return self._tomb_cache[1]
-        files = self._files([os.path.join(self.index_dir, rel)])
+        d = os.path.join(self.index_dir, rel)
+        files = self._files([d])
         if not files:
             return None
-        tab = pa.concat_tables([self.read_file(f) for f in files])
-        ids = tab["doc_id"].to_numpy().astype(np.int64)
-        vers = tab["ver"].to_numpy().astype(np.int64)
-        order = np.argsort(ids)
-        out = (ids[order], vers[order])
-        self._tomb_cache = (rel, out)
-        return out
+
+        def load():
+            tab = pa.concat_tables([self.read_file(f) for f in files])
+            ids = tab["doc_id"].to_numpy().astype(np.int64)
+            vers = tab["ver"].to_numpy().astype(np.int64)
+            order = np.argsort(ids)
+            out = (ids[order], vers[order])
+            for a in out:
+                a.flags.writeable = False
+            return out
+        return self._memo((d, "tombstones"), load,
+                          lambda got: 64 + sum(a.nbytes for a in got))
 
     def shared_holders(self, table: str) -> set[int]:
         """Partitions whose chain holds a shared delta dir. Readers rely
@@ -1442,23 +1422,23 @@ class IndexCatalog:
                              pairs: list[tuple[str, str]]) -> DataFrame:
         """Bucket-pruned stats lookup: pruned at the DIRECTORY level
         (non-matching buckets are never listed)."""
-        cfg = self.load_config()
-        buckets = {term_bucket(t, cfg.n_term_buckets) for _, t in pairs}
-        df = self.term_stats(spark, buckets=buckets)
+        df = self.term_stats(spark, buckets=self._term_buckets(pairs))
         return df.filter(self._pair_filter(pairs))
 
     # ------------------------------------------------ driver-side reads
 
+    def _term_buckets(self, pairs: list[tuple[str, str]]) -> set[int]:
+        """Term buckets of the pairs' terms, by the bucket count of the
+        pinned (or live) snapshot: a rebuild into the same dir may
+        rewrite ``config.json`` with another count."""
+        n = int(self.load_meta()["n_term_buckets"])
+        return {term_bucket(t, n) for _, t in pairs}
+
     def _memo(self, key: tuple, load: Callable[[], Any],
               size: Callable[[Any], int]) -> Any:
-        """``load()`` once per ``key``: kept in the cache when the
-        catalog has one, else in this catalog."""
+        """``load()`` once per ``key`` (a path first) while the cache
+        keeps it."""
         cache = self._rg_cache
-        if cache is None:
-            got = self._meta.get(key)
-            if got is None:
-                got = self._meta[key] = load()
-            return got
         got = cache.get(key)
         if got is None:
             cache.mark()
@@ -1487,11 +1467,9 @@ class IndexCatalog:
     def read_file(self, path: str) -> pa.Table:
         """Every row and column of one committed parquet file, as
         ``pq.read_table`` returns them: from the cache's whole row
-        groups when all are resident (a file this store wrote), else
-        from disk, then kept there (when the catalog has a cache)."""
+        groups when all are resident (a file a writer sharing the cache
+        published), else from disk, then kept there."""
         cache = self._rg_cache
-        if cache is None:
-            return pq.read_table(path)
         md = self._footer(path)
         rgs = range(md.num_row_groups)
         tabs = [cache.get((path, i, None)) for i in rgs]
@@ -1545,7 +1523,7 @@ class IndexCatalog:
                     nbytes += sum(sizes.get(c, 0) for c in schema.names)
             if rgs:
                 parts.append((path, self._footer(path), rgs))
-        return FooterRead(parts, nbytes, schema, where, self._rg_cache)
+        return FooterRead(parts, nbytes, schema, self._rg_cache, where)
 
     def postings_read(self, pairs: list[tuple[str, str]],
                       columns: list[str]) -> FooterRead:
@@ -1553,10 +1531,8 @@ class IndexCatalog:
         query terms' bucket chains, the row groups whose term range
         covers a query term, the rows of the query's (field, term)
         pairs (a shared delta dir holds other buckets' rows too)."""
-        cfg = self.load_config()
         terms = sorted({t for _, t in pairs})
-        dirs = self.postings_dirs({term_bucket(t, cfg.n_term_buckets)
-                                   for t in terms})
+        dirs = self.postings_dirs(self._term_buckets(pairs))
         schema = pa.schema([POSTINGS_ARROW.field(c) for c in columns])
         return self._footer_read(dirs, "term", _covers_any(terms), schema,
                                  _pair_mask(pairs))
@@ -1580,8 +1556,7 @@ class IndexCatalog:
         """df of each present (field, term) pair — on the driver when
         the bucket-pruned term_stats footers fit, else through
         :meth:`term_stats_for_terms`."""
-        cfg = self.load_config()
-        buckets = {term_bucket(t, cfg.n_term_buckets) for _, t in pairs}
+        buckets = self._term_buckets(pairs)
         terms = sorted({t for _, t in pairs})
         rd = self._footer_read(
             self.term_stats_dirs(buckets), "term", _covers_any(terms),

@@ -286,9 +286,9 @@ class IndexMutator:
     mutation takes the path its size selects (the module constants
     above); nothing about the path is chosen per instance.
 
-    ``cache``: the owning store's read cache (catalog.py), which this
-    mutator's reads go through and its commits publish into; None keeps
-    no row group."""
+    ``cache``: the read cache this mutator's reads go through and its
+    commits publish into (the owning store's); without one the
+    mutator's catalog makes its own (catalog.py)."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cache: RowGroupCache | None = None):

@@ -160,9 +160,9 @@ class SearchEngine:
                  max_expansions: int | None = None,
                  on_overflow: str = "error",
                  cache: RowGroupCache | None = None):
-        """``cache``: a read cache to share (an ``IndexStore``'s, see
-        catalog.py); by default the engine's pinned catalog gets its
-        own."""
+        """``cache``: the read cache of the engine's catalog (an
+        ``IndexStore``'s, to share its files); without one the catalog
+        makes its own (catalog.py)."""
         self.spark = spark
         self.catalog = IndexCatalog(index_dir, snapshot_id=snapshot_id,
                                     cache=cache)

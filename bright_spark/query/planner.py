@@ -194,7 +194,6 @@ class Planner:
         envelope."""
         self.spark = spark
         self.catalog = catalog
-        self.config = catalog.load_config()
         self.extra = catalog.load_extra()
         self.meta = catalog.load_meta()
         self.max_expansions = max_expansions or MAX_EXPANSIONS
@@ -297,7 +296,7 @@ class Planner:
 
     def analyze(self, pq: ParsedQuery) -> AnalyzedQuery:
         aq = AnalyzedQuery()
-        mode = self.meta.get("tokenizer", self.config.tokenizer)
+        mode = self.meta["tokenizer"]
 
         for role, clauses in (("must", pq.must), ("should", pq.should),
                               ("must_not", pq.must_not)):

@@ -1,10 +1,12 @@
 """The pinned engine's row-group cache (catalog.RowGroupCache): a warm
 search answers exactly as a cold engine does and reads no parquet; the
 resident bytes never pass ``LOCAL_READ_MAX_BYTES``; concurrent searches
-on one engine agree under eviction churn; unpinned catalogs (mutators,
-compaction) cache nothing. Also the term-dictionary cache's concurrent-
+on one engine agree under eviction churn; a bare mutator's cache stays
+bounded through a compaction, and catalogs sharing a cache decode the
+tombstone table once. Also the term-dictionary cache's concurrent-
 clear regression."""
 
+import os
 import threading
 
 import pyarrow.parquet as pq
@@ -110,31 +112,73 @@ def test_concurrent_searches_under_eviction(spark, built_index, warm,
     assert eng.catalog._rg_cache.nbytes <= bound
 
 
-def test_unpinned_catalogs_cache_nothing(spark, tmp_path, monkeypatch):
-    """A mutator's catalog (upsert, delete, compaction) is unpinned: no
-    row group is ever stored while it runs, and it holds no cache."""
+def test_bare_mutator_cache_stays_bounded(spark, tmp_path):
+    """A bare mutator's catalog reads through its own cache: through an
+    upsert, a delete and a driver compaction it never holds more than
+    ``LOCAL_READ_MAX_BYTES``, and a fresh engine on the compacted
+    snapshot answers as one did before the compaction."""
     idx = str(tmp_path / "idx")
     rows = [{"rid": i, "text": f"alpha common tok{i % 7}"} for i in range(40)]
     build_index(spark, spark.createDataFrame(rows), idx,
-                IndexConfig(id="unpinned", tokenizer="simple",
+                IndexConfig(id="bare", tokenizer="simple",
                             n_term_buckets=4),
                 content_col="text", id_col="rid", lang_col=None,
                 n_build_partitions=2)
-    stored = []
-    put = catalog.RowGroupCache.put
-    monkeypatch.setattr(catalog.RowGroupCache, "put",
-                        lambda self, key, tab: (stored.append(key),
-                                                put(self, key, tab)))
     mut = IndexMutator(spark, idx)
+    cache = mut.catalog._rg_cache
     mut.upsert_rows([{"rid": 100, "text": "beta common"}])
+    assert 0 < cache.nbytes <= catalog.LOCAL_READ_MAX_BYTES
     mut.delete_ids([3])
+    assert cache.nbytes <= catalog.LOCAL_READ_MAX_BYTES
+    queries = ["beta", "common", "tok3", "alpha tok3"]
+    want = [_search(SearchEngine(spark, idx), q) for q in queries]
     mut.compact()
-    assert mut.catalog._rg_cache is None
-    assert stored == []
-    # a pinned engine on the compacted snapshot does cache
-    eng = SearchEngine(spark, idx)
-    assert _search(eng, "beta")[1] == 1
-    assert stored and eng.catalog._rg_cache.nbytes > 0
+    assert mut.catalog._rg_cache is cache
+    assert cache.nbytes <= catalog.LOCAL_READ_MAX_BYTES
+    m = catalog.IndexCatalog(idx).manifest()
+    assert m["operation"] == "compact" and m["metrics"]["mode"] == "driver"
+    assert "tombstones" not in m["tables"]
+    assert [_search(SearchEngine(spark, idx), q) for q in queries] == want
+    assert want[0][1] == 1
+
+
+def test_tombstones_decoded_once_per_cache(spark, tmp_path, monkeypatch):
+    """Two catalogs sharing one cache read and sort the tombstone table
+    once; after a commit that rewrites it, every catalog reading the
+    live snapshot (sharing the committer's cache or not) gets the new
+    arrays, and the superseded table's entry leaves the cache."""
+    idx = str(tmp_path / "idx")
+    rows = [{"rid": i, "text": f"alpha tok{i % 5}"} for i in range(30)]
+    build_index(spark, spark.createDataFrame(rows), idx,
+                IndexConfig(id="tomb", tokenizer="simple",
+                            n_term_buckets=4),
+                content_col="text", id_col="rid", lang_col=None,
+                n_build_partitions=2)
+    IndexMutator(spark, idx).delete_ids([3])
+    reads = []
+    read_file = catalog.IndexCatalog.read_file
+
+    def counted(self, path):
+        reads.append(path)
+        return read_file(self, path)
+    monkeypatch.setattr(catalog.IndexCatalog, "read_file", counted)
+    cache = catalog.RowGroupCache()
+    a = catalog.IndexCatalog(idx, cache=cache)
+    b = catalog.IndexCatalog(idx, cache=cache)
+    ta = a.tombstones()
+    assert b.tombstones() is ta and len(reads) == 1
+    assert ta[0].tolist() == [3]
+    old_dir = os.path.join(idx, a.manifest()["tables"]["tombstones"])
+    other = catalog.IndexCatalog(idx)  # a cache of its own
+    assert other.tombstones()[0].tolist() == [3]
+
+    IndexMutator(spark, idx, cache=cache).delete_ids([5])
+    assert cache.get((old_dir, "tombstones")) is None
+    for cat in (a, b, other):
+        assert cat.tombstones()[0].tolist() == [3, 5]
+    # the older snapshot's readers still see its table
+    assert catalog.IndexCatalog(idx, snapshot_id=2).tombstones()[0] \
+        .tolist() == [3]
 
 
 def test_term_dfs_survives_concurrent_clear(spark, built_index):

@@ -634,3 +634,36 @@ def test_older_layout_is_refused_with_rebuild_error(spark, snap_idx,
     assert _tree(old) == before
     assert _tree(snap_idx) == original
     assert SearchEngine(spark, snap_idx).search("common").total_hits > 0
+
+
+def test_pinned_readers_keep_their_term_buckets(spark, tmp_path_factory):
+    """A rebuild into the same dir with another bucket count rewrites
+    config.json before its commit; readers of the older snapshot (an
+    engine pinned before the rebuild, one opened at ``snapshot_id=1``)
+    still find each term in the bucket that snapshot wrote it to, on
+    the driver path and on Spark."""
+    idx = str(tmp_path_factory.mktemp("rebucket") / "idx")
+    rows = [{"rid": i, "text": f"alpha word{i}"} for i in range(60)]
+
+    def build(n_buckets):
+        build_index(spark, spark.createDataFrame(rows), idx,
+                    IndexConfig(id="rb", tokenizer="simple",
+                                n_term_buckets=n_buckets),
+                    content_col="text", id_col="rid", lang_col=None,
+                    n_build_partitions=2)
+
+    # word5 moves to a bucket the 4-bucket snapshot does not have
+    assert catalog.term_bucket("word5", 16) >= 4
+    build(4)
+    before = SearchEngine(spark, idx)
+    resp = before.search("word5")
+    want = (resp.hits, resp.total_hits)
+    assert resp.path == "local" and resp.total_hits == 1
+    build(16)
+    assert IndexCatalog(idx).current_snapshot_id() == 2
+    for eng in (before, SearchEngine(spark, idx, snapshot_id=1),
+                SearchEngine(spark, idx)):
+        resp = eng.search("word5")
+        assert resp.path == "local" and (resp.hits, resp.total_hits) == want
+        assert [r["doc_id"] for r in
+                eng.search_df("word5", k=5).collect()] == [5]
