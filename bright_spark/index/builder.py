@@ -61,7 +61,6 @@ aggregation over chunk counts (stage 3).
 from __future__ import annotations
 
 import dataclasses
-import json
 import os
 import shutil
 import zlib
@@ -850,6 +849,17 @@ class IndexBuilder:
             "docs_range_bits": cfg.docs_range_bits,
             "docs_schema": docs_schema,
             "version": LAYOUT_VERSION,
+            # how this snapshot was written: IndexCatalog.load_config /
+            # load_extra, the settings its readers and writers take
+            "build": {"config": dataclasses.asdict(cfg), "extra": {
+                "content_col": self.content_col,
+                "key_cols": list(self.key_cols),
+                "id_col": self.id_col,
+                "lang_col": self.lang_col,
+                "attr_cols": list(self.attr_cols),
+                "text_cols": list(self.text_cols),
+                "filter_stopwords": self.filter_stopwords,
+                "n_build_partitions": self.n_build_partitions}},
         }
 
     def _field_cf_totals(self, dirs: list[str]) -> dict[str, int]:
@@ -898,19 +908,15 @@ class IndexBuilder:
         # n_docs is tracked during doc_id assignment (no extra scan)
         field_tokens = self._field_cf_totals(
             pending.part_dirs("term_stats"))
-        n_docs = getattr(self, "_n_docs", None)
+        n_docs = self._n_docs
         if n_docs is None:
             # parquet FOOTER row counts of the freshly written docs
             # dirs — exact, O(files) metadata reads, no Spark job (the
             # id_col path never runs the offsets count pass, so this
             # was a full scan+count job per build)
-            import glob
-            import pyarrow.parquet as pq
-            ddirs = pending.docs_dirs()
-            n_docs = sum(
-                pq.ParquetFile(f).metadata.num_rows
-                for d in ddirs
-                for f in glob.glob(os.path.join(d, "*.parquet")))
+            cat = self.catalog
+            n_docs = sum(cat._footer(f).num_rows
+                         for f in cat._files(pending.docs_dirs()))
             self._n_docs = n_docs
         meta = self._make_meta(n_docs, field_tokens,
                                self._docs_ddl(pending))
@@ -954,10 +960,6 @@ class IndexBuilder:
         }
         meta = self._make_meta(n_docs, field_tokens,
                                old_meta.get("docs_schema"))
-        # the snapshot lineage's bits are authoritative (they shaped
-        # the group dirs), not whatever the config file carries
-        meta["docs_range_bits"] = old_meta.get("docs_range_bits",
-                                               cfg.docs_range_bits)
         self._write_index_meta(pending, meta)
         return meta
 
@@ -1149,16 +1151,6 @@ class IndexBuilder:
         if local is not None:
             self._n_docs = local.num_rows
         self.resolve_range_bits(source)
-        self.catalog.save_config(self.config, extra={
-            "content_col": self.content_col,
-            "key_cols": list(self.key_cols),
-            "id_col": self.id_col,
-            "lang_col": self.lang_col,
-            "attr_cols": list(self.attr_cols),
-            "text_cols": list(self.text_cols),
-            "filter_stopwords": self.filter_stopwords,
-            "n_build_partitions": self.n_build_partitions,
-        })
         import time
         t0 = time.time()
         pending = self.catalog.begin()

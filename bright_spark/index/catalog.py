@@ -3,15 +3,17 @@
 The reference persists one Bleve scorch directory per index under
 ``<dataDir>/<indexID>`` plus a ``configs.json`` (store/store.go:91,
 226-282). Our index is a directory of columnar tables under an
-Iceberg-style snapshot protocol (layout v5):
+Iceberg-style snapshot protocol (layout v6):
 
     <index_dir>/
-      config.json        index + build configuration (configs.json analog)
       CURRENT            id of the live snapshot ("s00000007"), replaced
                          atomically via os.replace — THE commit point
       snapshots/
         s00000007.json   manifest: table-name -> version-dir pointers +
                          corpus stats (n_docs, avgdl, field_stats, ...)
+                         + meta["build"]: the resolved IndexConfig and
+                         field layout the snapshot was written with
+                         (the configs.json analog)
       data/
         docs/g00000012/v00000007/  per-DOC-RANGE versioned doc dirs;
                                    group = doc_id >> docs_range_bits
@@ -135,7 +137,6 @@ import time
 import zlib
 from collections import OrderedDict
 from collections.abc import Callable
-from dataclasses import asdict
 from typing import Any
 
 import numpy as np
@@ -637,7 +638,7 @@ def _term_row_groups(tab: pa.Table) -> list[int]:
         cuts.append(int(starts[i]))
 
 
-LAYOUT_VERSION = 5
+LAYOUT_VERSION = 6
 
 # name of the shared delta dir under data/<table>/ (data/<table>/delta/v<N>)
 DELTA_DIR = "delta"
@@ -961,7 +962,7 @@ class PendingSnapshot:
 
 
 class IndexCatalog:
-    """Paths + config/manifest persistence for one index.
+    """Paths + manifest persistence for one index.
 
     ``snapshot_id`` pins every read to that snapshot; otherwise reads
     resolve the live snapshot per call (:meth:`pin` freezes it at the
@@ -976,7 +977,6 @@ class IndexCatalog:
         self.snapshots_dir = os.path.join(index_dir, "snapshots")
         self.current_file = os.path.join(index_dir, "CURRENT")
         self.checkpoints_path = os.path.join(index_dir, "checkpoints")
-        self.config_file = os.path.join(index_dir, "config.json")
         self._pinned = snapshot_id
         self._cache: tuple[int, dict] | None = None
         # (spark id, snapshot id, include_build_cols) -> docs DataFrame;
@@ -1204,25 +1204,18 @@ class IndexCatalog:
 
     # ---------------------------------------------------------- config
 
-    def exists(self) -> bool:
-        return os.path.exists(self.config_file)
-
-    def save_config(self, config: IndexConfig, extra: dict[str, Any] | None = None) -> None:
-        os.makedirs(self.index_dir, exist_ok=True)
-        payload = {"config": asdict(config), "extra": extra or {}}
-        with open(self.config_file, "w") as f:
-            json.dump(payload, f, indent=2, default=list)
-
     def load_config(self) -> IndexConfig:
-        with open(self.config_file) as f:
-            payload = json.load(f)
-        c = payload["config"]
-        c["exclude_attributes"] = tuple(c.get("exclude_attributes") or ())
+        """The resolved config the (pinned or live) snapshot was
+        written with: readers take their pinned snapshot's, writers
+        their parent's."""
+        c = dict(self.load_meta()["build"]["config"])
+        c["exclude_attributes"] = tuple(c["exclude_attributes"])
         return IndexConfig(**c)
 
     def load_extra(self) -> dict[str, Any]:
-        with open(self.config_file) as f:
-            return json.load(f).get("extra", {})
+        """The field layout (``IndexBuilder`` keyword arguments) of the
+        same snapshot."""
+        return self.load_meta()["build"]["extra"]
 
     # ------------------------------------------------------------ meta
 
@@ -1430,7 +1423,7 @@ class IndexCatalog:
     def _term_buckets(self, pairs: list[tuple[str, str]]) -> set[int]:
         """Term buckets of the pairs' terms, by the bucket count of the
         pinned (or live) snapshot: a rebuild into the same dir may
-        rewrite ``config.json`` with another count."""
+        commit another count."""
         n = int(self.load_meta()["n_term_buckets"])
         return {term_bucket(t, n) for _, t in pairs}
 

@@ -125,17 +125,6 @@ class ResumableIndexBuilder:
         # source and lands on the same range_bits
         self.builder.resolve_range_bits(source)
         self.config = self.builder.config
-        self.catalog.save_config(self.config, extra={
-            "content_col": self.builder.content_col,
-            "key_cols": list(self.builder.key_cols),
-            "id_col": self.builder.id_col,
-            "lang_col": self.builder.lang_col,
-            "attr_cols": list(self.builder.attr_cols),
-            "text_cols": list(self.builder.text_cols),
-            "filter_stopwords": self.builder.filter_stopwords,
-            "n_build_partitions": self.builder.n_build_partitions,
-            "n_shards": self.n_shards,
-        })
 
         # interrupted-build resume: CURRENT was never advanced, so
         # begin() re-derives the SAME pending snapshot id — stage

@@ -116,7 +116,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
         return False
     if not cfg.store_content:
         return False
-    if changed_pdf is not None and not mut.extra.get("id_col"):
+    if changed_pdf is not None and not mut.extra["id_col"]:
         return False  # natural-key id assignment needs the key lookup
     pending = cat.begin()
     bits = int(old_meta["docs_range_bits"])
@@ -297,7 +297,7 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     merge_tombstones(pending, present_raw, old_tomb)
 
     n_changed = int(ch_ids.size if pdf is not None else del_ids.size)
-    n_docs_new = (int(old_meta.get("n_docs") or 0) - n_present
+    n_docs_new = (int(old_meta["n_docs"]) - n_present
                   + (n_changed if pdf is not None else 0))
     old_fs = old_meta.get("field_stats") or {}
     field_tokens = {
@@ -307,8 +307,6 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     }
     meta = b._make_meta(n_docs_new, field_tokens,
                         old_meta.get("docs_schema"))
-    meta["docs_range_bits"] = old_meta.get("docs_range_bits",
-                                           cfg.docs_range_bits)
     b._write_index_meta(pending, meta)
     pending.commit(
         meta, "upsert" if pdf is not None else "delete",

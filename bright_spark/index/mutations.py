@@ -284,7 +284,9 @@ def _decode_to_entries(store_positions: bool = False, tomb_bc=None):
 class IndexMutator:
     """Upserts, deletes, patches and compactions of one index. Each
     mutation takes the path its size selects (the module constants
-    above); nothing about the path is chosen per instance.
+    above); nothing about the path is chosen per instance. The config
+    and field layout are those the live snapshot at construction was
+    written with, and every commit records them unchanged.
 
     ``cache``: the read cache this mutator's reads go through and its
     commits publish into (the owning store's); without one the
@@ -300,16 +302,8 @@ class IndexMutator:
     # ------------------------------------------------------- internals
 
     def _builder(self) -> IndexBuilder:
-        return IndexBuilder(
-            self.spark, self.config, self.catalog.index_dir,
-            content_col=self.extra.get("content_col", "content"),
-            key_cols=tuple(self.extra.get("key_cols") or ()),
-            id_col=self.extra.get("id_col"),
-            lang_col=self.extra.get("lang_col"),
-            attr_cols=tuple(self.extra.get("attr_cols") or ()),
-            text_cols=tuple(self.extra.get("text_cols") or ()),
-            filter_stopwords=bool(self.extra.get("filter_stopwords")),
-        )
+        return IndexBuilder(self.spark, self.config, self.catalog.index_dir,
+                            **self.extra)
 
     def _field_partials(self, rows: DataFrame) -> DataFrame:
         """Per-field partial posting rows for ``rows`` (must carry
@@ -350,9 +344,9 @@ class IndexMutator:
                 .filter((F.col("df") != 0) | (F.col("cf") != 0)))
 
     def _key_cols(self) -> list[str]:
-        if self.extra.get("id_col"):
+        if self.extra["id_col"]:
             return ["doc_id"]
-        return list(self.extra.get("key_cols") or ("repo", "path", "commit"))
+        return list(self.extra["key_cols"])
 
     def _tokenize_updates(self, updates: DataFrame) -> DataFrame:
         """Compute doc_len/sha256 for changed rows and assign doc_ids:
@@ -361,7 +355,7 @@ class IndexMutator:
         natural key."""
         b = self._builder()
         keys = self._key_cols()
-        if self.extra.get("id_col"):
+        if self.extra["id_col"]:
             updates = (updates.withColumnRenamed(self.extra["id_col"], "doc_id")
                        .withColumn("doc_id", F.col("doc_id").cast("bigint")))
         src = updates.withColumn(
@@ -381,7 +375,7 @@ class IndexMutator:
                                   b.filter_stopwords, list(src.columns)),
                 schema=", ".join(f"{f.name} {f.dataType.simpleString()}"
                                  for f in src.schema.fields) + ", doc_len INT")
-        if self.extra.get("id_col"):
+        if self.extra["id_col"]:
             return tokenized
         docs = self.catalog.docs(self.spark).select(*keys, "doc_id")
         joined = tokenized.join(docs, keys, "left")
@@ -396,8 +390,7 @@ class IndexMutator:
         # group dir (groups are id ranges), not the whole docs table.
         max_id = self.catalog.max_doc_id(self.spark)
         max_id = -1 if max_id is None else int(max_id)
-        p = int(self.extra.get("n_build_partitions")
-                or self.spark.sparkContext.defaultParallelism)
+        p = self.extra["n_build_partitions"]
         counts = {int(r["_pid"]): int(r["cnt"]) for r in (
             news_src.select(*keys)
             .groupBy(F.pmod(F.hash(*keys), F.lit(p)).alias("_pid"))
@@ -433,7 +426,7 @@ class IndexMutator:
         repeats a key fails with ``ValueError`` when the rows share a
         term. :meth:`upsert_rows` accepts repeated keys (last row
         wins)."""
-        if self.extra.get("id_col"):
+        if self.extra["id_col"]:
             head = updates.limit(FAST_THRESHOLD + 1).toPandas()
             if len(head) <= FAST_THRESHOLD:
                 from bright_spark.index.fastpath import apply_fast
@@ -451,9 +444,9 @@ class IndexMutator:
         if not rows:
             return
         rows = last_row_per_key(rows, [self.extra["id_col"]]
-                                if self.extra.get("id_col")
+                                if self.extra["id_col"]
                                 else self._key_cols())
-        if self.extra.get("id_col") and len(rows) <= FAST_THRESHOLD:
+        if self.extra["id_col"] and len(rows) <= FAST_THRESHOLD:
             from bright_spark.index.fastpath import apply_fast
             if apply_fast(self, changed_pdf=pd.DataFrame(rows)):
                 return
@@ -496,7 +489,7 @@ class IndexMutator:
         rec.pop("content_sha256", None)
         rec.pop("_pid", None)
         rec.update(fields)
-        if self.extra.get("id_col"):
+        if self.extra["id_col"]:
             rec[self.extra["id_col"]] = rec.pop("doc_id")
         else:
             rec.pop("doc_id", None)
@@ -631,7 +624,7 @@ class IndexMutator:
             # ---- term_stats + meta: O(batch) signed-delta maintenance
             # on both paths (mutate_stats), then ONE atomic commit for
             # docs + postings + tombstones + stats together
-            n_docs_new = (int(old_meta.get("n_docs") or 0) - n_present
+            n_docs_new = (int(old_meta["n_docs"]) - n_present
                           + (n_changed if changed is not None else 0))
             delta = self._stats_delta(replaced_partials, new_partials)
             meta = self._builder().mutate_stats(pending, old_meta, delta,
@@ -790,7 +783,7 @@ class IndexMutator:
         targets = (sorted(int(k) for k in pmap) if tomb is not None
                    else sorted(set(chained) | cat.shared_holders("postings")))
         schained = sorted(set(schained) | cat.shared_holders("term_stats"))
-        range_bits = int(old_meta.get("range_bits") or cfg.range_bits or 0)
+        range_bits = cfg.range_bits
         tranges = (np.unique(tomb[0] >> np.int64(range_bits))
                    if tomb is not None else _EMPTY)
         # the gate counts each (file, row group) of the target chains

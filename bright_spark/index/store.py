@@ -158,23 +158,23 @@ class IndexStore:
     # ------------------------------------------------------ lifecycle
 
     def create_index(self, config: IndexConfig) -> None:
-        """Register a new index (store.go:78-124). An existing valid
-        index dir under this id is ADOPTED — with its own on-disk
-        config, which must agree with the requested one on every
-        build-shaping field (tokenizer, primary key, exclusions, ...):
-        registering a conflicting config would silently misdescribe how
-        the adopted index was actually built, so it raises instead
-        (mirroring store.go:96-106, where adopt reuses the persisted
-        index as-is). An invalid dir (no config.json) is removed."""
+        """Register a new index (store.go:78-124). An existing index
+        dir under this id is ADOPTED — with the config its live
+        snapshot was built with, which must agree with the requested
+        one on every build-shaping field (tokenizer, primary key,
+        exclusions, ...): registering a conflicting config would
+        silently misdescribe how the adopted index was actually built,
+        so it raises instead (mirroring store.go:96-106, where adopt
+        reuses the persisted index as-is). A dir with no committed
+        snapshot (a first build that crashed) is removed."""
         with self._reg_lock:
             if config.id in self.configs:
                 raise ValueError(f"index {config.id} already exists")
             path = self._index_dir(config.id)
-            if os.path.exists(path) and not os.path.exists(
-                    os.path.join(path, "config.json")):
+            if os.path.exists(path) and not self.is_built(config.id):
                 shutil.rmtree(path, ignore_errors=True)
                 self.cache.drop(path)
-            if os.path.exists(os.path.join(path, "config.json")):
+            if os.path.exists(path):
                 on_disk = IndexCatalog(path).load_config()
                 mismatches = {
                     f.name: (getattr(config, f.name),

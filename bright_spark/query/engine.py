@@ -291,7 +291,7 @@ class SearchEngine:
                            if fkey(*s.key) in weights} | set(must_not_pairs)),
             avgdl=float(self.meta["avgdl"]), k1=float(self.meta["k1"]),
             b=float(self.meta["b"]),
-            range_bits=int(self.meta.get("range_bits") or 0))
+            range_bits=int(self.meta["range_bits"]))
 
     def _kernel_df(self, a: KernelArgs, k: int | None = None,
                    prune: bool = True, need_total: bool = True,
@@ -457,9 +457,9 @@ class SearchEngine:
         and chains packed ``doc<<32 | pos`` keys — the same flat-array
         adjacency algebra as the positional kernel, with zero per-row
         Python (the tokenizer's regex scan is the only per-doc work)."""
-        lang_col = self.extra.get("lang_col")
-        mode = self.meta.get("tokenizer", "code")
-        stops = bool(self.meta.get("filter_stopwords"))
+        lang_col = self.extra["lang_col"]
+        mode = self.meta["tokenizer"]
+        stops = bool(self.meta["filter_stopwords"])
         fields = sorted({ph.field for ph in phrases})
         by_field = [(f, [list(ph.tokens) for ph in phrases if ph.field == f])
                     for f in fields]

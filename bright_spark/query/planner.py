@@ -212,12 +212,12 @@ class Planner:
 
     @property
     def content_field(self) -> str:
-        return self.extra.get("content_col", "content")
+        return self.extra["content_col"]
 
     @property
     def text_fields(self) -> list[str]:
         """Analyzed fields with their own postings namespace (Q5)."""
-        return [self.content_field, *(self.extra.get("text_cols") or ())]
+        return [self.content_field, *self.extra["text_cols"]]
 
     def _text_field_of(self, field_name: str | None) -> str | None:
         """The postings namespace a clause scores against, or None if

@@ -83,11 +83,11 @@ class StreamingIngestor:
             # millions of rows never funnels through the driver as a
             # Python list (the _apply path checkpoints + counts it)
             extra = self.catalog.load_extra()
-            if extra.get("id_col"):
+            if extra["id_col"]:
                 ids_df = dels.select(
                     F.col(extra["id_col"]).cast("bigint").alias("doc_id"))
             else:
-                keys = list(extra.get("key_cols") or ())
+                keys = list(extra["key_cols"])
                 docs = self.catalog.docs(self.spark)
                 keyrows = dels.select(*keys).distinct()
                 ids_df = (docs.join(keyrows, keys, "left_semi")

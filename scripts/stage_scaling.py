@@ -33,7 +33,6 @@ spark = get_spark("stage", master="local[{cores}]", shuffle_partitions=128,
 src = spark.read.parquet({corpus!r})
 b = IndexBuilder(spark, IndexConfig(id="st"), {idx!r}, n_build_partitions=128)
 b.resolve_range_bits(src)
-b.catalog.save_config(b.config, extra={{}})
 p = b.catalog.begin()
 t = {{}}
 t0 = time.time(); b.build_docs(src, p); t["docs"] = round(time.time() - t0, 1)

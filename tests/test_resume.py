@@ -56,7 +56,11 @@ def test_resume_identical_to_uninterrupted(spark, small_src, tmp_path_factory):
 
     # byte-identical postings vs the uninterrupted build
     assert _postings_map(spark, cat) == _postings_map(spark, direct)
-    assert cat.load_meta() == {**direct.load_meta()}
+    # the same corpus stats and build record, but for the config's id
+    want = direct.load_meta()
+    rec = want["build"]
+    assert cat.load_meta() == {**want, "build": {
+        **rec, "config": {**rec["config"], "id": "resumable"}}}
 
 
 def test_checkpoint_lineage_metrics(spark, small_src, tmp_path_factory):

@@ -21,7 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bright_spark.index import catalog, mutations
-from bright_spark.index.builder import build_index
+from bright_spark.index.builder import IndexBuilder, build_index
 from bright_spark.index.catalog import IndexCatalog, LayoutVersionError
 from bright_spark.index.mutations import IndexMutator
 from bright_spark.models import IndexConfig
@@ -637,8 +637,8 @@ def test_older_layout_is_refused_with_rebuild_error(spark, snap_idx,
 
 
 def test_pinned_readers_keep_their_term_buckets(spark, tmp_path_factory):
-    """A rebuild into the same dir with another bucket count rewrites
-    config.json before its commit; readers of the older snapshot (an
+    """A rebuild into the same dir commits another bucket count;
+    readers of the older snapshot (an
     engine pinned before the rebuild, one opened at ``snapshot_id=1``)
     still find each term in the bucket that snapshot wrote it to, on
     the driver path and on Spark."""
@@ -667,3 +667,87 @@ def test_pinned_readers_keep_their_term_buckets(spark, tmp_path_factory):
         assert resp.path == "local" and (resp.hits, resp.total_hits) == want
         assert [r["doc_id"] for r in
                 eng.search_df("word5", k=5).collect()] == [5]
+
+
+def test_failed_rebuild_keeps_the_live_settings(spark, tmp_path_factory,
+                                                monkeypatch):
+    """A rebuild with another bucket count whose build step raises
+    leaves snapshot 1 live, and the next mutation commits on it with
+    the settings snapshot 1 was written with: every pre-failure doc
+    stays findable beside the new one, and the commit's meta keeps the
+    4 buckets its base files were written with."""
+    idx = str(tmp_path_factory.mktemp("failed_rebuild") / "idx")
+    rows = [{"rid": i, "text": f"alpha word{i}"} for i in range(60)]
+
+    def build(n_buckets):
+        build_index(spark, spark.createDataFrame(rows), idx,
+                    IndexConfig(id="fr", tokenizer="simple",
+                                n_term_buckets=n_buckets),
+                    content_col="text", id_col="rid", lang_col=None,
+                    n_build_partitions=2)
+
+    def boom(*a, **k):
+        raise RuntimeError("injected build failure")
+
+    build(4)
+    with monkeypatch.context() as mp:
+        for step in ("_build_driver", "build_postings"):
+            mp.setattr(IndexBuilder, step, boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            build(16)
+    assert IndexCatalog(idx).current_snapshot_id() == 1
+
+    IndexMutator(spark, idx).upsert_rows([{"rid": 60, "text": "alpha word60"}])
+    cat = IndexCatalog(idx)
+    m = cat.manifest()
+    assert m["snapshot_id"] == 2 and m["metrics"]["mode"] == "append-fast"
+    assert m["meta"]["n_term_buckets"] == 4
+    assert cat.load_config().n_term_buckets == 4
+    assert m["meta"]["build"] == cat.read_manifest(1)["meta"]["build"]
+    eng = SearchEngine(spark, idx)
+    resp = eng.search("alpha")
+    assert resp.path == "local" and resp.total_hits == 61
+    assert sorted(r["doc_id"] for r in
+                  eng.search_df("alpha", k=100).collect()) == list(range(61))
+
+
+def test_time_travel_across_a_field_layout_rebuild(spark, tmp_path_factory,
+                                                   monkeypatch):
+    """A rebuild into the same dir with another content column: readers
+    of the older snapshot (an engine pinned before the rebuild, one
+    opened at ``snapshot_id=1``) route ``word5`` and ``text:word5`` by
+    the field layout that snapshot was written with, on the driver path
+    and on Spark."""
+    idx = str(tmp_path_factory.mktemp("relayout") / "idx")
+    rows = [{"rid": i, "text": f"alpha word{i}", "title": f"title{i}"}
+            for i in range(30)]
+
+    def build(content_col):
+        build_index(spark, spark.createDataFrame(rows), idx,
+                    IndexConfig(id="rl", tokenizer="simple"),
+                    content_col=content_col, text_cols=("title",),
+                    id_col="rid", lang_col=None, n_build_partitions=2)
+
+    build("text")
+    before = SearchEngine(spark, idx)
+    want = {q: before.search(q) for q in ("word5", "text:word5")}
+    for resp in want.values():
+        assert resp.path == "local" and resp.total_hits == 1
+    build("title")
+    assert IndexCatalog(idx).current_snapshot_id() == 2
+    assert SearchEngine(spark, idx).search("word5").total_hits == 0
+    engines = (before, SearchEngine(spark, idx, snapshot_id=1))
+    for eng in engines:
+        for q, w in want.items():
+            resp = eng.search(q)
+            assert resp.path == "local"
+            assert (resp.hits, resp.total_hits) == (w.hits, w.total_hits)
+            assert [r["doc_id"] for r in
+                    eng.search_df(q, k=5).collect()] == [5]
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", 0)
+    for eng in engines:
+        for q, w in want.items():
+            resp = eng.search(q)
+            assert resp.path == "spark"
+            assert resp.total_hits == 1
+            assert [h["doc_id"] for h in resp.hits] == [5]

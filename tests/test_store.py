@@ -103,6 +103,44 @@ def test_adopt_reconciles_on_disk_config(spark, tmp_path_factory):
         s3.create_index(IndexConfig(id="docs", tokenizer="code"))
 
 
+def test_create_removes_an_uncommitted_index_dir(spark, tmp_path_factory,
+                                                 monkeypatch):
+    """A first build that crashed before its commit leaves an index dir
+    with no CURRENT: there is nothing to adopt, so a fresh store's
+    create_index removes the dir (whatever config it registers), and
+    the first batch then builds the index fresh."""
+    import os
+
+    from bright_spark.index.catalog import IndexCatalog, PendingSnapshot
+    data = str(tmp_path_factory.mktemp("crashed") / "data")
+    s1 = IndexStore(spark, data)
+    s1.create_index(IndexConfig(id="docs", tokenizer="simple"))
+
+    def boom(self, *a, **k):
+        raise RuntimeError("injected crash before commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(PendingSnapshot, "commit", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            s1.add_documents("docs", spark.createDataFrame(_rows(12)),
+                             content_col="text")
+    path = os.path.join(data, "docs")
+    assert os.path.isdir(path)
+    assert IndexCatalog(path).current_snapshot_id() is None
+
+    os.remove(os.path.join(data, "configs.json"))
+    s2 = IndexStore(spark, data)
+    s2.create_index(IndexConfig(id="docs", tokenizer="code"))
+    assert not os.path.exists(path)
+    s2.add_documents("docs", spark.createDataFrame(_rows(5, tag="gamma")),
+                     content_col="text")
+    assert s2.search("docs", "gamma").total_hits == 5
+    assert s2.search("docs", "alpha").total_hits == 0
+    cat = IndexCatalog(path)
+    assert cat.current_snapshot_id() == 1
+    assert cat.load_config().tokenizer == "code"
+
+
 def test_patch_commits_on_the_driver(store, spark, monkeypatch):
     """PATCH on an id-keyed index merges the stored doc and commits it
     through the driver fast path: no DataFrame is created for it."""
