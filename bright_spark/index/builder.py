@@ -350,8 +350,8 @@ def _make_assign_ids_fn(id_offsets: dict[int, int]):
 
 def _merge_runs(rows, row: np.ndarray, doc: np.ndarray, tf: np.ndarray,
                 dl: np.ndarray, pos: np.ndarray | None, block_size: int,
-                n_buckets: int, ver: int | None = None
-                ) -> Iterator[pa.RecordBatch]:
+                n_buckets: int, ver: int | None = None,
+                bucket: int | None = None) -> Iterator[pa.RecordBatch]:
     """Posting entries -> posting rows: entry i (``doc[i]``, ``tf[i]``,
     ``dl[i]``, and when ``pos`` is given its ``tf[i]`` positions, in
     entry order) belongs to the ``field``/``term``/``range_id`` of row
@@ -362,7 +362,9 @@ def _merge_runs(rows, row: np.ndarray, doc: np.ndarray, tf: np.ndarray,
     Yields :data:`catalog.POSTINGS_KERNEL_ARROW` record batches, or
     :data:`catalog.POSTINGS_ARROW` ones stamped with ``ver``. A batch
     holds at most about ``_MERGE_BATCH_VALUES`` entries plus positions,
-    which keeps each of its varint buffers under 2 GiB."""
+    which keeps each of its varint buffers under 2 GiB. A caller whose
+    terms all lie in one known term bucket passes it as ``bucket``;
+    otherwise each term's bucket is hashed here."""
     if not doc.size:
         return
 
@@ -398,10 +400,11 @@ def _merge_runs(rows, row: np.ndarray, doc: np.ndarray, tf: np.ndarray,
     cf = np.add.reduceat(tf, starts)
     # one crc32 per UNIQUE term (each term spans many (field, range)
     # groups), fanned out by fancy indexing
-    ubucket = np.fromiter(
-        (zlib.crc32(t.encode("utf-8")) % n_buckets
-         for t in terms.to_numpy(zero_copy_only=False)),
-        np.int64, len(terms))
+    ubucket = (np.full(len(terms), bucket, np.int64) if bucket is not None
+               else np.fromiter(
+                   (zlib.crc32(t.encode("utf-8")) % n_buckets
+                    for t in terms.to_numpy(zero_copy_only=False)),
+                   np.int64, len(terms)))
     # batches of whole runs: run g goes to batch (values before it) //
     # budget
     weight = ends - starts + (cf if pos is not None else 0)

@@ -3,7 +3,7 @@
 The reference persists one Bleve scorch directory per index under
 ``<dataDir>/<indexID>`` plus a ``configs.json`` (store/store.go:91,
 226-282). Our index is a directory of columnar tables under an
-Iceberg-style snapshot protocol (layout v6):
+Iceberg-style snapshot protocol (layout v7):
 
     <index_dir>/
       CURRENT            id of the live snapshot ("s00000007"), replaced
@@ -155,8 +155,8 @@ POSTINGS_KERNEL_SCHEMA = (
     "first_doc ARRAY<BIGINT>, max_doc ARRAY<BIGINT>, n ARRAY<INT>, "
     "max_tf ARRAY<INT>, min_dl ARRAY<INT>, "
     "docs ARRAY<BINARY>, tfs ARRAY<BINARY>, dls ARRAY<BINARY>, "
-    # per-block absolute-varint positions (empty when the index was
-    # built with store_positions=False)
+    # per-block varint positions, gaps within each entry (empty when
+    # the index was built with store_positions=False)
     "pos ARRAY<BINARY>"
 )
 
@@ -541,8 +541,13 @@ def _pair_mask(pairs: list[tuple[str, str]]) -> Callable[[pa.Table], Any]:
     return where
 
 
+# the columns readers prune row groups on: every _footer_read key and
+# every Spark filter column of the postings, term_stats and docs tables
+STATS_COLUMNS = ("bucket", "field", "term", "range_id", "doc_id")
+
 _PARQUET_OPTS = dict(compression="zstd", compression_level=3,
-                     use_dictionary=False, store_schema=False)
+                     use_dictionary=False, store_schema=False,
+                     write_statistics=list(STATS_COLUMNS))
 
 
 def write_part(dst_dir: str, table: pa.Table,
@@ -556,8 +561,11 @@ def write_part(dst_dir: str, table: pa.Table,
     and pyarrow does not, so pyarrow's defaults write larger files: a
     driver-built index of 200 make_repos_spark files took 1,323,241 bytes
     with plain encoding, 1,398,599 with pyarrow's defaults, and Spark's
-    build 1,388,201. Column statistics stay on, since readers prune on
-    them. The file and its footer are staged in ``pending``
+    build 1,388,201. Column statistics are written only on
+    :data:`STATS_COLUMNS`, the keys readers prune row groups on; those
+    of the list payloads and ``content`` cost 1.9% of the bytes of a
+    200-file index and no reader looks at them. The file and its footer
+    are staged in ``pending``
     (:meth:`PendingSnapshot.stage`) when given."""
     _write_file(dst_dir, table, None, pending)
 
@@ -638,7 +646,9 @@ def _term_row_groups(tab: pa.Table) -> list[int]:
         cuts.append(int(starts[i]))
 
 
-LAYOUT_VERSION = 6
+# v7: each entry's ``pos`` values are its first position then gaps
+# (codec.py); v6 stored them absolute
+LAYOUT_VERSION = 7
 
 # name of the shared delta dir under data/<table>/ (data/<table>/delta/v<N>)
 DELTA_DIR = "delta"
@@ -986,6 +996,20 @@ class IndexCatalog:
         # search on this host)
         self._docs_frames: dict[tuple, "DataFrame"] = {}
         self._rg_cache = cache or RowGroupCache()
+        # per thread: driver-side reads that fell back to a Spark job
+        self._fallbacks = threading.local()
+
+    def spark_fallbacks(self) -> int:
+        """How many driver-side reads through this catalog, on the
+        calling thread, fell back to a Spark job: a search that reads on
+        the driver compares it before and after to tell whether a job
+        ran for it."""
+        return getattr(self._fallbacks, "n", 0)
+
+    def note_spark_fallback(self) -> None:
+        """Count one driver-side read of the calling thread that runs a
+        Spark job instead (see :meth:`spark_fallbacks`)."""
+        self._fallbacks.n = self.spark_fallbacks() + 1
 
     # ------------------------------------------------------- snapshots
 
@@ -1559,6 +1583,7 @@ class IndexCatalog:
             return {(f, t): int(d) for f, t, d in zip(
                 tab["field"].to_pylist(), tab["term"].to_pylist(),
                 tab["df"].to_pylist())}
+        self.note_spark_fallback()
         rows = self.term_stats_for_terms(spark, pairs).collect()
         return {(r["field"], r["term"]): int(r["df"]) for r in rows}
 
@@ -1628,6 +1653,7 @@ class IndexCatalog:
             tab = rd.read()
             rows = tab.select(order or tab.column_names).to_pylist()
         else:
+            self.note_spark_fallback()
             df = self.docs_for_ids(spark, ids)
             if order is not None:
                 df = df.select(*order)

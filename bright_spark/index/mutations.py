@@ -201,8 +201,8 @@ def _decode_rows(tab, store_positions: bool, kill=None):
         return _EMPTY, _EMPTY, _EMPTY, _EMPTY, _EMPTY
     t = codec.decode_concat(codec.binary_values(tab["tfs"])).astype(np.int64)
     l = codec.decode_concat(codec.binary_values(tab["dls"])).astype(np.int64)
-    pos = (codec.decode_concat(codec.binary_values(tab["pos"])).astype(
-        np.int64) if store_positions else _EMPTY)
+    pos = (codec.decode_positions(codec.binary_values(tab["pos"]), t)
+           if store_positions else _EMPTY)
     row = np.repeat(np.repeat(np.arange(tab.num_rows), nb), ns)
     drop = codec.dead_entries(kill, d, tab["ver"], row)
     if drop is not None:
@@ -837,7 +837,7 @@ class IndexMutator:
             parts += [pa.Table.from_batches([m]) for m in _merge_runs(
                 touched, row, d, t, l,
                 pos if cfg.store_positions else None, cfg.block_size,
-                cfg.n_term_buckets, ver=pending.snapshot_id)]
+                cfg.n_term_buckets, ver=pending.snapshot_id, bucket=b)]
             out = pa.concat_tables(parts) if parts else None
             if out is not None and out.num_rows:
                 write_part(pending.adopt_part("postings", b), out.sort_by(

@@ -180,8 +180,9 @@ class SearchResponse:
     # mode raises TooManyClausesError instead of answering partially)
     truncated_expansions: list[str] = field(default_factory=list)
     # execution that answered the query — "local" (driver-side reads,
-    # zero Spark jobs) or "spark" (the kernel stage on Spark;
-    # SearchEngine.search); diagnostic only, never on the wire
+    # zero Spark jobs) or "spark" (the kernel stage on Spark, or any
+    # Spark job a driver-side read fell back to; SearchEngine.search);
+    # diagnostic only, never on the wire
     path: str = field(default="", compare=False)
 
     @property

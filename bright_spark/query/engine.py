@@ -42,7 +42,9 @@ NOT-phrase, no custom sort and no phrase on a non-positional index, and
 the parquet row groups it reads — those whose ``term`` min/max covers a
 query term in the pruned bucket files of every delta-chain dir, plus
 the ``=``-filtered docs columns — hold fewer footer-reported bytes than
-``catalog.LOCAL_READ_MAX_BYTES``; otherwise ``spark``.
+``catalog.LOCAL_READ_MAX_BYTES``; otherwise ``spark``. A ``local``
+search whose term dictionary, expansion or hit assembly read does not
+fit that budget runs that read as a Spark job, and reports ``spark``.
 ``search_df``/``match_df`` always return lazy Spark DataFrames.
 """
 
@@ -576,6 +578,7 @@ class SearchEngine:
         # row-group caches could answer for it
         self.catalog.manifest()
         k_eff = req.effective_offset + req.limit
+        fallbacks = self.catalog.spark_fallbacks()
 
         aq = self.planner.analyze(parse_query(req.q))
         custom_sort = [s for s in (req.sort or []) if s.lstrip("-") != "_score"]
@@ -599,7 +602,10 @@ class SearchEngine:
         hits = hits[req.effective_offset:]
         resp = self._assemble(req, hits, int(total))
         resp.truncated_expansions = list(aq.truncated_expansions)
-        resp.path = path
+        # a driver-side read that ran a Spark job instead (term
+        # dictionary, expansion, hit assembly) makes it a Spark search
+        resp.path = ("spark" if self.catalog.spark_fallbacks() != fallbacks
+                     else path)
         return resp
 
     def _order_cols(self, req: SearchRequest):

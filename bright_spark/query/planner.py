@@ -251,6 +251,7 @@ class Planner:
     def _spark_terms(self, cond) -> list[str]:
         """Up to cap + 1 terms of the term_stats rows matching ``cond``,
         in term order (the Spark executor of an expansion)."""
+        self.catalog.note_spark_fallback()
         ts = self.catalog.term_stats(self.spark)
         rows = (ts.filter(cond).select("term").orderBy("term")
                 .limit(self.max_expansions + 1).collect())

@@ -17,7 +17,7 @@ churn, so a 1,000-term wildcard expansion costs barely more than a
 - Decoding is bulk: each payload column stays one byte buffer read
   from the arrow data (codec.binary_values); the bytes of every
   selected block are gathered and decoded in ONE vectorized pass
-  (codec.decode_doc_blocks_bulk / decode_concat).
+  (codec.decode_doc_blocks_bulk / decode_concat / decode_positions).
 - Block-max pruning (disjunctions): every block stores (max_tf,
   min_dl); ``tfn`` is increasing in tf and decreasing in dl, so
   ``boost*idf*tfn(max_tf, min_dl)`` evaluated with *current* corpus
@@ -190,7 +190,7 @@ class RangeBlocks:
         d, eb = self._raw_docs(bsel)
         tf, dl = (codec.decode_concat(self._bytes(c, bsel)).astype(np.int64)
                   for c in ("tfs", "dls"))
-        pos = (codec.decode_concat(self._bytes("pos", bsel)).astype(np.int64)
+        pos = (codec.decode_positions(self._bytes("pos", bsel), tf)
                if "pos" in self.payload else None)
         dead = self._dead(d, eb)
         if dead is None:

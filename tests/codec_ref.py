@@ -14,6 +14,27 @@ def varint_encode(values: np.ndarray) -> bytes:
     return buf.tobytes()
 
 
+def entry_positions(rng, tfs: np.ndarray, hi: int) -> np.ndarray:
+    """Random flat positions below ``hi`` for entries of ``tfs``:
+    ascending (repeats allowed) within each entry, as the tokenizer
+    emits them, and unordered across entries."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    p = rng.integers(0, hi, int(tfs.sum())).astype(np.int64)
+    entry = np.repeat(np.arange(tfs.size), tfs)
+    return p[np.lexsort((p, entry))]
+
+
+def position_gaps(positions: np.ndarray, tfs: np.ndarray) -> np.ndarray:
+    """The ``pos`` payload values of consecutive entries: per entry, its
+    first position, then the gap from each position to the next."""
+    out, at = [], 0
+    for tf in np.asarray(tfs, dtype=np.int64).tolist():
+        seg = [int(x) for x in positions[at:at + tf]]
+        out += seg[:1] + [b - a for a, b in zip(seg, seg[1:])]
+        at += tf
+    return np.array(out, dtype=np.int64)
+
+
 def encode_blocks(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -25,7 +46,8 @@ def encode_blocks(
 
     Returns parallel lists (one element per block) matching the
     ``postings`` row's block columns; ``pos`` is empty without
-    ``positions`` (entry i owns the ``tfs[i]`` values at ``Σ tfs[:i]``).
+    ``positions`` (entry i owns the ``tfs[i]`` ascending values at
+    ``Σ tfs[:i]``), else each block's :func:`position_gaps`.
     """
     doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
     if doc_ids.size and (np.diff(doc_ids) <= 0).any():
@@ -52,7 +74,8 @@ def encode_blocks(
         out["tfs"].append(varint_encode(t))
         out["dls"].append(varint_encode(l))
         if positions is not None:
-            out["pos"].append(varint_encode(positions[pv[s]:pv[e]]))
+            out["pos"].append(varint_encode(
+                position_gaps(positions[pv[s]:pv[e]], t)))
     return out
 
 

@@ -281,3 +281,74 @@ def test_source_that_is_not_a_file_scan_builds_on_spark(spark, tmp_path,
     b.build(src)
     metrics = IndexCatalog(idx).manifest()["metrics"]
     assert (metrics["mode"], metrics["source_bytes"]) == ("spark", None)
+
+
+def test_statistics_only_on_pruning_keys(spark, tmp_path):
+    """A driver-written postings file and docs file carry column
+    statistics on exactly the keys readers prune row groups on, and
+    ``postings_read`` / ``docs_read`` select the same row groups from
+    them as from the same rows written with statistics on every
+    column."""
+    import shutil
+
+    import pyarrow.compute as pc
+
+    pdf = _corpus(60, 5)
+    src_dir = str(tmp_path / "src")
+    spark.createDataFrame(pdf).write.parquet(src_dir)
+    idx = str(tmp_path / "idx")
+    build_index(spark, spark.read.parquet(src_dir), idx,
+                IndexConfig(id="st", store_positions=True),
+                n_build_partitions=2, id_col="rid")
+    cat = IndexCatalog(idx)
+    assert cat.manifest()["metrics"]["mode"] == "driver"
+    want = {"postings": {"bucket", "field", "term", "range_id"},
+            "docs": {"doc_id"}}
+    dirs = {"postings": cat.postings_dirs(), "docs": cat.docs_dirs()}
+    for table, ds in dirs.items():
+        for d in ds:
+            (f,) = glob.glob(os.path.join(d, "*.parquet"))
+            md = pq.read_metadata(f)
+            stats = {md.row_group(0).column(j).path_in_schema.split(".")[0]
+                     for j in range(md.num_columns)
+                     if md.row_group(0).column(j).is_stats_set}
+            assert stats == want[table], (table, f)
+
+    # the same rows in several row groups: written by the catalog, and
+    # with statistics on every column
+    full = str(tmp_path / "full")
+    shutil.copytree(idx, full)
+    terms = set()
+    for ds in dirs.values():
+        for d in ds:
+            tab = pq.read_table(os.path.join(d, "part-0.parquet"))
+            groups = [5] * (tab.num_rows // 5) + [tab.num_rows % 5]
+            catalog_mod._write_file(d, tab, [g for g in groups if g], None)
+            with pq.ParquetWriter(
+                    os.path.join(full, os.path.relpath(d, idx),
+                                 "part-0.parquet"),
+                    tab.schema, **{**catalog_mod._PARQUET_OPTS,
+                                   "write_statistics": True}) as w:
+                w.write_table(tab, row_group_size=5)
+            if "term" in tab.column_names:
+                terms |= set(pc.unique(tab["term"]).to_pylist())
+
+    def picks(root):
+        c = IndexCatalog(root)
+        out = []
+        for t in sorted(terms)[::7] + ["zzz_absent"]:
+            rd = c.postings_read([("content", t)], ["term", "docs"])
+            out.append([(os.path.relpath(p, root), rgs)
+                        for p, _, rgs in rd.parts])
+        for ids in ([0], [3, 40], list(range(0, 60, 9)), [10**6]):
+            rd = c.docs_read(ids, ["content"])
+            out.append([(os.path.relpath(p, root), rgs)
+                        for p, _, rgs in rd.parts])
+        return out
+
+    got = picks(idx)
+    assert got == picks(full)
+    # the row-group statistics do prune: reads select some groups,
+    # never every group of a file
+    assert any(got) and not got[-1]
+    assert all(len(rgs) < 5 for sel in got for _, rgs in sel)

@@ -6,7 +6,7 @@ from hypothesis import strategies as st
 from bright_spark.index import codec
 from bright_spark.query.scorer import tf_norm
 from tests.codec_ref import (decode_all_blocks, decode_block, encode_blocks,
-                             varint_encode)
+                             entry_positions, position_gaps, varint_encode)
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300))
@@ -67,6 +67,87 @@ def test_empty():
     assert d.size == 0
 
 
+# ------------------------------------------------------ positions
+
+
+@given(data=st.data(), block_size=st.integers(1, 6),
+       with_tomb=st.booleans())
+@settings(max_examples=80, deadline=None)
+def test_positions_roundtrip(data, block_size, with_tomb):
+    """``decode_positions`` inverts the per-entry gap encoding of
+    ``encode_blocks_bulk``: over several runs whose entries (tf >= 1,
+    repeated positions included) fill and cross block boundaries,
+    from whole rows and from any run of whole blocks, and through
+    ``_decode_rows`` with a tombstone mask, where the dead entries'
+    positions drop out. The payload bytes are the reference's gaps."""
+    import pyarrow as pa
+
+    from bright_spark.index.catalog import POSTINGS_ARROW
+    from bright_spark.index.mutations import _decode_rows, _kill_set
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1)))
+    sizes = data.draw(st.lists(st.integers(1, 3 * block_size + 1),
+                               min_size=1, max_size=5))
+    n = sum(sizes)
+    docs = np.concatenate([np.sort(rng.choice(10**6, s, replace=False))
+                           for s in sizes]).astype(np.int64)
+    tfs = rng.integers(1, 6, n).astype(np.int64)
+    dls = tfs + rng.integers(0, 50, n)
+    pos = entry_positions(rng, tfs, data.draw(st.sampled_from([3, 10**6])))
+    starts = np.concatenate(([0], np.cumsum(sizes)[:-1])).astype(np.int64)
+    cols = codec.encode_blocks_bulk(docs, tfs, dls, starts, block_size,
+                                    positions=pos)
+    raw = codec.binary_values(cols["pos"])
+    np.testing.assert_array_equal(codec.decode_positions(raw, tfs), pos)
+    np.testing.assert_array_equal(codec.varint_decode(raw).astype(np.int64),
+                                  position_gaps(pos, tfs))
+    # any run of whole blocks decodes alone
+    ns = np.concatenate([np.asarray(r) for r in cols["n"].to_pylist()])
+    blocks = [b for r in cols["pos"].to_pylist() for b in r]
+    lo = data.draw(st.integers(0, ns.size - 1))
+    hi = data.draw(st.integers(lo + 1, ns.size))
+    e0, e1 = int(ns[:lo].sum()), int(ns[:hi].sum())
+    pv = np.concatenate(([0], np.cumsum(tfs)))
+    np.testing.assert_array_equal(
+        codec.decode_positions(blocks[lo:hi], tfs[e0:e1]),
+        pos[pv[e0]:pv[e1]])
+
+    rows = pa.Table.from_pydict(
+        {"field": ["f"] * len(sizes),
+         "term": [f"t{i}" for i in range(len(sizes))],
+         "range_id": [0] * len(sizes),
+         **{c: cols[c] for c in ("first_doc", "n", "docs", "tfs", "dls",
+                                 "pos")},
+         "ver": [1] * len(sizes)},
+        schema=pa.schema([POSTINGS_ARROW.field(c) for c in (
+            "field", "term", "range_id", "first_doc", "n", "docs", "tfs",
+            "dls", "pos", "ver")]))
+    kill, live = None, np.ones(n, bool)
+    if with_tomb:
+        dead = np.unique(rng.choice(docs, max(1, n // 3)))
+        kill = _kill_set((dead, np.full(dead.size, 2, np.int64)))
+        live = ~np.isin(docs, dead)
+    _, d, t, _, p = _decode_rows(rows, True, kill)
+    np.testing.assert_array_equal(d, docs[live])
+    np.testing.assert_array_equal(t, tfs[live])
+    np.testing.assert_array_equal(p, pos[np.repeat(live, tfs)])
+
+
+def test_positions_must_ascend_within_an_entry():
+    one = np.array([1, 2])
+    with pytest.raises(ValueError, match="ascending"):
+        codec.encode_blocks_bulk(one, np.array([2, 1]), one, np.array([0]),
+                                 positions=np.array([5, 4, 0]))
+    # a later entry may start below the one before it
+    cols = codec.encode_blocks_bulk(one, np.array([2, 1]), one,
+                                    np.array([0]),
+                                    positions=np.array([4, 5, 0]))
+    assert codec.decode_positions(codec.binary_values(cols["pos"]),
+                                  np.array([2, 1])).tolist() == [4, 5, 0]
+    with pytest.raises(ValueError):
+        codec.decode_positions(codec.binary_values(cols["pos"]),
+                               np.array([1, 1]))
+
+
 # ------------------------------------------- arrow kernels == reference
 
 _BLOCK_COLS = ("first_doc", "max_doc", "n", "max_tf", "min_dl", "docs",
@@ -102,7 +183,7 @@ def test_arrow_kernels_equal_per_run_reference(data, block_size,
         d = np.sort(rng.choice(500, size, replace=False)).astype(np.int64)
         t = rng.integers(1, 4, size).astype(np.int64)
         l = rng.integers(1, 300, size).astype(np.int64)
-        p = rng.integers(0, 400, int(t.sum())).astype(np.int64)
+        p = entry_positions(rng, t, 400)
         key = {"field": f"f{i % 2}", "term": f"t{i}", "range_id": 0}
         runs.append((key, d, t, l, p))
         # the run arrives as up to two partial rows, later docs first
@@ -144,7 +225,7 @@ def test_arrow_kernels_equal_per_run_reference(data, block_size,
     want = {k: [] for k in ("row", "d", "t", "l", "pos")}
     for i, r in enumerate(rows):
         d, t, l = decode_all_blocks(r)
-        p = (codec.decode_concat(r["pos"]).astype(np.int64)
+        p = (codec.decode_positions(r["pos"], t)
              if store_positions else np.empty(0, np.int64))
         keep = ~np.isin(d, kill_ids)
         want["row"].append(np.full(int(keep.sum()), i))

@@ -22,7 +22,7 @@ from bright_spark.index.catalog import POSTINGS_ARROW, IndexCatalog
 from bright_spark.index.mutations import IndexMutator, _decode_rows, _kill_set
 from bright_spark.models import IndexConfig, SearchRequest
 from bright_spark.query.engine import SearchEngine
-from tests.codec_ref import decode_all_blocks
+from tests.codec_ref import decode_all_blocks, entry_positions
 from tests.oracle import OracleIndex
 
 # ------------------------------------------------------- bulk decode
@@ -34,7 +34,7 @@ def _encode_row(rng, n_entries, block_size):
     d = np.sort(rng.choice(1000, n_entries, replace=False)).astype(np.int64)
     t = rng.integers(1, 4, n_entries).astype(np.int64)
     l = rng.integers(1, 60, n_entries).astype(np.int64)
-    pos = rng.integers(0, 200, int(t.sum())).astype(np.int64)
+    pos = entry_positions(rng, t, 200)
     cols = codec.encode_blocks_bulk(d, t, l, np.array([0]), block_size,
                                     positions=pos)
     return {k: v[0].as_py() for k, v in cols.items()}
@@ -80,7 +80,7 @@ def test_bulk_decode_equals_per_row_reference(seed, sizes, block_size,
     want = {k: [] for k in ("row", "d", "t", "l", "pos")}
     for i, r in enumerate(rows):
         d, t, l = decode_all_blocks(r)
-        pos = (codec.decode_concat(list(r["pos"])).astype(np.int64)
+        pos = (codec.decode_positions(list(r["pos"]), t)
                if store_positions else np.empty(0, np.int64))
         dead = np.zeros(d.size, bool)
         if drop is not None:
@@ -118,7 +118,9 @@ def _entries(idx: str) -> dict:
         for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
             for r in pq.read_table(f).to_pylist():
                 dec = decode_all_blocks(r)
-                pos = codec.decode_concat(r["pos"]).astype(np.int64)
+                # an index without positions stores no pos blocks
+                pos = (codec.decode_positions(r["pos"], dec[1])
+                       if r["pos"] else np.empty(0, np.int64))
                 key = (r["field"], r["term"], r["range_id"])
                 assert key not in out, key
                 out[key] = tuple(a.tolist() for a in (*dec, pos))

@@ -10,6 +10,7 @@ from bright_spark.index import codec
 from bright_spark.index.builder import build_index
 from bright_spark.models import IndexConfig
 from bright_spark.query.engine import SearchEngine
+from tests.codec_ref import entry_positions
 
 
 @pytest.fixture(scope="module")
@@ -27,13 +28,12 @@ def test_positions_roundtrip_blocks():
     docs = np.cumsum(rng.integers(1, 9, n)).astype(np.int64)
     tfs = rng.integers(1, 5, n).astype(np.int64)
     dls = rng.integers(10, 99, n).astype(np.int64)
-    pos = rng.integers(0, 5000, int(tfs.sum())).astype(np.int64)
+    pos = entry_positions(rng, tfs, 5000)
     starts = np.array([0, 400, 401, 950], dtype=np.int64)
     blocks = codec.encode_blocks_bulk(
         docs, tfs, dls, starts, block_size=128, positions=pos)
     # decode every block's positions and compare with the slice
-    got = codec.decode_concat(
-        codec.binary_values(blocks["pos"])).astype(np.int64)
+    got = codec.decode_positions(codec.binary_values(blocks["pos"]), tfs)
     assert (got == pos).all()
     # per-run value counts = sum of tfs of its entries
     ends = np.concatenate((starts[1:], [n]))

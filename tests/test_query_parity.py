@@ -235,20 +235,56 @@ def test_search_spark_path_when_reads_exceed_budget(
                      for h in local.hits]
 
 
+def _read_bytes(eng, q: str, ids: list[int]) -> tuple[int, int]:
+    """Footer bytes of the posting row groups ``q`` reads, and of the
+    docs row groups its hits ``ids`` are assembled from."""
+    from bright_spark.query.engine import _KERNEL_COLUMNS
+    from bright_spark.query.parser import parse_query
+    a = eng._kernel_args(eng.planner.analyze(parse_query(q)))
+    return (eng.catalog.postings_read(a.needed, _KERNEL_COLUMNS).nbytes,
+            eng.catalog.docs_read(ids).nbytes)
+
+
 def test_search_path_follows_footer_bytes(spark, built_index, monkeypatch):
     """The gate compares the footer bytes of the row groups a query
-    reads with the budget: just above them runs locally, at them the
-    query falls back to Spark."""
-    from bright_spark.query.engine import _KERNEL_COLUMNS, SearchEngine
-    from bright_spark.query.parser import parse_query
+    reads with the budget: just above them (and above its hits' docs
+    read) runs locally, at them the query falls back to Spark."""
+    from bright_spark.query.engine import SearchEngine
     eng = SearchEngine(spark, built_index.index_dir)
-    a = eng._kernel_args(eng.planner.analyze(parse_query("parse config")))
-    nbytes = eng.catalog.postings_read(a.needed, _KERNEL_COLUMNS).nbytes
+    ids = [h["doc_id"] for h in eng.search("parse config").hits]
+    nbytes, docs = _read_bytes(eng, "parse config", ids)
     assert nbytes > 0
-    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes + 1)
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES",
+                        max(nbytes, docs) + 1)
     assert eng.search("parse config").path == "local"
     monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes)
     assert eng.search("parse config").path == "spark"
+
+
+def test_assembly_over_the_budget_reports_spark(spark, built_index,
+                                                monkeypatch):
+    """A search whose postings fit the read budget but whose hits' docs
+    read does not scores on the driver and assembles its hits with a
+    Spark job: it reports ``spark``, with the hits and records of the
+    all-driver search."""
+    from bright_spark.query.engine import SearchEngine
+    eng = SearchEngine(spark, built_index.index_dir)
+    req = SearchRequest(q="parse config", limit=K)
+    local = eng.search(req)
+    assert local.path == "local" and local.hits
+    nbytes, docs = _read_bytes(eng, req.q,
+                               [h["doc_id"] for h in local.hits])
+    assert nbytes < docs
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes + 1)
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    resp = eng.search(req)
+    assert max(tracker.getJobIdsForGroup(None), default=-1) > before
+    assert resp.path == "spark"
+    assert resp.hits == local.hits and resp.total_hits == local.total_hits
+    # the next search that stays on the driver says so again
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", max(nbytes, docs) + 1)
+    assert eng.search(req).path == "local"
 
 
 @pytest.mark.parametrize("q", ["user", "read AND write", "confg~1",

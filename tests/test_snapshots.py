@@ -608,30 +608,36 @@ def _tree(root):
 
 def test_older_layout_is_refused_with_rebuild_error(spark, snap_idx,
                                                     tmp_path):
-    """A manifest of another layout (here v3: a single string ``docs``
-    pointer) is refused where it is read, by readers and writers alike,
-    before anything is written; the index it was copied from is not
-    touched."""
+    """A manifest of another layout is refused where it is read, by
+    readers and writers alike, before anything is written; the index it
+    was copied from is not touched. Two older layouts: v3 (a single
+    string ``docs`` pointer) and v6 (the v7 tables, absolute positions),
+    whose files a v7 reader would decode wrongly."""
+    assert catalog.LAYOUT_VERSION == 7
     original = _tree(snap_idx)
-    old = str(tmp_path / "v3idx")
-    shutil.copytree(snap_idx, old)
-    cat = IndexCatalog(old)
-    sid = cat.current_snapshot_id()
-    mf = os.path.join(cat.snapshots_dir, f"s{sid:08d}.json")
-    with open(mf) as f:
-        m = json.load(f)
-    m["layout_version"] = 3
-    m["tables"]["docs"] = os.path.relpath(cat.docs_dirs()[0], old)
-    with open(mf, "w") as f:
-        json.dump(m, f)
-    before = _tree(old)
+    for version in (3, 6):
+        old = str(tmp_path / f"v{version}idx")
+        shutil.copytree(snap_idx, old)
+        cat = IndexCatalog(old)
+        sid = cat.current_snapshot_id()
+        mf = os.path.join(cat.snapshots_dir, f"s{sid:08d}.json")
+        with open(mf) as f:
+            m = json.load(f)
+        m["layout_version"] = version
+        if version == 3:
+            m["tables"]["docs"] = os.path.relpath(cat.docs_dirs()[0], old)
+        with open(mf, "w") as f:
+            json.dump(m, f)
+        before = _tree(old)
 
-    with pytest.raises(LayoutVersionError, match="rebuild"):
-        SearchEngine(spark, old)
-    with pytest.raises(LayoutVersionError, match="rebuild"):
-        IndexMutator(spark, old).upsert(spark.createDataFrame(
-            [{"rid": 0, "text": "refused", "kind": "k0"}]))
-    assert _tree(old) == before
+        with pytest.raises(LayoutVersionError,
+                           match=f"version {version};.*rebuild"):
+            SearchEngine(spark, old)
+        with pytest.raises(LayoutVersionError,
+                           match=f"version {version};.*rebuild"):
+            IndexMutator(spark, old).upsert(spark.createDataFrame(
+                [{"rid": 0, "text": "refused", "kind": "k0"}]))
+        assert _tree(old) == before
     assert _tree(snap_idx) == original
     assert SearchEngine(spark, snap_idx).search("common").total_hits > 0
 
