@@ -350,8 +350,8 @@ def _make_assign_ids_fn(id_offsets: dict[int, int]):
 
 def _merge_runs(rows, row: np.ndarray, doc: np.ndarray, tf: np.ndarray,
                 dl: np.ndarray, pos: np.ndarray | None, block_size: int,
-                n_buckets: int, ver: int | None = None,
-                bucket: int | None = None) -> Iterator[pa.RecordBatch]:
+                n_buckets: int, ver: int | None = None
+                ) -> Iterator[pa.RecordBatch]:
     """Posting entries -> posting rows: entry i (``doc[i]``, ``tf[i]``,
     ``dl[i]``, and when ``pos`` is given its ``tf[i]`` positions, in
     entry order) belongs to the ``field``/``term``/``range_id`` of row
@@ -362,9 +362,9 @@ def _merge_runs(rows, row: np.ndarray, doc: np.ndarray, tf: np.ndarray,
     Yields :data:`catalog.POSTINGS_KERNEL_ARROW` record batches, or
     :data:`catalog.POSTINGS_ARROW` ones stamped with ``ver``. A batch
     holds at most about ``_MERGE_BATCH_VALUES`` entries plus positions,
-    which keeps each of its varint buffers under 2 GiB. A caller whose
-    terms all lie in one known term bucket passes it as ``bucket``;
-    otherwise each term's bucket is hashed here."""
+    which keeps each of its varint buffers under 2 GiB. Each term's
+    bucket comes from the ``bucket`` column of ``rows`` when they carry
+    one (posting rows being re-merged), else from hashing the term."""
     if not doc.size:
         return
 
@@ -373,10 +373,21 @@ def _merge_runs(rows, row: np.ndarray, doc: np.ndarray, tf: np.ndarray,
         if isinstance(col, pa.ChunkedArray):
             col = col.combine_chunks()
         enc = pc.dictionary_encode(col)
-        return enc.indices.to_numpy()[row], enc.dictionary
+        return enc.indices.to_numpy(), enc.dictionary
 
     fcode, fields = codes(rows["field"])
     tcode, terms = codes(rows["term"])
+    if "bucket" in rows.column_names:
+        ubucket = np.empty(len(terms), np.int64)
+        ubucket[tcode] = rows["bucket"].to_numpy()
+    else:
+        # one crc32 per UNIQUE term (each term spans many (field,
+        # range) groups), fanned out by fancy indexing
+        ubucket = np.fromiter(
+            (zlib.crc32(t.encode("utf-8")) % n_buckets
+             for t in terms.to_numpy(zero_copy_only=False)),
+            np.int64, len(terms))
+    fcode, tcode = fcode[row], tcode[row]
     rng = rows["range_id"].to_numpy()[row]
     # range_id = doc_id >> bits is monotone in doc_id, so sorting
     # (fcode, tcode, doc) already lands ranges contiguous+ascending
@@ -398,13 +409,6 @@ def _merge_runs(rows, row: np.ndarray, doc: np.ndarray, tf: np.ndarray,
     starts = np.concatenate(([0], boundary))
     ends = np.concatenate((boundary, [doc.size]))
     cf = np.add.reduceat(tf, starts)
-    # one crc32 per UNIQUE term (each term spans many (field, range)
-    # groups), fanned out by fancy indexing
-    ubucket = (np.full(len(terms), bucket, np.int64) if bucket is not None
-               else np.fromiter(
-                   (zlib.crc32(t.encode("utf-8")) % n_buckets
-                    for t in terms.to_numpy(zero_copy_only=False)),
-                   np.int64, len(terms)))
     # batches of whole runs: run g goes to batch (values before it) //
     # budget
     weight = ends - starts + (cf if pos is not None else 0)
@@ -1113,7 +1117,8 @@ class IndexBuilder:
         pending.reset_parts("docs")
         for g, part in _slices_by(
                 docs, ids_np >> np.int64(cfg.docs_range_bits)):
-            write_part(pending.adopt_part("docs", g), part, pending)
+            write_part(pending.adopt_part("docs", g), part, pending,
+                       all_statistics=True)
 
         pending.tables["postings"] = {}
         pending.reset_parts("term_stats")

@@ -541,17 +541,19 @@ def _pair_mask(pairs: list[tuple[str, str]]) -> Callable[[pa.Table], Any]:
     return where
 
 
-# the columns readers prune row groups on: every _footer_read key and
-# every Spark filter column of the postings, term_stats and docs tables
+# the key columns readers prune postings, term_stats and tombstones row
+# groups on (every _footer_read key of those tables); a docs file keeps
+# statistics on every column, since Spark's range, `like` and `=`
+# filters on its attribute columns prune on them
 STATS_COLUMNS = ("bucket", "field", "term", "range_id", "doc_id")
 
 _PARQUET_OPTS = dict(compression="zstd", compression_level=3,
-                     use_dictionary=False, store_schema=False,
-                     write_statistics=list(STATS_COLUMNS))
+                     use_dictionary=False, store_schema=False)
 
 
 def write_part(dst_dir: str, table: pa.Table,
-               pending: PendingSnapshot | None = None) -> None:
+               pending: PendingSnapshot | None = None, *,
+               all_statistics: bool = False) -> None:
     """One driver-side version-dir write: clobber a crashed prior
     attempt, then write ``table`` as a single file: zstd at level 3 (the
     codec and level Spark writes with), no embedded Arrow schema, and
@@ -562,12 +564,13 @@ def write_part(dst_dir: str, table: pa.Table,
     driver-built index of 200 make_repos_spark files took 1,323,241 bytes
     with plain encoding, 1,398,599 with pyarrow's defaults, and Spark's
     build 1,388,201. Column statistics are written only on
-    :data:`STATS_COLUMNS`, the keys readers prune row groups on; those
-    of the list payloads and ``content`` cost 1.9% of the bytes of a
-    200-file index and no reader looks at them. The file and its footer
-    are staged in ``pending``
-    (:meth:`PendingSnapshot.stage`) when given."""
-    _write_file(dst_dir, table, None, pending)
+    :data:`STATS_COLUMNS`, the keys readers prune row groups on (those
+    of the posting list payloads and the term_stats counts cost 1.6% of
+    the bytes of a 200-file index and no reader looks at them), or on every column when
+    ``all_statistics`` is set (docs files, whose attribute columns
+    searches filter on). The file and its footer are staged in
+    ``pending`` (:meth:`PendingSnapshot.stage`) when given."""
+    _write_file(dst_dir, table, None, pending, all_statistics)
 
 
 def write_delta_part(dst_dir: str, table: pa.Table,
@@ -580,13 +583,16 @@ def write_delta_part(dst_dir: str, table: pa.Table,
 
 
 def _write_file(dst_dir: str, table: pa.Table, groups: list[int] | None,
-                pending: PendingSnapshot | None) -> None:
+                pending: PendingSnapshot | None,
+                all_statistics: bool = False) -> None:
     """``table`` as ``dst_dir/part-0.parquet``: one row group per entry
     of ``groups`` (row counts), or pyarrow's default cut when None."""
     shutil.rmtree(dst_dir, ignore_errors=True)
     os.makedirs(dst_dir, exist_ok=True)
     path = os.path.join(dst_dir, "part-0.parquet")
-    with pq.ParquetWriter(path, table.schema, **_PARQUET_OPTS) as w:
+    stats = True if all_statistics else list(STATS_COLUMNS)
+    with pq.ParquetWriter(path, table.schema, write_statistics=stats,
+                          **_PARQUET_OPTS) as w:
         if groups is None:
             w.write_table(table)
         else:

@@ -280,7 +280,8 @@ def apply_fast(mut, changed_pdf: pd.DataFrame | None = None,
     # protocol is identical to the distributed path's)
     old_tomb = cat.tombstones()
     for g, tab in out_docs.items():
-        write_part(pending.adopt_part("docs", g), tab, pending)
+        write_part(pending.adopt_part("docs", g), tab, pending,
+                   all_statistics=True)
     for g in set(groups) - set(out_docs):
         pending.drop_part("docs", g)
     # one shared delta file per table, chained into every bucket it

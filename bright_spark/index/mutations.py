@@ -837,7 +837,7 @@ class IndexMutator:
             parts += [pa.Table.from_batches([m]) for m in _merge_runs(
                 touched, row, d, t, l,
                 pos if cfg.store_positions else None, cfg.block_size,
-                cfg.n_term_buckets, ver=pending.snapshot_id, bucket=b)]
+                cfg.n_term_buckets, ver=pending.snapshot_id)]
             out = pa.concat_tables(parts) if parts else None
             if out is not None and out.num_rows:
                 write_part(pending.adopt_part("postings", b), out.sort_by(

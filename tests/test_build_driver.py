@@ -284,8 +284,9 @@ def test_source_that_is_not_a_file_scan_builds_on_spark(spark, tmp_path,
 
 
 def test_statistics_only_on_pruning_keys(spark, tmp_path):
-    """A driver-written postings file and docs file carry column
-    statistics on exactly the keys readers prune row groups on, and
+    """A driver-written postings file carries column statistics on
+    exactly the keys readers prune row groups on, a docs file on every
+    column (Spark filters prune on its attribute columns), and
     ``postings_read`` / ``docs_read`` select the same row groups from
     them as from the same rows written with statistics on every
     column."""
@@ -299,36 +300,41 @@ def test_statistics_only_on_pruning_keys(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(spark, spark.read.parquet(src_dir), idx,
                 IndexConfig(id="st", store_positions=True),
-                n_build_partitions=2, id_col="rid")
+                n_build_partitions=2, id_col="rid",
+                attr_cols=("lang", "owner", "stars"))
     cat = IndexCatalog(idx)
     assert cat.manifest()["metrics"]["mode"] == "driver"
-    want = {"postings": {"bucket", "field", "term", "range_id"},
-            "docs": {"doc_id"}}
     dirs = {"postings": cat.postings_dirs(), "docs": cat.docs_dirs()}
     for table, ds in dirs.items():
         for d in ds:
             (f,) = glob.glob(os.path.join(d, "*.parquet"))
             md = pq.read_metadata(f)
-            stats = {md.row_group(0).column(j).path_in_schema.split(".")[0]
-                     for j in range(md.num_columns)
-                     if md.row_group(0).column(j).is_stats_set}
-            assert stats == want[table], (table, f)
+            cols = [md.row_group(0).column(j) for j in range(md.num_columns)]
+            stats = {c.path_in_schema.split(".")[0] for c in cols
+                     if c.is_stats_set}
+            want = ({"bucket", "field", "term", "range_id"}
+                    if table == "postings" else
+                    {c.path_in_schema for c in cols})
+            assert stats == want, (table, f)
+            if table == "docs":
+                assert {"doc_id", "lang", "owner", "stars"} <= stats
 
     # the same rows in several row groups: written by the catalog, and
     # with statistics on every column
     full = str(tmp_path / "full")
     shutil.copytree(idx, full)
     terms = set()
-    for ds in dirs.values():
+    for table, ds in dirs.items():
         for d in ds:
             tab = pq.read_table(os.path.join(d, "part-0.parquet"))
             groups = [5] * (tab.num_rows // 5) + [tab.num_rows % 5]
-            catalog_mod._write_file(d, tab, [g for g in groups if g], None)
+            catalog_mod._write_file(d, tab, [g for g in groups if g], None,
+                                    all_statistics=table == "docs")
             with pq.ParquetWriter(
                     os.path.join(full, os.path.relpath(d, idx),
                                  "part-0.parquet"),
-                    tab.schema, **{**catalog_mod._PARQUET_OPTS,
-                                   "write_statistics": True}) as w:
+                    tab.schema, write_statistics=True,
+                    **catalog_mod._PARQUET_OPTS) as w:
                 w.write_table(tab, row_group_size=5)
             if "term" in tab.column_names:
                 terms |= set(pc.unique(tab["term"]).to_pylist())

@@ -111,8 +111,8 @@ def test_bulk_decode_equals_per_row_reference(seed, sizes, block_size,
 
 
 def _entries(idx: str) -> dict:
-    """(field, term, range_id) -> decoded (doc_ids, tfs, dls, positions)
-    of the live postings files, read with pyarrow."""
+    """(field, term, range_id) -> bucket and decoded (doc_ids, tfs,
+    dls, positions) of the live postings files, read with pyarrow."""
     out = {}
     for d in IndexCatalog(idx).postings_dirs():
         for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
@@ -123,7 +123,8 @@ def _entries(idx: str) -> dict:
                        if r["pos"] else np.empty(0, np.int64))
                 key = (r["field"], r["term"], r["range_id"])
                 assert key not in out, key
-                out[key] = tuple(a.tolist() for a in (*dec, pos))
+                out[key] = (r["bucket"],
+                            *(a.tolist() for a in (*dec, pos)))
     return out
 
 

@@ -245,20 +245,34 @@ def _read_bytes(eng, q: str, ids: list[int]) -> tuple[int, int]:
             eng.catalog.docs_read(ids).nbytes)
 
 
+def _spy_local_topk(eng, monkeypatch) -> list:
+    """Record each call of ``eng._local_topk`` (the driver scoring) in
+    the returned list."""
+    calls, real = [], eng._local_topk
+    monkeypatch.setattr(eng, "_local_topk",
+                        lambda *a: calls.append(a) or real(*a))
+    return calls
+
+
 def test_search_path_follows_footer_bytes(spark, built_index, monkeypatch):
-    """The gate compares the footer bytes of the row groups a query
-    reads with the budget: just above them (and above its hits' docs
-    read) runs locally, at them the query falls back to Spark."""
+    """The gate compares the footer bytes of the posting row groups a
+    query reads with the budget: just above them the query scores on the
+    driver, at them it scores on Spark."""
     from bright_spark.query.engine import SearchEngine
+    from bright_spark.query.parser import parse_query
     eng = SearchEngine(spark, built_index.index_dir)
-    ids = [h["doc_id"] for h in eng.search("parse config").hits]
-    nbytes, docs = _read_bytes(eng, "parse config", ids)
+    aq = eng.planner.analyze(parse_query("parse config"))
+    nbytes, _ = _read_bytes(eng, "parse config", [])
     assert nbytes > 0
-    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES",
-                        max(nbytes, docs) + 1)
-    assert eng.search("parse config").path == "local"
+    calls = _spy_local_topk(eng, monkeypatch)
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes + 1)
+    assert eng._choose_path(aq, [])[0] == "local"
+    eng.search("parse config")
+    assert len(calls) == 1
     monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes)
+    assert eng._choose_path(aq, [])[0] == "spark"
     assert eng.search("parse config").path == "spark"
+    assert len(calls) == 1
 
 
 def test_assembly_over_the_budget_reports_spark(spark, built_index,
@@ -275,16 +289,20 @@ def test_assembly_over_the_budget_reports_spark(spark, built_index,
     nbytes, docs = _read_bytes(eng, req.q,
                                [h["doc_id"] for h in local.hits])
     assert nbytes < docs
+    calls = _spy_local_topk(eng, monkeypatch)
     monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", nbytes + 1)
     tracker = spark.sparkContext.statusTracker()
     before = max(tracker.getJobIdsForGroup(None), default=-1)
     resp = eng.search(req)
+    # scored on the driver; the docs read was the Spark job
+    assert len(calls) == 1
     assert max(tracker.getJobIdsForGroup(None), default=-1) > before
     assert resp.path == "spark"
     assert resp.hits == local.hits and resp.total_hits == local.total_hits
     # the next search that stays on the driver says so again
-    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", max(nbytes, docs) + 1)
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_BYTES", docs + 1)
     assert eng.search(req).path == "local"
+    assert len(calls) == 2
 
 
 @pytest.mark.parametrize("q", ["user", "read AND write", "confg~1",
